@@ -61,6 +61,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
+
 _MAGIC = b"fLaC"
 _SAMPLE_RATE = 44100
 _BITS = 16
@@ -161,96 +163,6 @@ def _vorbis_comment(fields: dict[str, str]) -> bytes:
         f = f"{k}={v}".encode()
         out += struct.pack("<I", len(f)) + f
     return out
-
-
-class _Bits:
-    """MSB-first bit writer for subframe payloads (FLAC frames are
-    bit-packed and padded back to byte alignment before the CRC-16)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, width: int) -> None:
-        if width and not 0 <= value < 1 << width:
-            raise ValueError("bit value out of range")
-        self.acc = (self.acc << width) | value
-        self.n += width
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def unary(self, q: int) -> None:  # q zeros then a one (libFLAC order)
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def extend(self, other: "_Bits") -> None:
-        """Append another writer's bitstream (no byte alignment
-        assumed on either side)."""
-        for b in other.out:
-            self.write(b, 8)
-        if other.n:
-            self.write(other.acc, other.n)
-
-    def bit_length(self) -> int:
-        return len(self.out) * 8 + self.n
-
-    def done(self) -> bytes:
-        if self.n:
-            self.out.append((self.acc << (8 - self.n)) & 0xFF)
-        return bytes(self.out)
-
-
-class _BitsIn:
-    def __init__(self, buf: bytes, at: int) -> None:
-        self.buf = buf
-        self.pos = at
-        self.acc = 0
-        self.n = 0
-
-    def read(self, width: int) -> int:
-        while self.n < width:
-            if self.pos >= len(self.buf):
-                raise ValueError("FLAC frame truncated mid-subframe")
-            self.acc = (self.acc << 8) | self.buf[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= width
-        v = (self.acc >> self.n) & ((1 << width) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
-
-    def unary(self) -> int:
-        # r13: consume whole zero chunks from the accumulator with
-        # bit_length instead of a read(1) call per bit; refill a byte
-        # at a time exactly as read() does, so truncation raises the
-        # same error at the same point.
-        q = 0
-        while True:
-            if self.n:
-                if self.acc:
-                    lead = self.n - self.acc.bit_length()
-                    q += lead
-                    self.n -= lead + 1  # drop zeros + the marker bit
-                    self.acc &= (1 << self.n) - 1
-                    return q
-                q += self.n
-                self.n = 0
-            if self.pos >= len(self.buf):
-                raise ValueError("FLAC frame truncated mid-subframe")
-            self.acc = self.buf[self.pos]
-            self.pos += 1
-            self.n = 8
-
-    def align(self) -> int:
-        """Drop the sub-byte remainder; -> byte position."""
-        self.n = 0
-        self.acc = 0
-        return self.pos
 
 
 # fixed-predictor coefficient rows, order 0..4 (FLAC section 9.2.2)
@@ -412,7 +324,7 @@ def _best_rice(residuals: list[int]) -> tuple[int, int]:
     return best_r, best_bits
 
 
-def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
+def _write_subframe(bits: BitWriter, samples: list[int], depth: int) -> None:
     """One subframe at ``depth`` bits per sample (a SIDE channel is
     depth 17, RFC 9639 9.2.1): cheapest of CONSTANT / FIXED 0-4 /
     LPC 2-4 / VERBATIM by exact rice-coded size. LPC candidates use
@@ -421,17 +333,17 @@ def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
     mask = (1 << depth) - 1
 
     def write_rice(res: list[int], r: int) -> None:
-        bits.write(0, 2)   # residual method 0: 4-bit rice
-        bits.write(0, 4)   # partition order 0: one partition
-        bits.write(r, 4)
+        bits.u(0, 2)   # residual method 0: 4-bit rice
+        bits.u(0, 4)   # partition order 0: one partition
+        bits.u(r, 4)
         for e in res:
             u = _zigzag(e)
-            bits.unary(u >> r)
-            bits.write(u & ((1 << r) - 1), r)
+            bits.u(1, (u >> r) + 1)  # q zeros then a one
+            bits.u(u & ((1 << r) - 1), r)
 
     if len(set(samples)) == 1:  # CONSTANT subframe
-        bits.write(0b000000 << 1, 8)  # pad 0 + type + wasted 0
-        bits.write(int(samples[0]) & mask, depth)
+        bits.u(0b000000 << 1, 8)  # pad 0 + type + wasted 0
+        bits.u(int(samples[0]) & mask, depth)
         return
     best = None  # (bits, kind, order, r, residuals, qcoef, shift)
     for order in range(5):
@@ -467,29 +379,29 @@ def _write_subframe(bits: _Bits, samples: list[int], depth: int) -> None:
     if best[0] < depth * len(samples):  # prediction wins over VERBATIM
         _, kind, order, r, res, qcoef, shift = best
         if kind == "fixed":
-            bits.write((0b001000 | order) << 1, 8)
+            bits.u((0b001000 | order) << 1, 8)
         else:
-            bits.write((0b100000 | (order - 1)) << 1, 8)
+            bits.u((0b100000 | (order - 1)) << 1, 8)
         for s in samples[:order]:  # warm-up at the channel depth
-            bits.write(int(s) & mask, depth)
+            bits.u(int(s) & mask, depth)
         if kind == "lpc":
-            bits.write(_LPC_PRECISION - 1, 4)
-            bits.write(shift, 5)
+            bits.u(_LPC_PRECISION - 1, 4)
+            bits.u(shift, 5)
             for c in qcoef:
-                bits.write(c & ((1 << _LPC_PRECISION) - 1),
+                bits.u(c & ((1 << _LPC_PRECISION) - 1),
                            _LPC_PRECISION)
         write_rice(res, r)
     else:  # VERBATIM subframe
-        bits.write(0b000001 << 1, 8)
+        bits.u(0b000001 << 1, 8)
         for s in samples:
-            bits.write(int(s) & mask, depth)
+            bits.u(int(s) & mask, depth)
 
 
-def _coded_subframe(samples: list[int], depth: int) -> _Bits:
+def _coded_subframe(samples: list[int], depth: int) -> BitWriter:
     """Encode once, reuse everywhere: the returned writer IS both the
-    exact cost (bit_length) and the bits the frame emits — candidate
+    exact cost (nbits) and the bits the frame emits — candidate
     channels are never encoded twice."""
-    b = _Bits()
+    b = BitWriter()
     _write_subframe(b, samples, depth)
     return b
 
@@ -650,7 +562,7 @@ def _plan_blocks(rows, depth: int):
     """(plans, costs) for (nb, _BLOCK) sample rows, decisions
     identical to _write_subframe; costs[b] is the exact subframe size
     in bits (header byte included) that _emit_subframe will write —
-    equal to the scalar encoding's bit_length(). Plans are
+    equal to the scalar encoding's nbits(). Plans are
     ('const',) | ('verbatim',) | ('fixed', order, r, res)
     | ('lpc', order, r, res, qcoef, shift)."""
     import numpy as np
@@ -737,22 +649,22 @@ def _plan_blocks(rows, depth: int):
 
 
 def _emit_subframe(
-    bits: _Bits, samples: list[int], depth: int, plan: tuple
+    bits: BitWriter, samples: list[int], depth: int, plan: tuple
 ) -> None:
     """Emit one planned subframe — the exact bit sequence
     _write_subframe produces, folded into a single writer call."""
     mask = (1 << depth) - 1
     k = plan[0]
     if k == "const":
-        bits.write(0, 8)
-        bits.write(int(samples[0]) & mask, depth)
+        bits.u(0, 8)
+        bits.u(int(samples[0]) & mask, depth)
         return
     if k == "verbatim":
         acc, n = 0b000001 << 1, 8
         for s in samples:
             acc = (acc << depth) | (int(s) & mask)
             n += depth
-        bits.write(acc, n)
+        bits.u(acc, n)
         return
     if k == "fixed":
         _, order, r, res = plan
@@ -781,7 +693,7 @@ def _emit_subframe(
         acc = (acc << (q + 1)) | 1
         acc = (acc << r) | (u & rmask)
         n += q + 1 + r
-    bits.write(acc, n)
+    bits.u(acc, n)
 
 
 
@@ -808,12 +720,12 @@ def _frame(idx: int, samples: list[int], plan: tuple | None = None) -> bytes:
     if len(samples) != _BLOCK:
         raise ValueError("fixed blocksize: every frame is _BLOCK samples")
     hdr = _frame_header(idx, _CH_MONO)
-    bits = _Bits()
+    bits = BitWriter()
     if plan is None:
         _write_subframe(bits, samples, 16)
     else:
         _emit_subframe(bits, samples, 16, plan)
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -828,7 +740,7 @@ def _frame_stereo(
     decision. Side channels code at 17 bits (RFC 9639 9.2.1).
     ``planned`` carries ((plan, cost) per candidate channel) from the
     batched planner; plan costs equal the scalar encodings'
-    bit_length(), so the assignment choice (min, first-of-equals) is
+    nbits(), so the assignment choice (min, first-of-equals) is
     identical — but only the two WINNING subframes are emitted."""
     if len(left) != _BLOCK or len(right) != _BLOCK:
         raise ValueError("fixed blocksize: every frame is _BLOCK samples")
@@ -849,11 +761,11 @@ def _frame_stereo(
             (_CH_MID_SIDE, c_mid, c_side),
         ]
         best = min(
-            cands, key=lambda c: c[1].bit_length() + c[2].bit_length()
+            cands, key=lambda c: c[1].nbits() + c[2].nbits()
         )
         nib, b1, b2 = best
         hdr = _frame_header(idx, nib)
-        bits = _Bits()
+        bits = BitWriter()
         bits.extend(b1)
         bits.extend(b2)
     else:
@@ -866,10 +778,10 @@ def _frame_stereo(
         ]
         nib, _, ch1, ch2 = min(cands2, key=lambda c: c[1])
         hdr = _frame_header(idx, nib)
-        bits = _Bits()
+        bits = BitWriter()
         for samples_, depth_, plan_ in (ch1, ch2):
             _emit_subframe(bits, samples_, depth_, plan_)
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -917,13 +829,13 @@ def _frame_multi(
     channel picks its own subframe type by exact coded size."""
     nib = len(chans_block) - 1
     hdr = _frame_header(idx, nib)
-    bits = _Bits()
+    bits = BitWriter()
     for ci, ch in enumerate(chans_block):
         if plans is None:
             bits.extend(_coded_subframe(ch, 16))
         else:
             _emit_subframe(bits, ch, 16, plans[ci])
-    frame = bytes(hdr) + bits.done()
+    frame = bytes(hdr) + bits.bytes_()
     return frame + crc16(frame).to_bytes(2, "big")
 
 
@@ -1010,21 +922,21 @@ def _signed(v: int, depth: int) -> int:
     return v - (1 << depth) if v & (1 << (depth - 1)) else v
 
 
-def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
+def _read_subframe(br: BitReader, blocksize: int, depth: int) -> list[int]:
     """One subframe at ``depth`` bits per sample, header byte
     included — everything through the bit reader, because a stereo
     frame's second subframe is not byte-aligned."""
-    sub = br.read(8)
+    sub = br.u(8)
     if sub & 0x81:
         raise ValueError("bad subframe header padding/wasted bits")
     stype = (sub >> 1) & 0x3F
     if stype == 0:  # CONSTANT
-        return [_signed(br.read(depth), depth)] * blocksize
+        return [_signed(br.u(depth), depth)] * blocksize
     if stype == 1:  # VERBATIM
-        return [_signed(br.read(depth), depth) for _ in range(blocksize)]
+        return [_signed(br.u(depth), depth) for _ in range(blocksize)]
     if 0b001000 <= stype <= 0b001100:  # FIXED, order 0..4
         order = stype & 0x07
-        warm = [_signed(br.read(depth), depth) for _ in range(order)]
+        warm = [_signed(br.u(depth), depth) for _ in range(order)]
         res = _read_residuals(br, blocksize, order)
         coef = _FIXED_COEF[order]
         out = list(warm)
@@ -1034,12 +946,12 @@ def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
         return out
     if stype & 0b100000:  # LPC, order 1..32 (RFC 9639 9.2.3)
         order = (stype & 0x1F) + 1
-        warm = [_signed(br.read(depth), depth) for _ in range(order)]
-        prec = br.read(4) + 1
+        warm = [_signed(br.u(depth), depth) for _ in range(order)]
+        prec = br.u(4) + 1
         if prec == 16:
             raise ValueError("invalid LPC coefficient precision 0b1111")
-        shift = br.read(5)  # unsigned per RFC 9639 (never negative)
-        qcoef = [_signed(br.read(prec), prec) for _ in range(order)]
+        shift = br.u(5)  # unsigned per RFC 9639 (never negative)
+        qcoef = [_signed(br.u(prec), prec) for _ in range(order)]
         res = _read_residuals(br, blocksize, order)
         out = list(warm)
         for e in res:
@@ -1052,34 +964,34 @@ def _read_subframe(br: _BitsIn, blocksize: int, depth: int) -> list[int]:
     raise NotImplementedError(f"reserved subframe type {stype}")
 
 
-def _read_residuals(br: _BitsIn, blocksize: int, order: int) -> list[int]:
+def _read_residuals(br: BitReader, blocksize: int, order: int) -> list[int]:
     """Shared coded-residual section (RFC 9639 9.2.7): rice method
     0/1, 2^k partitions, escape-to-raw-width — used verbatim by both
     FIXED and LPC subframes."""
-    method = br.read(2)
+    method = br.u(2)
     if method > 1:
         raise ValueError(f"reserved residual method {method}")
     pbits = 5 if method else 4
     escape = (1 << pbits) - 1
-    part_order = br.read(4)
+    part_order = br.u(4)
     n_parts = 1 << part_order
     if blocksize % n_parts or (blocksize >> part_order) <= order:
         raise ValueError("partition order does not divide the block")
     res: list[int] = []
     for p in range(n_parts):
         count = (blocksize >> part_order) - (order if p == 0 else 0)
-        param = br.read(pbits)
+        param = br.u(pbits)
         if param == escape:  # raw fixed-width signed residuals
-            width = br.read(5)
+            width = br.u(5)
             for _ in range(count):
-                v = br.read(width) if width else 0
+                v = br.u(width) if width else 0
                 if width and v & (1 << (width - 1)):
                     v -= 1 << width
                 res.append(v)
         else:
             for _ in range(count):
                 q = br.unary()
-                u = (q << param) | (br.read(param) if param else 0)
+                u = (q << param) | (br.u(param) if param else 0)
                 res.append(_unzigzag(u))
     return res
 
@@ -1153,7 +1065,7 @@ def decode_flac(buf: bytes) -> dict:
         if crc8(buf[start:at]) != buf[at]:
             raise ValueError(f"frame header CRC-8 mismatch at {start}")
         at += 1
-        br = _BitsIn(buf, at)
+        br = BitReader(buf, at << 3)
         if nib <= 0b0111:  # 1-8 independently coded channels
             if nib + 1 != channels:
                 raise ValueError(
@@ -1194,7 +1106,8 @@ def decode_flac(buf: bytes) -> dict:
             frame_samples = [
                 v for pair in zip(left, right) for v in pair
             ]
-        at = br.align()
+        br.align()
+        at = br.pos >> 3
         if crc16(buf[start:at]) != int.from_bytes(buf[at : at + 2], "big"):
             raise ValueError(f"frame CRC-16 mismatch at {start}")
         at += 2

@@ -45,129 +45,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-# --- RBSP bit I/O -----------------------------------------------------------
-
-
-class _BitW:
-    """r14: ``u`` no longer splits bytes per call — pending bits pile
-    up in the integer accumulator and are flushed to the bytearray in
-    one ``to_bytes`` per ~16 bytes (the per-call byte loop was ~10%
-    of CAVLC encode CPU across the H.264 queries; a 128-bit flush
-    threshold measured fastest — larger ones make every call shift a
-    big accumulator). ``n`` counts ALL
-    pending bits, so external ``n % 8`` alignment checks keep their
-    meaning; the byte stream is unchanged."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def u(self, v: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (v & ((1 << bits) - 1))
-        n = self.n + bits
-        if n >= 128:
-            rem = n & 7
-            self.out += (self.acc >> rem).to_bytes((n - rem) >> 3, "big")
-            self.acc &= (1 << rem) - 1
-            n = rem
-        self.n = n
-
-    def ue(self, v: int) -> None:
-        # Exp-Golomb codeword = (nbits-1) zeros then the nbits-bit
-        # code — exactly `code` written in a 2*nbits-1 bit field.
-        code = v + 1
-        self.u(code, 2 * code.bit_length() - 1)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def _flush(self) -> None:
-        if self.n >= 8:
-            rem = self.n & 7
-            self.out += (
-                (self.acc >> rem).to_bytes((self.n - rem) >> 3, "big")
-            )
-            self.acc &= (1 << rem) - 1
-            self.n = rem
-
-    def align_zero(self) -> None:
-        pad = (-self.n) % 8
-        if pad:
-            self.acc <<= pad
-            self.n += pad
-        self._flush()
-
-    def trailing(self) -> None:
-        self.u(1, 1)
-        self.align_zero()
-
-    def bytes_(self) -> bytes:
-        self._flush()
-        assert self.n == 0, "unaligned RBSP"
-        return bytes(self.out)
-
-
-class _BitR:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
-
-    def u(self, bits: int) -> int:
-        # Batched extraction: pull the spanned bytes in one slice and
-        # shift — O(bytes spanned), not O(bits). The hot loops (CAVLC
-        # levels, VLC tables, slice headers) funnel through here.
-        pos = self.pos
-        end = pos + bits
-        if bits == 1:  # single-flag reads dominate; skip the slice
-            try:
-                byte = self.data[pos >> 3]
-            except IndexError:
-                raise ValueError(
-                    "bitstream exhausted mid-element"
-                ) from None
-            self.pos = end
-            return (byte >> (7 - (pos & 7))) & 1
-        last = (end + 7) >> 3
-        if last > len(self.data):
-            # truncated/corrupt stream: the reader ran dry — loud
-            # ValueError, zero cost on the happy path
-            raise ValueError("bitstream exhausted mid-element")
-        self.pos = end
-        chunk = int.from_bytes(self.data[pos >> 3 : last], "big")
-        return (chunk >> ((last << 3) - end)) & ((1 << bits) - 1)
-
-    def ue(self) -> int:
-        # r13: one 48-bit window + bit_length replaces the per-bit
-        # zero-prefix scan (the prefix is capped at 32, so six bytes
-        # always cover it when the stream has the bits; a shorter
-        # window means the stream tail).
-        data = self.data
-        pos = self.pos
-        n = len(data) << 3
-        if pos >= n:
-            raise ValueError("bitstream exhausted mid-element")
-        byte_i = pos >> 3
-        win = int.from_bytes(data[byte_i : byte_i + 6], "big")
-        m = ((min(byte_i + 6, len(data)) - byte_i) << 3) - (pos & 7)
-        val = win & ((1 << m) - 1)  # the next m real bits
-        if val == 0:
-            if m > 32:
-                raise ValueError("bad Exp-Golomb code")
-            raise ValueError("bitstream exhausted mid-element")
-        zeros = m - val.bit_length()
-        if zeros > 32:
-            raise ValueError("bad Exp-Golomb code")
-        self.pos = pos + zeros + 1
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 
 # --- NAL encapsulation ------------------------------------------------------
 
@@ -258,7 +136,7 @@ def _check_planes(
 def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
     """Baseline-profile SPS RBSP for a frame-MBs-only 4:2:0 stream of
     mbw x mbh macroblocks cropped to w x h (shared with h264_intra)."""
-    sps = _BitW()
+    sps = BitWriter()
     sps.u(66, 8)  # profile_idc: baseline
     sps.u(0xE0, 8)  # constraint_set0..2, reserved
     sps.u(20, 8)  # level_idc 2.0
@@ -287,7 +165,7 @@ def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
 
 def _pps_rbsp() -> bytes:
     """CAVLC-mode PPS RBSP (no FMO, all offsets zero)."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)  # pic_parameter_set_id
     pps.ue(0)  # seq_parameter_set_id
     pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
@@ -307,7 +185,7 @@ def _pps_rbsp() -> bytes:
     return pps.bytes_()
 
 
-def _slice_header(sl: _BitW, qp: int = 26) -> None:
+def _slice_header(sl: BitWriter, qp: int = 26) -> None:
     """IDR I-slice header (single slice per picture, QP via
     slice_qp_delta against pic_init_qp 26)."""
     sl.ue(0)  # first_mb_in_slice
@@ -339,7 +217,7 @@ def encode_h264_ipcm(
     cbp = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
     crp = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl)
     for my in range(mbh):
         for mx in range(mbw):
@@ -389,7 +267,7 @@ def _split_nals(data: bytes) -> list[bytes]:
 def _parse_sps(rbsp: bytes) -> dict:
     """Parse the SPS fields this codec family needs (shared with
     h264_intra). Raises on high-profile / interlaced streams."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     profile = r.u(8)
     r.u(8)  # constraint flags
     r.u(8)  # level
@@ -433,7 +311,7 @@ def _parse_sps(rbsp: bytes) -> dict:
     )
 
 
-def _parse_slice_header(r: _BitR, sps: dict) -> int:
+def _parse_slice_header(r: BitReader, sps: dict) -> int:
     """Parse an IDR I-slice header; returns the slice QP."""
     if r.ue() != 0:
         raise ValueError("multi-slice pictures unsupported")
@@ -463,7 +341,7 @@ def decode_h264_ipcm(
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             r.ue()
             r.ue()
             if r.u(1):
@@ -471,7 +349,7 @@ def decode_h264_ipcm(
         elif ntype == 5:
             if sps is None:
                 raise ValueError("IDR slice before SPS")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             _parse_slice_header(r, sps)
             mbw, mbh = sps["mbw"], sps["mbh"]
             yp = np.zeros((mbh * 16, mbw * 16), np.uint8)

@@ -95,9 +95,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _ep_remove,
     _nal,
     _parse_sps,
@@ -179,7 +178,7 @@ def _sps_rbsp_poc0(mbw: int, mbh: int, w: int, h: int) -> bytes:
     frames — the framing B slices require."""
     if w % 16 or h % 16:
         raise ValueError("B sequences require dimensions % 16 == 0")
-    sps = _BitW()
+    sps = BitWriter()
     sps.u(77, 8)  # profile_idc: Main (B slices are not in Baseline)
     sps.u(0x40, 8)  # constraint_set1_flag only
     sps.u(20, 8)
@@ -205,13 +204,13 @@ def _idr_reheader_poc0(rbsp: bytes, idc: int = 1,
     SPS + deblocking-control PPS: insert pic_order_cnt_lsb (= 0)
     after idr_pic_id and append disable_deblocking_filter_idc (+ the
     7.3.3 slice filter offsets when idc != 1)."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
     frame_num = r.u(4)
     idr_id = r.ue()
     noout, longterm = r.u(1), r.u(1)
     qpd = r.se()
-    w = _BitW()
+    w = BitWriter()
     w.ue(first_mb)
     w.ue(stype)
     w.ue(ppsid)
@@ -234,7 +233,7 @@ def _idr_strip_poc0(rbsp: bytes):
     deblocking idc (+ offsets) so the slice can be delegated to the
     plain intra decoder (poc-type-2 SPS, control-flag-0 PPS).
     Returns (rbsp, idc, (a_div2, b_div2))."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     fields = (r.ue(), r.ue(), r.ue())
     frame_num = r.u(4)
     idr_id = r.ue()
@@ -244,7 +243,7 @@ def _idr_strip_poc0(rbsp: bytes):
     noout, longterm = r.u(1), r.u(1)
     qpd = r.se()
     idc, offs = _read_deblock_fields(r)
-    w = _BitW()
+    w = BitWriter()
     for v in fields:
         w.ue(v)
     w.u(frame_num, 4)
@@ -259,7 +258,7 @@ def _idr_strip_poc0(rbsp: bytes):
 def _p_reheader_poc0(rbsp: bytes, poc_lsb: int) -> bytes:
     """Insert pic_order_cnt_lsb into a P slice produced by
     h264_inter._encode_p_frame (single-ref layout, no override)."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
     fn = r.u(4)
     if r.u(1):
@@ -267,7 +266,7 @@ def _p_reheader_poc0(rbsp: bytes, poc_lsb: int) -> bytes:
     lm, am = r.u(1), r.u(1)
     qpd = r.se()
     idc = r.ue()
-    w = _BitW()
+    w = BitWriter()
     w.ue(first_mb)
     w.ue(stype)
     w.ue(ppsid)
@@ -287,7 +286,7 @@ def _pps_rbsp_deblock_wp(idc: int = 1) -> bytes:
     weighted_bipred_idc set: 1 = EXPLICIT (B slice headers carry a
     pred_weight_table), 2 = IMPLICIT (weights derived from POC
     distances, no table)."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)
     pps.ue(0)
     pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
@@ -326,7 +325,7 @@ def _norm_weights(weights):
     return w
 
 
-def _write_pred_weight_table(sl: _BitW, w) -> None:
+def _write_pred_weight_table(sl: BitWriter, w) -> None:
     """7.3.3.2 pred_weight_table, one active reference per list."""
     sl.ue(w["luma_denom"])
     sl.ue(w["chroma_denom"])
@@ -375,7 +374,7 @@ def _resolve_weights(w):
     return out
 
 
-def _parse_pred_weight_table(r: _BitR):
+def _parse_pred_weight_table(r: BitReader):
     w = {"luma_denom": r.ue(), "chroma_denom": r.ue()}
     for li in ("l0", "l1"):
         e = {}
@@ -463,7 +462,7 @@ def _wp_bi(p0, p1, w):
     return tuple(out)
 
 
-def _b_slice_header(sl: _BitW, qp: int, frame_num: int,
+def _b_slice_header(sl: BitWriter, qp: int, frame_num: int,
                     poc_lsb: int, weights=None,
                     spatial: bool = True, deblock_idc: int = 1,
                     deblock_offs: tuple = (0, 0),
@@ -489,7 +488,7 @@ def _b_slice_header(sl: _BitW, qp: int, frame_num: int,
 
 
 def _parse_inter_header(
-    r: _BitR, bipred_idc: int = 0, is_ref: bool = False
+    r: BitReader, bipred_idc: int = 0, is_ref: bool = False
 ) -> tuple[str, int, int, dict | None]:
     """Parse a non-IDR slice header under the POC-type-0 SPS.
     Returns (kind 'p'|'b', slice_qp, poc_lsb, weights-or-None,
@@ -733,7 +732,7 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
         weights = None
     if col is None:
         col = _intra_motion(mbw, mbh)
-    sl = _BitW()
+    sl = BitWriter()
     _b_slice_header(sl, qp, frame_num, poc_lsb, wtab,
                     spatial=direct_mode == "spatial",
                     deblock_idc=deblock_idc,
@@ -1488,7 +1487,7 @@ def decode_h264_b_stream(payload: bytes):
             if sps.get("poc_type") != 0:
                 raise ValueError("B streams require pic_order_cnt_type 0")
         elif ntype == 8:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             r.ue()
             r.ue()
             if r.u(1):
@@ -1531,7 +1530,7 @@ def decode_h264_b_stream(payload: bytes):
         elif ntype == 1:
             if sps is None or not ref_dpb:
                 raise ValueError("coded slice before references exist")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             is_ref = bool((nal[0] >> 5) & 3)
             kind, qp, poc, wts, spatial, d_idc, d_offs = (
                 _parse_inter_header(r, bipred_idc, is_ref=is_ref)

@@ -50,9 +50,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _check_planes,
     _ep_remove,
     _nal,
@@ -234,12 +233,12 @@ class _Ctx:
 
 
 class _Enc:
-    """Arithmetic encoder (9.3.4): writes into a _BitW that must be
+    """Arithmetic encoder (9.3.4): writes into a BitWriter that must be
     byte-aligned (cabac_alignment_one_bit already written).
 
     r14: the hot paths (``decision``, ``bypass``) inline the
     renormalization loop and fold emitted bits into a local integer
-    accumulator that is flushed to the _BitW in chunks — one writer
+    accumulator that is flushed to the BitWriter in chunks — one writer
     call per ~KB instead of per bit (the r13 profile charged ~40% of
     m33's encode CPU to the per-bit _put/_renorm/u call chain). The
     put/outstanding semantics — including the swallowed FIRST bit and
@@ -256,7 +255,7 @@ class _Enc:
     _LIM = 512
     _KEEP = 64
 
-    def __init__(self, w: _BitW) -> None:
+    def __init__(self, w: BitWriter) -> None:
         self.w = w
         self.low = 0
         self.range = 510
@@ -734,7 +733,7 @@ def _pps_rbsp_cabac() -> bytes:
     deblocking_filter_control_present_flag so the slice can disable
     the loop filter — making the stream's nominal conformant output
     equal this codec family's (unfiltered) reconstruction."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)  # pic_parameter_set_id
     pps.ue(0)  # seq_parameter_set_id
     pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
@@ -754,7 +753,7 @@ def _pps_rbsp_cabac() -> bytes:
     return pps.bytes_()
 
 
-def _slice_header_cabac(sl: _BitW, qp: int) -> None:
+def _slice_header_cabac(sl: BitWriter, qp: int) -> None:
     sl.ue(0)  # first_mb_in_slice
     sl.ue(7)  # slice_type: I (all slices)
     sl.ue(0)  # pic_parameter_set_id
@@ -843,7 +842,7 @@ def encode_h264_cabac_intra(
     before = _decoded_before_factory(mbw)
     st = _MbState(mbw, mbh)
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header_cabac(sl, qp)
     ctxs = _Ctx(qp)
     enc = _Enc(sl)
@@ -1054,7 +1053,7 @@ def encode_h264_cabac_intra(
 # ---------------------------------------------------------------------------
 
 
-def _parse_slice_header_cabac(r: _BitR) -> int:
+def _parse_slice_header_cabac(r: BitReader) -> int:
     """IDR I-slice header for the CABAC PPS above; returns SliceQPy.
     Mirrors h264.py's _parse_slice_header plus the deblocking idc."""
     r.ue()  # first_mb_in_slice
@@ -1088,7 +1087,7 @@ def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarra
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             r.ue()
             r.ue()
             if not r.u(1):
@@ -1099,7 +1098,7 @@ def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarra
         elif ntype == 5:
             if sps is None:
                 raise ValueError("IDR slice before SPS")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             qp = _parse_slice_header_cabac(r)
             planes = _decode_idr_cabac(rbsp, r.pos, sps, qp)
     if planes is None:

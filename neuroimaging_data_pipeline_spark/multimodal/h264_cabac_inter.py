@@ -46,9 +46,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _nal,
     _parse_sps,
     _split_nals,
@@ -369,7 +368,7 @@ def _dec_cbp(dec: _Dec, ctxs: _Ctx, st: _MbStateP, mx: int,
 # ---------------------------------------------------------------------------
 
 
-def _p_slice_header_cabac(sl: _BitW, qp: int, frame_num: int,
+def _p_slice_header_cabac(sl: BitWriter, qp: int, frame_num: int,
                           nra: int) -> None:
     sl.ue(0)  # first_mb_in_slice
     sl.ue(5)  # slice_type P (all slices)
@@ -389,7 +388,7 @@ def _p_slice_header_cabac(sl: _BitW, qp: int, frame_num: int,
         sl.u(1, 1)  # cabac_alignment_one_bit
 
 
-def _parse_p_slice_header_cabac(r: _BitR) -> tuple[int, int]:
+def _parse_p_slice_header_cabac(r: BitReader) -> tuple[int, int]:
     r.ue()
     stype = r.ue()
     if stype % 5 != 0:
@@ -478,7 +477,7 @@ def encode_h264_cabac_p_gop(
         recon = (ry, rcb, rcr)
         mvs = _MvState(mbw, mbh)
         st = _MbStateP(mbw, mbh)
-        sl = _BitW()
+        sl = BitWriter()
         _p_slice_header_cabac(sl, qp, fi, nra)
         ctxs = make_p_ctx(qp, init_table)
         enc = _Enc(sl)
@@ -870,7 +869,7 @@ def _pps_cabac_inter() -> bytes:
     """PPS: entropy_coding_mode 1, deblocking_filter_control_present
     set (slice headers carry disable_deblocking_filter_idc=1, so the
     field must be legal per 7.3.3; ADVICE r10)."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)  # pps id
     pps.ue(0)  # sps id
     pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
@@ -935,7 +934,7 @@ def decode_h264_cabac_p(
             frames.append(frame)
             refs = [frame]
         elif ntype == 1:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             qp, nra = _parse_p_slice_header_cabac(r)
             qpc = _chroma_qp(qp)
             mbw, mbh = sps["mbw"], sps["mbh"]

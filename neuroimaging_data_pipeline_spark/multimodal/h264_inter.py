@@ -88,9 +88,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _ep_remove,
     _nal,
     _parse_sps,
@@ -470,7 +469,7 @@ def _sps_rbsp_ref1(
     except max_num_ref_frames (1..15 decoded references)."""
     if w % 16 or h % 16:
         raise ValueError("inter sequences require dimensions % 16 == 0")
-    sps = _BitW()
+    sps = BitWriter()
     sps.u(66, 8)  # profile_idc: baseline
     sps.u(0xE0, 8)
     sps.u(20, 8)
@@ -495,7 +494,7 @@ def _pps_rbsp_deblock(weighted_pred: bool = False) -> bytes:
     unfiltered reconstruction, same choice as the CABAC module).
     ``weighted_pred`` sets weighted_pred_flag: P slice headers then
     carry a list-0 pred_weight_table."""
-    pps = _BitW()
+    pps = BitWriter()
     pps.ue(0)
     pps.ue(0)
     pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
@@ -515,7 +514,7 @@ def _pps_rbsp_deblock(weighted_pred: bool = False) -> bytes:
     return pps.bytes_()
 
 
-def _copy_bits(r: _BitR, w: _BitW, rbsp: bytes) -> None:
+def _copy_bits(r: BitReader, w: BitWriter, rbsp: bytes) -> None:
     """Copy the remaining payload bits of an RBSP (everything after
     r.pos up to but excluding the rbsp_stop_one_bit), then close with
     a fresh trailing pattern."""
@@ -537,7 +536,7 @@ def _copy_bits(r: _BitR, w: _BitW, rbsp: bytes) -> None:
 def _idr_slice_qp(rbsp: bytes) -> int:
     """Slice QP of a (control-PPS-stripped) IDR slice: 26 +
     pic_init_qp_minus26 (0 in this family) + slice_qp_delta."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     r.ue(), r.ue(), r.ue()
     r.u(4)
     r.ue()
@@ -555,13 +554,13 @@ def _idr_slice_add_idc(
     the single-slice frames this codec writes). Per 7.3.3, when idc
     != 1 the slice_alpha_c0_offset_div2 / slice_beta_offset_div2
     fields follow (``offs``, div2 values)."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
     frame_num = r.u(4)
     idr_id = r.ue()
     noout, longterm = r.u(1), r.u(1)
     qpd = r.se()
-    w = _BitW()
+    w = BitWriter()
     w.ue(first_mb)
     w.ue(stype)
     w.ue(ppsid)
@@ -578,7 +577,7 @@ def _idr_slice_add_idc(
     return w.bytes_()
 
 
-def _read_deblock_fields(r: "_BitR") -> tuple[int, tuple]:
+def _read_deblock_fields(r: "BitReader") -> tuple[int, tuple]:
     """Parse disable_deblocking_filter_idc and, when != 1, the two
     slice filter offsets (7.3.3). Returns (idc, (a_div2, b_div2))."""
     idc = r.ue()
@@ -601,14 +600,14 @@ def _idr_slice_strip_idc(rbsp: bytes) -> tuple[bytes, int, tuple]:
     the slice can be delegated to h264_intra.decode_h264_frame
     (whose PPS has no deblocking control field). Returns
     (rbsp, idc, (a_div2, b_div2))."""
-    r = _BitR(rbsp)
+    r = BitReader(rbsp)
     fields = (r.ue(), r.ue(), r.ue())
     frame_num = r.u(4)
     idr_id = r.ue()
     noout, longterm = r.u(1), r.u(1)
     qpd = r.se()
     idc, offs = _read_deblock_fields(r)
-    w = _BitW()
+    w = BitWriter()
     for v in fields:
         w.ue(v)
     w.u(frame_num, 4)
@@ -663,7 +662,7 @@ def _resolve_p_weights(w: dict) -> dict:
     return out
 
 
-def _write_pwt_p(sl: _BitW, w: dict, nra: int) -> None:
+def _write_pwt_p(sl: BitWriter, w: dict, nra: int) -> None:
     """7.3.3.2 pred_weight_table, list 0 only (P slices)."""
     sl.ue(w["luma_denom"])
     sl.ue(w["chroma_denom"])
@@ -688,7 +687,7 @@ def _write_pwt_p(sl: _BitW, w: dict, nra: int) -> None:
             sl.u(0, 1)
 
 
-def _parse_pwt_p(r: _BitR, nra: int) -> dict:
+def _parse_pwt_p(r: BitReader, nra: int) -> dict:
     w = {"luma_denom": r.ue(), "chroma_denom": r.ue(), "refs": []}
     for _ in range(nra):
         e = {}
@@ -710,7 +709,7 @@ def _parse_pwt_p(r: _BitR, nra: int) -> dict:
     return w
 
 
-def _write_te_ref(sl: _BitW, v: int, nra: int) -> None:
+def _write_te_ref(sl: BitWriter, v: int, nra: int) -> None:
     """ref_idx_l0 as te(v) (9.1): range 1 -> one inverted bit,
     range > 1 -> ue(v), range 0 -> absent."""
     if nra == 2:
@@ -719,7 +718,7 @@ def _write_te_ref(sl: _BitW, v: int, nra: int) -> None:
         sl.ue(v)
 
 
-def _read_te_ref(r: _BitR, nra: int) -> int:
+def _read_te_ref(r: BitReader, nra: int) -> int:
     if nra == 2:
         return 1 - r.u(1)
     if nra > 2:
@@ -728,7 +727,7 @@ def _read_te_ref(r: _BitR, nra: int) -> int:
 
 
 def _p_slice_header(
-    sl: _BitW, qp: int, frame_num: int = 1, num_refs_active: int = 1,
+    sl: BitWriter, qp: int, frame_num: int = 1, num_refs_active: int = 1,
     wtab: dict | None = None, deblock_idc: int = 1,
     deblock_offs: tuple = (0, 0),
 ) -> None:
@@ -753,7 +752,7 @@ def _p_slice_header(
 
 
 def _parse_p_slice_header(
-    r: _BitR, weighted_pred: bool = False
+    r: BitReader, weighted_pred: bool = False
 ) -> tuple[int, int, dict | None, int, tuple]:
     """Returns (slice_qp, num_ref_idx_l0_active, weights-or-None,
     disable_deblocking_filter_idc, (a_div2, b_div2))."""
@@ -1504,7 +1503,7 @@ def _encode_p_frame(
     mvs = _MvState(mbw, mbh)
     pweights = _resolve_p_weights(wtab) if wtab is not None else None
 
-    sl = _BitW()
+    sl = BitWriter()
     _p_slice_header(sl, qp, frame_num, nra, wtab, deblock_idc,
                     deblock_offs)
     skip_run = 0
@@ -1826,7 +1825,7 @@ def decode_h264_sequence(
             sps = _parse_sps(rbsp)
             sps_rbsp = rbsp
         elif ntype == 8:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             r.ue()
             r.ue()
             if r.u(1):
@@ -1873,7 +1872,7 @@ def decode_h264_sequence(
         elif ntype == 1:
             if not refs:
                 raise ValueError("P slice before any reference frame")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             qp, nra, pw, idc, offs = _parse_p_slice_header(
                 r, weighted_pred
             )
@@ -1915,7 +1914,7 @@ def decode_h264_sequence(
 
 
 def _decode_p_frame(
-    r: _BitR, sps: dict, qp: int, refs: list, nra: int,
+    r: BitReader, sps: dict, qp: int, refs: list, nra: int,
     return_motion: bool = False,
     weights: dict | None = None,
 ):

@@ -69,9 +69,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter, lut8
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _BitR,
-    _BitW,
     _check_planes,
     _ep_remove,
     _nal,
@@ -394,34 +393,9 @@ def _invert(table: dict | list) -> dict:
     return {(len(bits), int(bits, 2)): key for key, bits in items}
 
 
-def _lut8(dec: dict) -> list:
-    """256-entry first-level decode LUT over the next 8 bits.
-
-    NOTE (ADVICE r13): this 8-bit first-level LUT builder has siblings
-    in mp3l3.py (_lut8, (len, code)-keyed) and jpeg.py (_dec_tab,
-    (code, length)-keyed) — a fix or extension to the scheme must be
-    propagated to all three; the key orders differ by module on
-    purpose (each mirrors its table's native form).
-    (r13, guide §4.2 per-task work): entry = (decoded value, code
-    length) for codes of <= 8 bits, None for longer codes. Built once
-    at import; prefix-freedom means the shortest dict hit on any
-    8-bit window IS the transmitted code, so the hot _read_vlc path
-    collapses to one int.from_bytes + one list index. Codes longer
-    than 8 bits (the cold tail of every CAVLC table) fall back to the
-    original bit walk."""
-    lut: list = [None] * 256
-    for p8 in range(256):
-        for ln in range(1, 9):
-            hit = dec.get((ln, p8 >> (8 - ln)))
-            if hit is not None:
-                lut[p8] = (hit, ln)
-                break
-    return lut
-
-
 def _dec_pair(table: dict | list) -> tuple[dict, list]:
     dec = _invert(table)
-    return dec, _lut8(dec)
+    return dec, lut8(dec)
 
 
 def _to_int_table(table: dict | list) -> dict:
@@ -442,12 +416,12 @@ _TZC_ENC = {tc: _to_int_table(v) for tc, v in _TZC.items()}
 _RUN_ENC = {zl: _to_int_table(v) for zl, v in _RUN.items()}
 
 
-def _write_bits(w: _BitW, bits: str) -> None:
+def _write_bits(w: BitWriter, bits: str) -> None:
     # one batched write: the string is the MSB-first field value
     w.u(int(bits, 2), len(bits))
 
 
-def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
+def _read_vlc(r: BitReader, dtab: tuple[dict, list], what: str):
     # r13 fast path: one 16-bit window + one 256-entry LUT probe
     # resolves every code of <= 8 bits (the hot majority of all four
     # CAVLC tables); longer codes fall back to the original
@@ -459,7 +433,7 @@ def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
     data, pos = r.data, r.pos
     n = len(data) << 3
     if pos >= n:
-        raise ValueError("bitstream exhausted mid-element")
+        raise ValueError("truncated bitstream")
     byte_i = pos >> 3
     win = int.from_bytes(data[byte_i : byte_i + 2], "big")
     pad = byte_i + 2 - len(data)
@@ -471,7 +445,7 @@ def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
         val, ln = hit
         pos += ln
         if pos > n:
-            raise ValueError("bitstream exhausted mid-element")
+            raise ValueError("truncated bitstream")
         r.pos = pos
         return val
     # cold tail: code longer than 8 bits (LUT miss implies no valid
@@ -481,7 +455,7 @@ def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
     pos += 8
     for ln in range(9, 21):
         if pos >= n:
-            raise ValueError("bitstream exhausted mid-element")
+            raise ValueError("truncated bitstream")
         v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
         pos += 1
         hit = dec.get((ln, v))
@@ -494,7 +468,7 @@ def _read_vlc(r: _BitR, dtab: tuple[dict, list], what: str):
 # --- CAVLC residual block codec (clause 9.2) ----------------------------------
 
 
-def _encode_level(w: _BitW, level: int, suffix_len: int) -> None:
+def _encode_level(w: BitWriter, level: int, suffix_len: int) -> None:
     # a zero-prefix-then-one unary codeword of p zeros is the value 1
     # in a (p+1)-bit field — one batched write per element
     code = 2 * level - 2 if level > 0 else -2 * level - 1
@@ -525,7 +499,7 @@ def _encode_level(w: _BitW, level: int, suffix_len: int) -> None:
     w.u(code, size)
 
 
-def _decode_level(r: _BitR, suffix_len: int) -> int:
+def _decode_level(r: BitReader, suffix_len: int) -> int:
     # r13: the zero-prefix scan is one 56-bit window + bit_length —
     # a single int.from_bytes replaces the per-bit loop (level_prefix
     # is capped at 41, so a 7-byte window always covers it when the
@@ -533,7 +507,7 @@ def _decode_level(r: _BitR, suffix_len: int) -> int:
     data, pos = r.data, r.pos
     n = len(data) << 3
     if pos >= n:
-        raise ValueError("bitstream exhausted mid-element")
+        raise ValueError("truncated bitstream")
     byte_i = pos >> 3
     win = int.from_bytes(data[byte_i : byte_i + 7], "big")
     m = ((min(byte_i + 7, len(data)) - byte_i) << 3) - (pos & 7)
@@ -545,7 +519,7 @@ def _decode_level(r: _BitR, suffix_len: int) -> int:
         # ran dry mid-prefix
         if m >= 41:
             raise ValueError("bad level_prefix")
-        raise ValueError("bitstream exhausted mid-element")
+        raise ValueError("truncated bitstream")
     prefix = m - val.bit_length()
     if prefix > 40:
         raise ValueError("bad level_prefix")
@@ -571,7 +545,7 @@ def _level_bits(level: int, suffix_len: int) -> tuple[int, int]:
     """The (field value, field width) pair for one level codeword —
     _encode_level's ladder with the 1-2 writes pre-merged so callers
     can fold a whole block's codewords into one batched bit write
-    (r13: the per-element _BitW.u calls were ~13% of encode CPU)."""
+    (r13: the per-element BitWriter.u calls were ~13% of encode CPU)."""
     code = 2 * level - 2 if level > 0 else -2 * level - 1
     if suffix_len == 0:
         if code < 14:
@@ -597,13 +571,13 @@ def _level_bits(level: int, suffix_len: int) -> tuple[int, int]:
 
 
 def encode_residual_block(
-    w: _BitW, coeffs: list[int], nc: int, max_coeff: int
+    w: BitWriter, coeffs: list[int], nc: int, max_coeff: int
 ) -> int:
     """CAVLC-encode one residual block (coeffs in zigzag scan order,
     length max_coeff). Returns TotalCoeff for nnz tracking. The
     block's codewords (coeff_token, signs, levels, total_zeros,
     run_before) are accumulated into one integer and emitted with a
-    SINGLE _BitW.u call (r13) — bit-identical output, ~10x fewer
+    SINGLE BitWriter.u call (r13) — bit-identical output, ~10x fewer
     writer calls on dense blocks."""
     nz = [i for i, c in enumerate(coeffs) if c]
     total = len(nz)
@@ -664,7 +638,7 @@ def encode_residual_block(
 
 
 def decode_residual_block(
-    r: _BitR, nc: int, max_coeff: int
+    r: BitReader, nc: int, max_coeff: int
 ) -> tuple[list[int], int]:
     """Decode one CAVLC residual block; returns (zigzag coeffs,
     TotalCoeff)."""
@@ -1162,7 +1136,7 @@ def encode_h264_i16x16(
     cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
             1: np.zeros((mbh * 2, mbw * 2), np.int64)}
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp)
     _PM_NEEDS = {0: (True, False), 1: (False, True), 2: (False, False),
                  3: (True, True)}
@@ -1330,7 +1304,7 @@ def encode_h264_i4x4(
     modes = np.full((mbh * 4, mbw * 4), -1, np.int64)
     before = _decoded_before_factory(mbw)
 
-    sl = _BitW()
+    sl = BitWriter()
     _slice_header(sl, qp)
     for my in range(mbh):
         for mx in range(mbw):
@@ -1491,7 +1465,7 @@ def decode_h264_frame(
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             r.ue()
             r.ue()
             if r.u(1):
@@ -1507,7 +1481,7 @@ def decode_h264_frame(
         elif ntype == 5:
             if sps is None:
                 raise ValueError("IDR slice before SPS")
-            r = _BitR(rbsp)
+            r = BitReader(rbsp)
             qp = _parse_slice_header(r, sps)
             qpc = _chroma_qp(qp)
             mbw, mbh = sps["mbw"], sps["mbh"]

@@ -73,6 +73,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import lut8
+
 # --- 8x8 DCT-II basis (orthonormal): FDCT = C @ b @ C.T ---------------------
 
 _K = np.arange(8)
@@ -899,24 +901,6 @@ def encode_jpeg_progressive(
     return bytes(out)
 
 
-def _dec_tab(dec: dict) -> tuple[dict, list]:
-    """Decode-table shape consumed by _BitReader.huff (r13): the
-    (code, length)-keyed map plus a 256-entry first-level LUT over
-    the next 8 bits — (symbol, length) for codes of <= 8 bits, None
-    for the longer tail. Prefix-freedom makes the shortest map hit
-    on any 8-bit window the transmitted code. Siblings: h264_intra._lut8 and
-    mp3l3._lut8 (ADVICE r13) — propagate fixes across all three.
-    """
-    lut: list = [None] * 256
-    for p8 in range(256):
-        for ln in range(1, 9):
-            sym = dec.get((p8 >> (8 - ln), ln))
-            if sym is not None:
-                lut[p8] = (sym, ln)
-                break
-    return dec, lut
-
-
 class _BitReader:
     def __init__(self, data: bytes) -> None:
         self.data = data
@@ -951,8 +935,8 @@ class _BitReader:
         while length < 16:
             code = (code << 1) | self.bits(1)
             length += 1
-            if (code, length) in table:
-                return table[(code, length)]
+            if (length, code) in table:
+                return table[(length, code)]
         raise ValueError("invalid Huffman code in JPEG scan")
 
     def huff(self, dtab: tuple[dict, list]) -> int:
@@ -1066,10 +1050,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 bits = list(seg[s + 1 : s + 17])
                 n = sum(bits)
                 vals = list(seg[s + 17 : s + 17 + n])
-                huff[(cls, tid)] = _dec_tab({
-                    (code, length): sym
+                dec = {
+                    (length, code): sym
                     for sym, (code, length) in _canonical_codes(bits, vals).items()
-                })
+                }
+                huff[(cls, tid)] = (dec, lut8(dec))
                 s += 17 + n
         elif marker in (0xFFC0, 0xFFC1, 0xFFC2):
             progressive = marker == 0xFFC2

@@ -54,6 +54,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import lut8
 from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
     _AC_BITS,
     _AC_VALS,
@@ -64,7 +65,6 @@ from neuroimaging_data_pipeline_spark.multimodal.jpeg import (
     _DC_VALS,
     _ZIGZAG,
     _canonical_codes,
-    _dec_tab,
     _encode_block,
     _extend,
     _seg,
@@ -267,8 +267,8 @@ def decode_jpeg_hierarchical(payload: bytes) -> list:
                 codes = _canonical_codes(bits, vals)
                 dec = {}
                 for sym, (code, ln_) in codes.items():
-                    dec[(code, ln_)] = sym
-                huff[(tc, th)] = _dec_tab(dec)
+                    dec[(ln_, code)] = sym
+                huff[(tc, th)] = (dec, lut8(dec))
                 p += 17 + n
         elif marker == 0xDE:  # DHP
             _prec, fh, fw, _nc = struct.unpack(">BHHB", seg[:6])

@@ -71,6 +71,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter, lut8
 from neuroimaging_data_pipeline_spark.multimodal.mp3 import (
     _BITRATE_KBPS,
     _SAMPLE_RATES,
@@ -189,35 +190,18 @@ def _invert_table(lens, cods):
     return out
 
 
-def _lut8(dmap: dict) -> list:
-    """256-entry first-level decode LUT over the next 8 bits (r13;
-    siblings: h264_intra._lut8 and jpeg._dec_tab — propagate fixes,
-    same scheme as the H.264 CAVLC tables): entry = (symbol, code
-    length) for codes of <= 8 bits, None for the longer tail.
-    Prefix-freedom makes the shortest dict hit on any 8-bit window
-    the transmitted code."""
-    lut: list = [None] * 256
-    for p8 in range(256):
-        for ln in range(1, 9):
-            hit = dmap.get((ln, p8 >> (8 - ln)))
-            if hit is not None:
-                lut[p8] = (hit, ln)
-                break
-    return lut
-
-
-def _walk_code(br: _BR, dtab: tuple[dict, list], max_len: int,
+def _walk_code(br: BitReader, dtab: tuple[dict, list], max_len: int,
                what: str) -> int:
     """Read one Huffman codeword. r13 fast path: one 16-bit window +
     one 256-entry LUT probe resolves every code of <= 8 bits; longer
     codes resume the original bit walk from the accumulated 8-bit
-    prefix. Raises ValueError past ``max_len`` bits and IndexError
-    when the reader runs dry (both as the string walk did)."""
+    prefix. Raises ValueError past ``max_len`` bits and when the
+    reader runs dry."""
     dmap, lut = dtab
     data, pos = br.data, br.pos
     total = len(data) << 3
     if pos >= total:
-        raise IndexError("bit reader exhausted")
+        raise ValueError("truncated bitstream")
     byte_i = pos >> 3
     win = int.from_bytes(data[byte_i : byte_i + 2], "big")
     pad = byte_i + 2 - len(data)
@@ -229,7 +213,7 @@ def _walk_code(br: _BR, dtab: tuple[dict, list], max_len: int,
         sym, ln = hit
         pos += ln
         if pos > total:
-            raise IndexError("bit reader exhausted")
+            raise ValueError("truncated bitstream")
         br.pos = pos
         return sym
     v = p8
@@ -237,7 +221,7 @@ def _walk_code(br: _BR, dtab: tuple[dict, list], max_len: int,
     ln = 8
     while True:
         if pos >= total:
-            raise IndexError("bit reader exhausted")
+            raise ValueError("truncated bitstream")
         v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
         pos += 1
         ln += 1
@@ -251,7 +235,7 @@ def _walk_code(br: _BR, dtab: tuple[dict, list], max_len: int,
 
 def _dec_pair_tab(lens, cods) -> tuple[dict, list]:
     dmap = _invert_table(lens, cods)
-    return dmap, _lut8(dmap)
+    return dmap, lut8(dmap)
 
 
 _DEC_BIG = {
@@ -265,69 +249,12 @@ _DEC_ESC = {
 }
 
 
-class _BW:
-    """MSB-first bit writer (byte-accumulating: whole fields land in
-    one shift-or instead of a list append per bit)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0  # bits pending below byte alignment
-
-    def u(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.n += n
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def nbits(self) -> int:
-        return (len(self.out) << 3) + self.n
-
-    def extend(self, other: "_BW") -> None:
-        """Append another writer's whole bitstream."""
-        for b in other.out:
-            self.u(b, 8)
-        if other.n:
-            self.u(other.acc, other.n)
-
-    def bytes_(self) -> bytes:
-        if self.n:
-            return bytes(self.out) + bytes(
-                [(self.acc << (8 - self.n)) & 0xFF]
-            )
-        return bytes(self.out)
-
-
-class _BR:
-    """MSB-first bit reader over bytes (batched field extraction)."""
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-
-    def u(self, n: int) -> int:
-        pos = self.pos
-        if n == 1:  # single-flag fast path (sign bits dominate)
-            byte = self.data[pos >> 3]  # IndexError past end, as before
-            self.pos = pos + 1
-            return (byte >> (7 - (pos & 7))) & 1
-        end = pos + n
-        last = (end + 7) >> 3
-        if last > len(self.data):
-            raise IndexError("bit reader exhausted")
-        self.pos = end
-        chunk = int.from_bytes(self.data[pos >> 3 : last], "big")
-        return (chunk >> ((last << 3) - end)) & ((1 << n) - 1)
-
-
 # ---------------------------------------------------------------------------
 # Encoder (the conformance fixture writer)
 # ---------------------------------------------------------------------------
 
 
-def _huff_enc_pair(bw: _BW, table: int, x: int, y: int) -> None:
+def _huff_enc_pair(bw: BitWriter, table: int, x: int, y: int) -> None:
     if table in _LINBITS:
         base = 16 if table < 24 else 24
         if base not in _HUFF_ESC:
@@ -346,7 +273,7 @@ def _huff_enc_pair(bw: _BW, table: int, x: int, y: int) -> None:
         raise ValueError(f"value ({x},{y}) exceeds table {table} range")
     idx = ax * nx + ay
     # fold code + sign bits into ONE writer call (r13: the per-field
-    # _BW.u calls were the encoder's hottest leaf)
+    # BitWriter.u calls were the encoder's hottest leaf)
     acc, n = cods[idx], lens[idx]
     if ax:
         acc = (acc << 1) | (1 if x < 0 else 0)
@@ -358,7 +285,7 @@ def _huff_enc_pair(bw: _BW, table: int, x: int, y: int) -> None:
 
 
 def _esc_enc_pair(
-    bw: _BW, nx: int, lens, cods, linbits: int, x: int, y: int
+    bw: BitWriter, nx: int, lens, cods, linbits: int, x: int, y: int
 ) -> None:
     """ESC/linbits big-value pair (2.4.2.7): |v| >= 15 codes the
     Huffman symbol 15 followed by ``linbits`` raw bits of |v| - 15;
@@ -388,7 +315,7 @@ def _esc_enc_pair(
     bw.u(acc, n)
 
 
-def _huff_enc_quad(bw: _BW, table_b: bool, quad: list[int]) -> None:
+def _huff_enc_quad(bw: BitWriter, table_b: bool, quad: list[int]) -> None:
     idx = 0
     for v in quad:
         idx = (idx << 1) | (1 if v else 0)
@@ -467,9 +394,9 @@ class GranuleSpec:
 
 def _encode_granule_maindata(
     g: GranuleSpec, scfsi: int, first_granule: bool
-) -> tuple[_BW, int]:
+) -> tuple[BitWriter, int]:
     """Returns (bit writer with part2+part3 data, part2_3_length)."""
-    bw = _BW()
+    bw = BitWriter()
     slen1, slen2 = _SLEN[g.scalefac_compress]
     if g.block_type in (1, 3) and scfsi:
         raise ValueError("scfsi must be 0 when window switching occurs")
@@ -556,7 +483,7 @@ def encode_mp3_l3(
     frame_md = []
     part23 = []
     for f in range(n_frames):
-        bw_f = _BW()
+        bw_f = BitWriter()
         p23 = []
         for gi in range(2):
             for ch in range(nch):
@@ -622,7 +549,7 @@ def encode_mp3_l3(
             0x40 | (ext << 4) if ext else 0x00
         )
         out += bytes([0xFF, 0xFB, b3, mode_byte])
-        si = _BW()
+        si = BitWriter()
         si.u(begin, 9)
         si.u(0, 5 if nch == 1 else 3)  # private_bits
         for _ch in range(nch):
@@ -667,7 +594,7 @@ def encode_mp3_l3(
 # ---------------------------------------------------------------------------
 
 
-def _huff_dec_pair(br: _BR, table: int) -> tuple[int, int]:
+def _huff_dec_pair(br: BitReader, table: int) -> tuple[int, int]:
     if table == 0:
         return 0, 0
     if table in _LINBITS:
@@ -699,7 +626,7 @@ def _huff_dec_pair(br: _BR, table: int) -> tuple[int, int]:
 
 
 def _esc_dec_pair(
-    br: _BR, nx: int, dmap: dict, linbits: int
+    br: BitReader, nx: int, dmap: dict, linbits: int
 ) -> tuple[int, int]:
     """Decode one ESC/linbits big-value pair (2.4.2.7 syntax order)."""
     x, y = divmod(_walk_code(br, dmap, 19, "big values"), nx)
@@ -714,7 +641,7 @@ def _esc_dec_pair(
     return x, y
 
 
-def _huff_dec_quad(br: _BR, table_b: bool) -> list[int]:
+def _huff_dec_quad(br: BitReader, table_b: bool) -> list[int]:
     if table_b:
         idx = 15 - br.u(4)
     else:
@@ -724,7 +651,7 @@ def _huff_dec_quad(br: _BR, table_b: bool) -> list[int]:
 
 
 def _parse_side_info(data: bytes, nch: int) -> dict:
-    br = _BR(data)
+    br = BitReader(data)
     out: dict = {"main_data_begin": br.u(9)}
     br.u(5 if nch == 1 else 3)  # private_bits
     out["scfsi"] = [br.u(4) for _ in range(nch)]
@@ -769,7 +696,7 @@ def _parse_side_info(data: bytes, nch: int) -> dict:
     return out
 
 
-def _decode_scalefacs(br: _BR, g: dict, scfsi: int, gr0_sf, first: bool):
+def _decode_scalefacs(br: BitReader, g: dict, scfsi: int, gr0_sf, first: bool):
     slen1, slen2 = _SLEN[g["scalefac_compress"]]
     if g["windows_switching"] and g["block_type"] == 2:
         if g["mixed_block_flag"]:
@@ -800,7 +727,7 @@ def _decode_scalefacs(br: _BR, g: dict, scfsi: int, gr0_sf, first: bool):
     return sf
 
 
-def _decode_granule_lines(br: _BR, g: dict, limit: int) -> list[int]:
+def _decode_granule_lines(br: BitReader, g: dict, limit: int) -> list[int]:
     lines = [0] * 576
     if g["windows_switching"] and g["block_type"] == 2:
         r0_end = min(36, 2 * g["big_values"])
@@ -1098,7 +1025,7 @@ def decode_mp3_l3(buf: bytes) -> dict:
             reservoir_used = True
         md_start = len(reservoir) - begin
         reservoir.extend(md_region)
-        br = _BR(bytes(reservoir), md_start * 8)
+        br = BitReader(bytes(reservoir), md_start * 8)
         frame_gr0: list[dict] = []
         for gi in range(2):
             if gi == 1:

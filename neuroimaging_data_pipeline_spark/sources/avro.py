@@ -29,32 +29,23 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import (
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag,
+)
+
 MAGIC = b"Obj\x01"
 
 
 def _zigzag_encode(n: int) -> bytes:
-    z = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return write_uvarint(zigzag(n))
 
 
 def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = acc = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
+    u, pos = read_uvarint(buf, pos, 10)
+    return unzigzag(u), pos
 
 
 def _enc_str(s: str) -> bytes:

@@ -40,6 +40,13 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import (
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag,
+)
+
 _MAGIC = b"Obj\x01"
 
 DOC_SCHEMA = {
@@ -57,40 +64,14 @@ DOC_SCHEMA = {
 # --- primitive binary encoding ------------------------------------------------
 
 
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def write_long(out: bytearray, n: int) -> None:
-    u = _zigzag(n) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    out += write_uvarint(zigzag(n) & 0xFFFFFFFFFFFFFFFF)
 
 
 def read_long(buf: io.BytesIO) -> int:
-    u = 0
-    shift = 0
-    while True:
-        byte = buf.read(1)
-        if not byte:
-            raise ValueError("truncated Avro varint")
-        b = byte[0]
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(u)
-        shift += 7
-        if shift > 70:
-            raise ValueError("Avro varint too long")
+    u, pos = read_uvarint(buf.getbuffer(), buf.tell(), 10)
+    buf.seek(pos)
+    return unzigzag(u)
 
 
 def write_string(out: bytearray, s: str) -> None:

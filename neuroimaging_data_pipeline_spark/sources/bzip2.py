@@ -44,6 +44,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader
+
 # --- bzip2's CRC-32 (unreflected 0x04C11DB7, MSB-first, inverted io) -------------------
 
 _CRC_TABLE = []
@@ -61,45 +63,22 @@ def bz2_crc(data: bytes, crc: int = 0) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-class _BitsBE:
-    """MSB-first bit reader (bzip2 blocks are not byte-aligned)."""
-
-    __slots__ = ("buf", "pos", "n")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-        self.n = len(buf) * 8
-
-    def read(self, k: int) -> int:
-        if self.pos + k > self.n:
-            raise ValueError("bzip2 bitstream truncated")
-        v = 0
-        pos = self.pos
-        buf = self.buf
-        for _ in range(k):
-            v = (v << 1) | ((buf[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
-
-
 def _read_huffman_tables(
-    bits: _BitsBE, n_syms: int, n_groups: int
+    bits: BitReader, n_syms: int, n_groups: int
 ) -> list[tuple[list[int], list[int], list[int], int]]:
     """Per group: (limit, base, perm, min_len) canonical decoding
     arrays from the 5-bit start + delta-coded lengths."""
     tables = []
     for _ in range(n_groups):
-        length = bits.read(5)
+        length = bits.u(5)
         lens = []
         for _ in range(n_syms):
             while True:
                 if not 1 <= length <= 20:
                     raise ValueError("bzip2 code length out of range")
-                if not bits.read(1):
+                if not bits.u(1):
                     break
-                length += -1 if bits.read(1) else 1
+                length += -1 if bits.u(1) else 1
             lens.append(length)
         min_len, max_len = min(lens), max(lens)
         # canonical code assignment in (length, transmission order)
@@ -125,14 +104,14 @@ def _read_huffman_tables(
     return tables
 
 
-def _decode_symbol(bits: _BitsBE, table) -> int:
+def _decode_symbol(bits: BitReader, table) -> int:
     limit, base, perm, min_len, max_len = table
-    code = bits.read(min_len)
+    code = bits.u(min_len)
     ln = min_len
     while code > limit[ln]:
         if ln >= max_len:
             raise ValueError("bzip2 Huffman code over max length")
-        code = (code << 1) | bits.read(1)
+        code = (code << 1) | bits.u(1)
         ln += 1
     return perm[code - base[ln]]
 
@@ -196,8 +175,7 @@ def parse_bzip2(buf: bytes) -> dict:
         level = buf[pos + 3] - 0x30
         if not 1 <= level <= 9:
             raise ValueError(f"bad bzip2 level digit {buf[pos + 3]:#x}")
-        bits = _BitsBE(buf)
-        bits.pos = (pos + 4) * 8
+        bits = BitReader(buf, (pos + 4) * 8)
         nb, combined_parts = _parse_stream(bits, level * 100_000)
         parts += combined_parts
         n_blocks += nb
@@ -214,39 +192,39 @@ def parse_bzip2(buf: bytes) -> dict:
     }
 
 
-def _parse_stream(bits: _BitsBE, max_block: int) -> tuple[int, list[bytes]]:
+def _parse_stream(bits: BitReader, max_block: int) -> tuple[int, list[bytes]]:
     parts: list[bytes] = []
     combined = 0
     n_blocks = 0
     while True:
-        magic = bits.read(48)
+        magic = bits.u(48)
         if magic == 0x177245385090:  # stream footer (sqrt pi)
-            stored = bits.read(32)
+            stored = bits.u(32)
             if stored != combined:
                 raise ValueError("bzip2 combined stream CRC mismatch")
             break
         if magic != 0x314159265359:  # block magic (pi)
             raise ValueError(f"bad bzip2 block magic {magic:#x}")
-        block_crc = bits.read(32)
-        if bits.read(1):
+        block_crc = bits.u(32)
+        if bits.u(1):
             raise ValueError("deprecated bzip2 randomized blocks")
-        orig_ptr = bits.read(24)
+        orig_ptr = bits.u(24)
         # sparse symbol map
-        group_map = bits.read(16)
+        group_map = bits.u(16)
         used = []
         for g in range(16):
             if group_map & (0x8000 >> g):
-                m = bits.read(16)
+                m = bits.u(16)
                 for j in range(16):
                     if m & (0x8000 >> j):
                         used.append(16 * g + j)
         if not used:
             raise ValueError("bzip2 block uses no byte values")
         n_syms = len(used) + 2  # RUNA, RUNB, MTF values 1.., EOB
-        n_groups = bits.read(3)
+        n_groups = bits.u(3)
         if not 2 <= n_groups <= 6:
             raise ValueError(f"bzip2 group count {n_groups} out of range")
-        n_sel = bits.read(15)
+        n_sel = bits.u(15)
         if n_sel == 0:
             raise ValueError("bzip2 block with zero selectors")
         # selectors, MTF-coded in unary
@@ -254,7 +232,7 @@ def _parse_stream(bits: _BitsBE, max_block: int) -> tuple[int, list[bytes]]:
         selectors = []
         for _ in range(n_sel):
             j = 0
-            while bits.read(1):
+            while bits.u(1):
                 j += 1
                 if j >= n_groups:
                     raise ValueError("bzip2 selector MTF overflow")

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import struct as _struct
 
+from neuroimaging_data_pipeline_spark.bitio import read_uvarint, unzigzag
+
 # thrift compact type codes
 _STOP = 0
 _TRUE = 1
@@ -57,17 +59,11 @@ class _Reader:
         return b
 
     def varint(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.byte()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
+        v, self.pos = read_uvarint(self.buf, self.pos, 10)
+        return v
 
     def zigzag(self) -> int:
-        n = self.varint()
-        return (n >> 1) ^ -(n & 1)
+        return unzigzag(self.varint())
 
     def read_value(self, ttype: int):
         if ttype == _TRUE:

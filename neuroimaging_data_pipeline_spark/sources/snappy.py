@@ -41,6 +41,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import read_uvarint, write_uvarint
+
 # --- CRC-32C (Castagnoli, reflected) -------------------------------------------------
 
 _CRC32C_TABLE = []
@@ -64,31 +66,6 @@ def _mask_crc(crc: int) -> int:
 
 
 # --- raw format ---------------------------------------------------------------------
-
-
-def _write_uvarint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    val = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated snappy varint")
-        b = buf[pos]
-        pos += 1
-        val |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return val, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy varint too long")
 
 
 def _emit_literal(out: bytearray, lits: bytes) -> None:
@@ -132,7 +109,7 @@ def snappy_compress(src: bytes) -> bytes:
     most-recent matches). Output decodes through any conforming
     decoder; pinned against python-snappy/cramjam when installed."""
     n = len(src)
-    out = bytearray(_write_uvarint(n))
+    out = bytearray(write_uvarint(n))
     table: dict[int, int] = {}
     anchor = 0
     pos = 0
@@ -165,7 +142,7 @@ def snappy_compress(src: bytes) -> bytes:
 
 
 def snappy_decompress(src: bytes) -> bytes:
-    declared, pos = _read_uvarint(src, 0)
+    declared, pos = read_uvarint(src, 0, 5)
     out = bytearray()
     n = len(src)
     while pos < n:

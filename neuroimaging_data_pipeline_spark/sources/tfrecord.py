@@ -41,6 +41,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import read_uvarint, write_uvarint
 from neuroimaging_data_pipeline_spark.sources.snappy import (
     _mask_crc,
     crc32c,
@@ -49,42 +50,18 @@ from neuroimaging_data_pipeline_spark.sources.snappy import (
 # --- protobuf wire primitives ---------------------------------------------------------
 
 
-def _uvarint(n: int) -> bytes:
-    out = bytearray()
-    while n >= 0x80:
-        out.append((n & 0x7F) | 0x80)
-        n >>= 7
-    out.append(n)
-    return bytes(out)
-
-
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = val = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        val |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return val, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
 def _varint64(n: int) -> bytes:
     """int64 as a wire varint: negatives use the 10-byte
     two's-complement form, per the protobuf spec."""
-    return _uvarint(n & 0xFFFFFFFFFFFFFFFF)
+    return write_uvarint(n & 0xFFFFFFFFFFFFFFFF)
 
 
 def _tag(field: int, wire: int) -> bytes:
-    return _uvarint((field << 3) | wire)
+    return write_uvarint((field << 3) | wire)
 
 
 def _len_delim(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _uvarint(len(payload)) + payload
+    return _tag(field, 2) + write_uvarint(len(payload)) + payload
 
 
 # --- tf.train.Example encode -----------------------------------------------------------
@@ -125,12 +102,12 @@ def encode_example(features: dict[str, object]) -> bytes:
 
 def _skip_field(buf: bytes, pos: int, wire: int) -> int:
     if wire == 0:
-        _, pos = _read_uvarint(buf, pos)
+        _, pos = read_uvarint(buf, pos, 10)
         return pos
     if wire == 1:
         return pos + 8
     if wire == 2:
-        ln, pos = _read_uvarint(buf, pos)
+        ln, pos = read_uvarint(buf, pos, 10)
         return pos + ln
     if wire == 5:
         return pos + 4
@@ -142,13 +119,13 @@ def _fields(buf: bytes) -> Iterator[tuple[int, int, bytes | int]]:
     value is bytes for wire 2 and the varint for wire 0."""
     pos = 0
     while pos < len(buf):
-        key, pos = _read_uvarint(buf, pos)
+        key, pos = read_uvarint(buf, pos, 10)
         field, wire = key >> 3, key & 7
         if wire == 0:
-            v, pos = _read_uvarint(buf, pos)
+            v, pos = read_uvarint(buf, pos, 10)
             yield field, wire, v
         elif wire == 2:
-            ln, pos = _read_uvarint(buf, pos)
+            ln, pos = read_uvarint(buf, pos, 10)
             if pos + ln > len(buf):
                 raise ValueError("length-delimited field past end")
             yield field, wire, buf[pos : pos + ln]
@@ -185,7 +162,7 @@ def _decode_feature(buf: bytes):
                 if w == 2:  # packed varints
                     p = 0
                     while p < len(v):
-                        u, p = _read_uvarint(v, p)
+                        u, p = read_uvarint(v, p, 10)
                         vals.append(
                             u - (1 << 64) if u >= (1 << 63) else u
                         )

@@ -44,6 +44,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from neuroimaging_data_pipeline_spark.bitio import read_uvarint
 from neuroimaging_data_pipeline_spark.sources.inflate import crc32
 from neuroimaging_data_pipeline_spark.sources.lzma_alone import (
     Lzma1Decoder,
@@ -76,17 +77,10 @@ def crc64(data: bytes, crc: int = 0) -> int:
 
 
 def _read_vli(buf: bytes, pos: int) -> tuple[int, int]:
-    val = 0
-    for i in range(9):
-        if pos + i >= len(buf):
-            raise ValueError("truncated xz VLI")
-        b = buf[pos + i]
-        val |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            if b == 0 and i:
-                raise ValueError("non-minimal xz VLI")
-            return val, pos + i + 1
-    raise ValueError("xz VLI longer than 9 bytes")
+    val, end = read_uvarint(buf, pos, 9)
+    if end - pos > 1 and buf[end - 1] == 0:
+        raise ValueError("non-minimal xz VLI")
+    return val, end
 
 
 # --- LZMA2 -----------------------------------------------------------------------------

@@ -9,6 +9,7 @@ import random
 
 import pytest
 
+from neuroimaging_data_pipeline_spark.bitio import BitWriter
 from neuroimaging_data_pipeline_spark.multimodal import flac as fl
 
 
@@ -39,14 +40,14 @@ def test_planned_subframes_bit_identical(depth):
             plans, costs = fl._plan_channel(t, depth)
             for i in range(0, len(t), fl._BLOCK):
                 blk = t[i : i + fl._BLOCK]
-                b_old = fl._Bits()
+                b_old = BitWriter()
                 fl._write_subframe(b_old, blk, depth)
-                bits_old = b_old.bit_length()
-                bytes_old = b_old.done()
-                b_new = fl._Bits()
+                bits_old = b_old.nbits()
+                bytes_old = b_old.bytes_()
+                b_new = BitWriter()
                 fl._emit_subframe(b_new, blk, depth, plans[i // fl._BLOCK])
-                assert b_new.bit_length() == bits_old
-                assert b_new.done() == bytes_old
+                assert b_new.nbits() == bits_old
+                assert b_new.bytes_() == bytes_old
                 assert costs[i // fl._BLOCK] == bits_old
 
 

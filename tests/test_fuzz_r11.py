@@ -183,9 +183,7 @@ def test_mp3_truncation_and_bitflips_controlled():
     for cut in (0, 2, 10, len(good) // 2, len(good) - 1):
         try:
             decode_mp3_l3(good[:cut])
-        except (ValueError, NotImplementedError, IndexError):
-            # IndexError here is the bit-reader running dry — loud,
-            # bounded (no hang), acceptable for a truncated stream
+        except (ValueError, NotImplementedError):
             pass
     rng = np.random.default_rng(9)
     for _ in range(20):
@@ -194,5 +192,5 @@ def test_mp3_truncation_and_bitflips_controlled():
         data[i] ^= 1 << int(rng.integers(0, 8))
         try:
             decode_mp3_l3(bytes(data))
-        except (ValueError, NotImplementedError, IndexError, KeyError):
+        except (ValueError, NotImplementedError, KeyError):
             pass

@@ -13,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.binaryops import (
     ffmpeg_available,
 )
@@ -115,11 +116,11 @@ def test_error_paths_and_predicted_mb_gate():
     # bit surgery, decode with a patched reader asserting the raise
     idx = payload.rfind(b"\x00\x00\x00\x01")
     nal = bytearray(mod._ep_remove(payload[idx + 5 :]))
-    r = mod._BitR(bytes(nal))
+    r = BitReader(bytes(nal))
     r.ue(); r.ue(); r.ue(); r.u(4); r.ue(); r.u(1); r.u(1); r.se()
     # overwrite the 9 bits of ue(25) with ue(24)+pad: simpler — write
     # a fresh slice whose first mb_type is 0 via the bit writer
-    w = mod._BitW()
+    w = BitWriter()
     w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0); w.u(0, 1); w.u(0, 1)
     w.se(0)
     w.ue(0)  # mb_type I_4x4 -> gate

@@ -10,6 +10,7 @@ import subprocess
 import numpy as np
 import pytest
 
+from neuroimaging_data_pipeline_spark.bitio import BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
     _CTX_INIT_I,
     _Ctx,
@@ -18,7 +19,6 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
     decode_h264_cabac,
     encode_h264_cabac_intra,
 )
-from neuroimaging_data_pipeline_spark.multimodal.h264 import _BitW
 
 
 def _planes(rng, h, w, flat_frac=0.0):
@@ -56,7 +56,7 @@ def test_engine_roundtrip_random_bins():
                 ops.append(("t", None, 0))
         ops.append(("t", None, 1))
         qp = rng.randrange(52)
-        w = _BitW()
+        w = BitWriter()
         enc = _Enc(w)
         ectx = _Ctx(qp)
         for kind, ctx, b in ops:

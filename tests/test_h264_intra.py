@@ -15,6 +15,7 @@ import subprocess
 import numpy as np
 import pytest
 
+from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal import h264_intra as hi
 from neuroimaging_data_pipeline_spark.multimodal.binaryops import (
     ffmpeg_available,
@@ -136,10 +137,10 @@ def test_level_codec_escape_ladder_roundtrip():
         for lv in list(range(-6000, 6001, 7)) + [-2, -1, 1, 2]:
             if lv == 0:
                 continue
-            w = hi._BitW()
+            w = BitWriter()
             hi._encode_level(w, lv, suffix_len)
             w.trailing()
-            assert hi._decode_level(hi._BitR(w.bytes_()), suffix_len) == lv
+            assert hi._decode_level(BitReader(w.bytes_()), suffix_len) == lv
 
 
 def test_residual_block_roundtrip_randomized():
@@ -157,11 +158,11 @@ def test_residual_block_roundtrip_randomized():
                         else 0
                         for _ in range(max_coeff)
                     ]
-                    w = hi._BitW()
+                    w = BitWriter()
                     total = encode_residual_block(w, coeffs, nc, max_coeff)
                     w.trailing()
                     got, tot = decode_residual_block(
-                        hi._BitR(w.bytes_()), nc, max_coeff
+                        BitReader(w.bytes_()), nc, max_coeff
                     )
                     assert got == coeffs and tot == total
 

@@ -430,8 +430,13 @@ def test_esc_linbits_mechanism():
     through an EXPLICIT synthetic 16x16 table. The table is NOT a
     spec table (16/24 remain transcription gates) — this pins the
     mechanism so landing the table data is pure data entry."""
+    from neuroimaging_data_pipeline_spark.bitio import (
+        BitReader,
+        BitWriter,
+        lut8,
+    )
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
-        _BR, _BW, _esc_dec_pair, _esc_enc_pair, _invert_table, _lut8,
+        _esc_dec_pair, _esc_enc_pair, _invert_table,
     )
 
     # synthetic complete 16x16 prefix code: canonical code over
@@ -446,18 +451,18 @@ def test_esc_linbits_mechanism():
         prev = ln
     assert sum(2.0 ** -l for l in lens) == 1.0
     raw = _invert_table(lens, cods)
-    dmap = (raw, _lut8(raw))  # r13 decode-table shape: (map, 8-bit LUT)
+    dmap = (raw, lut8(raw))  # r13 decode-table shape: (map, 8-bit LUT)
     for linbits in (1, 4, 13):
         vals = [(0, 0), (15, -15), (14 + (1 << linbits), -3),
                 (-(15 + (1 << linbits) - 1), 15), (7, -14)]
-        bw = _BW()
+        bw = BitWriter()
         for x, y in vals:
             _esc_enc_pair(bw, 16, lens, cods, linbits, x, y)
-        br = _BR(bw.bytes_())
+        br = BitReader(bw.bytes_())
         got = [_esc_dec_pair(br, 16, dmap, linbits) for _ in vals]
         assert got == vals, linbits
     # out-of-range value is a loud encoder error
-    bw = _BW()
+    bw = BitWriter()
     with pytest.raises(ValueError, match="linbits"):
         _esc_enc_pair(bw, 16, lens, cods, 1, 17, 0)
 
@@ -465,13 +470,14 @@ def test_esc_linbits_mechanism():
 def test_esc_spec_tables_still_gated():
     """Selecting table 16/24 raises the narrowed per-table gate (code
     table data, not mechanism)."""
+    from neuroimaging_data_pipeline_spark.bitio import BitWriter
     from neuroimaging_data_pipeline_spark.multimodal.mp3l3 import (
-        _BW, _huff_enc_pair,
+        _huff_enc_pair,
     )
 
     for t in (16, 24, 23, 31):
         with pytest.raises(NotImplementedError, match="mechanism"):
-            _huff_enc_pair(_BW(), t, 1, 1)
+            _huff_enc_pair(BitWriter(), t, 1, 1)
 
 
 def test_intensity_stereo_short_blocks():

@@ -9,8 +9,8 @@ import struct
 
 import pytest
 
+from neuroimaging_data_pipeline_spark.bitio import BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.tiff import (
-    _BitWriter,
     _CLEAR,
     _EOI,
     _FIRST,
@@ -44,26 +44,26 @@ def _late_change_encode(data: bytes) -> bytes:
     widens one entry later than TIFF requires. Used to prove the
     decoder's width accounting is genuinely EARLY-change — a stream
     with late timing must desync at the 511 boundary, not decode."""
-    w = _BitWriter()
+    w = BitWriter()
     table = {bytes([i]): i for i in range(256)}
     next_code, width = _FIRST, 9
-    w.write(_CLEAR, width)
+    w.u(_CLEAR, width)
     cur = b""
     for b in bytes(data):
         cand = cur + bytes([b])
         if cand in table:
             cur = cand
             continue
-        w.write(table[cur], width)
+        w.u(table[cur], width)
         table[cand] = next_code
         next_code += 1
         if next_code == (1 << width) and width < 12:  # LATE: 512, not 511
             width += 1
         cur = bytes([b])
     if cur:
-        w.write(table[cur], width)
-    w.write(_EOI, width)
-    return w.done()
+        w.u(table[cur], width)
+    w.u(_EOI, width)
+    return w.bytes_()
 
 
 def test_early_change_is_load_bearing_at_the_511_boundary():
