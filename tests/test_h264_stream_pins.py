@@ -1,0 +1,251 @@
+"""Byte pins for every H.264 encoder entry point that codes intra
+macroblocks: the sha256 of each emitted Annex B stream together with
+the encoder's reconstruction planes. The round-trip tests only prove
+encoder and decoder agree with each other; these pins prove a
+refactor of the shared intra macroblock layer changes no emitted byte
+and no reconstructed sample. Each stream is also decoded and checked
+against the encoder's reconstruction."""
+
+from __future__ import annotations
+
+import hashlib
+
+import numpy as np
+import pytest
+
+from neuroimaging_data_pipeline_spark.multimodal.h264 import (
+    decode_h264_ipcm,
+    encode_h264_ipcm,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+    decode_h264_b_stream,
+    encode_h264_b_sequence,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
+    decode_h264_cabac,
+    encode_h264_cabac_intra,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+    decode_h264_sequence,
+    encode_h264_p_gop,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
+    decode_h264_frame,
+    encode_h264_i4x4,
+    encode_h264_i16x16,
+)
+
+
+def _planes(h, w, seed):
+    r = np.random.default_rng(seed)
+    return (
+        r.integers(0, 256, (h, w), dtype=np.uint8),
+        r.integers(0, 256, (h // 2, w // 2), dtype=np.uint8),
+        r.integers(0, 256, (h // 2, w // 2), dtype=np.uint8),
+    )
+
+
+def _smooth(h, w, seed):
+    """Low-detail content, so directional intra modes leave small
+    residuals and the CAVLC tables see short as well as long codes."""
+    r = np.random.default_rng(seed)
+    yy, xx = np.mgrid[0:h, 0:w]
+    cy, cx = np.mgrid[0 : h // 2, 0 : w // 2]
+    return (
+        ((yy * 3 + xx * 5) % 200 + r.integers(0, 9, (h, w))).astype(np.uint8),
+        ((cy * 7 + cx * 2) % 180 + 20).astype(np.uint8),
+        ((cy * 2 + cx * 9) % 160 + 40).astype(np.uint8),
+    )
+
+
+def _digest(stream: bytes, recons) -> str:
+    h = hashlib.sha256(stream)
+    for planes in recons:
+        for p in planes:
+            h.update(np.ascontiguousarray(p, np.uint8).tobytes())
+    return h.hexdigest()[:20]
+
+
+def _same(decoded, recon):
+    for a, b in zip(decoded, recon):
+        np.testing.assert_array_equal(a, b)
+
+
+# --- cases: name -> (stream, [recon planes per frame]) -----------------------
+
+
+def _ipcm():
+    f = _planes(24, 40, 1)
+    stream = encode_h264_ipcm(*f)
+    _same(decode_h264_ipcm(stream), f)
+    return stream, [f]
+
+
+def _i16(pm, cm, qp):
+    def run():
+        f = _smooth(24, 40, 2) if qp else _planes(24, 40, 3)
+        stream, *recon = encode_h264_i16x16(
+            *f, qp=qp, pred_mode=pm, chroma_mode=cm
+        )
+        _same(decode_h264_frame(stream), recon)
+        return stream, [recon]
+
+    return run
+
+
+def _i4(mode):
+    def run():
+        stream, *recon = encode_h264_i4x4(*_smooth(24, 40, 4), qp=12,
+                                          mode=mode)
+        _same(decode_h264_frame(stream), recon)
+        return stream, [recon]
+
+    return run
+
+
+_P_SPECS = [
+    [("16x16", [(4, -4)]), ("skip",), ("i16",), ("i4", 3),
+     ("ipcm",), ("8x16", [(1, 2), (-3, 5)])],
+    [("8x8", [("8x8", [(1, 1)], 1), ("8x4", [(2, 0), (0, 2)], 0),
+              ("4x8", [(-1, 3), (5, -2)], 1),
+              ("4x4", [(0, 1), (1, 0), (2, 2), (-2, -1)], 0)]),
+     ("i4",), ("16x8", [((3, -1), 1), ((0, 0), 0)]), ("skip",),
+     ("i16",), ("16x16", [((-6, 7), 1)])],
+    [("ipcm",), ("16x16", [((2, 2), 2)]), ("i4", 8), ("skip",),
+     ("8x16", [((1, -1), 2), ((4, 4), 0)]), ("i16",)],
+]
+_P_WEIGHTS = {
+    "luma_denom": 5, "chroma_denom": 3,
+    "refs": [{"wy": 36, "oy": -2, "wc": 9, "oc": 1},
+             {"wy": 28, "oy": 4},
+             {"wcr": 7, "ocr": -1}],
+}
+
+
+def _p_gop(deblock, offsets, weights):
+    def run():
+        frames = [_planes(32, 48, 10 + i) for i in range(4)]
+        stream, recons = encode_h264_p_gop(
+            frames, _P_SPECS, qp=24, num_refs=3, weights=weights,
+            deblock=deblock, deblock_offsets=offsets,
+        )
+        for got, want in zip(decode_h264_sequence(stream), recons):
+            _same(got, want)
+        return stream, recons
+
+    return run
+
+
+def _b_seq(weights, deblock):
+    def run():
+        rng = np.random.default_rng(7)
+        mv = lambda: tuple(int(v) for v in rng.integers(-9, 10, 2))
+        f0, fp, fb, fr = (_planes(32, 48, 20 + i) for i in range(4))
+        specs_p = [("16x16", [mv()]), ("i16",), ("skip",), ("i4", 4),
+                   ("16x16", [mv()]), ("i16",)]
+        specs_b = [("i4",), ("direct",), ("16x16", [("bi", mv(), mv())]),
+                   ("i16",), ("skip",), ("ipcm",)]
+        specs_r = [("16x8", [("l0", mv()), ("l1", mv())]), ("i16",),
+                   ("i4", 7), ("skip",), ("ipcm",), ("direct",)]
+        stream, recons, pocs = encode_h264_b_sequence(
+            [("idr", f0), ("p", fp, specs_p, 4), ("bref", fr, specs_r, 2),
+             ("b", fb, specs_b, 1)],
+            qp=21, weights=weights, deblock=deblock,
+            deblock_offsets=(1, -1) if deblock else (0, 0),
+        )
+        frames, dpocs = decode_h264_b_stream(stream)
+        assert dpocs == pocs
+        for got, want in zip(frames, recons):
+            _same(got, want)
+        return stream, recons
+
+    return run
+
+
+def _cabac(qp, mode):
+    def run():
+        stream, *recon = encode_h264_cabac_intra(*_smooth(24, 40, 5), qp=qp,
+                                                 i4x4_mode=mode)
+        _same(decode_h264_cabac(stream), recon)
+        return stream, [recon]
+
+    return run
+
+
+CASES = {"ipcm": _ipcm}
+for _qp in (0, 28):
+    for _pm in range(4):
+        for _cm in range(4):
+            CASES[f"i16_qp{_qp}_pm{_pm}_cm{_cm}"] = _i16(_pm, _cm, _qp)
+for _m in range(9):
+    CASES[f"i4_mode{_m}"] = _i4(_m)
+CASES["p_gop_plain"] = _p_gop(False, (0, 0), None)
+CASES["p_gop_deblock_weights"] = _p_gop(True, (1, -2), _P_WEIGHTS)
+CASES["p_gop_deblock2"] = _p_gop(2, (-1, 3), None)
+CASES["b_seq_implicit"] = _b_seq("implicit", False)
+CASES["b_seq_explicit_deblock"] = _b_seq(
+    {"luma_denom": 4, "chroma_denom": 2,
+     "l0": {"wy": 20, "oy": -3, "wc": 5, "oc": 2},
+     "l1": {"wy": 12, "oy": 6}},
+    True,
+)
+CASES["cabac_qp0"] = _cabac(0, 2)
+CASES["cabac_qp30"] = _cabac(30, 5)
+
+PINS = {
+    "b_seq_explicit_deblock": "97ad9b7f74b6d729c8cc",
+    "b_seq_implicit": "089d351cfcafc77d43ce",
+    "cabac_qp0": "74da4e91d749ec1c6676",
+    "cabac_qp30": "a661121bd4fc5c793226",
+    "i16_qp0_pm0_cm0": "fc3c09375ced6865b75e",
+    "i16_qp0_pm0_cm1": "da4e3867f87ccadbced9",
+    "i16_qp0_pm0_cm2": "101ea5a9acda223b33a9",
+    "i16_qp0_pm0_cm3": "d1bcb35538ff081cdb5e",
+    "i16_qp0_pm1_cm0": "06b005281f7e78bb3cfd",
+    "i16_qp0_pm1_cm1": "3daab5b35e650259bf4a",
+    "i16_qp0_pm1_cm2": "d0b826f62a2912e8b207",
+    "i16_qp0_pm1_cm3": "16906198c80c74a7f801",
+    "i16_qp0_pm2_cm0": "f27692ec903ed0b83e5c",
+    "i16_qp0_pm2_cm1": "df55ff70165b03ecf0dc",
+    "i16_qp0_pm2_cm2": "63cb50b3480de7c23993",
+    "i16_qp0_pm2_cm3": "91f6a3869ad02857c62b",
+    "i16_qp0_pm3_cm0": "38a4d03b5233ff4b83ef",
+    "i16_qp0_pm3_cm1": "c45cd8d1290ee0baf683",
+    "i16_qp0_pm3_cm2": "3cb715504f6ef877ca5b",
+    "i16_qp0_pm3_cm3": "48c553ac4a060c736a57",
+    "i16_qp28_pm0_cm0": "efb9b7a234d490451ee1",
+    "i16_qp28_pm0_cm1": "211483394e1d78cbdf94",
+    "i16_qp28_pm0_cm2": "9a53bbb284a90e295475",
+    "i16_qp28_pm0_cm3": "cb97bc5f0ee58f9ccf75",
+    "i16_qp28_pm1_cm0": "b3b478875d363f4e4c40",
+    "i16_qp28_pm1_cm1": "796afb096a8864e7e0cf",
+    "i16_qp28_pm1_cm2": "bf5cb1e0e0a2ec7415ef",
+    "i16_qp28_pm1_cm3": "c99b9bdd7d87c2e8df63",
+    "i16_qp28_pm2_cm0": "90145a6c2cb18e7e0921",
+    "i16_qp28_pm2_cm1": "f99cea0f80a1b4dd9f88",
+    "i16_qp28_pm2_cm2": "07a2cce2703dd8dd1e48",
+    "i16_qp28_pm2_cm3": "67e3e732d0550fa4834f",
+    "i16_qp28_pm3_cm0": "87ad90c199f340a5fb73",
+    "i16_qp28_pm3_cm1": "d4e41ae8598037a01aeb",
+    "i16_qp28_pm3_cm2": "e9e3a33785f25924bda8",
+    "i16_qp28_pm3_cm3": "0bbdb1a9543b66122d38",
+    "i4_mode0": "4dcd1cab724c77ae25a0",
+    "i4_mode1": "170480bfccee070f8392",
+    "i4_mode2": "e37630949663c4db6047",
+    "i4_mode3": "29568dceb73fb359057b",
+    "i4_mode4": "8b4ea918b22a48245d39",
+    "i4_mode5": "3e557f6797196b5aae5b",
+    "i4_mode6": "08616b2f818761f4892a",
+    "i4_mode7": "7e8673beb88a81617033",
+    "i4_mode8": "dac5b6e7c1af3dbf1068",
+    "ipcm": "a6dbbf4231c30ef05b75",
+    "p_gop_deblock2": "897d60e16862d98c668b",
+    "p_gop_deblock_weights": "b062ea1062bda6fa7663",
+    "p_gop_plain": "a832d86ac196427e65d8",
+}
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_stream_bytes_pinned(name):
+    stream, recons = CASES[name]()
+    assert _digest(stream, recons) == PINS[name]
