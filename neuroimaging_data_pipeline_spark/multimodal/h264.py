@@ -111,8 +111,8 @@ def _check_planes(
     cb: np.ndarray | None,
     cr: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Validate/normalize 4:2:0 planes (shared by I_PCM and the
-    Intra_16x16 encoder in h264_intra.py)."""
+    """Validate/normalize 4:2:0 planes (shared by every encoder of
+    this family)."""
     y = np.asarray(y, dtype=np.uint8)
     h, w = y.shape
     if h % 2 or w % 2:
@@ -185,18 +185,115 @@ def _pps_rbsp() -> bytes:
     return pps.bytes_()
 
 
-def _slice_header(sl: BitWriter, qp: int = 26) -> None:
+def _pad_planes(
+    y: np.ndarray,
+    cb: np.ndarray | None,
+    cr: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """_check_planes, then edge-replicate every plane out to whole
+    macroblocks (the SPS crops the padding back off)."""
+    y, cb, cr = _check_planes(y, cb, cr)
+    ph, pw = -y.shape[0] % 16, -y.shape[1] % 16
+    return (
+        np.pad(y, ((0, ph), (0, pw)), mode="edge"),
+        np.pad(cb, ((0, ph // 2), (0, pw // 2)), mode="edge"),
+        np.pad(cr, ((0, ph // 2), (0, pw // 2)), mode="edge"),
+    )
+
+
+def _idr_stream(sl: BitWriter, w: int, h: int) -> bytes:
+    """Close the IDR slice in ``sl`` and frame it behind the SPS and
+    PPS of a w x h picture."""
+    sl.trailing()
+    mbw, mbh = -(-w // 16), -(-h // 16)
+    return (
+        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
+        + _nal(3, 8, _pps_rbsp())
+        + _nal(3, 5, sl.bytes_())
+    )
+
+
+def _write_deblock_fields(sl: BitWriter, idc: int, offs: tuple) -> None:
+    """disable_deblocking_filter_idc and, when != 1, the two slice
+    filter offsets (7.3.3; present when the PPS sets
+    deblocking_filter_control_present_flag)."""
+    sl.ue(idc)
+    if idc != 1:
+        sl.se(offs[0])  # slice_alpha_c0_offset_div2
+        sl.se(offs[1])  # slice_beta_offset_div2
+
+
+def _read_deblock_fields(r: BitReader) -> tuple[int, tuple]:
+    """Parse what _write_deblock_fields writes. Returns (idc,
+    (a_div2, b_div2))."""
+    idc = r.ue()
+    if idc > 2:
+        raise ValueError(
+            f"disable_deblocking_filter_idc {idc} out of range")
+    offs = (0, 0)
+    if idc != 1:
+        a = r.se()
+        b = r.se()
+        if not (-6 <= a <= 6 and -6 <= b <= 6):
+            raise ValueError(
+                f"slice filter offsets ({a}, {b}) out of range")
+        offs = (a, b)
+    return idc, offs
+
+
+def _slice_header(
+    sl: BitWriter, qp: int = 26, poc_bits: int = 0, deblock=None
+) -> None:
     """IDR I-slice header (single slice per picture, QP via
-    slice_qp_delta against pic_init_qp 26)."""
+    slice_qp_delta against pic_init_qp 26). ``poc_bits`` > 0 writes a
+    zero pic_order_cnt_lsb of that width (POC type 0 SPS);
+    ``deblock`` = (idc, offsets) writes the deblocking-control fields
+    (control-present PPS)."""
     sl.ue(0)  # first_mb_in_slice
     sl.ue(7)  # slice_type: I (all slices)
     sl.ue(0)  # pic_parameter_set_id
     sl.u(0, 4)  # frame_num (log2_max_frame_num = 4)
     sl.ue(0)  # idr_pic_id
+    if poc_bits:
+        sl.u(0, poc_bits)  # pic_order_cnt_lsb
     # dec_ref_pic_marking (IDR, nal_ref_idc != 0)
     sl.u(0, 1)  # no_output_of_prior_pics_flag
     sl.u(0, 1)  # long_term_reference_flag
     sl.se(qp - 26)  # slice_qp_delta
+    if deblock is not None:
+        _write_deblock_fields(sl, *deblock)
+
+
+def _write_pcm_mb(sl: BitWriter, planes, mx: int, my: int) -> None:
+    """I_PCM macroblock body (7.3.5): pcm_alignment_zero_bits, then
+    the 256 luma and 2 x 64 chroma samples of MB (mx, my) raw."""
+    sl.align_zero()
+    y, cb, cr = planes
+    raw = b"".join(
+        p.astype(np.uint8).tobytes()
+        for p in (
+            y[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16],
+            cb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8],
+            cr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8],
+        )
+    )
+    sl.u(int.from_bytes(raw, "big"), 8 * 384)
+
+
+def _read_pcm_mb(r: BitReader, planes, mx: int, my: int) -> None:
+    """Read what _write_pcm_mb writes into ``planes`` at MB (mx, my)."""
+    r.align()
+    start = r.pos >> 3
+    if start + 384 > len(r.data):
+        raise ValueError("truncated bitstream")
+    raw = np.frombuffer(r.data, np.uint8, 384, start)
+    r.pos = (start + 384) << 3
+    y, cb, cr = planes
+    y[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = raw[:256].reshape(
+        16, 16
+    )
+    cb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = raw[256:320].reshape(8, 8)
+    cr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = raw[320:].reshape(8, 8)
 
 
 def encode_h264_ipcm(
@@ -208,35 +305,15 @@ def encode_h264_ipcm(
     macroblocks: (H, W) uint8 luma (even dims) plus optional
     (H/2, W/2) 4:2:0 chroma planes (default mid-gray 128).
     Lossless by construction."""
-    y, cb, cr = _check_planes(y, cb, cr)
-    h, w = y.shape
-    ch, cw = h // 2, w // 2
-    mbw, mbh = -(-w // 16), -(-h // 16)
-    # pad planes to the MB grid (edge replicate; cropped back via SPS)
-    yp = np.pad(y, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
-    cbp = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    crp = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-
+    planes = _pad_planes(y, cb, cr)
+    h, w = np.shape(y)
     sl = BitWriter()
     _slice_header(sl)
-    for my in range(mbh):
-        for mx in range(mbw):
+    for my in range(-(-h // 16)):
+        for mx in range(-(-w // 16)):
             sl.ue(25)  # mb_type: I_PCM
-            sl.align_zero()  # pcm_alignment_zero_bit(s)
-            for row in yp[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16]:
-                for v in row:
-                    sl.u(int(v), 8)
-            for plane in (cbp, crp):
-                for row in plane[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]:
-                    for v in row:
-                        sl.u(int(v), 8)
-    sl.trailing()
-
-    return (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp())
-        + _nal(3, 5, sl.bytes_())
-    )
+            _write_pcm_mb(sl, planes, mx, my)
+    return _idr_stream(sl, w, h)
 
 
 # --- decoder ----------------------------------------------------------------
@@ -312,7 +389,9 @@ def _parse_sps(rbsp: bytes) -> dict:
 
 
 def _parse_slice_header(r: BitReader, sps: dict) -> int:
-    """Parse an IDR I-slice header; returns the slice QP."""
+    """Parse an IDR I-slice header up to slice_qp_delta; returns the
+    slice QP. A POC type 0 stream carries pic_order_cnt_lsb, which
+    must be 0 for the IDR every DPB here is keyed from."""
     if r.ue() != 0:
         raise ValueError("multi-slice pictures unsupported")
     stype = r.ue()
@@ -321,6 +400,8 @@ def _parse_slice_header(r: BitReader, sps: dict) -> int:
     r.ue()  # pps id
     r.u(sps["log2_mfn"])  # frame_num
     r.ue()  # idr_pic_id
+    if sps["poc_type"] == 0 and r.u(sps["log2_poc"]):
+        raise ValueError("IDR pic_order_cnt_lsb must be 0")
     r.u(1)
     r.u(1)  # dec_ref_pic_marking
     return 26 + r.se()  # pic_init_qp 26 + slice_qp_delta
@@ -365,14 +446,7 @@ def decode_h264_ipcm(
                             "CAVLC) or decoder='ffmpeg' in "
                             "binaryops.decode_features"
                         )
-                    r.align()
-                    for yy in range(16):
-                        for xx in range(16):
-                            yp[my * 16 + yy, mx * 16 + xx] = r.u(8)
-                    for plane in (cbp, crp):
-                        for yy in range(8):
-                            for xx in range(8):
-                                plane[my * 8 + yy, mx * 8 + xx] = r.u(8)
+                    _read_pcm_mb(r, (yp, cbp, crp), mx, my)
             x0, y0, w, h = sps["x0"], sps["y0"], sps["w"], sps["h"]
             planes = (
                 yp[y0 : y0 + h, x0 : x0 + w],

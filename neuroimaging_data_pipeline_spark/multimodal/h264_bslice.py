@@ -23,14 +23,16 @@ What is REAL here (ITU-T H.264 clause references, all from scratch):
 - DEFAULT (unweighted) bi-prediction (8.4.2.3.2,
   weighted_bipred_idc 0): final = (predL0 + predL1 + 1) >> 1 on the
   clipped interpolated samples, luma and chroma;
-- Intra_16x16 macroblocks inside B slices (mb_type 23 + intra type);
+- intra macroblocks inside B slices (mb_type 23 + intra type:
+  I_4x4, Intra_16x16, I_PCM), coded by h264_intra's intra
+  macroblock layer; the IDR anchor writes its POC-type-0 header and
+  then runs the same layer's slice loop;
 - frame_num tracking for non-reference pictures (a B slice repeats
   PrevRefFrameNum + 1) and a DPB keyed by POC that only reference
   pictures (nal_ref_idc > 0) enter;
 - the P frames inside a B GOP reuse h264_inter's proven encoder and
   decoder wholesale — their slices are re-headered to insert the
-  poc-type-0 pic_order_cnt_lsb field, the same technique the P
-  module uses for the deblocking-control IDR re-header.
+  poc-type-0 pic_order_cnt_lsb field.
 
 - B_8x8 sub-macroblock partitions (second pass): all twelve coded
   Table 7-18 sub_mb_types — per-8x8 list usage l0/l1/bi with
@@ -59,9 +61,6 @@ same derivation per 8x8.
 IMPLICIT weighted bi-prediction (sixth pass, idc 2) derives
 logWD-5 weights from POC distances (w1 = distScaleFactor >> 2,
 w0 = 64 - w1, 32/32 fallbacks), leaving uni partitions unweighted.
-
-I_4x4 macroblocks inside B slices (mb_type 23) share the P
-module's helpers.
 
 Distinct Cb/Cr explicit weights (wcr/ocr per list) are supported,
 including wcr-only entries (writer and resolver both fall back
@@ -100,32 +99,33 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _ep_remove,
     _nal,
     _parse_sps,
-    _pps_rbsp,
+    _read_deblock_fields,
     _split_nals,
-    _sps_rbsp,
+    _write_deblock_fields,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+    _CBP_INTER,
+    _CBP_INTER_INV,
     _PARTS,
     _SUBPARTS,
     _chroma_qp,
     _copy_bits,
-    _decode_i4x4_mb,
-    _decode_i16_mb,
-    _decode_ipcm_mb,
+    _decode_idr,
     _decode_p_frame,
-    _encode_i4x4_mb,
-    _encode_i16_mb,
-    _encode_ipcm_mb,
+    _encode_idr,
     _encode_p_frame,
     _mc_mb,
     _MvState,
     _pad_refs,
-    _idr_slice_qp,
     _pps_rbsp_deblock,
-    _read_deblock_fields,
-    _read_residuals,
     _recon_inter_mb,
     _residual_from_target,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
+    _MbGrid,
+    _decode_intra_mb,
+    _encode_intra_mb,
+    _read_residuals,
     _write_residuals,
 )
 
@@ -196,63 +196,6 @@ def _sps_rbsp_poc0(mbw: int, mbh: int, w: int, h: int) -> bytes:
     sps.u(0, 1)  # no VUI
     sps.trailing()
     return sps.bytes_()
-
-
-def _idr_reheader_poc0(rbsp: bytes, idc: int = 1,
-                       offs: tuple = (0, 0)) -> bytes:
-    """Re-header the intra encoder's IDR slice for the POC-type-0
-    SPS + deblocking-control PPS: insert pic_order_cnt_lsb (= 0)
-    after idr_pic_id and append disable_deblocking_filter_idc (+ the
-    7.3.3 slice filter offsets when idc != 1)."""
-    r = BitReader(rbsp)
-    first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    w = BitWriter()
-    w.ue(first_mb)
-    w.ue(stype)
-    w.ue(ppsid)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(0, _POC_BITS)  # pic_order_cnt_lsb
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    w.ue(idc)  # disable_deblocking_filter_idc
-    if idc != 1:
-        w.se(offs[0])  # slice_alpha_c0_offset_div2
-        w.se(offs[1])  # slice_beta_offset_div2
-    _copy_bits(r, w, rbsp)
-    return w.bytes_()
-
-
-def _idr_strip_poc0(rbsp: bytes):
-    """Inverse of _idr_reheader_poc0: drop the poc_lsb and the
-    deblocking idc (+ offsets) so the slice can be delegated to the
-    plain intra decoder (poc-type-2 SPS, control-flag-0 PPS).
-    Returns (rbsp, idc, (a_div2, b_div2))."""
-    r = BitReader(rbsp)
-    fields = (r.ue(), r.ue(), r.ue())
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    poc = r.u(_POC_BITS)
-    if poc != 0:
-        raise ValueError("IDR pic_order_cnt_lsb must be 0")
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    idc, offs = _read_deblock_fields(r)
-    w = BitWriter()
-    for v in fields:
-        w.ue(v)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    _copy_bits(r, w, rbsp)
-    return w.bytes_(), idc, offs
 
 
 def _p_reheader_poc0(rbsp: bytes, poc_lsb: int) -> bytes:
@@ -481,10 +424,7 @@ def _b_slice_header(sl: BitWriter, qp: int, frame_num: int,
     if is_ref:  # reference B (pyramid): dec_ref_pic_marking present
         sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
     sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(deblock_idc)  # disable_deblocking_filter_idc
-    if deblock_idc != 1:  # 7.3.3: offsets present when idc != 1
-        sl.se(deblock_offs[0])  # slice_alpha_c0_offset_div2
-        sl.se(deblock_offs[1])  # slice_beta_offset_div2
+    _write_deblock_fields(sl, deblock_idc, deblock_offs)
 
 
 def _parse_inter_header(
@@ -705,22 +645,16 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
     Returns (slice_rbsp, recon_planes, motion) — motion is the
     per-4x4 two-list field (predFlag / mv per list + luma nnz) the
     8.7.2.1 B boundary-strength derivation consumes."""
-    y1, cb1, cr1 = target
-    h, w = y1.shape
+    h, w = target[0].shape
     mbw, mbh = w // 16, h // 16
     if len(mb_specs) != mbw * mbh:
         raise ValueError("one mb_spec per macroblock required")
     padded0 = _pad_refs([ref_l0])
     padded1 = _pad_refs([ref_l1])
     qpc = _chroma_qp(qp)
-    ry = np.zeros((h, w), np.int64)
-    rcb = np.zeros((h // 2, w // 2), np.int64)
-    rcr = np.zeros((h // 2, w // 2), np.int64)
-    recons = (ry, rcb, rcr)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-    modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+    g = _MbGrid(mbw, mbh)
+    ry, rcb, rcr = recons = g.recon
+    luma_nnz, cnnz = g.nnz, g.cnnz
     mvs0 = _MvState(mbw, mbh)
     mvs1 = _MvState(mbw, mbh)
 
@@ -773,31 +707,13 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
                 cbp, zl, cdcz, cacz = _residual_from_target(
                     target, mx, my, py, pcb, pcr, qp, qpc
                 )
-                _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz,
-                                 luma_nnz, cnnz)
+                _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
+                                 _CBP_INTER_INV)
                 _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
                                 zl, cdcz, cacz, qp, qpc)
                 continue
-            if kind == "i16":
-                _encode_i16_mb(sl, target, recons, luma_nnz, cnnz,
-                               mx, my, qp, qpc, base=23)
-                mvs0.mark_intra(mx, my)
-                mvs1.mark_intra(mx, my)
-                continue
-            if kind == "ipcm":
-                sl.ue(48)  # mb_type: I_PCM inside a B slice
-                _encode_ipcm_mb(sl, target, recons, luma_nnz, cnnz,
-                                mx, my)
-                mvs0.mark_intra(mx, my)
-                mvs1.mark_intra(mx, my)
-                continue
-            if kind == "i4":
-                sl.ue(23)  # mb_type: I_4x4 inside a B slice
-                _encode_i4x4_mb(
-                    sl, target, recons, luma_nnz, cnnz, modes4,
-                    mx, my, qp, qpc,
-                    mode=spec[1] if len(spec) > 1 else 2,
-                )
+            if kind in ("i16", "i4", "ipcm"):
+                _encode_intra_mb(sl, g, target, spec, mx, my, qp, 23)
                 mvs0.mark_intra(mx, my)
                 mvs1.mark_intra(mx, my)
                 continue
@@ -925,8 +841,8 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
                 cbp, zl, cdcz, cacz = _residual_from_target(
                     target, mx, my, py, pcb, pcr, qp, qpc
                 )
-                _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz,
-                                 luma_nnz, cnnz)
+                _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
+                                 _CBP_INTER_INV)
                 _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
                                 zl, cdcz, cacz, qp, qpc)
                 continue
@@ -990,8 +906,8 @@ def _encode_b_frame(target, ref_l0, ref_l1, mb_specs, qp, frame_num,
             cbp, zl, cdcz, cacz = _residual_from_target(
                 target, mx, my, py, pcb, pcr, qp, qpc
             )
-            _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz,
-                             luma_nnz, cnnz)
+            _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
+                             _CBP_INTER_INV)
             _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
                             zl, cdcz, cacz, qp, qpc)
     if skip_run:
@@ -1040,18 +956,12 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                     col=None, spatial=True, tbtd=None,
                     implicit=False):
     mbw, mbh = sps["mbw"], sps["mbh"]
-    h, w = mbh * 16, mbw * 16
     padded0 = _pad_refs([ref_l0])
     padded1 = _pad_refs([ref_l1])
     qpc = _chroma_qp(qp)
-    ry = np.zeros((h, w), np.int64)
-    rcb = np.zeros((h // 2, w // 2), np.int64)
-    rcr = np.zeros((h // 2, w // 2), np.int64)
-    recons = (ry, rcb, rcr)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-    modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+    g = _MbGrid(mbw, mbh)
+    ry, rcb, rcr = recons = g.recon
+    luma_nnz, cnnz = g.nnz, g.cnnz
     mvs0 = _MvState(mbw, mbh)
     mvs1 = _MvState(mbw, mbh)
     if col is None:
@@ -1099,7 +1009,7 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                     weights, dmode, tbtd,
                 )
                 cbp, qpd, zl, cdcz, cacz = _read_residuals(
-                    r, mx, my, luma_nnz, cnnz
+                    r, g, mx, my, _CBP_INTER
                 )
                 if cbp:
                     cur_qp = (cur_qp + qpd + 52) % 52
@@ -1209,7 +1119,7 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                         pcb[cs] = pp[1][cs]
                         pcr[cs] = pp[2][cs]
                 cbp, qpd, zl, cdcz, cacz = _read_residuals(
-                    r, mx, my, luma_nnz, cnnz
+                    r, g, mx, my, _CBP_INTER
                 )
                 if cbp:
                     cur_qp = (cur_qp + qpd + 52) % 52
@@ -1219,30 +1129,12 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                 addr += 1
                 continue
             if mb_type > 22:
-                itype = mb_type - 23
-                if itype == 0:
-                    cur_qp = _decode_i4x4_mb(
-                        r, recons, luma_nnz, cnnz, modes4, mx, my,
-                        cur_qp,
-                    )
-                    qpc = _chroma_qp(cur_qp)
-                    mvs0.mark_intra(mx, my)
-                    mvs1.mark_intra(mx, my)
-                    addr += 1
-                    continue
-                if itype == 25:
-                    _decode_ipcm_mb(r, recons, luma_nnz, cnnz, mx, my)
-                    mvs0.mark_intra(mx, my)
-                    mvs1.mark_intra(mx, my)
-                    addr += 1
-                    continue
-                if itype > 25:
+                if mb_type > 48:
                     raise ValueError(
                         f"invalid mb_type {mb_type} in B slice"
                     )
-                cur_qp = _decode_i16_mb(
-                    r, recons, luma_nnz, cnnz, mx, my, itype, cur_qp
-                )
+                cur_qp = _decode_intra_mb(r, g, mx, my, mb_type - 23,
+                                          cur_qp)
                 qpc = _chroma_qp(cur_qp)
                 mvs0.mark_intra(mx, my)
                 mvs1.mark_intra(mx, my)
@@ -1299,7 +1191,7 @@ def _decode_b_frame(r, sps, qp, ref_l0, ref_l1, weights=None,
                 pcb[cs] = pp[1][cs]
                 pcr[cs] = pp[2][cs]
             cbp, qpd, zl, cdcz, cacz = _read_residuals(
-                r, mx, my, luma_nnz, cnnz
+                r, g, mx, my, _CBP_INTER
             )
             if cbp:
                 cur_qp = (cur_qp + qpd + 52) % 52
@@ -1353,10 +1245,6 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
 
     Returns (annex_b_bytes, [recon planes in decode order],
     [poc per frame])."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        encode_h264_i16x16,
-    )
-
     if not entries or entries[0][0] != "idr":
         raise ValueError("sequence must start with an IDR entry")
     y0 = entries[0][1][0]
@@ -1384,18 +1272,11 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
         if kind == "idr":
             if ei != 0:
                 raise ValueError("IDR only as the first entry")
-            planes = entry[1]
-            intra_stream, r0y, r0cb, r0cr = encode_h264_i16x16(
-                planes[0], planes[1], planes[2], qp=qp
+            idr_nal, recon = _encode_idr(
+                entry[1], qp, _POC_BITS, (d_idc, deblock_offsets)
             )
-            idr_rbsp = next(
-                _ep_remove(n[1:])
-                for n in _split_nals(intra_stream)
-                if (n[0] & 0x1F) == 5
-            )
-            stream += _nal(3, 5, _idr_reheader_poc0(
-                idr_rbsp, idc=d_idc, offs=deblock_offsets))
-            recon = _filt((r0y, r0cb, r0cr), qp)  # all-intra info
+            stream += idr_nal
+            recon = _filt(recon, qp)  # all-intra info
             recons.append(recon)
             pocs.append(0)
             ref_dpb = [(0, recon, _intra_motion(mbw, mbh))]
@@ -1468,12 +1349,10 @@ def encode_h264_b_sequence(entries: list, qp: int = 0, weights=None,
 def decode_h264_b_stream(payload: bytes):
     """Decode a POC-type-0 IDR + P + B stream. Returns
     (frames in DECODE order, poc per frame) — sort by POC for display
-    order. P slices are delegated to h264_inter._decode_p_frame; B
-    slices decode here against the POC-ordered reference lists."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        decode_h264_frame,
-    )
-
+    order. The IDR's macroblocks decode through the shared intra
+    macroblock layer after its header is parsed here; P slices are
+    delegated to h264_inter._decode_p_frame; B slices decode here
+    against the POC-ordered reference lists."""
     sps = None
     bipred_idc = 0
     frames: list = []
@@ -1504,25 +1383,7 @@ def decode_h264_b_stream(payload: bytes):
         elif ntype == 5:
             if sps is None:
                 raise ValueError("IDR before SPS")
-            idr_rbsp, d_idc, d_offs = _idr_strip_poc0(rbsp)
-            sub = (
-                _nal(3, 7, _sps_rbsp(sps["mbw"], sps["mbh"],
-                                     sps["mbw"] * 16, sps["mbh"] * 16))
-                + _nal(3, 8, _pps_rbsp())
-                + _nal(3, 5, idr_rbsp)
-            )
-            frame = decode_h264_frame(sub)
-            if d_idc != 1:
-                # idc 2 == idc 0 for single-slice frames (no
-                # slice-boundary internal edges to exclude)
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                )
-
-                frame = deblock_frame(
-                    *frame, _idr_slice_qp(idr_rbsp),
-                    alpha_off=2 * d_offs[0], beta_off=2 * d_offs[1],
-                )
+            frame = _decode_idr(rbsp, sps, True)
             frames.append(frame)
             pocs.append(0)
             ref_dpb = [(0, frame, _intra_motion(sps["mbw"],

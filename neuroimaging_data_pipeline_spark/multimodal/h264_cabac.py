@@ -61,14 +61,12 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _CF,
-    _H2,
     _H4,
-    _MF,
     _MODE_NEEDS,
     _ZBLK,
-    _ZIG,
     _ZIGA,
     _ZIGA1,
+    _chroma_fwd,
     _chroma_qp,
     _decoded_before_factory,
     _dequant_ac,
@@ -890,26 +888,11 @@ def encode_h264_cabac_intra(
                 zdc = _quant_dc4((_H4 @ dc @ _H4) // 2, qp)
                 cbp_luma = 15 if acz.any() else 0
             # --- chroma (shared shape) ---
-            cpred, cdcz, cacz = {}, {}, {}
-            for pi, (srcp, reconp) in enumerate(((cbp_, rcb), (crp_, rcr))):
-                cp = _pred8_chroma_dc(reconp, my, mx)
-                cres = srcp[my * 8 : my * 8 + 8,
-                            mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-                cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-                wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-                dc2 = wmc[..., 0, 0]
-                az = _quant(wmc, qpc)
-                az[..., 0, 0] = 0
-                qbits = 15 + qpc // 6
-                f = (1 << qbits) // 3
-                yd = _H2 @ dc2 @ _H2
-                zd = np.sign(yd) * (
-                    (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-                )
-                cpred[pi], cdcz[pi], cacz[pi] = cp, zd, az
-            any_cac = any(cacz[p].any() for p in (0, 1))
-            any_cdc = any(cdcz[p].any() for p in (0, 1))
-            cbpc = 2 if any_cac else (1 if any_cdc else 0)
+            cpred = (_pred8_chroma_dc(rcb, my, mx),
+                     _pred8_chroma_dc(rcr, my, mx))
+            cdcz, cacz, cbpc = _chroma_fwd(
+                (yp, cbp_, crp_), cpred, mx, my, qpc
+            )
 
             # --- syntax ---
             if i4x4:

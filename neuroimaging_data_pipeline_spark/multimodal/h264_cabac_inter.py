@@ -63,13 +63,12 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _CF,
-    _H2,
     _H4,
-    _MF,
     _ZBLK,
     _ZIG,
     _ZIGA,
     _ZIGA1,
+    _chroma_fwd,
     _chroma_qp,
     _pred8_chroma_dc,
     _pred16,
@@ -644,9 +643,8 @@ def _i16_transform(recon, target, mx, my, qp, qpc):
     {pi: (cpred, cdcz, cacz)}, cbpc)."""
     ry, rcb, rcr = recon
     pred = _pred16(ry, my, mx, 2)
-    ty, tcb, tcr = target
-    resid = ty[my * 16 : my * 16 + 16,
-               mx * 16 : mx * 16 + 16].astype(np.int64) - pred
+    resid = target[0][my * 16 : my * 16 + 16,
+                      mx * 16 : mx * 16 + 16].astype(np.int64) - pred
     blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
     wm = np.matmul(np.matmul(_CF, blocks), _CF.T)
     dc = wm[..., 0, 0]
@@ -654,26 +652,9 @@ def _i16_transform(recon, target, mx, my, qp, qpc):
     acz[..., 0, 0] = 0
     zdc = _quant_dc4((_H4 @ dc @ _H4) // 2, qp)
     cbp_luma = 15 if acz.any() else 0
-    chroma = {}
-    for pi, (srcp, reconp) in enumerate(((tcb, rcb), (tcr, rcr))):
-        cp = _pred8_chroma_dc(reconp, my, mx)
-        cres = srcp[my * 8 : my * 8 + 8,
-                    mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-        cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-        wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-        dc2 = wmc[..., 0, 0]
-        az = _quant(wmc, qpc)
-        az[..., 0, 0] = 0
-        qbits = 15 + qpc // 6
-        f = (1 << qbits) // 3
-        yd = _H2 @ dc2 @ _H2
-        zd = np.sign(yd) * (
-            (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-        )
-        chroma[pi] = (cp, zd, az)
-    any_cac = any(chroma[p][2].any() for p in (0, 1))
-    any_cdc = any(chroma[p][1].any() for p in (0, 1))
-    cbpc = 2 if any_cac else (1 if any_cdc else 0)
+    cpred = (_pred8_chroma_dc(rcb, my, mx), _pred8_chroma_dc(rcr, my, mx))
+    cdcz, cacz, cbpc = _chroma_fwd(target, cpred, mx, my, qpc)
+    chroma = {pi: (cpred[pi], cdcz[pi], cacz[pi]) for pi in (0, 1)}
     return pred, zdc, acz, cbp_luma, chroma, cbpc
 
 

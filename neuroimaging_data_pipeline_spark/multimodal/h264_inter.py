@@ -19,8 +19,9 @@ missing #2). CAVLC P slices on top of the proven intra stack:
   coded_block_pattern me(v) mapping (Table 9-4), full 16-coefficient
   luma residual blocks and the shared chroma DC-Hadamard path, nC
   neighbor tracking across skipped MBs;
-- INTRA macroblocks inside P slices (mb_type >= 5): Intra_16x16 on
-  the shared prediction/transform layer — intra neighbors are marked
+- INTRA macroblocks inside P slices (mb_type 5..30: I_4x4,
+  Intra_16x16, I_PCM), coded by h264_intra's intra macroblock layer,
+  the same code the I slices run — intra neighbors are marked
   unavailable-for-MV-prediction (refIdx -1, mv 0) exactly as
   8.4.1.3.2 requires, WITHOUT triggering the out-of-picture D
   substitution or only-A fallback;
@@ -34,16 +35,10 @@ missing #2). CAVLC P slices on top of the proven intra stack:
 - sequence framing: SPS with max_num_ref_frames in 1..15, a PPS
   with deblocking control so every slice header disables the loop
   filter (the stream's nominal conformant output IS this codec
-  family's reconstruction), an IDR Intra_16x16 anchor re-headered
-  from the proven CAVLC encoder, and non-IDR (NAL type 1) P slices
+  family's reconstruction), an IDR Intra_16x16 anchor written under
+  its own deblocking-control slice header straight into the shared
+  intra macroblock loop, and non-IDR (NAL type 1) P slices
   referencing the decoded-frame DPB.
-
-I_4x4 macroblocks inside P slices landed in a later pass (shared
-_encode_i4x4_mb/_decode_i4x4_mb helpers, neighbor modes from
-non-I_4x4 macroblocks treated as DC per 8.3.1.1).
-
-Intra-in-inter is COMPLETE: Intra_16x16, I_4x4 and I_PCM all code
-inside P slices (and B slices via h264_bslice's shared helpers).
 
 Weighted P slices (weighted_pred_flag, a later pass): a list-0
 pred_weight_table in every P slice header, per-REFERENCE
@@ -90,40 +85,32 @@ from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
+    _check_planes,
     _ep_remove,
     _nal,
+    _parse_slice_header,
     _parse_sps,
+    _read_deblock_fields,
+    _slice_header,
     _split_nals,
+    _write_deblock_fields,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-    _CBP_INTRA,
-    _CBP_INTRA_INV,
     _CF,
-    _H2,
-    _H4,
-    _MF,
-    _MODE_NEEDS,
-    _ZBLK,
-    _ZIG,
-    _ZIGA,
-    _ZIGA1,
+    _MbGrid,
+    _cbp_luma,
+    _chroma_fwd,
     _chroma_qp,
-    _decoded_before_factory,
+    _decode_intra_mb,
+    _decode_intra_slice,
     _dequant_ac,
     _dequant_dc2,
-    _fwd4x4,
+    _encode_i16_slice,
+    _encode_intra_mb,
     _inv4x4,
-    _nc_for,
-    _pred4,
-    _pred8_chroma_dc,
-    _pred16,
     _quant,
-    _quant_dc4,
-    _recon_chroma8,
-    _recon_i16_planes,
-    _recon_mb16,
-    decode_residual_block,
-    encode_residual_block,
+    _read_residuals,
+    _write_residuals,
 )
 
 # Table 9-4, Inter column: codeNum -> coded_block_pattern
@@ -533,92 +520,6 @@ def _copy_bits(r: BitReader, w: BitWriter, rbsp: bytes) -> None:
     w.trailing()
 
 
-def _idr_slice_qp(rbsp: bytes) -> int:
-    """Slice QP of a (control-PPS-stripped) IDR slice: 26 +
-    pic_init_qp_minus26 (0 in this family) + slice_qp_delta."""
-    r = BitReader(rbsp)
-    r.ue(), r.ue(), r.ue()
-    r.u(4)
-    r.ue()
-    r.u(1), r.u(1)
-    return 26 + r.se()
-
-
-def _idr_slice_add_idc(
-    rbsp: bytes, qp: int, idc: int = 1, offs: tuple = (0, 0)
-) -> bytes:
-    """Re-header the proven intra encoder's IDR slice for the
-    deblocking-control PPS: same fields + disable_deblocking idc
-    (1 = filter off; 0 = in-loop deblocking enabled, h264_deblock;
-    2 = enabled, slice-boundary edges excluded — identical to 0 for
-    the single-slice frames this codec writes). Per 7.3.3, when idc
-    != 1 the slice_alpha_c0_offset_div2 / slice_beta_offset_div2
-    fields follow (``offs``, div2 values)."""
-    r = BitReader(rbsp)
-    first_mb, stype, ppsid = r.ue(), r.ue(), r.ue()
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    w = BitWriter()
-    w.ue(first_mb)
-    w.ue(stype)
-    w.ue(ppsid)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    w.ue(idc)  # disable_deblocking_filter_idc
-    if idc != 1:
-        w.se(offs[0])  # slice_alpha_c0_offset_div2
-        w.se(offs[1])  # slice_beta_offset_div2
-    _copy_bits(r, w, rbsp)
-    return w.bytes_()
-
-
-def _read_deblock_fields(r: "BitReader") -> tuple[int, tuple]:
-    """Parse disable_deblocking_filter_idc and, when != 1, the two
-    slice filter offsets (7.3.3). Returns (idc, (a_div2, b_div2))."""
-    idc = r.ue()
-    if idc > 2:
-        raise ValueError(
-            f"disable_deblocking_filter_idc {idc} out of range")
-    offs = (0, 0)
-    if idc != 1:
-        a = r.se()
-        b = r.se()
-        if not (-6 <= a <= 6 and -6 <= b <= 6):
-            raise ValueError(
-                f"slice filter offsets ({a}, {b}) out of range")
-        offs = (a, b)
-    return idc, offs
-
-
-def _idr_slice_strip_idc(rbsp: bytes) -> tuple[bytes, int, tuple]:
-    """Inverse of _idr_slice_add_idc: drop the idc (+ offsets) so
-    the slice can be delegated to h264_intra.decode_h264_frame
-    (whose PPS has no deblocking control field). Returns
-    (rbsp, idc, (a_div2, b_div2))."""
-    r = BitReader(rbsp)
-    fields = (r.ue(), r.ue(), r.ue())
-    frame_num = r.u(4)
-    idr_id = r.ue()
-    noout, longterm = r.u(1), r.u(1)
-    qpd = r.se()
-    idc, offs = _read_deblock_fields(r)
-    w = BitWriter()
-    for v in fields:
-        w.ue(v)
-    w.u(frame_num, 4)
-    w.ue(idr_id)
-    w.u(noout, 1)
-    w.u(longterm, 1)
-    w.se(qpd)
-    _copy_bits(r, w, rbsp)
-    return w.bytes_(), idc, offs
-
-
 def _norm_p_weights(weights: dict, num_refs: int) -> dict:
     """Normalize user P weights: luma/chroma log2 denominators plus
     one (wy, oy, wc, oc) entry per reference index; None weight =
@@ -745,10 +646,7 @@ def _p_slice_header(
         _write_pwt_p(sl, wtab, num_refs_active)
     sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
     sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(deblock_idc)  # disable_deblocking_filter_idc
-    if deblock_idc != 1:  # 7.3.3: offsets present when idc != 1
-        sl.se(deblock_offs[0])  # slice_alpha_c0_offset_div2
-        sl.se(deblock_offs[1])  # slice_beta_offset_div2
+    _write_deblock_fields(sl, deblock_idc, deblock_offs)
 
 
 def _parse_p_slice_header(
@@ -884,147 +782,13 @@ def _mc_mb(padded: list, mx: int, my: int, placed: list,
 def _residual_from_target(targets, mx, my, py, pcb, pcr, qp, qpc):
     """Quantize (target - prediction) for one inter MB. Returns
     (cbp, zl, cdcz, cacz)."""
-    y1, cb1, cr1 = targets
-    tgt = y1[my * 16 : my * 16 + 16,
-             mx * 16 : mx * 16 + 16].astype(np.int64)
+    tgt = targets[0][my * 16 : my * 16 + 16,
+                     mx * 16 : mx * 16 + 16].astype(np.int64)
     resid = tgt - py
     blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
     zl = _quant(np.matmul(np.matmul(_CF, blocks), _CF.T), qp)
-    cbp_luma = 0
-    for g in range(4):
-        gy8, gx8 = g >> 1, g & 1
-        if zl[gy8 * 2 : gy8 * 2 + 2, gx8 * 2 : gx8 * 2 + 2].any():
-            cbp_luma |= 1 << g
-    cdcz, cacz = {}, {}
-    for pi, (srcp, pred) in enumerate(((cb1, pcb), (cr1, pcr))):
-        cres = srcp[my * 8 : my * 8 + 8,
-                    mx * 8 : mx * 8 + 8].astype(np.int64) - pred
-        cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-        wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-        dc2 = wmc[..., 0, 0]
-        az = _quant(wmc, qpc)
-        az[..., 0, 0] = 0
-        qbits = 15 + qpc // 6
-        f = (1 << qbits) // 3
-        yd = _H2 @ dc2 @ _H2
-        cdcz[pi] = np.sign(yd) * (
-            (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-        )
-        cacz[pi] = az
-    any_cac = any(cacz[p].any() for p in (0, 1))
-    any_cdc = any(cdcz[p].any() for p in (0, 1))
-    cbpc = 2 if any_cac else (1 if any_cdc else 0)
-    return cbp_luma | (cbpc << 4), zl, cdcz, cacz
-
-
-def _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz, luma_nnz, cnnz):
-    """Emit coded_block_pattern (INTER me(v)), mb_qp_delta 0 when
-    coded, and the CAVLC residual blocks; updates nnz grids."""
-    sl.ue(_CBP_INTER_INV[cbp])
-    if cbp:
-        sl.se(0)  # mb_qp_delta
-    cbp_luma, cbpc = cbp & 15, cbp >> 4
-    # one batched zigzag gather for the whole MB's 16 luma blocks
-    zz = zl.reshape(4, 4, 16)[:, :, _ZIGA].tolist() if cbp_luma else None
-    for g in range(4):
-        if not cbp_luma & (1 << g):
-            for k in range(4):
-                bx, by = _ZBLK[g * 4 + k]
-                luma_nnz[my * 4 + by, mx * 4 + bx] = 0
-            continue
-        for k in range(4):
-            bx, by = _ZBLK[g * 4 + k]
-            gx, gy = mx * 4 + bx, my * 4 + by
-            nc = _nc_for(luma_nnz, gx, gy)
-            luma_nnz[gy, gx] = encode_residual_block(
-                sl, zz[by][bx], nc, 16
-            )
-    if cbpc > 0:
-        for pi in (0, 1):
-            zd = cdcz[pi]
-            encode_residual_block(
-                sl,
-                [int(zd[0, 0]), int(zd[0, 1]),
-                 int(zd[1, 0]), int(zd[1, 1])],
-                -1, 4,
-            )
-    if cbpc > 1:
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    coeffs = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                    cnnz[pi][gy, gx] = encode_residual_block(
-                        sl, coeffs, nc, 15
-                    )
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-
-
-def _read_residuals(r, mx, my, luma_nnz, cnnz):
-    """Parse coded_block_pattern + optional mb_qp_delta + CAVLC
-    residual blocks for one inter MB. Returns
-    (cbp, qp_delta, zl, cdcz, cacz); nnz grids updated."""
-    cbp_code = r.ue()
-    if cbp_code >= len(_CBP_INTER):
-        raise ValueError(
-            f"corrupt coded_block_pattern code {cbp_code} (max "
-            f"{len(_CBP_INTER) - 1})"
-        )
-    cbp = _CBP_INTER[cbp_code]
-    cbp_luma, cbpc = cbp & 15, cbp >> 4
-    qpd = r.se() if cbp else 0
-    zl = np.zeros((4, 4, 4, 4), np.int64)
-    cfs, slots = [], []
-    for g in range(4):
-        for k in range(4):
-            bx, by = _ZBLK[g * 4 + k]
-            gx, gy = mx * 4 + bx, my * 4 + by
-            if not cbp_luma & (1 << g):
-                luma_nnz[gy, gx] = 0
-                continue
-            nc = _nc_for(luma_nnz, gx, gy)
-            cf, tot = decode_residual_block(r, nc, 16)
-            cfs.append(cf)
-            slots.append((by, bx))
-            luma_nnz[gy, gx] = tot
-    if cfs:
-        # one batched zigzag scatter for every coded block in the MB
-        blocks = np.zeros((len(cfs), 16), np.int64)
-        blocks[:, _ZIGA] = cfs
-        for (by, bx), blk in zip(slots, blocks.reshape(-1, 4, 4)):
-            zl[by, bx] = blk
-    cdcz = {0: np.zeros((2, 2), np.int64), 1: np.zeros((2, 2), np.int64)}
-    cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-            1: np.zeros((2, 2, 4, 4), np.int64)}
-    if cbpc > 0:
-        for pi in (0, 1):
-            cf, _ = decode_residual_block(r, -1, 4)
-            cdcz[pi] = np.array(
-                [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
-            )
-    if cbpc > 1:
-        ccfs = []
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    cf, tot = decode_residual_block(r, nc, 15)
-                    ccfs.append(cf)
-                    cnnz[pi][gy, gx] = tot
-        # one batched zigzag scatter for the eight chroma AC blocks
-        cblocks = np.zeros((8, 16), np.int64)
-        cblocks[:, _ZIGA1] = ccfs
-        cblocks = cblocks.reshape(2, 2, 2, 4, 4)
-        cacz[0][...] = cblocks[0]
-        cacz[1][...] = cblocks[1]
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-    return cbp, qpd, zl, cdcz, cacz
+    cdcz, cacz, cbpc = _chroma_fwd(targets, (pcb, pcr), mx, my, qpc)
+    return _cbp_luma(zl) | (cbpc << 4), zl, cdcz, cacz
 
 
 def _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
@@ -1060,418 +824,6 @@ def _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
     )
 
 
-def _encode_i16_mb(sl, targets, recons, luma_nnz, cnnz, mx, my, qp, qpc,
-                   base):
-    """Intra_16x16 macroblock inside an inter slice (DC luma + DC
-    chroma prediction), mirroring the proven I-slice encoder on the
-    shared transform layer. ``base`` is the slice-type mb_type offset
-    for intra macroblocks (5 in P slices, 23 in B slices)."""
-    y1, cb1, cr1 = targets
-    ry, rcb, rcr = recons
-    pred = _pred16(ry, my, mx, 2)
-    resid = y1[my * 16 : my * 16 + 16,
-               mx * 16 : mx * 16 + 16].astype(np.int64) - pred
-    blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
-    wm = np.matmul(np.matmul(_CF, blocks), _CF.T)
-    dc = wm[..., 0, 0]
-    acz = _quant(wm, qp)
-    acz[..., 0, 0] = 0
-    zdc = _quant_dc4((_H4 @ dc @ _H4) // 2, qp)
-    cbpl = 15 if acz.any() else 0
-    cpred, cdcz, cacz = {}, {}, {}
-    for pi, (srcp, reconp) in enumerate(((cb1, rcb), (cr1, rcr))):
-        cp = _pred8_chroma_dc(reconp, my, mx)
-        cres = srcp[my * 8 : my * 8 + 8,
-                    mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-        cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-        wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-        dc2 = wmc[..., 0, 0]
-        az = _quant(wmc, qpc)
-        az[..., 0, 0] = 0
-        qbits = 15 + qpc // 6
-        f = (1 << qbits) // 3
-        yd = _H2 @ dc2 @ _H2
-        zd = np.sign(yd) * (
-            (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-        )
-        cpred[pi], cdcz[pi], cacz[pi] = cp, zd, az
-    any_cac = any(cacz[p].any() for p in (0, 1))
-    any_cdc = any(cdcz[p].any() for p in (0, 1))
-    cbpc = 2 if any_cac else (1 if any_cdc else 0)
-    sl.ue(base + 1 + 2 + 4 * cbpc + 12 * (1 if cbpl else 0))
-    sl.ue(0)  # intra_chroma_pred_mode: DC
-    sl.se(0)  # mb_qp_delta
-    nc = _nc_for(luma_nnz, mx * 4, my * 4)
-    encode_residual_block(sl, zdc.ravel()[_ZIGA].tolist(), nc, 16)
-    if cbpl:
-        for bx, by in _ZBLK:
-            gx, gy = mx * 4 + bx, my * 4 + by
-            nc = _nc_for(luma_nnz, gx, gy)
-            coeffs = acz[by, bx].ravel()[_ZIGA1].tolist()
-            luma_nnz[gy, gx] = encode_residual_block(sl, coeffs, nc, 15)
-    else:
-        luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
-    if cbpc > 0:
-        for pi in (0, 1):
-            zd = cdcz[pi]
-            encode_residual_block(
-                sl,
-                [int(zd[0, 0]), int(zd[0, 1]),
-                 int(zd[1, 0]), int(zd[1, 1])],
-                -1, 4,
-            )
-    if cbpc > 1:
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    coeffs = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                    cnnz[pi][gy, gx] = encode_residual_block(
-                        sl, coeffs, nc, 15
-                    )
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-    y16, cb8, cr8 = _recon_i16_planes(
-        pred, cpred[0], cpred[1],
-        acz if cbpl else None, zdc,
-        cacz[0] if cbpc > 1 else None,
-        cacz[1] if cbpc > 1 else None,
-        cdcz[0] if cbpc > 0 else None,
-        cdcz[1] if cbpc > 0 else None,
-        qp, qpc,
-    )
-    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = y16
-    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cb8
-    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
-
-
-def _decode_i16_mb(r, recons, luma_nnz, cnnz, mx, my, itype, cur_qp):
-    """Decode one Intra_16x16 macroblock inside an inter slice
-    (itype = mb_type - base, in 1..24). Returns the updated slice
-    QP (mb_qp_delta is always present for Intra_16x16)."""
-    ry, rcb, rcr = recons
-    t = itype - 1
-    cbpl = 15 if t >= 12 else 0
-    t %= 12
-    cbpc, pm = t // 4, t % 4
-    chroma_mode = r.ue()
-    if chroma_mode != 0:
-        raise NotImplementedError(
-            f"chroma prediction mode {chroma_mode} — only DC is "
-            "implemented"
-        )
-    cur_qp = (cur_qp + r.se() + 52) % 52
-    qpc = _chroma_qp(cur_qp)
-    nc = _nc_for(luma_nnz, mx * 4, my * 4)
-    dccf, _ = decode_residual_block(r, nc, 16)
-    zdc = np.zeros(16, np.int64)
-    zdc[_ZIGA] = dccf
-    zdc = zdc.reshape(4, 4)
-    acz = np.zeros((4, 4, 4, 4), np.int64)
-    if cbpl:
-        for bx, by in _ZBLK:
-            gx, gy = mx * 4 + bx, my * 4 + by
-            nc = _nc_for(luma_nnz, gx, gy)
-            cf, tot = decode_residual_block(r, nc, 15)
-            z = np.zeros(16, np.int64)
-            z[_ZIGA1] = cf
-            acz[by, bx] = z.reshape(4, 4)
-            luma_nnz[gy, gx] = tot
-    else:
-        luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
-    cdcz = {0: np.zeros((2, 2), np.int64),
-            1: np.zeros((2, 2), np.int64)}
-    cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-            1: np.zeros((2, 2, 4, 4), np.int64)}
-    if cbpc > 0:
-        for pi in (0, 1):
-            cf, _ = decode_residual_block(r, -1, 4)
-            cdcz[pi] = np.array(
-                [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
-            )
-    if cbpc > 1:
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    cf, tot = decode_residual_block(r, nc, 15)
-                    z = np.zeros(16, np.int64)
-                    z[_ZIGA1] = cf
-                    cacz[pi][by, bx] = z.reshape(4, 4)
-                    cnnz[pi][gy, gx] = tot
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-    pred = _pred16(ry, my, mx, pm)
-    cpb = _pred8_chroma_dc(rcb, my, mx)
-    cpr = _pred8_chroma_dc(rcr, my, mx)
-    y16, cb8, cr8 = _recon_i16_planes(
-        pred, cpb, cpr, acz if cbpl else None, zdc,
-        cacz[0] if cbpc > 1 else None,
-        cacz[1] if cbpc > 1 else None,
-        cdcz[0] if cbpc > 0 else None,
-        cdcz[1] if cbpc > 0 else None,
-        cur_qp, qpc,
-    )
-    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = y16
-    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cb8
-    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
-    return cur_qp
-
-
-def _encode_i4x4_mb(sl, targets, recons, luma_nnz, cnnz, modes4,
-                    mx, my, qp, qpc, mode=2):
-    """I_4x4 macroblock inside an inter slice (the caller emits
-    mb_skip_run and the slice-type-offset mb_type first): per-4x4
-    chained intra prediction with the prev-mode flag coding,
-    Table 9-4 INTRA coded_block_pattern, DC chroma — mirroring the
-    I-slice encoder on the shared transform layer. Blocks whose
-    neighbors cannot support ``mode`` fall back to DC; the modes4
-    grid keeps -1 on non-I_4x4 macroblocks so neighbor mode
-    prediction sees DC there, per 8.3.1.1."""
-    y1, cb1, cr1 = targets
-    ry, rcb, rcr = recons
-    mbw4 = modes4.shape[1]
-    before = _decoded_before_factory(mbw4 // 4)
-    coefs = {}
-    chosen = {}
-    for bx, by in _ZBLK:
-        gx, gy = mx * 4 + bx, my * 4 + by
-        m = mode
-        need_t, need_l = _MODE_NEEDS[m]
-        if (need_t and gy == 0) or (need_l and gx == 0):
-            m = 2
-        chosen[(bx, by)] = m
-        modes4[gy, gx] = m
-        pred = _pred4(
-            ry, gx, gy, m, mbw4,
-            lambda a, b, _gx=gx, _gy=gy: before(a, b, _gx, _gy),
-        )
-        srcb = y1[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4]
-        z = _quant(_fwd4x4(srcb.astype(np.int64) - pred), qp)
-        coefs[(bx, by)] = z
-        blk = (_inv4x4(_dequant_ac(z, qp)) + 32) >> 6
-        ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-            pred + blk, 0, 255
-        )
-    cbp_luma = 0
-    for g in range(4):
-        if any(coefs[_ZBLK[g * 4 + k]].any() for k in range(4)):
-            cbp_luma |= 1 << g
-    cpred, cdcz, cacz = {}, {}, {}
-    for pi, (srcp, reconp) in enumerate(((cb1, rcb), (cr1, rcr))):
-        cp = _pred8_chroma_dc(reconp, my, mx)
-        cres = srcp[my * 8 : my * 8 + 8,
-                    mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-        cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-        wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-        dc2 = wmc[..., 0, 0]
-        az = _quant(wmc, qpc)
-        az[..., 0, 0] = 0
-        qbits = 15 + qpc // 6
-        f = (1 << qbits) // 3
-        yd = _H2 @ dc2 @ _H2
-        zd = np.sign(yd) * (
-            (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-        )
-        cpred[pi], cdcz[pi], cacz[pi] = cp, zd, az
-    any_cac = any(cacz[p].any() for p in (0, 1))
-    any_cdc = any(cdcz[p].any() for p in (0, 1))
-    cbp_chroma = 2 if any_cac else (1 if any_cdc else 0)
-    cbp = cbp_luma | (cbp_chroma << 4)
-    for bx, by in _ZBLK:
-        gx, gy = mx * 4 + bx, my * 4 + by
-        ma = modes4[gy, gx - 1] if gx > 0 else -1
-        mb_ = modes4[gy - 1, gx] if gy > 0 else -1
-        pred_mode = min(
-            2 if ma < 0 else int(ma), 2 if mb_ < 0 else int(mb_)
-        )
-        m = chosen[(bx, by)]
-        if m == pred_mode:
-            sl.u(1, 1)
-        else:
-            sl.u(0, 1)
-            sl.u(m - (1 if m > pred_mode else 0), 3)
-    sl.ue(0)  # intra_chroma_pred_mode: DC
-    sl.ue(_CBP_INTRA_INV[cbp])
-    if cbp:
-        sl.se(0)  # mb_qp_delta
-    for g in range(4):
-        if not cbp_luma & (1 << g):
-            for k in range(4):
-                bx, by = _ZBLK[g * 4 + k]
-                luma_nnz[my * 4 + by, mx * 4 + bx] = 0
-            continue
-        for k in range(4):
-            bx, by = _ZBLK[g * 4 + k]
-            gx, gy = mx * 4 + bx, my * 4 + by
-            nc = _nc_for(luma_nnz, gx, gy)
-            coeffs = coefs[(bx, by)].ravel()[_ZIGA].tolist()
-            luma_nnz[gy, gx] = encode_residual_block(sl, coeffs, nc, 16)
-    if cbp_chroma > 0:
-        for pi in (0, 1):
-            zd = cdcz[pi]
-            encode_residual_block(
-                sl,
-                [int(zd[0, 0]), int(zd[0, 1]),
-                 int(zd[1, 0]), int(zd[1, 1])],
-                -1, 4,
-            )
-    if cbp_chroma > 1:
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    coeffs = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                    cnnz[pi][gy, gx] = encode_residual_block(
-                        sl, coeffs, nc, 15
-                    )
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-    for pi, reconp in ((0, rcb), (1, rcr)):
-        reconp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-            _recon_chroma8(
-                cpred[pi],
-                cacz[pi] if cbp_chroma > 1 else None,
-                cdcz[pi] if cbp_chroma > 0 else None,
-                qpc,
-            )
-        )
-
-
-def _decode_i4x4_mb(r, recons, luma_nnz, cnnz, modes4, mx, my, cur_qp):
-    """Decode one I_4x4 macroblock inside an inter slice (after the
-    caller consumed mb_type). Returns the updated slice QP."""
-    ry, rcb, rcr = recons
-    mbw4 = modes4.shape[1]
-    before = _decoded_before_factory(mbw4 // 4)
-    for bx, by in _ZBLK:
-        gx, gy = mx * 4 + bx, my * 4 + by
-        ma = modes4[gy, gx - 1] if gx > 0 else -1
-        mb_ = modes4[gy - 1, gx] if gy > 0 else -1
-        pm4 = min(2 if ma < 0 else int(ma), 2 if mb_ < 0 else int(mb_))
-        if r.u(1):
-            modes4[gy, gx] = pm4
-        else:
-            rem = r.u(3)
-            modes4[gy, gx] = rem if rem < pm4 else rem + 1
-    if r.ue() != 0:
-        raise NotImplementedError(
-            "chroma prediction mode != DC — only DC is implemented"
-        )
-    cbp = _CBP_INTRA[r.ue()]
-    cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
-    if cbp:
-        cur_qp = (cur_qp + r.se() + 52) % 52
-    qpc = _chroma_qp(cur_qp)
-    coefs4 = {}
-    for g in range(4):
-        for k in range(4):
-            bx, by = _ZBLK[g * 4 + k]
-            gx, gy = mx * 4 + bx, my * 4 + by
-            if not cbp_luma & (1 << g):
-                coefs4[(bx, by)] = np.zeros((4, 4), np.int64)
-                luma_nnz[gy, gx] = 0
-                continue
-            nc = _nc_for(luma_nnz, gx, gy)
-            cf, tot = decode_residual_block(r, nc, 16)
-            z = np.zeros(16, np.int64)
-            z[_ZIGA] = cf
-            coefs4[(bx, by)] = z.reshape(4, 4)
-            luma_nnz[gy, gx] = tot
-    cdcz = {0: np.zeros((2, 2), np.int64), 1: np.zeros((2, 2), np.int64)}
-    cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-            1: np.zeros((2, 2, 4, 4), np.int64)}
-    if cbp_chroma > 0:
-        for pi in (0, 1):
-            cf, _ = decode_residual_block(r, -1, 4)
-            cdcz[pi] = np.array([[cf[0], cf[1]], [cf[2], cf[3]]],
-                                np.int64)
-    if cbp_chroma > 1:
-        for pi in (0, 1):
-            for by in range(2):
-                for bx in range(2):
-                    gx, gy = mx * 2 + bx, my * 2 + by
-                    nc = _nc_for(cnnz[pi], gx, gy)
-                    cf, tot = decode_residual_block(r, nc, 15)
-                    z = np.zeros(16, np.int64)
-                    z[_ZIGA1] = cf
-                    cacz[pi][by, bx] = z.reshape(4, 4)
-                    cnnz[pi][gy, gx] = tot
-    else:
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-    for bx, by in _ZBLK:
-        gx, gy = mx * 4 + bx, my * 4 + by
-        pred = _pred4(
-            ry, gx, gy, int(modes4[gy, gx]), mbw4,
-            lambda a, b, _gx=gx, _gy=gy: before(a, b, _gx, _gy),
-        )
-        blk = (_inv4x4(_dequant_ac(coefs4[(bx, by)], cur_qp)) + 32) >> 6
-        ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-            pred + blk, 0, 255
-        )
-    for pi, reconp in ((0, rcb), (1, rcr)):
-        cp = _pred8_chroma_dc(reconp, my, mx)
-        reconp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-            _recon_chroma8(
-                cp,
-                cacz[pi] if cbp_chroma > 1 else None,
-                cdcz[pi] if cbp_chroma > 0 else None,
-                qpc,
-            )
-        )
-    return cur_qp
-
-
-def _encode_ipcm_mb(sl, targets, recons, luma_nnz, cnnz, mx, my):
-    """I_PCM macroblock inside an inter slice: alignment bit padding
-    then 256 raw luma + 2x64 raw chroma samples — lossless, recon ==
-    target; PCM neighbors count as 16 coefficients for nC (9.2.1)."""
-    y1, cb1, cr1 = targets
-    ry, rcb, rcr = recons
-    sl.align_zero()
-    for yy in range(16):
-        for xx in range(16):
-            sl.u(int(y1[my * 16 + yy, mx * 16 + xx]), 8)
-    for plane in (cb1, cr1):
-        for yy in range(8):
-            for xx in range(8):
-                sl.u(int(plane[my * 8 + yy, mx * 8 + xx]), 8)
-    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
-        y1[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16]
-    )
-    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-        cb1[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-    )
-    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-        cr1[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8]
-    )
-    luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 16
-    for pi in (0, 1):
-        cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 16
-
-
-def _decode_ipcm_mb(r, recons, luma_nnz, cnnz, mx, my):
-    ry, rcb, rcr = recons
-    r.align()
-    for yy in range(16):
-        for xx in range(16):
-            ry[my * 16 + yy, mx * 16 + xx] = r.u(8)
-    for plane in (rcb, rcr):
-        for yy in range(8):
-            for xx in range(8):
-                plane[my * 8 + yy, mx * 8 + xx] = r.u(8)
-    luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 16
-    for pi in (0, 1):
-        cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 16
-
-
 def _encode_p_frame(
     target: tuple[np.ndarray, np.ndarray, np.ndarray],
     refs: list,
@@ -1487,19 +839,13 @@ def _encode_p_frame(
     (most recent first). Returns (slice_rbsp, recon_planes,
     motion_field) — the motion field feeds spatial-direct colocated
     lookups in the B-slice module."""
-    y1, cb1, cr1 = target
-    h, w = y1.shape
+    h, w = target[0].shape
     mbw, mbh = w // 16, h // 16
     padded = _pad_refs(refs)
     qpc = _chroma_qp(qp)
-    ry = np.zeros((h, w), np.int64)
-    rcb = np.zeros((h // 2, w // 2), np.int64)
-    rcr = np.zeros((h // 2, w // 2), np.int64)
-    recons = (ry, rcb, rcr)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-    modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+    g = _MbGrid(mbw, mbh)
+    ry, rcb, rcr = recons = g.recon
+    luma_nnz, cnnz = g.nnz, g.cnnz
     mvs = _MvState(mbw, mbh)
     pweights = _resolve_p_weights(wtab) if wtab is not None else None
 
@@ -1532,30 +878,10 @@ def _encode_p_frame(
                     cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
                 skip_run += 1
                 continue
-            if kind == "i16":
+            if kind in ("i16", "i4", "ipcm"):
                 sl.ue(skip_run)
                 skip_run = 0
-                _encode_i16_mb(sl, target, recons, luma_nnz, cnnz,
-                               mx, my, qp, qpc, base=5)
-                mvs.mark_intra(mx, my)
-                continue
-            if kind == "ipcm":
-                sl.ue(skip_run)
-                skip_run = 0
-                sl.ue(30)  # mb_type: I_PCM inside a P slice
-                _encode_ipcm_mb(sl, target, recons, luma_nnz, cnnz,
-                                mx, my)
-                mvs.mark_intra(mx, my)
-                continue
-            if kind == "i4":
-                sl.ue(skip_run)
-                skip_run = 0
-                sl.ue(5)  # mb_type: I_4x4 inside a P slice
-                _encode_i4x4_mb(
-                    sl, target, recons, luma_nnz, cnnz, modes4,
-                    mx, my, qp, qpc,
-                    mode=spec[1] if len(spec) > 1 else 2,
-                )
+                _encode_intra_mb(sl, g, target, spec, mx, my, qp, 5)
                 mvs.mark_intra(mx, my)
                 continue
             if kind == "8x8":
@@ -1604,8 +930,8 @@ def _encode_p_frame(
                 cbp, zl, cdcz, cacz = _residual_from_target(
                     target, mx, my, py, pcb, pcr, qp, qpc
                 )
-                _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz,
-                                 luma_nnz, cnnz)
+                _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
+                                 _CBP_INTER_INV)
                 _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
                                 zl, cdcz, cacz, qp, qpc)
                 continue
@@ -1643,8 +969,8 @@ def _encode_p_frame(
             cbp, zl, cdcz, cacz = _residual_from_target(
                 target, mx, my, py, pcb, pcr, qp, qpc
             )
-            _write_residuals(sl, mx, my, cbp, zl, cdcz, cacz,
-                             luma_nnz, cnnz)
+            _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
+                             _CBP_INTER_INV)
             _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
                             zl, cdcz, cacz, qp, qpc)
     if skip_run:
@@ -1660,6 +986,43 @@ def _encode_p_frame(
     return sl.bytes_(), recon, motion
 
 
+def _encode_idr(planes, qp: int, poc_bits: int, deblock: tuple):
+    """The IDR anchor of a GOP or B stream: Intra_16x16 DC through the
+    shared intra slice loop under a header with the deblocking-control
+    fields (and a zero pic_order_cnt_lsb of ``poc_bits`` bits, if
+    any). Returns (NAL bytes, reconstruction)."""
+    sl = BitWriter()
+    _slice_header(sl, qp, poc_bits, deblock)
+    g = _encode_i16_slice(sl, _check_planes(*planes), qp)
+    sl.trailing()
+    h, w = g.recon[0].shape
+    return _nal(3, 5, sl.bytes_()), g.frame(0, 0, w, h)
+
+
+def _decode_idr(rbsp: bytes, sps: dict, deblock_present: bool) -> tuple:
+    """Decode what _encode_idr writes (``deblock_present``: the PPS
+    sets deblocking_filter_control_present_flag), loop-filtered when
+    its header enables the filter."""
+    r = BitReader(rbsp)
+    qp = _parse_slice_header(r, sps)
+    idc, offs = _read_deblock_fields(r) if deblock_present else (1, (0, 0))
+    mbw, mbh = sps["mbw"], sps["mbh"]
+    frame = _decode_intra_slice(r, mbw, mbh, qp).frame(
+        0, 0, mbw * 16, mbh * 16
+    )
+    if idc == 1:
+        return frame
+    # idc 2 == idc 0 for single-slice frames (there are no
+    # slice-boundary internal edges to exclude)
+    from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
+        deblock_frame,
+    )
+
+    return deblock_frame(
+        *frame, qp, alpha_off=2 * offs[0], beta_off=2 * offs[1]
+    )
+
+
 def encode_h264_p_gop(
     frames: list,
     specs_per_p: list,
@@ -1669,9 +1032,10 @@ def encode_h264_p_gop(
     deblock: bool = False,
     deblock_offsets: tuple = (0, 0),
 ) -> tuple[bytes, list]:
-    """Encode a GOP: frames[0] becomes an Intra_16x16 IDR anchor (the
-    proven CAVLC encoder, re-headered for the deblocking-control
-    PPS); every later frame becomes a CAVLC P frame predicting from
+    """Encode a GOP: frames[0] becomes an Intra_16x16 IDR anchor (DC
+    prediction, the shared intra macroblock layer, under an IDR header
+    carrying the deblocking-control fields); every later frame becomes
+    a CAVLC P frame predicting from
     up to ``num_refs`` previously DECODED frames (list0 most recent
     first, per 8.2.4.2.1; ref_idx_l0 coded te(v) when two are
     active; sliding-window DPB eviction beyond ``num_refs``).
@@ -1681,6 +1045,9 @@ def encode_h264_p_gop(
       ("skip",)                                   — P_Skip;
       ("i16",)                                    — Intra_16x16 DC
         macroblock coded from the target frame;
+      ("i4",) | ("i4", mode)                      — I_4x4, preferred
+        4x4 luma mode (default DC);
+      ("ipcm",)                                   — I_PCM;
       (mode, [mv | (mv, ref), ...])               — mode in
         {"16x16", "16x8", "8x16"}, one quarter-pel MV (and optional
         refIdx) per partition;
@@ -1691,10 +1058,6 @@ def encode_h264_p_gop(
 
     Returns (annex_b_bytes, [recon planes per frame]) where every
     recon triple is the decoder-mirrored bit-exact contract."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        encode_h264_i16x16,
-    )
-
     if len(frames) < 2:
         raise ValueError("a GOP needs an anchor + at least one P frame")
     if len(specs_per_p) != len(frames) - 1:
@@ -1703,23 +1066,15 @@ def encode_h264_p_gop(
         # 4-bit frame_num (log2_max_frame_num 4): keep the sliding
         # window clear of the wrap
         raise ValueError("num_refs must be in 1..15")
-    y0, cb0, cr0 = frames[0]
-    h, w = y0.shape
+    h, w = frames[0][0].shape
     if h % 16 or w % 16:
         raise ValueError("inter sequences require dimensions % 16 == 0")
     mbw, mbh = w // 16, h // 16
-    intra_stream, r0y, r0cb, r0cr = encode_h264_i16x16(y0, cb0, cr0, qp=qp)
-    nals = _split_nals(intra_stream)
-    idr_rbsp = next(
-        _ep_remove(n[1:]) for n in nals if (n[0] & 0x1F) == 5
-    )
     # deblock False -> idc 1 (off); True -> idc 0; 2 -> idc 2
     # (filtering on, slice-boundary edges excluded — identical to 0
     # for the single-slice frames this encoder writes)
     d_idc = 1 if not deblock else (2 if deblock == 2 else 0)
-    idr2 = _idr_slice_add_idc(
-        idr_rbsp, qp, idc=d_idc, offs=deblock_offsets,
-    )
+    idr_nal, anchor = _encode_idr(frames[0], qp, 0, (d_idc, deblock_offsets))
     wtab = (
         _norm_p_weights(weights, num_refs) if weights is not None
         else None
@@ -1727,9 +1082,8 @@ def encode_h264_p_gop(
     stream = (
         _nal(3, 7, _sps_rbsp_ref1(mbw, mbh, w, h, num_refs))
         + _nal(3, 8, _pps_rbsp_deblock(weighted_pred=wtab is not None))
-        + _nal(3, 5, idr2)
+        + idr_nal
     )
-    anchor = (r0y, r0cb, r0cr)
     if deblock:
         # in-loop: the FILTERED reconstruction is the reference
         from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
@@ -1737,7 +1091,7 @@ def encode_h264_p_gop(
         )
 
         anchor = deblock_frame(  # all-intra info
-            r0y, r0cb, r0cr, qp,
+            *anchor, qp,
             alpha_off=2 * deblock_offsets[0],
             beta_off=2 * deblock_offsets[1],
         )
@@ -1799,21 +1153,13 @@ def decode_h264_sequence(
     payload: bytes,
 ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Decode an IDR + P CAVLC sequence; returns the decoded frames
-    in order. The IDR anchor is delegated to the proven intra decoder
-    (its slice re-headered back to the control-flag-0 PPS layout);
-    P slices decode here against a sliding-window DPB of previously
+    in order. The IDR anchor's header is parsed here and its
+    macroblocks decode through the shared intra macroblock layer; P
+    slices decode against a sliding-window DPB of previously
     decoded frames (list0 most recent first), with P_8x8
-    sub-partitions, Intra_16x16 macroblocks and te(v) ref_idx_l0
-    handled per 7.3.5 / 8.4.1.3."""
-    from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-        _pps_rbsp as _pps_plain,
-    )
-    from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-        decode_h264_frame,
-    )
-
+    sub-partitions, intra (I_4x4 / Intra_16x16 / I_PCM) macroblocks
+    and te(v) ref_idx_l0 handled per 7.3.5 / 8.4.1.3."""
     sps = None
-    sps_rbsp = None
     deblock_present = False
     weighted_pred = False
     frames: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
@@ -1823,7 +1169,6 @@ def decode_h264_sequence(
         rbsp = _ep_remove(nal[1:])
         if ntype == 7:
             sps = _parse_sps(rbsp)
-            sps_rbsp = rbsp
         elif ntype == 8:
             r = BitReader(rbsp)
             r.ue()
@@ -1845,28 +1190,7 @@ def decode_h264_sequence(
         elif ntype == 5:
             if sps is None:
                 raise ValueError("IDR before SPS")
-            idc = 1
-            offs = (0, 0)
-            idr_rbsp = rbsp
-            if deblock_present:
-                idr_rbsp, idc, offs = _idr_slice_strip_idc(rbsp)
-            sub = (
-                _nal(3, 7, sps_rbsp)
-                + _nal(3, 8, _pps_plain())
-                + _nal(3, 5, idr_rbsp)
-            )
-            frame = decode_h264_frame(sub)
-            if idc != 1:
-                # idc 2 == idc 0 for single-slice frames (there are
-                # no slice-boundary internal edges to exclude)
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                )
-
-                frame = deblock_frame(
-                    *frame, _idr_slice_qp(idr_rbsp),
-                    alpha_off=2 * offs[0], beta_off=2 * offs[1],
-                )
+            frame = _decode_idr(rbsp, sps, deblock_present)
             frames.append(frame)
             refs = [frame]  # IDR resets the DPB
         elif ntype == 1:
@@ -1919,18 +1243,12 @@ def _decode_p_frame(
     weights: dict | None = None,
 ):
     mbw, mbh = sps["mbw"], sps["mbh"]
-    h, w = mbh * 16, mbw * 16
     padded = _pad_refs(refs[:nra])
     qpc = _chroma_qp(qp)
 
-    ry = np.zeros((h, w), np.int64)
-    rcb = np.zeros((h // 2, w // 2), np.int64)
-    rcr = np.zeros((h // 2, w // 2), np.int64)
-    recons = (ry, rcb, rcr)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-    modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+    g = _MbGrid(mbw, mbh)
+    ry, rcb, rcr = recons = g.recon
+    luma_nnz, cnnz = g.nnz, g.cnnz
     mvs = _MvState(mbw, mbh)
 
     def decode_skip(mx, my):
@@ -1963,25 +1281,9 @@ def _decode_p_frame(
         mb_type = r.ue()
         if mb_type >= 5:
             # ----- intra macroblock inside the P slice -----
-            itype = mb_type - 5
-            if itype == 0:
-                cur_qp = _decode_i4x4_mb(
-                    r, recons, luma_nnz, cnnz, modes4, mx, my, cur_qp
-                )
-                qpc = _chroma_qp(cur_qp)
-                mvs.mark_intra(mx, my)
-                addr += 1
-                continue
-            if itype == 25:
-                _decode_ipcm_mb(r, recons, luma_nnz, cnnz, mx, my)
-                mvs.mark_intra(mx, my)
-                addr += 1
-                continue
-            if itype > 25:
+            if mb_type > 30:
                 raise ValueError(f"invalid mb_type {mb_type} in P slice")
-            cur_qp = _decode_i16_mb(
-                r, recons, luma_nnz, cnnz, mx, my, itype, cur_qp
-            )
+            cur_qp = _decode_intra_mb(r, g, mx, my, mb_type - 5, cur_qp)
             qpc = _chroma_qp(cur_qp)
             mvs.mark_intra(mx, my)
             addr += 1
@@ -2032,7 +1334,7 @@ def _decode_p_frame(
                 placed.append((ox4, oy4, w4, h4, mv, prefs[pidx]))
         py, pcb, pcr = _mc_mb(padded, mx, my, placed, weights)
         cbp, qpd, zl, cdcz, cacz = _read_residuals(
-            r, mx, my, luma_nnz, cnnz
+            r, g, mx, my, _CBP_INTER
         )
         if cbp:
             cur_qp = (cur_qp + qpd + 52) % 52

@@ -51,10 +51,16 @@ prev_intra4x4_pred_mode flag/rem coding, the Table 9-4 me(v)
 coded_block_pattern mapping, and sixteen chained per-block
 reconstructions per macroblock — CAVLC I-frame coverage is complete
 across I_PCM + Intra_16x16 + I_4x4. Remaining honest gate (raise,
-never silent): I_8x8 (High profile), CABAC entropy coding, inter
-(P/B) slices, and chroma prediction modes other than DC — decoder
-raises NotImplementedError pointing at decoder='ffmpeg' in
-binaryops.
+never silent): I_8x8 (High profile) — the decoder raises
+NotImplementedError pointing at decoder='ffmpeg' in binaryops.
+CABAC streams are handed to h264_cabac.
+
+This module is the one home of CAVLC intra macroblock coding: the
+per-macroblock encoders and the decoder below (_encode_i16_mb,
+_encode_i4x4_mb, _decode_intra_mb over one _MbGrid of per-slice
+state) serve the I slices here AND the intra macroblocks of the P
+(h264_inter) and B (h264_bslice) slices, whose IDR anchors also run
+the same slice loop under their own headers.
 
 Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
 the same adapter split the reference applies at its NIfTI boundary
@@ -71,15 +77,15 @@ from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter, lut8
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _check_planes,
     _ep_remove,
-    _nal,
+    _idr_stream,
+    _pad_planes,
     _parse_slice_header,
     _parse_sps,
-    _pps_rbsp,
+    _read_pcm_mb,
     _slice_header,
     _split_nals,
-    _sps_rbsp,
+    _write_pcm_mb,
 )
 
 # --- transforms and quantization (clause 8.5) --------------------------------
@@ -414,11 +420,6 @@ _CT_ENC = {id(t): _to_int_table(t) for t in (_CT_N0, _CT_N2, _CT_N4,
 _TZ4_ENC = {tc: _to_int_table(v) for tc, v in _TZ4.items()}
 _TZC_ENC = {tc: _to_int_table(v) for tc, v in _TZC.items()}
 _RUN_ENC = {zl: _to_int_table(v) for zl, v in _RUN.items()}
-
-
-def _write_bits(w: BitWriter, bits: str) -> None:
-    # one batched write: the string is the MSB-first field value
-    w.u(int(bits, 2), len(bits))
 
 
 def _read_vlc(r: BitReader, dtab: tuple[dict, list], what: str):
@@ -1092,7 +1093,452 @@ def _recon_chroma8(
     return np.clip(pred + blk.transpose(0, 2, 1, 3).reshape(8, 8), 0, 255)
 
 
-# --- encoder ------------------------------------------------------------------
+# --- the intra macroblock layer (7.3.5, shared by I, P and B slices) ----------
+
+_ZIDX = {bxy: k for k, bxy in enumerate(_ZBLK)}
+# raster block position (by * 4 + bx) -> luma4x4BlkIdx
+_ZRASTER = np.array([_ZIDX[(i % 4, i // 4)] for i in range(16)])
+
+# prediction mode -> (needs the top neighbour, needs the left one)
+_MODE_NEEDS = {  # Intra_4x4
+    0: (True, False), 1: (False, True), 2: (False, False),
+    3: (True, False), 4: (True, True), 5: (True, True),
+    6: (True, True), 7: (True, False), 8: (False, True),
+}
+_I16_NEEDS = {0: (True, False), 1: (False, True), 2: (False, False),
+              3: (True, True)}
+_CHROMA_NEEDS = {0: (False, False), 1: (False, True), 2: (True, False),
+                 3: (True, True)}
+
+
+def _or_dc(mode: int, needs: dict, dc: int, x: int, y: int) -> int:
+    """``mode``, or the DC mode ``dc`` when the block at grid (x, y)
+    sits on a picture edge the mode needs a neighbour across."""
+    need_t, need_l = needs[mode]
+    return dc if (need_t and y == 0) or (need_l and x == 0) else mode
+
+
+def _decoded_before_factory(mbw: int):
+    def key(gx: int, gy: int) -> tuple[int, int]:
+        return ((gy // 4) * mbw + gx // 4, _ZIDX[(gx % 4, gy % 4)])
+
+    def decoded_before(gx: int, gy: int, cur_gx: int, cur_gy: int) -> bool:
+        return key(gx, gy) < key(cur_gx, cur_gy)
+
+    return decoded_before
+
+
+class _MbGrid:
+    """Per-slice state every macroblock coder reads and updates: the
+    reconstructed planes (int64, whole macroblocks), the TotalCoeff
+    grids CAVLC predicts nC from (luma 4x4 blocks, then one per chroma
+    plane), and the Intra_4x4 mode grid (-1 where a block is not
+    I_4x4, which 8.3.1.1 predicts as DC)."""
+
+    def __init__(self, mbw: int, mbh: int) -> None:
+        self.recon = (
+            np.zeros((mbh * 16, mbw * 16), np.int64),
+            np.zeros((mbh * 8, mbw * 8), np.int64),
+            np.zeros((mbh * 8, mbw * 8), np.int64),
+        )
+        self.nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
+        self.cnnz = (np.zeros((mbh * 2, mbw * 2), np.int64),
+                     np.zeros((mbh * 2, mbw * 2), np.int64))
+        self.modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
+        self.before = _decoded_before_factory(mbw)
+
+    def frame(self, x0: int, y0: int, w: int, h: int) -> tuple:
+        """The w x h picture at luma offset (x0, y0), as uint8."""
+        y, cb, cr = self.recon
+        return (
+            y[y0 : y0 + h, x0 : x0 + w].astype(np.uint8),
+            cb[y0 // 2 : (y0 + h) // 2, x0 // 2 : (x0 + w) // 2]
+            .astype(np.uint8),
+            cr[y0 // 2 : (y0 + h) // 2, x0 // 2 : (x0 + w) // 2]
+            .astype(np.uint8),
+        )
+
+    def pred4(self, gx: int, gy: int, mode: int) -> np.ndarray:
+        return _pred4(
+            self.recon[0], gx, gy, mode, self.modes4.shape[1],
+            lambda a, b: self.before(a, b, gx, gy),
+        )
+
+
+def _pred_mode4(modes4: np.ndarray, gx: int, gy: int) -> int:
+    """predIntra4x4PredMode (8.3.1.1): the smaller of the left and
+    top modes, a neighbour outside the picture or not I_4x4 counting
+    as DC (2)."""
+    a = modes4[gy, gx - 1] if gx > 0 else -1
+    b = modes4[gy - 1, gx] if gy > 0 else -1
+    return min(2 if a < 0 else int(a), 2 if b < 0 else int(b))
+
+
+def _cbp_luma(zl: np.ndarray) -> int:
+    """CodedBlockPatternLuma of a (by, bx, 4, 4) level stack: bit g
+    set when any block of 8x8 quadrant g has a nonzero level."""
+    return sum(
+        1 << g for g in range(4)
+        if zl[(g >> 1) * 2 : (g >> 1) * 2 + 2,
+              (g & 1) * 2 : (g & 1) * 2 + 2].any()
+    )
+
+
+def _chroma_fwd(src, cpred, mx: int, my: int, qpc: int):
+    """Forward transform and quantization of MB (mx, my)'s two 8x8
+    chroma residuals (source planes ``src[1:]`` minus ``cpred``): the
+    2x2 DC Hadamard, quantized like the luma DC, and four AC blocks
+    per plane. Returns (dc levels, AC levels, CodedBlockPatternChroma)."""
+    cdcz, cacz = [], []
+    for plane, cp in zip(src[1:], cpred):
+        cres = plane[my * 8 : my * 8 + 8,
+                     mx * 8 : mx * 8 + 8].astype(np.int64) - cp
+        cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
+        wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
+        az = _quant(wmc, qpc)
+        az[..., 0, 0] = 0
+        cdcz.append(_quant_dc4(_H2 @ wmc[..., 0, 0] @ _H2, qpc))
+        cacz.append(az)
+    if cacz[0].any() or cacz[1].any():
+        return cdcz, cacz, 2
+    return cdcz, cacz, int(bool(cdcz[0].any() or cdcz[1].any()))
+
+
+def _write_chroma(sl: BitWriter, g: _MbGrid, mx, my, cbpc, cdcz, cacz):
+    """CAVLC chroma residual: both DC blocks when cbpc > 0, then the
+    eight AC blocks when cbpc > 1 (else their nnz entries reset)."""
+    if cbpc:
+        for zd in cdcz:
+            encode_residual_block(sl, zd.ravel().tolist(), -1, 4)
+    if cbpc < 2:
+        for cnnz in g.cnnz:
+            cnnz[my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
+        return
+    for pi, cnnz in enumerate(g.cnnz):
+        for by in range(2):
+            for bx in range(2):
+                gx, gy = mx * 2 + bx, my * 2 + by
+                cnnz[gy, gx] = encode_residual_block(
+                    sl, cacz[pi][by, bx].ravel()[_ZIGA1].tolist(),
+                    _nc_for(cnnz, gx, gy), 15,
+                )
+
+
+def _read_chroma(r: BitReader, g: _MbGrid, mx, my, cbpc):
+    """Parse what _write_chroma writes. Returns (dc levels (2, 2, 2),
+    AC levels (2, 2, 2, 4, 4)), both indexed by plane first."""
+    cdcz = np.zeros((2, 2, 2), np.int64)
+    cacz = np.zeros((2, 2, 2, 4, 4), np.int64)
+    if cbpc:
+        for pi in (0, 1):
+            cdcz[pi] = np.reshape(decode_residual_block(r, -1, 4)[0], (2, 2))
+    if cbpc < 2:
+        for cnnz in g.cnnz:
+            cnnz[my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
+        return cdcz, cacz
+    ccfs = []
+    for cnnz in g.cnnz:
+        for by in range(2):
+            for bx in range(2):
+                gx, gy = mx * 2 + bx, my * 2 + by
+                cf, cnnz[gy, gx] = decode_residual_block(
+                    r, _nc_for(cnnz, gx, gy), 15
+                )
+                ccfs.append(cf)
+    # one batched zigzag scatter for the eight chroma AC blocks
+    cblocks = np.zeros((8, 16), np.int64)
+    cblocks[:, _ZIGA1] = ccfs
+    return cdcz, cblocks.reshape(2, 2, 2, 4, 4)
+
+
+def _write_residuals(sl, g: _MbGrid, mx, my, cbp, zl, cdcz, cacz, codes):
+    """coded_block_pattern (me(v) through ``codes``, the Table 9-4
+    intra or inter inverse), mb_qp_delta 0 when anything is coded,
+    then the 16-coefficient luma blocks of every coded 8x8 quadrant
+    and the chroma residual. Used by I_4x4 and every inter
+    macroblock."""
+    sl.ue(codes[cbp])
+    if cbp:
+        sl.se(0)  # mb_qp_delta
+    cbp_luma = cbp & 15
+    # one batched zigzag gather for the whole MB's 16 luma blocks
+    zz = zl.reshape(4, 4, 16)[:, :, _ZIGA].tolist() if cbp_luma else None
+    for k, (bx, by) in enumerate(_ZBLK):
+        gx, gy = mx * 4 + bx, my * 4 + by
+        if cbp_luma & (1 << (k >> 2)):
+            g.nnz[gy, gx] = encode_residual_block(
+                sl, zz[by][bx], _nc_for(g.nnz, gx, gy), 16
+            )
+        else:
+            g.nnz[gy, gx] = 0
+    _write_chroma(sl, g, mx, my, cbp >> 4, cdcz, cacz)
+
+
+def _read_residuals(r: BitReader, g: _MbGrid, mx, my, table):
+    """Parse what _write_residuals writes (``table`` maps codeNum to
+    coded_block_pattern). Returns (cbp, mb_qp_delta, zl, cdcz,
+    cacz)."""
+    cbp_code = r.ue()
+    if cbp_code >= len(table):
+        raise ValueError(
+            f"corrupt coded_block_pattern code {cbp_code} (max "
+            f"{len(table) - 1})"
+        )
+    cbp = table[cbp_code]
+    cbp_luma = cbp & 15
+    qpd = r.se() if cbp else 0
+    zl = np.zeros((4, 4, 4, 4), np.int64)
+    cfs, slots = [], []
+    for k, (bx, by) in enumerate(_ZBLK):
+        gx, gy = mx * 4 + bx, my * 4 + by
+        if not cbp_luma & (1 << (k >> 2)):
+            g.nnz[gy, gx] = 0
+            continue
+        cf, g.nnz[gy, gx] = decode_residual_block(
+            r, _nc_for(g.nnz, gx, gy), 16
+        )
+        cfs.append(cf)
+        slots.append((by, bx))
+    if cfs:
+        # one batched zigzag scatter for every coded block in the MB
+        blocks = np.zeros((len(cfs), 16), np.int64)
+        blocks[:, _ZIGA] = cfs
+        for (by, bx), blk in zip(slots, blocks.reshape(-1, 4, 4)):
+            zl[by, bx] = blk
+    cdcz, cacz = _read_chroma(r, g, mx, my, cbp >> 4)
+    return cbp, qpd, zl, cdcz, cacz
+
+
+def _store_i16(g: _MbGrid, mx, my, pred, cpred, acz, zdc, cdcz, cacz,
+               cbpc, qp):
+    """Reconstruct an Intra_16x16 MB into ``g`` (``acz`` None when the
+    luma AC is not coded)."""
+    ry, rcb, rcr = g.recon
+    y16, cb8, cr8 = _recon_i16_planes(
+        pred, cpred[0], cpred[1], acz, zdc,
+        cacz[0] if cbpc > 1 else None, cacz[1] if cbpc > 1 else None,
+        cdcz[0] if cbpc else None, cdcz[1] if cbpc else None,
+        qp, _chroma_qp(qp),
+    )
+    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = y16
+    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cb8
+    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
+
+
+def _store_chroma(g: _MbGrid, mx, my, cpred, cdcz, cacz, cbpc, qpc):
+    """Reconstruct MB (mx, my)'s two 8x8 chroma blocks into ``g``."""
+    for pi in (0, 1):
+        g.recon[pi + 1][my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
+            _recon_chroma8(
+                cpred[pi], cacz[pi] if cbpc > 1 else None,
+                cdcz[pi] if cbpc else None, qpc,
+            )
+        )
+
+
+def _encode_i16_mb(sl, g: _MbGrid, src, mx, my, qp, pm, cm, base):
+    """Intra_16x16 macroblock coded from source planes ``src``: luma
+    prediction ``pm`` (0 V / 1 H / 2 DC / 3 Plane), chroma prediction
+    ``cm`` (0 DC / 1 H / 2 V / 3 Plane). ``base`` is the slice type's
+    intra mb_type offset (0 in I, 5 in P, 23 in B slices)."""
+    ry, rcb, rcr = g.recon
+    qpc = _chroma_qp(qp)
+    pred = _pred16(ry, my, mx, pm)
+    resid = src[0][my * 16 : my * 16 + 16,
+                   mx * 16 : mx * 16 + 16].astype(np.int64) - pred
+    # all sixteen 4x4 sub-blocks transformed in one batch
+    blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
+    wm = np.matmul(np.matmul(_CF, blocks), _CF.T)
+    acz = _quant(wm, qp)
+    acz[..., 0, 0] = 0
+    zdc = _quant_dc4((_H4 @ wm[..., 0, 0] @ _H4) // 2, qp)
+    cbpl = 15 if acz.any() else 0
+    cpred = (_pred8_chroma(rcb, my, mx, cm), _pred8_chroma(rcr, my, mx, cm))
+    cdcz, cacz, cbpc = _chroma_fwd(src, cpred, mx, my, qpc)
+    sl.ue(base + 1 + pm + 4 * cbpc + (12 if cbpl else 0))
+    sl.ue(cm)  # intra_chroma_pred_mode
+    sl.se(0)  # mb_qp_delta
+    # luma DC block: nC from the 4x4 grid at block (0,0)
+    encode_residual_block(
+        sl, zdc.ravel()[_ZIGA].tolist(), _nc_for(g.nnz, mx * 4, my * 4), 16
+    )
+    if cbpl:
+        for bx, by in _ZBLK:
+            gx, gy = mx * 4 + bx, my * 4 + by
+            g.nnz[gy, gx] = encode_residual_block(
+                sl, acz[by, bx].ravel()[_ZIGA1].tolist(),
+                _nc_for(g.nnz, gx, gy), 15,
+            )
+    else:
+        g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
+    _write_chroma(sl, g, mx, my, cbpc, cdcz, cacz)
+    _store_i16(g, mx, my, pred, cpred, acz if cbpl else None, zdc,
+               cdcz, cacz, cbpc, qp)
+
+
+def _encode_i4x4_mb(sl, g: _MbGrid, src, mx, my, qp, mode, base):
+    """I_4x4 macroblock (mb_type ``base``) coded from ``src``: per-4x4
+    intra prediction chained through the reconstruction, preferring
+    luma mode ``mode`` and falling back to DC where a neighbour is
+    missing; DC chroma."""
+    ry, rcb, rcr = g.recon
+    qpc = _chroma_qp(qp)
+    # predict/transform/reconstruct each 4x4 in z-order (the recon
+    # feeds the next block's prediction)
+    zl = np.empty((4, 4, 4, 4), np.int64)
+    for bx, by in _ZBLK:
+        gx, gy = mx * 4 + bx, my * 4 + by
+        m = g.modes4[gy, gx] = _or_dc(mode, _MODE_NEEDS, 2, gx, gy)
+        pred = g.pred4(gx, gy, m)
+        srcb = src[0][gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4]
+        z = zl[by, bx] = _quant(_fwd4x4(srcb.astype(np.int64) - pred), qp)
+        blk = (_inv4x4(_dequant_ac(z, qp)) + 32) >> 6
+        ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
+            pred + blk, 0, 255
+        )
+    cpred = (_pred8_chroma_dc(rcb, my, mx), _pred8_chroma_dc(rcr, my, mx))
+    cdcz, cacz, cbpc = _chroma_fwd(src, cpred, mx, my, qpc)
+    sl.ue(base)  # mb_type: I_4x4
+    for bx, by in _ZBLK:
+        gx, gy = mx * 4 + bx, my * 4 + by
+        pm4, m = _pred_mode4(g.modes4, gx, gy), int(g.modes4[gy, gx])
+        if m == pm4:
+            sl.u(1, 1)
+        else:
+            sl.u(0, 1)
+            sl.u(m - (1 if m > pm4 else 0), 3)
+    sl.ue(0)  # intra_chroma_pred_mode: DC
+    # an 8x8 bit is unset iff all four blocks quantized to zero, so
+    # dropped blocks were reconstructed as pure prediction already
+    _write_residuals(sl, g, mx, my, _cbp_luma(zl) | (cbpc << 4), zl,
+                     cdcz, cacz, _CBP_INTRA_INV)
+    _store_chroma(g, mx, my, cpred, cdcz, cacz, cbpc, qpc)
+
+
+def _encode_intra_mb(sl, g: _MbGrid, src, spec, mx, my, qp, base):
+    """An intra macroblock inside a P or B slice from its mb_spec:
+    ("i16",) Intra_16x16 DC, ("i4"[, mode]) I_4x4, ("ipcm",) I_PCM."""
+    if spec[0] == "i16":
+        _encode_i16_mb(sl, g, src, mx, my, qp, 2, 0, base)
+    elif spec[0] == "i4":
+        _encode_i4x4_mb(sl, g, src, mx, my, qp,
+                        spec[1] if len(spec) > 1 else 2, base)
+    else:
+        sl.ue(base + 25)  # mb_type: I_PCM
+        _write_pcm_mb(sl, src, mx, my)
+        for rp, sp, n in zip(g.recon, src, (16, 8, 8)):
+            rp[my * n : my * n + n, mx * n : mx * n + n] = (
+                sp[my * n : my * n + n, mx * n : mx * n + n]
+            )
+        _mark_pcm(g, mx, my)
+
+
+def _mark_pcm(g: _MbGrid, mx, my):
+    """I_PCM neighbours count as 16 coefficients for nC (9.2.1)."""
+    g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 16
+    for cnnz in g.cnnz:
+        cnnz[my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 16
+
+
+def _decode_intra_mb(r: BitReader, g: _MbGrid, mx, my, itype, qp) -> int:
+    """Decode one intra macroblock after its mb_type (``itype`` = the
+    mb_type minus the slice type's intra offset: 0 I_4x4, 1..24
+    Intra_16x16, 25 I_PCM) into ``g``. Returns the updated QP."""
+    ry, rcb, rcr = g.recon
+    if itype == 25:
+        _read_pcm_mb(r, g.recon, mx, my)
+        _mark_pcm(g, mx, my)
+        return qp
+    if itype == 0:
+        for bx, by in _ZBLK:
+            gx, gy = mx * 4 + bx, my * 4 + by
+            pm4 = _pred_mode4(g.modes4, gx, gy)
+            if r.u(1):
+                g.modes4[gy, gx] = pm4
+            else:
+                rem = r.u(3)
+                g.modes4[gy, gx] = rem if rem < pm4 else rem + 1
+    cm = r.ue()  # intra_chroma_pred_mode
+    if cm > 3:
+        raise ValueError(f"chroma prediction mode {cm} out of range")
+    if itype == 0:
+        cbp, qpd, zl, cdcz, cacz = _read_residuals(r, g, mx, my,
+                                                   _CBP_INTRA)
+        qp = (qp + qpd + 52) % 52
+        blk = (_inv4x4(_dequant_ac(zl, qp)) + 32) >> 6
+        # luma recon in z-order, each prediction from the blocks
+        # reconstructed before it
+        for bx, by in _ZBLK:
+            gx, gy = mx * 4 + bx, my * 4 + by
+            ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
+                g.pred4(gx, gy, int(g.modes4[gy, gx])) + blk[by, bx], 0, 255
+            )
+        cpred = (_pred8_chroma(rcb, my, mx, cm),
+                 _pred8_chroma(rcr, my, mx, cm))
+        _store_chroma(g, mx, my, cpred, cdcz, cacz, cbp >> 4,
+                      _chroma_qp(qp))
+        return qp
+    t = itype - 1
+    cbpl, cbpc, pm = t >= 12, (t % 12) // 4, t % 4
+    qp = (qp + r.se() + 52) % 52  # mb_qp_delta
+    dccf, _ = decode_residual_block(r, _nc_for(g.nnz, mx * 4, my * 4), 16)
+    zdc = np.zeros(16, np.int64)
+    zdc[_ZIGA] = dccf
+    acz = None
+    if cbpl:
+        cfs = []
+        for bx, by in _ZBLK:
+            gx, gy = mx * 4 + bx, my * 4 + by
+            cf, g.nnz[gy, gx] = decode_residual_block(
+                r, _nc_for(g.nnz, gx, gy), 15
+            )
+            cfs.append(cf)
+        blocks = np.zeros((16, 16), np.int64)
+        blocks[:, _ZIGA1] = cfs
+        acz = blocks[_ZRASTER].reshape(4, 4, 4, 4)
+    else:
+        g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
+    cdcz, cacz = _read_chroma(r, g, mx, my, cbpc)
+    cpred = (_pred8_chroma(rcb, my, mx, cm), _pred8_chroma(rcr, my, mx, cm))
+    _store_i16(g, mx, my, _pred16(ry, my, mx, pm), cpred, acz,
+               zdc.reshape(4, 4), cdcz, cacz, cbpc, qp)
+    return qp
+
+
+def _encode_i16_slice(sl, src, qp, pred_mode=2, chroma_mode=0) -> _MbGrid:
+    """Every macroblock of the picture ``src`` (whole MBs) as
+    Intra_16x16 into ``sl`` after its slice header; macroblocks on a
+    picture edge a directional mode needs a neighbour across use DC."""
+    if not 0 <= qp <= 51:
+        raise ValueError("QP must be in 0..51")
+    mbh, mbw = src[0].shape[0] // 16, src[0].shape[1] // 16
+    g = _MbGrid(mbw, mbh)
+    for my in range(mbh):
+        for mx in range(mbw):
+            _encode_i16_mb(
+                sl, g, src, mx, my, qp,
+                _or_dc(pred_mode, _I16_NEEDS, 2, mx, my),
+                _or_dc(chroma_mode, _CHROMA_NEEDS, 0, mx, my), 0,
+            )
+    return g
+
+
+def _decode_intra_slice(r: BitReader, mbw: int, mbh: int, qp: int):
+    """The macroblock layer of a CAVLC I slice, after its header."""
+    g = _MbGrid(mbw, mbh)
+    for my in range(mbh):
+        for mx in range(mbw):
+            mb_type = r.ue()
+            if mb_type > 25:
+                raise NotImplementedError(
+                    f"mb_type {mb_type} (invalid in I slices) — "
+                    "use decoder='ffmpeg' in binaryops.decode_features"
+                )
+            qp = _decode_intra_mb(r, g, mx, my, mb_type, qp)
+    return g
+
+
+# --- I-slice entry points -------------------------------------------------------
 
 
 def encode_h264_i16x16(
@@ -1118,155 +1564,12 @@ def encode_h264_i16x16(
         raise ValueError("Intra_16x16 pred_mode must be 0..3")
     if chroma_mode not in (0, 1, 2, 3):
         raise ValueError("chroma_mode must be 0..3")
-    if not 0 <= qp <= 51:
-        raise ValueError("QP must be in 0..51")
-    y, cb, cr = _check_planes(y, cb, cr)
-    h, w = y.shape
-    ch, cw = h // 2, w // 2
-    mbw, mbh = -(-w // 16), -(-h // 16)
-    yp = np.pad(y, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
-    cbp = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    crp = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    qpc = _chroma_qp(qp)
-
-    ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-    rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-    rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-
+    src = _pad_planes(y, cb, cr)
+    h, w = np.shape(y)
     sl = BitWriter()
     _slice_header(sl, qp)
-    _PM_NEEDS = {0: (True, False), 1: (False, True), 2: (False, False),
-                 3: (True, True)}
-    _CM_NEEDS = {0: (False, False), 1: (False, True), 2: (True, False),
-                 3: (True, True)}
-    for my in range(mbh):
-        for mx in range(mbw):
-            need_t, need_l = _PM_NEEDS[pred_mode]
-            pm = pred_mode
-            if (need_t and my == 0) or (need_l and mx == 0):
-                pm = 2  # DC fallback at picture edges
-            need_t, need_l = _CM_NEEDS[chroma_mode]
-            cm = chroma_mode
-            if (need_t and my == 0) or (need_l and mx == 0):
-                cm = 0
-            pred = _pred16(ry, my, mx, pm)
-            resid = yp[my * 16 : my * 16 + 16,
-                       mx * 16 : mx * 16 + 16].astype(np.int64) - pred
-            # all sixteen 4x4 sub-blocks transformed in one batch
-            blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
-            wm = np.matmul(np.matmul(_CF, blocks), _CF.T)
-            dc = wm[..., 0, 0]
-            acz = _quant(wm, qp)
-            acz[..., 0, 0] = 0
-            zdc = _quant_dc4((_H4 @ dc @ _H4) // 2, qp)
-            cbpl = 15 if acz.any() else 0
-            cpred = {}
-            cdcz = {}
-            cacz = {}
-            for pi, (srcp, reconp) in enumerate(((cbp, rcb), (crp, rcr))):
-                cp = _pred8_chroma(reconp, my, mx, cm)
-                cres = srcp[my * 8 : my * 8 + 8,
-                            mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-                cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-                wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-                dc2 = wmc[..., 0, 0]
-                az = _quant(wmc, qpc)
-                az[..., 0, 0] = 0
-                qbits = 15 + qpc // 6
-                f = (1 << qbits) // 3
-                yd = _H2 @ dc2 @ _H2
-                zd = np.sign(yd) * (
-                    (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-                )
-                cpred[pi], cdcz[pi], cacz[pi] = cp, zd, az
-            any_cac = any(cacz[p].any() for p in (0, 1))
-            any_cdc = any(cdcz[p].any() for p in (0, 1))
-            cbpc = 2 if any_cac else (1 if any_cdc else 0)
-            mb_type = 1 + pm + 4 * cbpc + 12 * (1 if cbpl else 0)
-            sl.ue(mb_type)
-            sl.ue(cm)  # intra_chroma_pred_mode
-            sl.se(0)  # mb_qp_delta
-            # luma DC block: nC from the 4x4 grid at block (0,0)
-            nc = _nc_for(luma_nnz, mx * 4, my * 4)
-            encode_residual_block(
-                sl, zdc.ravel()[_ZIGA].tolist(), nc, 16
-            )
-            if cbpl:
-                for bx, by in _ZBLK:
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    nc = _nc_for(luma_nnz, gx, gy)
-                    coeffs = acz[by, bx].ravel()[_ZIGA1].tolist()
-                    luma_nnz[gy, gx] = encode_residual_block(
-                        sl, coeffs, nc, 15
-                    )
-            if cbpc > 0:
-                for pi in (0, 1):
-                    zd = cdcz[pi]
-                    encode_residual_block(
-                        sl,
-                        [int(zd[0, 0]), int(zd[0, 1]),
-                         int(zd[1, 0]), int(zd[1, 1])],
-                        -1, 4,
-                    )
-            if cbpc > 1:
-                for pi in (0, 1):
-                    for by in range(2):
-                        for bx in range(2):
-                            gx, gy = mx * 2 + bx, my * 2 + by
-                            nc = _nc_for(cnnz[pi], gx, gy)
-                            coeffs = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                            cnnz[pi][gy, gx] = encode_residual_block(
-                                sl, coeffs, nc, 15
-                            )
-            # --- reconstruction (decoder-mirrored, one fused pass) ---
-            y16, cb8, cr8 = _recon_i16_planes(
-                pred, cpred[0], cpred[1],
-                acz if cbpl else None, zdc,
-                cacz[0] if cbpc > 1 else None,
-                cacz[1] if cbpc > 1 else None,
-                cdcz[0] if cbpc > 0 else None,
-                cdcz[1] if cbpc > 0 else None,
-                qp, qpc,
-            )
-            ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = y16
-            rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cb8
-            rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
-    sl.trailing()
-    stream = (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp())
-        + _nal(3, 5, sl.bytes_())
-    )
-    return (
-        stream,
-        ry[:h, :w].astype(np.uint8),
-        rcb[:ch, :cw].astype(np.uint8),
-        rcr[:ch, :cw].astype(np.uint8),
-    )
-
-
-# --- I_4x4 encoder -------------------------------------------------------------
-
-_ZIDX = {bxy: k for k, bxy in enumerate(_ZBLK)}
-
-_MODE_NEEDS = {  # mode -> (needs_top, needs_left)
-    0: (True, False), 1: (False, True), 2: (False, False),
-    3: (True, False), 4: (True, True), 5: (True, True),
-    6: (True, True), 7: (True, False), 8: (False, True),
-}
-
-
-def _decoded_before_factory(mbw: int):
-    def key(gx: int, gy: int) -> tuple[int, int]:
-        return ((gy // 4) * mbw + gx // 4, _ZIDX[(gx % 4, gy % 4)])
-
-    def decoded_before(gx: int, gy: int, cur_gx: int, cur_gy: int) -> bool:
-        return key(gx, gy) < key(cur_gx, cur_gy)
-
-    return decoded_before
+    g = _encode_i16_slice(sl, src, qp, pred_mode, chroma_mode)
+    return (_idr_stream(sl, w, h), *g.frame(0, 0, w, h))
 
 
 def encode_h264_i4x4(
@@ -1286,167 +1589,16 @@ def encode_h264_i4x4(
         raise ValueError("QP must be in 0..51")
     if mode not in _MODE_NEEDS:
         raise ValueError("luma 4x4 mode must be 0..8")
-    y, cb, cr = _check_planes(y, cb, cr)
-    h, w = y.shape
-    ch, cw = h // 2, w // 2
-    mbw, mbh = -(-w // 16), -(-h // 16)
-    yp = np.pad(y, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
-    cbp_ = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    crp_ = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    qpc = _chroma_qp(qp)
-
-    ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-    rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-    rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-    luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-    cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-            1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-    modes = np.full((mbh * 4, mbw * 4), -1, np.int64)
-    before = _decoded_before_factory(mbw)
-
+    src = _pad_planes(y, cb, cr)
+    h, w = np.shape(y)
+    mbh, mbw = src[0].shape[0] // 16, src[0].shape[1] // 16
+    g = _MbGrid(mbw, mbh)
     sl = BitWriter()
     _slice_header(sl, qp)
     for my in range(mbh):
         for mx in range(mbw):
-            # pass 1: predict/transform/reconstruct each 4x4 in
-            # z-order (recon feeds the next block's prediction)
-            coefs = {}
-            chosen = {}
-            for bx, by in _ZBLK:
-                gx, gy = mx * 4 + bx, my * 4 + by
-                m = mode
-                need_t, need_l = _MODE_NEEDS[m]
-                if (need_t and gy == 0) or (need_l and gx == 0):
-                    m = 2
-                chosen[(bx, by)] = m
-                modes[gy, gx] = m
-                pred = _pred4(
-                    ry, gx, gy, m, mbw * 4,
-                    lambda a, b, _gx=gx, _gy=gy: before(a, b, _gx, _gy),
-                )
-                src = yp[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4]
-                z = _quant(_fwd4x4(src.astype(np.int64) - pred), qp)
-                coefs[(bx, by)] = z
-                blk = (_inv4x4(_dequant_ac(z, qp)) + 32) >> 6
-                ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-                    pred + blk, 0, 255
-                )
-            cbp_luma = 0
-            for g in range(4):
-                if any(
-                    coefs[_ZBLK[g * 4 + k]].any() for k in range(4)
-                ):
-                    cbp_luma |= 1 << g
-            # an 8x8 bit is unset iff all four blocks quantized to
-            # zero, so dropped blocks were reconstructed as pure
-            # prediction already — encoder and decoder agree
-            # chroma (same machinery as I16x16)
-            cpred = {}
-            cdcz = {}
-            cacz = {}
-            for pi, (srcp, reconp) in enumerate(
-                ((cbp_, rcb), (crp_, rcr))
-            ):
-                cp = _pred8_chroma_dc(reconp, my, mx)
-                cres = srcp[my * 8 : my * 8 + 8,
-                            mx * 8 : mx * 8 + 8].astype(np.int64) - cp
-                cblk = cres.reshape(2, 4, 2, 4).transpose(0, 2, 1, 3)
-                wmc = np.matmul(np.matmul(_CF, cblk), _CF.T)
-                dc2 = wmc[..., 0, 0]
-                az = _quant(wmc, qpc)
-                az[..., 0, 0] = 0
-                qbits = 15 + qpc // 6
-                f = (1 << qbits) // 3
-                yd = _H2 @ dc2 @ _H2
-                zd = np.sign(yd) * (
-                    (np.abs(yd) * _MF[qpc % 6][0] + 2 * f) >> (qbits + 1)
-                )
-                cpred[pi], cdcz[pi], cacz[pi] = cp, zd, az
-            any_cac = any(cacz[p].any() for p in (0, 1))
-            any_cdc = any(cdcz[p].any() for p in (0, 1))
-            cbp_chroma = 2 if any_cac else (1 if any_cdc else 0)
-            cbp = cbp_luma | (cbp_chroma << 4)
-            # --- syntax ---
-            sl.ue(0)  # mb_type: I_4x4
-            for bx, by in _ZBLK:
-                gx, gy = mx * 4 + bx, my * 4 + by
-                ma = modes[gy, gx - 1] if gx > 0 else -1
-                mb_ = modes[gy - 1, gx] if gy > 0 else -1
-                pred_mode = min(
-                    2 if ma < 0 else int(ma), 2 if mb_ < 0 else int(mb_)
-                )
-                m = chosen[(bx, by)]
-                if m == pred_mode:
-                    sl.u(1, 1)
-                else:
-                    sl.u(0, 1)
-                    sl.u(m - (1 if m > pred_mode else 0), 3)
-            sl.ue(0)  # intra_chroma_pred_mode: DC
-            sl.ue(_CBP_INTRA_INV[cbp])  # coded_block_pattern, me(v)
-            if cbp:
-                sl.se(0)  # mb_qp_delta
-            for g in range(4):
-                if not cbp_luma & (1 << g):
-                    for k in range(4):
-                        bx, by = _ZBLK[g * 4 + k]
-                        luma_nnz[my * 4 + by, mx * 4 + bx] = 0
-                    continue
-                for k in range(4):
-                    bx, by = _ZBLK[g * 4 + k]
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    nc = _nc_for(luma_nnz, gx, gy)
-                    coeffs = coefs[(bx, by)].ravel()[_ZIGA].tolist()
-                    luma_nnz[gy, gx] = encode_residual_block(
-                        sl, coeffs, nc, 16
-                    )
-            if cbp_chroma > 0:
-                for pi in (0, 1):
-                    zd = cdcz[pi]
-                    encode_residual_block(
-                        sl,
-                        [int(zd[0, 0]), int(zd[0, 1]),
-                         int(zd[1, 0]), int(zd[1, 1])],
-                        -1, 4,
-                    )
-            if cbp_chroma > 1:
-                for pi in (0, 1):
-                    for by in range(2):
-                        for bx in range(2):
-                            gx, gy = mx * 2 + bx, my * 2 + by
-                            nc = _nc_for(cnnz[pi], gx, gy)
-                            coeffs = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                            cnnz[pi][gy, gx] = encode_residual_block(
-                                sl, coeffs, nc, 15
-                            )
-            else:
-                for pi in (0, 1):
-                    cnnz[pi][my * 2 : my * 2 + 2,
-                             mx * 2 : mx * 2 + 2] = 0
-            # --- chroma reconstruction (batched) ---
-            for pi, reconp in ((0, rcb), (1, rcr)):
-                reconp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                    _recon_chroma8(
-                        cpred[pi],
-                        cacz[pi] if cbp_chroma > 1 else None,
-                        cdcz[pi] if cbp_chroma > 0 else None,
-                        qpc,
-                    )
-                )
-    sl.trailing()
-    stream = (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp())
-        + _nal(3, 5, sl.bytes_())
-    )
-    return (
-        stream,
-        ry[:h, :w].astype(np.uint8),
-        rcb[:ch, :cw].astype(np.uint8),
-        rcr[:ch, :cw].astype(np.uint8),
-    )
-
-
-# --- decoder ------------------------------------------------------------------
+            _encode_i4x4_mb(sl, g, src, mx, my, qp, mode, 0)
+    return (_idr_stream(sl, w, h), *g.frame(0, 0, w, h))
 
 
 def decode_h264_frame(
@@ -1454,7 +1606,7 @@ def decode_h264_frame(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Full-decoder entry for this codec family: Annex B streams of
     I_PCM (mb_type 25), Intra_16x16 CAVLC macroblocks (mb_type 1..24,
-    all four luma prediction modes, chroma DC) AND I_4x4 CAVLC
+    all four luma and chroma prediction modes) AND I_4x4 CAVLC
     macroblocks (mb_type 0, all nine 4x4 prediction modes). I_8x8,
     CABAC streams and inter slices raise the declared ffmpeg gate."""
     sps = None
@@ -1483,223 +1635,8 @@ def decode_h264_frame(
                 raise ValueError("IDR slice before SPS")
             r = BitReader(rbsp)
             qp = _parse_slice_header(r, sps)
-            qpc = _chroma_qp(qp)
-            mbw, mbh = sps["mbw"], sps["mbh"]
-            ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-            rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-            rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-            luma_nnz = np.zeros((mbh * 4, mbw * 4), np.int64)
-            cnnz = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-                    1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-            modes4 = np.full((mbh * 4, mbw * 4), -1, np.int64)
-            before = _decoded_before_factory(mbw)
-            for my in range(mbh):
-                for mx in range(mbw):
-                    mb_type = r.ue()
-                    if mb_type == 25:  # I_PCM
-                        r.align()
-                        for yy in range(16):
-                            for xx in range(16):
-                                ry[my * 16 + yy, mx * 16 + xx] = r.u(8)
-                        for plane in (rcb, rcr):
-                            for yy in range(8):
-                                for xx in range(8):
-                                    plane[my * 8 + yy, mx * 8 + xx] = r.u(8)
-                        # PCM neighbors count as 16 coeffs (9.2.1)
-                        luma_nnz[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 16
-                        for pi in (0, 1):
-                            cnnz[pi][my * 2 : my * 2 + 2,
-                                     mx * 2 : mx * 2 + 2] = 16
-                        continue
-                    if mb_type > 25:
-                        raise NotImplementedError(
-                            f"mb_type {mb_type} (invalid in I slices) — "
-                            "use decoder='ffmpeg' in "
-                            "binaryops.decode_features"
-                        )
-                    if mb_type == 0:  # I_4x4
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            ma = modes4[gy, gx - 1] if gx > 0 else -1
-                            mb_ = modes4[gy - 1, gx] if gy > 0 else -1
-                            pm4 = min(
-                                2 if ma < 0 else int(ma),
-                                2 if mb_ < 0 else int(mb_),
-                            )
-                            if r.u(1):
-                                modes4[gy, gx] = pm4
-                            else:
-                                rem = r.u(3)
-                                modes4[gy, gx] = (
-                                    rem if rem < pm4 else rem + 1
-                                )
-                        if r.ue() != 0:
-                            raise NotImplementedError(
-                                "chroma prediction mode != DC — use "
-                                "decoder='ffmpeg'"
-                            )
-                        cbp_code = r.ue()
-                        if cbp_code >= len(_CBP_INTRA):
-                            raise ValueError(
-                                f"corrupt coded_block_pattern code "
-                                f"{cbp_code} (max {len(_CBP_INTRA) - 1})"
-                            )
-                        cbp = _CBP_INTRA[cbp_code]
-                        cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
-                        if cbp:
-                            qp = (qp + r.se() + 52) % 52
-                            qpc = _chroma_qp(qp)
-                        coefs4 = {}
-                        for g in range(4):
-                            for k in range(4):
-                                bx, by = _ZBLK[g * 4 + k]
-                                gx, gy = mx * 4 + bx, my * 4 + by
-                                if not cbp_luma & (1 << g):
-                                    coefs4[(bx, by)] = np.zeros(
-                                        (4, 4), np.int64
-                                    )
-                                    luma_nnz[gy, gx] = 0
-                                    continue
-                                nc = _nc_for(luma_nnz, gx, gy)
-                                cf, tot = decode_residual_block(r, nc, 16)
-                                z = np.zeros(16, np.int64)
-                                z[_ZIGA] = cf
-                                coefs4[(bx, by)] = z.reshape(4, 4)
-                                luma_nnz[gy, gx] = tot
-                        cdcz = {0: np.zeros((2, 2), np.int64),
-                                1: np.zeros((2, 2), np.int64)}
-                        cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-                                1: np.zeros((2, 2, 4, 4), np.int64)}
-                        if cbp_chroma > 0:
-                            for pi in (0, 1):
-                                cf, _ = decode_residual_block(r, -1, 4)
-                                cdcz[pi] = np.array(
-                                    [[cf[0], cf[1]], [cf[2], cf[3]]],
-                                    np.int64,
-                                )
-                        if cbp_chroma > 1:
-                            for pi in (0, 1):
-                                for by in range(2):
-                                    for bx in range(2):
-                                        gx = mx * 2 + bx
-                                        gy = my * 2 + by
-                                        nc = _nc_for(cnnz[pi], gx, gy)
-                                        cf, tot = decode_residual_block(
-                                            r, nc, 15
-                                        )
-                                        z = np.zeros(16, np.int64)
-                                        z[_ZIGA1] = cf
-                                        cacz[pi][by, bx] = z.reshape(4, 4)
-                                        cnnz[pi][gy, gx] = tot
-                        else:
-                            for pi in (0, 1):
-                                cnnz[pi][my * 2 : my * 2 + 2,
-                                         mx * 2 : mx * 2 + 2] = 0
-                        # --- luma recon, z-order, prediction chained
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            pred = _pred4(
-                                ry, gx, gy, int(modes4[gy, gx]), mbw * 4,
-                                lambda a, b, _gx=gx, _gy=gy: before(
-                                    a, b, _gx, _gy
-                                ),
-                            )
-                            blk = (
-                                _inv4x4(_dequant_ac(coefs4[(bx, by)], qp))
-                                + 32
-                            ) >> 6
-                            ry[
-                                gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4
-                            ] = np.clip(pred + blk, 0, 255)
-                        for pi, reconp in ((0, rcb), (1, rcr)):
-                            cp = _pred8_chroma_dc(reconp, my, mx)
-                            reconp[my * 8 : my * 8 + 8,
-                                   mx * 8 : mx * 8 + 8] = _recon_chroma8(
-                                cp, cacz[pi], cdcz[pi], qpc
-                            )
-                        continue
-                    t = mb_type - 1
-                    cbpl = 15 if t >= 12 else 0
-                    t %= 12
-                    cbpc, pm = t // 4, t % 4
-                    chroma_mode = r.ue()
-                    if chroma_mode > 3:
-                        raise ValueError(
-                            f"chroma prediction mode {chroma_mode} "
-                            "out of range"
-                        )
-                    qp = (qp + r.se() + 52) % 52  # mb_qp_delta
-                    qpc = _chroma_qp(qp)
-                    nc = _nc_for(luma_nnz, mx * 4, my * 4)
-                    dccf, _ = decode_residual_block(r, nc, 16)
-                    zdc = np.zeros(16, np.int64)
-                    zdc[_ZIGA] = dccf
-                    zdc = zdc.reshape(4, 4)
-                    acz = np.zeros((4, 4, 4, 4), np.int64)
-                    if cbpl:
-                        for bx, by in _ZBLK:
-                            gx, gy = mx * 4 + bx, my * 4 + by
-                            nc = _nc_for(luma_nnz, gx, gy)
-                            cf, tot = decode_residual_block(r, nc, 15)
-                            z = np.zeros(16, np.int64)
-                            z[_ZIGA1] = cf
-                            acz[by, bx] = z.reshape(4, 4)
-                            luma_nnz[gy, gx] = tot
-                    else:
-                        luma_nnz[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 0
-                    cdcz = {0: np.zeros((2, 2), np.int64),
-                            1: np.zeros((2, 2), np.int64)}
-                    cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-                            1: np.zeros((2, 2, 4, 4), np.int64)}
-                    if cbpc > 0:
-                        for pi in (0, 1):
-                            cf, _ = decode_residual_block(r, -1, 4)
-                            cdcz[pi] = np.array(
-                                [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
-                            )
-                    if cbpc > 1:
-                        for pi in (0, 1):
-                            for by in range(2):
-                                for bx in range(2):
-                                    gx = mx * 2 + bx
-                                    gy = my * 2 + by
-                                    nc = _nc_for(cnnz[pi], gx, gy)
-                                    cf, tot = decode_residual_block(
-                                        r, nc, 15
-                                    )
-                                    z = np.zeros(16, np.int64)
-                                    z[_ZIGA1] = cf
-                                    cacz[pi][by, bx] = z.reshape(4, 4)
-                                    cnnz[pi][gy, gx] = tot
-                    else:
-                        for pi in (0, 1):
-                            cnnz[pi][my * 2 : my * 2 + 2,
-                                     mx * 2 : mx * 2 + 2] = 0
-                    # --- reconstruction (one fused pass) ---
-                    pred = _pred16(ry, my, mx, pm)
-                    cpb = _pred8_chroma(rcb, my, mx, chroma_mode)
-                    cpr = _pred8_chroma(rcr, my, mx, chroma_mode)
-                    y16, cb8, cr8 = _recon_i16_planes(
-                        pred, cpb, cpr, acz, zdc,
-                        cacz[0], cacz[1], cdcz[0], cdcz[1],
-                        qp, qpc,
-                    )
-                    ry[my * 16 : my * 16 + 16,
-                       mx * 16 : mx * 16 + 16] = y16
-                    rcb[my * 8 : my * 8 + 8,
-                        mx * 8 : mx * 8 + 8] = cb8
-                    rcr[my * 8 : my * 8 + 8,
-                        mx * 8 : mx * 8 + 8] = cr8
-            x0, y0, w, h = sps["x0"], sps["y0"], sps["w"], sps["h"]
-            planes = (
-                ry[y0 : y0 + h, x0 : x0 + w].astype(np.uint8),
-                rcb[y0 // 2 : (y0 + h) // 2,
-                    x0 // 2 : (x0 + w) // 2].astype(np.uint8),
-                rcr[y0 // 2 : (y0 + h) // 2,
-                    x0 // 2 : (x0 + w) // 2].astype(np.uint8),
-            )
+            g = _decode_intra_slice(r, sps["mbw"], sps["mbh"], qp)
+            planes = g.frame(sps["x0"], sps["y0"], sps["w"], sps["h"])
     if planes is None:
         raise ValueError("no IDR slice found")
     return planes

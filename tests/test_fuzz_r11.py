@@ -14,7 +14,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+    decode_h264_b_stream,
+    encode_h264_b_sequence,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+    decode_h264_sequence,
     encode_h264_p_gop,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
@@ -133,6 +138,66 @@ def struct_error_types():
     import struct
 
     return struct.error
+
+
+# --------------------------- intra macroblocks inside P and B slices
+
+def _intra_in_inter_streams():
+    p_gop, _ = encode_h264_p_gop(
+        [_planes(32, 48, s) for s in (11, 12, 13)],
+        [[("i4", 5), ("16x16", [(3, -2)]), ("ipcm",), ("skip",),
+          ("i16",), ("i4",)],
+         [("i16",), ("ipcm",), ("8x16", [(1, 1), (-2, 4)]), ("i4", 7),
+          ("skip",), ("16x16", [(0, 5)])]],
+        qp=18,
+    )
+    b_seq, _, _ = encode_h264_b_sequence(
+        [("idr", _planes(32, 48, 14)),
+         ("p", _planes(32, 48, 15), [("i4",), ("16x16", [(2, 1)]),
+                                     ("i16",), ("skip",),
+                                     ("16x16", [(-3, 0)]), ("i4", 8)], 4),
+         ("b", _planes(32, 48, 16), [("ipcm",), ("i4", 3), ("direct",),
+                                     ("16x16", [("bi", (1, 2), (-1, 0))]),
+                                     ("i16",), ("skip",)], 2)],
+        qp=22,
+    )
+    return ((p_gop, decode_h264_sequence), (b_seq, decode_h264_b_stream))
+
+
+INTRA_IN_INTER = _intra_in_inter_streams()
+
+
+def _inter_slice_spans(stream: bytes) -> list:
+    """Byte ranges after the NAL header of every non-IDR slice."""
+    spans = []
+    i = stream.find(b"\x00\x00\x01")
+    while i >= 0:
+        j = stream.find(b"\x00\x00\x01", i + 3)
+        if stream[i + 3] & 0x1F == 1:
+            spans.append((i + 4, len(stream) if j < 0 else j))
+        i = j
+    return spans
+
+
+@settings(max_examples=60, deadline=None)
+@given(seed=st.integers(0, 2**31), n=st.integers(1, 3))
+def test_intra_in_inter_bitflips_controlled(seed, n):
+    """Bit flips in the P and B slices of streams whose inter slices
+    carry I_4x4, Intra_16x16 and I_PCM macroblocks: decode succeeds or
+    raises ValueError / NotImplementedError, nothing else."""
+    rng = np.random.default_rng(seed)
+    for stream, decode in INTRA_IN_INTER:
+        decode(stream)  # sanity
+        spans = _inter_slice_spans(stream)
+        data = bytearray(stream)
+        for _ in range(n):
+            a, b = spans[int(rng.integers(0, len(spans)))]
+            i = int(rng.integers(a, b))
+            data[i] ^= 1 << int(rng.integers(0, 8))
+        try:
+            decode(bytes(data))
+        except _CTRL:
+            pass
 
 
 # ------------------------------------ deblocking filter block info

@@ -439,7 +439,7 @@ def test_e13_shard_pack_decode_and_corruption():
             "|".join(f"{i}:{s}" for i, s in enumerate(sums2)).encode()
         ).hexdigest()
         assert digest2 != digest
-    except (ValueError, NotImplementedError, IndexError, KeyError):
+    except (ValueError, NotImplementedError):
         pass  # loud decode failure is equally acceptable
 
 
@@ -688,3 +688,48 @@ def test_multiref_cabac_roundtrip():
     for fr, rc in zip(out, recons):
         for a, b in zip(fr, rc):
             np.testing.assert_array_equal(a, b)
+
+
+@pytest.mark.parametrize("slice_kind", ["p", "b"])
+def test_corrupt_i4x4_cbp_in_inter_slice_raises_valueerror(slice_kind):
+    """An I_4x4 macroblock inside a P or B slice whose
+    coded_block_pattern codeNum is past Table 9-4 (ue 48) must fail
+    with the same ValueError the I-slice decoder raises, not an
+    IndexError from the table lookup."""
+    from neuroimaging_data_pipeline_spark.bitio import BitWriter
+    from neuroimaging_data_pipeline_spark.multimodal.h264 import _nal
+    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+        _b_slice_header,
+        decode_h264_b_stream,
+        encode_h264_b_sequence,
+    )
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+        _p_slice_header,
+        encode_h264_p_gop,
+    )
+
+    f0, f1 = _rand_frames(77, 16, 16)
+    sl = BitWriter()
+    if slice_kind == "p":
+        stream, _ = encode_h264_p_gop([f0, f1], [[("skip",)]])
+        decode = decode_h264_sequence
+        _p_slice_header(sl, 26, frame_num=1)
+        intra_base = 5
+    else:
+        stream, _, _ = encode_h264_b_sequence(
+            [("idr", f0), ("p", f1, [("skip",)], 4)]
+        )
+        decode = decode_h264_b_stream
+        _b_slice_header(sl, 26, frame_num=2, poc_lsb=2)
+        intra_base = 23
+    decode(stream)  # sanity: the prefix decodes
+    sl.ue(0)  # mb_skip_run
+    sl.ue(intra_base)  # mb_type: I_4x4
+    for _ in range(16):
+        sl.u(1, 1)  # prev_intra4x4_pred_mode_flag
+    sl.ue(0)  # intra_chroma_pred_mode
+    sl.ue(48)  # coded_block_pattern codeNum: one past the table
+    sl.u(0, 32)  # residual bits the parser never reaches
+    sl.trailing()
+    with pytest.raises(ValueError, match="coded_block_pattern"):
+        decode(stream + _nal(0, 1, sl.bytes_()))
