@@ -1,10 +1,10 @@
-"""Byte pins for every H.264 encoder entry point that codes intra
-macroblocks: the sha256 of each emitted Annex B stream together with
-the encoder's reconstruction planes. The round-trip tests only prove
-encoder and decoder agree with each other; these pins prove a
-refactor of the shared intra macroblock layer changes no emitted byte
-and no reconstructed sample. Each stream is also decoded and checked
-against the encoder's reconstruction."""
+"""Byte pins for the H.264 encoder entry points: the sha256 of each
+emitted Annex B stream together with the encoder's reconstruction
+planes. The round-trip tests only prove encoder and decoder agree with
+each other; these pins prove a refactor of the shared intra or inter
+macroblock layers changes no emitted byte and no reconstructed sample.
+Each stream is also decoded and checked against the encoder's
+reconstruction."""
 
 from __future__ import annotations
 
@@ -24,6 +24,11 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
 from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
     decode_h264_cabac,
     encode_h264_cabac_intra,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_cabac_inter import (
+    decode_h264_cabac_p,
+    encode_h264_cabac_p_gop,
+    synthetic_p_init,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     decode_h264_sequence,
@@ -162,6 +167,95 @@ def _b_seq(weights, deblock):
     return run
 
 
+_B_USE = ("l0", "l1", "bi")
+
+
+def _b_temporal():
+    """Unweighted temporal-direct B sequence over a reference B: every
+    16x8 / 8x16 list combination (B mb_types 4..21), all twelve B_8x8
+    sub_mb_types, direct sub-blocks, B_Direct_16x16 and B_Skip."""
+    rng = np.random.default_rng(31)
+    mv = lambda: tuple(int(v) for v in rng.integers(-9, 10, 2))
+
+    def part(use):
+        return (use, mv(), mv()) if use == "bi" else (use, mv())
+
+    def sub(use, sm, n):
+        return (use, sm, [(mv(), mv()) if use == "bi" else mv()
+                          for _ in range(n)])
+
+    nsub = {"8x8": 1, "8x4": 2, "4x8": 2, "4x4": 4}
+    combos = [(mode, (u0, u1)) for mode in ("16x8", "8x16")
+              for u0 in _B_USE for u1 in _B_USE]
+    subs = [(u, sm) for sm in nsub for u in _B_USE]  # 12 sub_mb_types
+    specs_r = [(m, [part(u) for u in us]) for m, us in combos]
+    specs_r += [("skip",), ("direct",)]
+    specs_b = [("8x8", [sub(u, sm, nsub[sm]) for u, sm in subs[k:k + 4]])
+               for k in (0, 4, 8)]
+    specs_b += [
+        ("8x8", [("direct",), sub("bi", "4x4", 4), ("direct",),
+                 sub("l1", "8x4", 2)]),
+        ("8x8", [("direct",)] * 4),
+        ("16x16", [("l0", mv())]), ("16x16", [("l1", mv())]),
+        ("16x16", [("bi", mv(), mv())]), ("skip",), ("direct",),
+    ]
+    specs_b += [(m, [part(u) for u in us]) for m, us in combos[::2]]
+    specs_b.append(("skip",))
+    specs_p = [("16x16", [mv()]) if k % 3 else ("8x16", [mv(), mv()])
+               for k in range(20)]
+    f0, fp, fr, fb = (_smooth(64, 80, 40 + i) for i in range(4))
+    stream, recons, pocs = encode_h264_b_sequence(
+        [("idr", f0), ("p", fp, specs_p, 8), ("bref", fr, specs_r, 4),
+         ("b", fb, specs_b, 6)],
+        qp=18, direct_mode="temporal",
+    )
+    frames, dpocs = decode_h264_b_stream(stream)
+    assert dpocs == pocs
+    for got, want in zip(frames, recons):
+        _same(got, want)
+    return stream, recons
+
+
+def _p_gop_weighted_ref1():
+    frames = [_planes(32, 48, 50 + i) for i in range(3)]
+    specs = [_P_SPECS[0],
+             [("skip",), ("16x16", [(5, -3)]), ("ipcm",),
+              ("8x8", [("4x4", [(1, 0), (0, 1), (-1, 2), (2, -2)]),
+                       ("8x8", [(3, 3)]), ("4x8", [(0, 0), (1, 1)]),
+                       ("8x4", [(-2, 0), (0, -2)])]),
+              ("16x8", [(2, 2), (-1, 1)]), ("i4", 1)]]
+    stream, recons = encode_h264_p_gop(
+        frames, specs, qp=20, num_refs=1,
+        weights={"luma_denom": 3, "chroma_denom": 1,
+                 "refs": [{"wy": 7, "oy": 3, "wc": 1, "oc": -2,
+                           "wcr": 3, "ocr": 4}]},
+    )
+    for got, want in zip(decode_h264_sequence(stream), recons):
+        _same(got, want)
+    return stream, recons
+
+
+def _cabac_p_gop():
+    frames = [_planes(32, 48, 60 + i) for i in range(3)]
+    specs = [
+        [("16x16", [(2, -3)]), ("skip",), ("16x8", [(1, 1), (0, 4)]),
+         ("8x16", [(-2, 0), (3, 1)]), ("skip",), ("i16",)],
+        [("8x8", [("8x8", [(1, 1)], 1), ("8x4", [(2, 0), (0, 2)], 0),
+                  ("4x8", [(-1, 3), (5, -2)], 1),
+                  ("4x4", [(0, 1), (1, 0), (2, 2), (-2, -1)], 0)]),
+         ("16x16", [((4, 4), 1)]), ("skip",), ("i16",),
+         ("16x8", [((0, 0), 0), ((1, -1), 1)]), ("16x16", [(0, 0)])],
+    ]
+    table = synthetic_p_init(5)
+    stream, recons = encode_h264_cabac_p_gop(
+        frames, specs, qp=24, num_refs=2, init_table=table
+    )
+    for got, want in zip(decode_h264_cabac_p(stream, init_table=table),
+                         recons):
+        _same(got, want)
+    return stream, recons
+
+
 def _cabac(qp, mode):
     def run():
         stream, *recon = encode_h264_cabac_intra(*_smooth(24, 40, 5), qp=qp,
@@ -189,12 +283,17 @@ CASES["b_seq_explicit_deblock"] = _b_seq(
      "l1": {"wy": 12, "oy": 6}},
     True,
 )
+CASES["b_seq_temporal_b8x8_bref"] = _b_temporal
+CASES["p_gop_weighted_ref1"] = _p_gop_weighted_ref1
+CASES["cabac_p_gop"] = _cabac_p_gop
 CASES["cabac_qp0"] = _cabac(0, 2)
 CASES["cabac_qp30"] = _cabac(30, 5)
 
 PINS = {
     "b_seq_explicit_deblock": "97ad9b7f74b6d729c8cc",
     "b_seq_implicit": "089d351cfcafc77d43ce",
+    "b_seq_temporal_b8x8_bref": "e641301ac80d915be376",
+    "cabac_p_gop": "d1f85cd310b5bdb60a1b",
     "cabac_qp0": "74da4e91d749ec1c6676",
     "cabac_qp30": "a661121bd4fc5c793226",
     "i16_qp0_pm0_cm0": "fc3c09375ced6865b75e",
@@ -242,6 +341,7 @@ PINS = {
     "p_gop_deblock2": "897d60e16862d98c668b",
     "p_gop_deblock_weights": "b062ea1062bda6fa7663",
     "p_gop_plain": "a832d86ac196427e65d8",
+    "p_gop_weighted_ref1": "062746da840bc7bddba1",
 }
 
 
