@@ -133,17 +133,28 @@ def _check_planes(
     return y, cb, cr
 
 
-def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
-    """Baseline-profile SPS RBSP for a frame-MBs-only 4:2:0 stream of
-    mbw x mbh macroblocks cropped to w x h (shared with h264_intra)."""
+def _sps_rbsp(
+    mbw: int, mbh: int, w: int, h: int, max_refs: int = 0,
+    poc_bits: int = 0, profile: int = 66,
+) -> bytes:
+    """SPS RBSP for a frame-MBs-only 4:2:0 stream of mbw x mbh
+    macroblocks cropped to w x h, the one builder of this codec family:
+    ``max_refs`` is max_num_ref_frames; ``poc_bits`` > 0 selects
+    pic_order_cnt_type 0 with a pic_order_cnt_lsb of that width (B
+    streams), else type 2; ``profile`` is 66 (Baseline) or 77 (Main,
+    which B slices need)."""
     sps = BitWriter()
-    sps.u(66, 8)  # profile_idc: baseline
-    sps.u(0xE0, 8)  # constraint_set0..2, reserved
+    sps.u(profile, 8)  # profile_idc
+    sps.u(0xE0 if profile == 66 else 0x40, 8)  # constraint flags
     sps.u(20, 8)  # level_idc 2.0
     sps.ue(0)  # seq_parameter_set_id
-    sps.ue(0)  # log2_max_frame_num_minus4
-    sps.ue(2)  # pic_order_cnt_type (no further fields)
-    sps.ue(0)  # max_num_ref_frames
+    sps.ue(0)  # log2_max_frame_num_minus4 -> 4-bit frame_num
+    if poc_bits:
+        sps.ue(0)  # pic_order_cnt_type
+        sps.ue(poc_bits - 4)  # log2_max_pic_order_cnt_lsb_minus4
+    else:
+        sps.ue(2)  # pic_order_cnt_type (no further fields)
+    sps.ue(max_refs)  # max_num_ref_frames
     sps.u(0, 1)  # gaps_in_frame_num_value_allowed
     sps.ue(mbw - 1)
     sps.ue(mbh - 1)
@@ -163,22 +174,31 @@ def _sps_rbsp(mbw: int, mbh: int, w: int, h: int) -> bytes:
     return sps.bytes_()
 
 
-def _pps_rbsp() -> bytes:
-    """CAVLC-mode PPS RBSP (no FMO, all offsets zero)."""
+def _pps_rbsp(
+    cabac: bool = False, deblock: bool = False,
+    weighted_pred: bool = False, bipred_idc: int = 0,
+) -> bytes:
+    """PPS RBSP (no FMO, one default reference per list, all QP
+    offsets zero), the one builder of this codec family: ``cabac``
+    sets entropy_coding_mode_flag; ``deblock`` sets
+    deblocking_filter_control_present_flag, so slice headers can turn
+    the loop filter off; ``weighted_pred`` makes P slice headers carry
+    a pred_weight_table; ``bipred_idc`` is weighted_bipred_idc (1
+    explicit: B slice headers carry the table, 2 implicit)."""
     pps = BitWriter()
     pps.ue(0)  # pic_parameter_set_id
     pps.ue(0)  # seq_parameter_set_id
-    pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
+    pps.u(int(cabac), 1)  # entropy_coding_mode_flag
     pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
     pps.ue(0)  # num_slice_groups_minus1
     pps.ue(0)  # num_ref_idx_l0_default_active_minus1
     pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
+    pps.u(int(weighted_pred), 1)  # weighted_pred_flag
+    pps.u(bipred_idc, 2)  # weighted_bipred_idc
     pps.se(0)  # pic_init_qp_minus26
     pps.se(0)  # pic_init_qs_minus26
     pps.se(0)  # chroma_qp_index_offset
-    pps.u(0, 1)  # deblocking_filter_control_present_flag
+    pps.u(int(deblock), 1)  # deblocking_filter_control_present_flag
     pps.u(0, 1)  # constrained_intra_pred_flag
     pps.u(0, 1)  # redundant_pic_cnt_present_flag
     pps.trailing()
@@ -388,6 +408,28 @@ def _parse_sps(rbsp: bytes) -> dict:
     )
 
 
+def _parse_pps(rbsp: bytes) -> dict:
+    """Parse the PPS fields this codec family reads: the entropy
+    mode, the default active reference counts per list, the weighted
+    prediction flags and whether slice headers carry the deblocking
+    fields."""
+    r = BitReader(rbsp)
+    r.ue()  # pic_parameter_set_id
+    r.ue()  # seq_parameter_set_id
+    cabac = bool(r.u(1))
+    r.u(1)  # bottom_field_pic_order_in_frame_present
+    if r.ue():
+        raise NotImplementedError("slice groups (FMO) unsupported")
+    nra = (r.ue() + 1, r.ue() + 1)
+    weighted_pred = bool(r.u(1))
+    bipred_idc = r.u(2)
+    r.se()  # pic_init_qp_minus26
+    r.se()  # pic_init_qs_minus26
+    r.se()  # chroma_qp_index_offset
+    return dict(cabac=cabac, nra=nra, weighted_pred=weighted_pred,
+                bipred_idc=bipred_idc, deblock_present=bool(r.u(1)))
+
+
 def _parse_slice_header(r: BitReader, sps: dict) -> int:
     """Parse an IDR I-slice header up to slice_qp_delta; returns the
     slice QP. A POC type 0 stream carries pic_order_cnt_lsb, which
@@ -422,10 +464,7 @@ def decode_h264_ipcm(
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = BitReader(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
+            if _parse_pps(rbsp)["cabac"]:
                 raise ValueError("CABAC PPS unsupported (I_PCM/CAVLC only)")
         elif ntype == 5:
             if sps is None:

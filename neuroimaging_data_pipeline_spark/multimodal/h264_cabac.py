@@ -55,7 +55,9 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _check_planes,
     _ep_remove,
     _nal,
+    _parse_pps,
     _parse_sps,
+    _pps_rbsp,
     _split_nals,
     _sps_rbsp,
 )
@@ -726,31 +728,6 @@ def _dec_mb_qp_delta(dec: _Dec, ctxs: _Ctx, st: _MbState) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _pps_rbsp_cabac() -> bytes:
-    """CABAC-mode PPS. Unlike the CAVLC twin this one sets
-    deblocking_filter_control_present_flag so the slice can disable
-    the loop filter — making the stream's nominal conformant output
-    equal this codec family's (unfiltered) reconstruction."""
-    pps = BitWriter()
-    pps.ue(0)  # pic_parameter_set_id
-    pps.ue(0)  # seq_parameter_set_id
-    pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
-    pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
-    pps.ue(0)  # num_slice_groups_minus1
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
-    pps.se(0)  # pic_init_qp_minus26
-    pps.se(0)  # pic_init_qs_minus26
-    pps.se(0)  # chroma_qp_index_offset
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)  # constrained_intra_pred_flag
-    pps.u(0, 1)  # redundant_pic_cnt_present_flag
-    pps.trailing()
-    return pps.bytes_()
-
-
 def _slice_header_cabac(sl: BitWriter, qp: int) -> None:
     sl.ue(0)  # first_mb_in_slice
     sl.ue(7)  # slice_type: I (all slices)
@@ -1020,7 +997,7 @@ def encode_h264_cabac_intra(
     sl.align_zero()
     stream = (
         _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
-        + _nal(3, 8, _pps_rbsp_cabac())
+        + _nal(3, 8, _pps_rbsp(cabac=True, deblock=True))
         + _nal(3, 5, sl.bytes_())
     )
     return (
@@ -1070,10 +1047,7 @@ def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarra
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = BitReader(rbsp)
-            r.ue()
-            r.ue()
-            if not r.u(1):
+            if not _parse_pps(rbsp)["cabac"]:
                 raise ValueError(
                     "CAVLC PPS given to the CABAC decoder — use "
                     "h264_intra.decode_h264_frame, which dispatches"

@@ -50,7 +50,9 @@ from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _nal,
     _parse_sps,
+    _pps_rbsp,
     _split_nals,
+    _sps_rbsp,
     _ep_remove,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
@@ -436,7 +438,6 @@ def encode_h264_cabac_p_gop(
         _pad_refs,
         _recon_inter_mb,
         _residual_from_target,
-        _sps_rbsp_ref1,
         _MvState,
     )
 
@@ -449,6 +450,8 @@ def encode_h264_cabac_p_gop(
         raise ValueError("anchor + one spec list per P frame")
     y0, cb0, cr0 = frames[0]
     h, w = y0.shape
+    if h % 16 or w % 16:
+        raise ValueError("inter sequences require dimensions % 16 == 0")
     mbw, mbh = w // 16, h // 16
     qpc = _chroma_qp(qp)
 
@@ -459,8 +462,8 @@ def encode_h264_cabac_p_gop(
         n for n in _split_nals(intra_stream) if (n[0] & 0x1F) == 5
     )
     stream = (
-        _nal(3, 7, _sps_rbsp_ref1(mbw, mbh, w, h, num_refs))
-        + _nal(3, 8, _pps_cabac_inter())
+        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h, num_refs))
+        + _nal(3, 8, _pps_rbsp(cabac=True, deblock=True))
         + b"\x00\x00\x00\x01" + idr_nal
     )
     recons = [(r0y, r0cb, r0cr)]
@@ -489,7 +492,7 @@ def encode_h264_cabac_p_gop(
                 if kind == "skip":
                     mv = mvs.skip_mv(mx, my)
                     py, pcb, pcr = _mc_mb(
-                        padded, mx, my, [(0, 0, 4, 4, mv, 0)], None
+                        [padded], mx, my, [(0, 0, 4, 4, mv, 0, None, 0)]
                     )
                     ry[my * 16 : my * 16 + 16,
                        mx * 16 : mx * 16 + 16] = np.clip(py, 0, 255)
@@ -554,7 +557,8 @@ def encode_h264_cabac_p_gop(
                                           gx : gx + w4, comp] = abs(d)
                             mvs.fill(gx, gy, w4, h4, mv, rf)
                             placed.append(
-                                (ox8 + sx4, oy8 + sy4, w4, h4, mv, rf)
+                                (ox8 + sx4, oy8 + sy4, w4, h4, mv, rf,
+                                 None, 0)
                             )
                 else:
                     mode = kind
@@ -588,8 +592,8 @@ def encode_h264_cabac_p_gop(
                             st.absmvd[gy : gy + h4,
                                       gx : gx + w4, comp] = abs(d)
                         mvs.fill(gx, gy, w4, h4, mv, rf)
-                        placed.append((ox4, oy4, w4, h4, mv, rf))
-                py, pcb, pcr = _mc_mb(padded, mx, my, placed, None)
+                        placed.append((ox4, oy4, w4, h4, mv, rf, None, 0))
+                py, pcb, pcr = _mc_mb([padded], mx, my, placed)
                 cbp, zl, cdcz, cacz = _residual_from_target(
                     target, mx, my, py, pcb, pcr, qp, qpc
                 )
@@ -846,30 +850,6 @@ def _code_inter_residuals_enc(enc, ctxs, st, mx, my, cbp_luma, cbpc,
                           mx * 2 : mx * 2 + 2] = 0
 
 
-def _pps_cabac_inter() -> bytes:
-    """PPS: entropy_coding_mode 1, deblocking_filter_control_present
-    set (slice headers carry disable_deblocking_filter_idc=1, so the
-    field must be legal per 7.3.3; ADVICE r10)."""
-    pps = BitWriter()
-    pps.ue(0)  # pps id
-    pps.ue(0)  # sps id
-    pps.u(1, 1)  # entropy_coding_mode_flag: CABAC
-    pps.u(0, 1)  # bottom_field_pic_order_in_frame_present
-    pps.ue(0)  # num_slice_groups_minus1
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1
-    pps.ue(0)  # num_ref_idx_l1_default_active_minus1
-    pps.u(0, 1)  # weighted_pred_flag
-    pps.u(0, 2)  # weighted_bipred_idc
-    pps.se(0)  # pic_init_qp_minus26
-    pps.se(0)  # pic_init_qs_minus26
-    pps.se(0)  # chroma_qp_index_offset
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)  # constrained_intra_pred_flag
-    pps.u(0, 1)  # redundant_pic_cnt_present_flag
-    pps.trailing()
-    return pps.bytes_()
-
-
 def decode_h264_cabac_p(
     payload: bytes, init_table: dict | None = None
 ) -> list:
@@ -878,7 +858,6 @@ def decode_h264_cabac_p(
     intra decoder; P slices decode here with ``init_table`` (the
     9.3.1.1 P columns remain the transcription gate)."""
     from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
-        _pps_rbsp_cabac,
         decode_h264_cabac,
     )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
@@ -908,7 +887,7 @@ def decode_h264_cabac_p(
         elif ntype == 5:
             sub = (
                 _nal(3, 7, sps_rbsp)
-                + _nal(3, 8, _pps_rbsp_cabac())
+                + _nal(3, 8, _pps_rbsp(cabac=True, deblock=True))
                 + b"\x00\x00\x00\x01" + nal
             )
             frame = decode_h264_cabac(sub)
@@ -934,8 +913,8 @@ def decode_h264_cabac_p(
                     if dec.decision(ctxs, 11 + st.skip_inc(mx, my)):
                         mv = mvs.skip_mv(mx, my)
                         py, pcb, pcr = _mc_mb(
-                            padded, mx, my, [(0, 0, 4, 4, mv, 0)],
-                            None,
+                            [padded], mx, my,
+                            [(0, 0, 4, 4, mv, 0, None, 0)],
                         )
                         ry[my * 16 : my * 16 + 16,
                            mx * 16 : mx * 16 + 16] = np.clip(
@@ -995,7 +974,7 @@ def decode_h264_cabac_p(
                                 mvs.fill(gx, gy, w4, h4, mv, srefs[k])
                                 placed.append(
                                     (ox8 + sx4, oy8 + sy4, w4, h4,
-                                     mv, srefs[k])
+                                     mv, srefs[k], None, 0)
                                 )
                     else:
                         nparts = len(_PARTS[mode])
@@ -1029,10 +1008,10 @@ def decode_h264_cabac_p(
                                           comp] = abs(d)
                             mvs.fill(gx, gy, w4, h4, mv, prefs[pidx])
                             placed.append(
-                                (ox4, oy4, w4, h4, mv, prefs[pidx])
+                                (ox4, oy4, w4, h4, mv, prefs[pidx],
+                                 None, 0)
                             )
-                    py, pcb, pcr = _mc_mb(padded, mx, my, placed,
-                                          None)
+                    py, pcb, pcr = _mc_mb([padded], mx, my, placed)
                     cbp_luma, cbpc = _dec_cbp(dec, ctxs, st, mx, my)
                     if cbp_luma or cbpc:
                         _dec_qp_delta0(dec, ctxs, st)

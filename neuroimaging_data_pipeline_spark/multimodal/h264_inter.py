@@ -1,78 +1,64 @@
-"""H.264 inter (P-slice) prediction — the round-9 stretch on the last
-big video gate ("a video corpus is mostly inter frames", VERDICT r8
-missing #2). CAVLC P slices on top of the proven intra stack:
+"""H.264 CAVLC inter slices — P and B slices through ONE inter layer,
+the engine-side equivalent of the inter frames that dominate any real
+H.264 corpus (preprocess_parallel.sh shells out for video). A P slice
+is the list-0-only case of the B coder: te(v) ref_idx_l0, P_Skip and
+no direct modes.
 
 - fractional-sample LUMA interpolation (8.4.2.2.1/2): the 6-tap
   (1,-5,20,20,-5,1) half-sample filter — including the center 'j'
   position built from intermediate (un-rounded) half values — and
   quarter-sample averaging, all positions, edge-clamped unrestricted
-  motion vectors;
-- CHROMA eighth-sample bilinear interpolation (8.4.2.2.2);
-- motion-vector PREDICTION (8.4.1.3): component-wise median over the
-  A/B/C neighbor partitions with the C->D substitution and the
-  only-A fallback, the 16x8/8x16 directional shortcuts, and the
-  P_Skip zero-MV conditions;
-- P macroblock syntax (CAVLC): mb_skip_run, P_L0_16x16 /
-  P_L0_L0_16x8 / P_L0_L0_8x16 partitions with per-partition mvd_l0,
-  P_8x8 sub-macroblock partitions (sub_mb_type 8x8/8x4/4x8/4x4 with
-  per-sub-partition mvd and z-scan-order MV prediction), the INTER
-  coded_block_pattern me(v) mapping (Table 9-4), full 16-coefficient
-  luma residual blocks and the shared chroma DC-Hadamard path, nC
-  neighbor tracking across skipped MBs;
-- INTRA macroblocks inside P slices (mb_type 5..30: I_4x4,
-  Intra_16x16, I_PCM), coded by h264_intra's intra macroblock layer,
-  the same code the I slices run — intra neighbors are marked
-  unavailable-for-MV-prediction (refIdx -1, mv 0) exactly as
-  8.4.1.3.2 requires, WITHOUT triggering the out-of-picture D
-  substitution or only-A fallback;
-- MULTIPLE REFERENCE FRAMES (up to 15 since the r11 multi-reference
-  work; the original 2-ref path is the common case): list0 ordered
-  most-recently-
-  decoded first (8.2.4.2.1 PicNum descending), per-partition
-  ref_idx_l0 coded te(v), sliding-window DPB eviction, and the
-  refIdx-aware predictor rules (the exactly-one-matching-neighbor
-  shortcut and the refIdx-conditioned 16x8/8x16 directional rules);
-- sequence framing: SPS with max_num_ref_frames in 1..15, a PPS
-  with deblocking control so every slice header disables the loop
-  filter (the stream's nominal conformant output IS this codec
-  family's reconstruction), an IDR Intra_16x16 anchor written under
-  its own deblocking-control slice header straight into the shared
-  intra macroblock loop, and non-IDR (NAL type 1) P slices
-  referencing the decoded-frame DPB.
+  motion vectors; CHROMA eighth-sample bilinear interpolation
+  (8.4.2.2.2);
+- motion-vector PREDICTION (8.4.1.3), one _MvState per reference
+  list: component-wise median over the A/B/C neighbor partitions with
+  the C->D substitution and the only-A fallback, the refIdx-aware
+  16x8/8x16 directional shortcuts, and the P_Skip zero-MV
+  conditions. A partition that does not use a list is 'decoded but
+  predFlagLX = 0' in that list's field, exactly like an intra
+  neighbor;
+- one macroblock layer for both slice kinds (7.3.5): mb_skip_run,
+  the 16x16 / 16x8 / 8x16 partitions and the P_8x8 / B_8x8
+  sub-macroblocks with their 8x8/8x4/4x8/4x4 splits, the motion
+  syntax in its spec order (ref_idx_l0 of every partition, then
+  ref_idx_l1, then mvd_l0, then mvd_l1) coded by ONE routine that the
+  encoder drives with a writer and the decoder with a reader, the
+  INTER coded_block_pattern me(v) mapping (Table 9-4) and the shared
+  luma/chroma residual path. The slice kind selects the mb_type and
+  sub_mb_type tables (Tables 7-13/7-14, 7-17/7-18), the list set,
+  the skip rule and the ref_idx coding;
+- B DIRECT modes: B_Skip, B_Direct_16x16 and B_Direct_8x8, SPATIAL
+  per 8.4.1.2.2 (MinPositive reference per list, the median
+  predictor, directZeroPrediction, the colocated colZeroFlag test on
+  the corner 4x4 of each 8x8 under direct_8x8_inference) and TEMPORAL
+  per 8.4.1.2.3 (POC-distance scaling of the colocated motion);
+- one partition predictor: each (sub-)partition is interpolated from
+  its list-0 and/or list-1 reference and combined by one copy of the
+  8.4.2.3 weighted sample prediction — explicit P weights per
+  reference (weighted_pred_flag), explicit B weights per list
+  (weighted_bipred_idc 1), implicit POC-derived bi weights (idc 2)
+  and the default rounded bi average;
+- INTRA macroblocks inside P and B slices (I_4x4, Intra_16x16,
+  I_PCM) coded by h264_intra's intra macroblock layer, the code the I
+  slices run;
+- MULTIPLE REFERENCE FRAMES for P slices (num_refs up to 15: list 0
+  most recently decoded first per 8.2.4.2.1, ref_idx_l0 as true te(v),
+  sliding-window DPB eviction); B slices take the nearest past and
+  the nearest future reference by POC, one per list;
+- one slice header writer and parser for both kinds (7.3.3), with
+  pic_order_cnt_lsb present on POC type 0 streams, the
+  pred_weight_table (7.3.3.2, values bounded per 7.4.3.2) and the
+  deblocking fields; one decoder loop (NAL walk, IDR, DPB of
+  (poc, frame, motion) in decode order) behind decode_h264_sequence
+  and h264_bslice.decode_h264_b_stream; IN-LOOP DEBLOCKING through
+  the clause-8.7 filter (h264_deblock.py) on both sides, filtered
+  frames being the references.
 
-Weighted P slices (weighted_pred_flag, a later pass): a list-0
-pred_weight_table in every P slice header, per-REFERENCE
-weight/offset pairs applied to every partition through the shared
-motion-compensation helper — skip, sub-partitions and multi-ref
-included.
-
-Distinct Cb/Cr explicit weights (wcr/ocr per reference) are
-supported end-to-end, including wcr-only entries (writer and
-resolver both fall back Cb = wcr per chroma_weight_flag semantics).
-
-IN-LOOP DEBLOCKING (r10): encode_h264_p_gop(deblock=True) writes
-disable_deblocking_filter_idc 0 and both sides run the clause-8.7
-filter (h264_deblock.py) over the exported per-4x4 block info —
-filtered frames are the DPB references, per spec. r11: slice
-alpha/beta filter offsets (written/parsed per 7.3.3 when idc != 1,
-applied per 8.7.2.2 indexA/indexB) and idc 2 emission
-(deblock=2; identical to idc 0 for single-slice frames).
-
-r11: >2 reference frames (num_refs up to 15, ref_idx_l0 as TRUE
-te(v): one inverted bit at range 1, ue(v) above — CAVLC and CABAC
-paths both; the m44 long-GOP oracle pins reference selection).
-CABAC P-slice MACHINERY is complete in h264_cabac_inter.py
-(binarizations, neighbor contexts, full slice round trips); its
-remaining gate is the 9.3.1.1 P-column init DATA. B slices live in
-h264_bslice.py. The encoder<->decoder round-trip is bit-exact by
-construction (pinned across QPs, partition shapes, sub-partition
-splits, intra-in-P placements, ref_idx patterns and quarter-pel
-fractions in tests/test_h264_inter.py); a capability-gated ffmpeg
-cross-pin covers machines that have ffmpeg.
-
-Reference parity: preprocess_parallel.sh shells out for video; this
-is the engine-side equivalent for the inter frames that dominate any
-real H.264 corpus.
+The P GOP encoder lives here and the B sequence encoder in
+h264_bslice.py; both write the same SPS/PPS builders (h264.py) and
+the same IDR anchor. The encoder<->decoder round trip is bit-exact by
+construction, and tests/test_h264_stream_pins.py pins the emitted
+bytes; CABAC P slices live in h264_cabac_inter.py.
 """
 
 from __future__ import annotations
@@ -88,12 +74,20 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _check_planes,
     _ep_remove,
     _nal,
+    _parse_pps,
     _parse_slice_header,
     _parse_sps,
+    _pps_rbsp,
     _read_deblock_fields,
     _slice_header,
     _split_nals,
+    _sps_rbsp,
     _write_deblock_fields,
+)
+from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
+    deblock_frame,
+    make_block_info,
+    make_block_info_b,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
     _CF,
@@ -402,15 +396,6 @@ class _MvState:
         self.inter[gy : gy + ph4, gx : gx + pw4] = True
         self.ref[gy : gy + ph4, gx : gx + pw4] = ref
 
-    def export(self) -> dict:
-        """Snapshot the decoded motion field — the colocated-picture
-        data spatial direct mode (h264_bslice) reads."""
-        return {
-            "mv": self.mv.copy(),
-            "ref": self.ref.copy(),
-            "inter": self.inter.copy(),
-        }
-
     def mark_off(self, gx: int, gy: int, pw4: int, ph4: int) -> None:
         """Mark a partition decoded but NOT predicted from this
         list (intra, or predFlagLX == 0 in B slices): available as a
@@ -422,6 +407,9 @@ class _MvState:
     def mark_intra(self, mx: int, my: int) -> None:
         self.mark_off(mx * 4, my * 4, 4, 4)
 
+# ---------------------------------------------------------------------------
+# Slice kinds: P is the list-0-only case of the B macroblock layer
+# ---------------------------------------------------------------------------
 
 # partition geometry per mode: list of (off_x4, off_y4, w4, h4)
 _PARTS = {
@@ -429,8 +417,6 @@ _PARTS = {
     "16x8": [(0, 0, 4, 2), (0, 2, 4, 2)],
     "8x16": [(0, 0, 2, 4), (2, 0, 2, 4)],
 }
-_MB_TYPE = {"16x16": 0, "16x8": 1, "8x16": 2}
-_MB_TYPE_INV = {v: k for k, v in _MB_TYPE.items()}
 
 # sub-macroblock partition geometry (offsets in 4x4 units within the
 # 8x8 sub-macroblock, z-scan order per Table 7-17 / figure 6-14)
@@ -440,254 +426,205 @@ _SUBPARTS = {
     "4x8": [(0, 0, 1, 2), (1, 0, 1, 2)],
     "4x4": [(0, 0, 1, 1), (1, 0, 1, 1), (0, 1, 1, 1), (1, 1, 1, 1)],
 }
-_SUB_TYPE = {"8x8": 0, "8x4": 1, "4x8": 2, "4x4": 3}
-_SUB_TYPE_INV = {v: k for k, v in _SUB_TYPE.items()}
+
+# mb_type -> (partition mode, list use per partition): Table 7-13 (P)
+# and Table 7-14 (B). B mb_type 0 is B_Direct_16x16; P_8x8 (3, and
+# 4 = P_8x8ref0) and B_8x8 (22) carry sub_mb_types instead.
+_P_USES = {
+    0: ("16x16", ("l0",)),
+    1: ("16x8", ("l0", "l0")),
+    2: ("8x16", ("l0", "l0")),
+}
+_B_USES = {
+    1: ("16x16", ("l0",)),
+    2: ("16x16", ("l1",)),
+    3: ("16x16", ("bi",)),
+    4: ("16x8", ("l0", "l0")),
+    5: ("8x16", ("l0", "l0")),
+    6: ("16x8", ("l1", "l1")),
+    7: ("8x16", ("l1", "l1")),
+    8: ("16x8", ("l0", "l1")),
+    9: ("8x16", ("l0", "l1")),
+    10: ("16x8", ("l1", "l0")),
+    11: ("8x16", ("l1", "l0")),
+    12: ("16x8", ("l0", "bi")),
+    13: ("8x16", ("l0", "bi")),
+    14: ("16x8", ("l1", "bi")),
+    15: ("8x16", ("l1", "bi")),
+    16: ("16x8", ("bi", "l0")),
+    17: ("8x16", ("bi", "l0")),
+    18: ("16x8", ("bi", "l1")),
+    19: ("8x16", ("bi", "l1")),
+    20: ("16x8", ("bi", "bi")),
+    21: ("8x16", ("bi", "bi")),
+}
+# sub_mb_type -> (list use, sub-partition): Table 7-17 (P), Table 7-18
+# (B; 0 is B_Direct_8x8)
+_P_SUB_USES = {0: ("l0", "8x8"), 1: ("l0", "8x4"), 2: ("l0", "4x8"),
+               3: ("l0", "4x4")}
+_B_SUB_USES = {
+    0: ("direct", "8x8"),
+    1: ("l0", "8x8"), 2: ("l1", "8x8"), 3: ("bi", "8x8"),
+    4: ("l0", "8x4"), 5: ("l0", "4x8"), 6: ("l1", "8x4"),
+    7: ("l1", "4x8"), 8: ("bi", "8x4"), 9: ("bi", "4x8"),
+    10: ("l0", "4x4"), 11: ("l1", "4x4"), 12: ("bi", "4x4"),
+}
+_LISTS = {"l0": (0,), "l1": (1,), "bi": (0, 1)}
+
+
+class _Kind:
+    """What tells a P slice from a B slice in the inter layer: its
+    slice_type, the mb_type and sub_mb_type tables both ways, the
+    P_8x8 / B_8x8 mb_type, the I_4x4 mb_type the intra types start at,
+    and the number of reference lists."""
+
+    def __init__(self, name, stype, uses, sub_uses, mb8x8, intra):
+        self.name, self.stype = name, stype
+        self.uses, self.sub_uses = uses, sub_uses
+        self.types = {v: k for k, v in uses.items()}
+        self.sub_types = {v: k for k, v in sub_uses.items()}
+        self.mb8x8, self.intra = mb8x8, intra
+        self.nlists = 1 if name == "P" else 2
+
+
+_P = _Kind("P", 5, _P_USES, _P_SUB_USES, 3, 5)
+_B = _Kind("B", 6, _B_USES, _B_SUB_USES, 22, 23)
 
 
 # ---------------------------------------------------------------------------
-# Sequence framing
+# Weighted sample prediction (7.3.3.2, 7.4.3.2, 8.4.2.3)
 # ---------------------------------------------------------------------------
 
 
-def _sps_rbsp_ref1(
-    mbw: int, mbh: int, w: int, h: int, num_refs: int = 1
-) -> bytes:
-    """SPS for IDR + P sequences: identical to the shared intra SPS
-    except max_num_ref_frames (1..15 decoded references)."""
-    if w % 16 or h % 16:
-        raise ValueError("inter sequences require dimensions % 16 == 0")
-    sps = BitWriter()
-    sps.u(66, 8)  # profile_idc: baseline
-    sps.u(0xE0, 8)
-    sps.u(20, 8)
-    sps.ue(0)  # seq_parameter_set_id
-    sps.ue(0)  # log2_max_frame_num_minus4 -> 4-bit frame_num
-    sps.ue(2)  # pic_order_cnt_type
-    sps.ue(num_refs)  # max_num_ref_frames
-    sps.u(0, 1)
-    sps.ue(mbw - 1)
-    sps.ue(mbh - 1)
-    sps.u(1, 1)  # frame_mbs_only_flag
-    sps.u(1, 1)  # direct_8x8_inference_flag
-    sps.u(0, 1)  # no cropping (dims % 16 enforced)
-    sps.u(0, 1)  # no VUI
-    sps.trailing()
-    return sps.bytes_()
+def _in_range(v: int, lo: int, hi: int, what: str) -> int:
+    if not lo <= v <= hi:
+        raise ValueError(f"{what} {v} outside {lo}..{hi} (7.4.3.2)")
+    return v
 
 
-def _pps_rbsp_deblock(weighted_pred: bool = False) -> bytes:
-    """CAVLC PPS with deblocking_filter_control_present_flag set so
-    slice headers can disable the loop filter (stream output ==
-    unfiltered reconstruction, same choice as the CABAC module).
-    ``weighted_pred`` sets weighted_pred_flag: P slice headers then
-    carry a list-0 pred_weight_table."""
-    pps = BitWriter()
-    pps.ue(0)
-    pps.ue(0)
-    pps.u(0, 1)  # entropy_coding_mode_flag: CAVLC
-    pps.u(0, 1)
-    pps.ue(0)
-    pps.ue(0)  # num_ref_idx_l0_default_active_minus1 = 0 (one ref)
-    pps.ue(0)
-    pps.u(1 if weighted_pred else 0, 1)  # weighted_pred_flag
-    pps.u(0, 2)
-    pps.se(0)
-    pps.se(0)
-    pps.se(0)
-    pps.u(1, 1)  # deblocking_filter_control_present_flag
-    pps.u(0, 1)
-    pps.u(0, 1)
-    pps.trailing()
-    return pps.bytes_()
+def _norm_weights(weights: dict, lists: list) -> dict:
+    """The one pred_weight_table form, for user weights and parsed
+    ones alike: {"ld": log2 denominator per plane, "lists": per list
+    and reference (luma_weight_flag, chroma_weight_flag, (wy, wcb,
+    wcr), (oy, ocb, ocr)), "uni": True}. ``weights`` holds luma_denom
+    / chroma_denom; ``lists`` one dict per list and reference with
+    wy/oy, wc/oc, wcr/ocr, where a missing weight means flag 0 (the
+    default 1 << denom, offset 0) and a wcr-only entry predicts Cb with
+    wcr too. Values outside 7.4.3.2 raise ValueError."""
+    ldy = _in_range(int(weights.get("luma_denom", 0)), 0, 7,
+                    "luma_log2_weight_denom")
+    ldc = _in_range(int(weights.get("chroma_denom", 0)), 0, 7,
+                    "chroma_log2_weight_denom")
+    out = []
+    for entries in lists:
+        row = []
+        for e in entries:
+            w, o = [1 << ldy, 1 << ldc, 1 << ldc], [0, 0, 0]
+            fy = e.get("wy") is not None
+            fc = e.get("wc") is not None or e.get("wcr") is not None
+            if fy:
+                w[0], o[0] = e["wy"], e.get("oy", 0)
+            if fc:
+                w[1] = e["wc"] if e.get("wc") is not None else e["wcr"]
+                w[2] = e["wcr"] if e.get("wcr") is not None else w[1]
+                o[1] = e.get("oc", 0)
+                o[2] = e["ocr"] if e.get("ocr") is not None else o[1]
+            coded = (w[:1] + o[:1] if fy else []) + (w[1:] + o[1:] if fc
+                                                     else [])
+            for v in coded:
+                _in_range(v, -128, 127, "prediction weight or offset")
+            row.append((int(fy), int(fc), tuple(w), tuple(o)))
+        out.append(row)
+    return {"ld": (ldy, ldc, ldc), "lists": out, "uni": True}
 
 
-def _copy_bits(r: BitReader, w: BitWriter, rbsp: bytes) -> None:
-    """Copy the remaining payload bits of an RBSP (everything after
-    r.pos up to but excluding the rbsp_stop_one_bit), then close with
-    a fresh trailing pattern."""
-    total = len(rbsp) * 8
-    last_one = None
-    for i in range(total - 1, -1, -1):
-        if (rbsp[i >> 3] >> (7 - (i & 7))) & 1:
-            last_one = i
-            break
-    if last_one is None:
-        raise ValueError("RBSP with no stop bit")
-    # bulk copy: move up to 32 bits per call instead of one
-    while r.pos < last_one:
-        n = min(32, last_one - r.pos)
-        w.u(r.u(n), n)
-    w.trailing()
+def _write_pwt(sl: BitWriter, wt: dict, nra: tuple) -> None:
+    """7.3.3.2 pred_weight_table: the first nra[X] entries of list X."""
+    sl.ue(wt["ld"][0])
+    sl.ue(wt["ld"][1])
+    for entries, n in zip(wt["lists"], nra):
+        for fy, fc, w, o in entries[:n]:
+            sl.u(fy, 1)
+            if fy:
+                sl.se(w[0])
+                sl.se(o[0])
+            sl.u(fc, 1)
+            if fc:
+                for v in (w[1], o[1], w[2], o[2]):
+                    sl.se(v)
 
 
-def _norm_p_weights(weights: dict, num_refs: int) -> dict:
-    """Normalize user P weights: luma/chroma log2 denominators plus
-    one (wy, oy, wc, oc) entry per reference index; None weight =
-    flag 0 = default (1 << denom, offset 0)."""
-    out = {
-        "luma_denom": int(weights.get("luma_denom", 0)),
-        "chroma_denom": int(weights.get("chroma_denom", 0)),
-        "refs": [],
-    }
-    user = weights.get("refs", [])
-    for ri in range(num_refs):
-        e = {"wy": None, "oy": 0, "wc": None, "oc": 0,
-             "wcr": None, "ocr": None}
-        if ri < len(user):
-            e.update(user[ri])
-        out["refs"].append(e)
-    return out
+def _parse_pwt(r: BitReader, nra: tuple) -> dict:
+    """Parse what _write_pwt writes into the _norm_weights form."""
+    den = {"luma_denom": r.ue(), "chroma_denom": r.ue()}
+    lists = []
+    for n in nra:
+        entries = []
+        for _ in range(n):
+            e = {}
+            if r.u(1):
+                e["wy"], e["oy"] = r.se(), r.se()
+            if r.u(1):
+                e["wc"], e["oc"] = r.se(), r.se()
+                e["wcr"], e["ocr"] = r.se(), r.se()
+            entries.append(e)
+        lists.append(entries)
+    return _norm_weights(den, lists)
 
 
-def _resolve_p_weights(w: dict) -> dict:
-    out = {"luma_denom": w["luma_denom"],
-           "chroma_denom": w["chroma_denom"], "refs": []}
-    for e in w["refs"]:
-        e = dict(e)
-        if e["wy"] is None:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if e["wc"] is None and e.get("wcr") is None:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-        elif e["wc"] is None:
-            # wcr-only entry: the writer emits wcb = wcr into the
-            # bitstream (chroma_weight_flag covers both planes), so the
-            # encoder-side resolver must predict Cb with wcr too.
-            e["wc"] = e["wcr"]
-        if e.get("wcr") is None:
-            e["wcr"] = e["wc"]
-        if e.get("ocr") is None:
-            e["ocr"] = e["oc"]
-        out["refs"].append(e)
-    return out
+def _bi_table(ld: int, w0: int, w1: int) -> dict:
+    """A weight table for bi-predicted partitions only (uni-predicted
+    ones stay unweighted): w0 / w1 at log2 denominator ld, offset 0."""
+    return {"ld": (ld,) * 3, "uni": False,
+            "lists": [[(1, 1, (w,) * 3, (0, 0, 0))] for w in (w0, w1)]}
 
 
-def _write_pwt_p(sl: BitWriter, w: dict, nra: int) -> None:
-    """7.3.3.2 pred_weight_table, list 0 only (P slices)."""
-    sl.ue(w["luma_denom"])
-    sl.ue(w["chroma_denom"])
-    for ri in range(nra):
-        e = w["refs"][ri]
-        if e["wy"] is not None:
-            sl.u(1, 1)
-            sl.se(e["wy"])
-            sl.se(e["oy"])
-        else:
-            sl.u(0, 1)
-        if e["wc"] is not None or e.get("wcr") is not None:
-            sl.u(1, 1)
-            wcb = e["wc"] if e["wc"] is not None else e["wcr"]
-            wcr = e.get("wcr") if e.get("wcr") is not None else wcb
-            ocr = e.get("ocr") if e.get("ocr") is not None else e["oc"]
-            sl.se(wcb)
-            sl.se(e["oc"])
-            sl.se(wcr)
-            sl.se(ocr)
-        else:
-            sl.u(0, 1)
+_DEFAULT_BI = _bi_table(0, 1, 1)  # the rounded average (p0 + p1 + 1) >> 1
 
 
-def _parse_pwt_p(r: BitReader, nra: int) -> dict:
-    w = {"luma_denom": r.ue(), "chroma_denom": r.ue(), "refs": []}
-    for _ in range(nra):
-        e = {}
-        if r.u(1):
-            e["wy"] = r.se()
-            e["oy"] = r.se()
-        else:
-            e["wy"] = 1 << w["luma_denom"]
-            e["oy"] = 0
-        if r.u(1):
-            e["wc"], e["oc"] = r.se(), r.se()
-            e["wcr"], e["ocr"] = r.se(), r.se()
-        else:
-            e["wc"] = 1 << w["chroma_denom"]
-            e["oc"] = 0
-            e["wcr"] = e["wc"]
-            e["ocr"] = 0
-        w["refs"].append(e)
-    return w
-
-
-def _write_te_ref(sl: BitWriter, v: int, nra: int) -> None:
-    """ref_idx_l0 as te(v) (9.1): range 1 -> one inverted bit,
-    range > 1 -> ue(v), range 0 -> absent."""
-    if nra == 2:
-        sl.u(1 - v, 1)
-    elif nra > 2:
-        sl.ue(v)
-
-
-def _read_te_ref(r: BitReader, nra: int) -> int:
-    if nra == 2:
-        return 1 - r.u(1)
-    if nra > 2:
-        return r.ue()
-    return 0
-
-
-def _p_slice_header(
-    sl: BitWriter, qp: int, frame_num: int = 1, num_refs_active: int = 1,
-    wtab: dict | None = None, deblock_idc: int = 1,
-    deblock_offs: tuple = (0, 0),
-) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(5)  # slice_type: P (all slices)
-    sl.ue(0)  # pic_parameter_set_id
-    sl.u(frame_num % 16, 4)  # frame_num
-    if num_refs_active != 1:
-        sl.u(1, 1)  # num_ref_idx_active_override_flag
-        sl.ue(num_refs_active - 1)
+def _implicit_weights(tb: int, td: int) -> dict:
+    """8.4.2.3.2 IMPLICIT weighted bi-prediction weights from POC
+    distances (logWD = 5, offsets 0): w1 = distScaleFactor >> 2 and
+    w0 = 64 - w1, falling back to 32/32 when the pictures share a
+    POC or the scale leaves [-64, 128]. Uni-predicted partitions are
+    unweighted in implicit mode."""
+    tb = max(-128, min(127, tb))
+    td = max(-128, min(127, td))
+    if td == 0:
+        w0 = w1 = 32
     else:
-        sl.u(0, 1)  # no override (PPS default: 1 active)
-    sl.u(0, 1)  # ref_pic_list_modification_flag_l0
-    if wtab is not None:  # PPS weighted_pred_flag: pred_weight_table
-        _write_pwt_p(sl, wtab, num_refs_active)
-    sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
-    sl.se(qp - 26)  # slice_qp_delta
-    _write_deblock_fields(sl, deblock_idc, deblock_offs)
+        tx = (16384 + abs(td) // 2) // td
+        dsf = max(-1024, min(1023, (tb * tx + 32) >> 6))
+        w1c = dsf >> 2
+        if w1c < -64 or w1c > 128:
+            w0 = w1 = 32
+        else:
+            w1, w0 = w1c, 64 - w1c
+    return {"w0": w0, "w1": w1}
 
 
-def _parse_p_slice_header(
-    r: BitReader, weighted_pred: bool = False
-) -> tuple[int, int, dict | None, int, tuple]:
-    """Returns (slice_qp, num_ref_idx_l0_active, weights-or-None,
-    disable_deblocking_filter_idc, (a_div2, b_div2))."""
-    r.ue()  # first_mb
-    stype = r.ue()
-    if stype % 5 != 0:
-        raise NotImplementedError(
-            f"slice_type {stype} in non-IDR NAL — only P slices are "
-            "implemented (B slices stay gated)"
-        )
-    r.ue()  # pps id
-    r.u(4)  # frame_num
-    nra = 1  # PPS num_ref_idx_l0_default_active_minus1 is written 0
-    if r.u(1):
-        nra = r.ue() + 1
-        if nra > 15:
-            raise ValueError(
-                f"num_ref_idx_l0_active {nra} exceeds the 4-bit "
-                "frame_num sliding window"
-            )
-    if r.u(1):
-        raise NotImplementedError("ref_pic_list_modification unsupported")
-    weights = _parse_pwt_p(r, nra) if weighted_pred else None
-    if r.u(1):
-        raise NotImplementedError("adaptive ref marking unsupported")
-    qp = 26 + r.se()
-    idc, offs = _read_deblock_fields(r)
-    return qp, nra, weights, idc, offs
+def _weigh(wt: dict, a, ea, b=None, eb=None) -> list:
+    """8.4.2.3.2 weighted sample prediction per plane: uni-prediction
+    of ``a`` with table entry ``ea``, or bi-prediction of ``a`` and
+    ``b`` with entries ``ea`` and ``eb``."""
+    out = []
+    for pi, ld in enumerate(wt["ld"]):
+        if b is None:
+            v = ((a[pi] * ea[2][pi] + ((1 << ld) >> 1)) >> ld) + ea[3][pi]
+        else:
+            v = (((a[pi] * ea[2][pi] + b[pi] * eb[2][pi] + (1 << ld))
+                  >> (ld + 1)) + ((ea[3][pi] + eb[3][pi] + 1) >> 1))
+        out.append(np.clip(v, 0, 255))
+    return out
 
 
 # ---------------------------------------------------------------------------
-# P-frame encoder
+# Partition prediction and residual (shared with h264_cabac_inter)
 # ---------------------------------------------------------------------------
 
 
 def _mv_ref(entry) -> tuple[np.ndarray, int]:
-    """Normalize a partition spec entry: either a bare (mvx, mvy)
+    """Normalize a P partition spec entry: either a bare (mvx, mvy)
     pair (refIdx 0) or ((mvx, mvy), ref_idx)."""
     if (
         isinstance(entry, (tuple, list))
@@ -697,9 +634,6 @@ def _mv_ref(entry) -> tuple[np.ndarray, int]:
     ):
         return np.asarray(entry[0], np.int64), int(entry[1])
     return np.asarray(entry, np.int64), 0
-
-
-# --- shared per-macroblock machinery (used by the B-slice module too) --------
 
 
 def _edge_pad(a: np.ndarray, p: int) -> np.ndarray:
@@ -727,56 +661,49 @@ def _pad_refs(refs: list) -> list:
     ]
 
 
-def _mc_mb(padded: list, mx: int, my: int, placed: list,
-           weights: dict | None = None):
-    """Motion-compensate one MB from (ox4, oy4, w4, h4, mv, ref)
-    placements (4x4-unit offsets within the MB; ref indexes
-    ``padded``). With ``weights`` (a resolved P pred_weight_table),
-    each partition is explicitly weighted by ITS reference's
-    weight/offset per 8.4.2.3.2 uni-prediction. Returns
-    (pred_y16, pred_cb8, pred_cr8)."""
-    py = np.zeros((16, 16), np.int64)
-    pcb = np.zeros((8, 8), np.int64)
-    pcr = np.zeros((8, 8), np.int64)
-    for ox4, oy4, w4, h4, mv, ref in placed:
-        ref_y, ref_cb, ref_cr = padded[ref]
-        lx, ly = mx * 16 + ox4 * 4, my * 16 + oy4 * 4
-        lb = interp_luma(
-            ref_y, ly + _PAD, lx + _PAD, h4 * 4, w4 * 4,
-            int(mv[0]), int(mv[1]),
-        )
-        cx, cy = mx * 8 + ox4 * 2, my * 8 + oy4 * 2
-        cb_b = interp_chroma(
-            ref_cb, cy + _PAD // 2, cx + _PAD // 2,
-            h4 * 2, w4 * 2, int(mv[0]), int(mv[1]),
-        )
-        cr_b = interp_chroma(
-            ref_cr, cy + _PAD // 2, cx + _PAD // 2,
-            h4 * 2, w4 * 2, int(mv[0]), int(mv[1]),
-        )
-        if weights is not None:
-            e = weights["refs"][ref]
-            ldy = weights["luma_denom"]
-            ldc = weights["chroma_denom"]
-            if ldy >= 1:
-                lb = ((lb * e["wy"] + (1 << (ldy - 1))) >> ldy) + e["oy"]
-            else:
-                lb = lb * e["wy"] + e["oy"]
-            wcr = e.get("wcr", e["wc"])
-            ocr = e.get("ocr", e["oc"])
-            if ldc >= 1:
-                cb_b = ((cb_b * e["wc"] + (1 << (ldc - 1))) >> ldc) + e["oc"]
-                cr_b = ((cr_b * wcr + (1 << (ldc - 1))) >> ldc) + ocr
-            else:
-                cb_b = cb_b * e["wc"] + e["oc"]
-                cr_b = cr_b * wcr + ocr
-            lb = np.clip(lb, 0, 255)
-            cb_b = np.clip(cb_b, 0, 255)
-            cr_b = np.clip(cr_b, 0, 255)
-        py[oy4 * 4 : oy4 * 4 + h4 * 4, ox4 * 4 : ox4 * 4 + w4 * 4] = lb
-        pcb[oy4 * 2 : oy4 * 2 + h4 * 2, ox4 * 2 : ox4 * 2 + w4 * 2] = cb_b
-        pcr[oy4 * 2 : oy4 * 2 + h4 * 2, ox4 * 2 : ox4 * 2 + w4 * 2] = cr_b
-    return py, pcb, pcr
+def _interp_part(ref, mx: int, my: int, ox4: int, oy4: int, w4: int,
+                 h4: int, mv) -> tuple:
+    """(luma, cb, cr) prediction of the (ox4, oy4, w4, h4) box of MB
+    (mx, my) from edge-padded reference planes at quarter-pel ``mv``."""
+    mvx, mvy = int(mv[0]), int(mv[1])
+    ly, lx = my * 16 + oy4 * 4 + _PAD, mx * 16 + ox4 * 4 + _PAD
+    cy, cx = my * 8 + oy4 * 2 + _PAD // 2, mx * 8 + ox4 * 2 + _PAD // 2
+    return (
+        interp_luma(ref[0], ly, lx, h4 * 4, w4 * 4, mvx, mvy),
+        interp_chroma(ref[1], cy, cx, h4 * 2, w4 * 2, mvx, mvy),
+        interp_chroma(ref[2], cy, cx, h4 * 2, w4 * 2, mvx, mvy),
+    )
+
+
+def _mc_mb(pads: list, mx: int, my: int, placed: list, wt=None):
+    """Inter prediction of MB (mx, my) (8.4.2) from (ox4, oy4, w4, h4,
+    mv0, ref0, mv1, ref1) partitions: a 4x4-unit box in the MB and,
+    per list, a quarter-pel MV (None when the partition does not use
+    the list) and a refIdx into ``pads[list]`` (edge-padded reference
+    planes). A bi-predicted partition is combined with the weight
+    table ``wt`` (None: the rounded average); a uni-predicted one is
+    weighted only by an explicit table. Returns (pred_y16, pred_cb8,
+    pred_cr8)."""
+    pred = (np.empty((16, 16), np.int64), np.empty((8, 8), np.int64),
+            np.empty((8, 8), np.int64))
+    for ox4, oy4, w4, h4, mv0, ref0, mv1, ref1 in placed:
+        if mv0 is None or mv1 is None:
+            li, mv, ref = (0, mv0, ref0) if mv1 is None else (1, mv1, ref1)
+            p = _interp_part(pads[li][ref], mx, my, ox4, oy4, w4, h4, mv)
+            if wt is not None and wt["uni"]:
+                p = _weigh(wt, p, wt["lists"][li][ref])
+        else:
+            wb = wt or _DEFAULT_BI
+            p = _weigh(
+                wb,
+                _interp_part(pads[0][ref0], mx, my, ox4, oy4, w4, h4, mv0),
+                wb["lists"][0][ref0],
+                _interp_part(pads[1][ref1], mx, my, ox4, oy4, w4, h4, mv1),
+                wb["lists"][1][ref1],
+            )
+        for plane, blk, s in zip(pred, p, (4, 2, 2)):
+            plane[oy4 * s : (oy4 + h4) * s, ox4 * s : (ox4 + w4) * s] = blk
+    return pred
 
 
 def _residual_from_target(targets, mx, my, py, pcb, pcr, qp, qpc):
@@ -824,203 +751,694 @@ def _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
     )
 
 
-def _encode_p_frame(
-    target: tuple[np.ndarray, np.ndarray, np.ndarray],
-    refs: list,
-    mb_specs: list,
-    qp: int,
-    frame_num: int,
-    nra: int,
-    wtab: dict | None = None,
-    deblock_idc: int = 1,
-    deblock_offs: tuple = (0, 0),
-) -> tuple[bytes, tuple, dict]:
-    """Encode one CAVLC P slice against the decoded reference list
-    (most recent first). Returns (slice_rbsp, recon_planes,
-    motion_field) — the motion field feeds spatial-direct colocated
-    lookups in the B-slice module."""
-    h, w = target[0].shape
-    mbw, mbh = w // 16, h // 16
-    padded = _pad_refs(refs)
-    qpc = _chroma_qp(qp)
-    g = _MbGrid(mbw, mbh)
-    ry, rcb, rcr = recons = g.recon
-    luma_nnz, cnnz = g.nnz, g.cnnz
-    mvs = _MvState(mbw, mbh)
-    pweights = _resolve_p_weights(wtab) if wtab is not None else None
+# ---------------------------------------------------------------------------
+# B direct-mode motion (8.4.1.2)
+# ---------------------------------------------------------------------------
 
-    sl = BitWriter()
-    _p_slice_header(sl, qp, frame_num, nra, wtab, deblock_idc,
-                    deblock_offs)
-    skip_run = 0
 
-    for my in range(mbh):
-        for mx in range(mbw):
-            spec = mb_specs[my * mbw + mx]
-            kind = spec[0]
-            if kind == "skip":
-                mv = mvs.skip_mv(mx, my)
-                py, pcb, pcr = _mc_mb(
-                    padded, mx, my, [(0, 0, 4, 4, mv, 0)], pweights
-                )
-                ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
-                    np.clip(py, 0, 255)
-                )
-                rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
-                    pcb, 0, 255
-                )
-                rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
-                    pcr, 0, 255
-                )
-                mvs.fill(mx * 4, my * 4, 4, 4, mv, 0)
-                luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
-                for pi in (0, 1):
-                    cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-                skip_run += 1
+def _intra_motion(mbw: int, mbh: int) -> dict:
+    """Motion field of an all-intra picture (the IDR anchor)."""
+    return {
+        "mv": np.zeros((mbh * 4, mbw * 4, 2), np.int64),
+        "ref": np.full((mbh * 4, mbw * 4), -1, np.int64),
+        "inter": np.zeros((mbh * 4, mbw * 4), bool),
+    }
+
+
+def _min_positive_ref(state, mx, my):
+    """MinPositive of the MB neighbors' refIdx for one list
+    (8.4.1.2.2): the minimum non-negative neighbor refIdx, or -1
+    when no neighbor predicts from the list."""
+    gx, gy = mx * 4, my * 4
+    a = state._info(gy, gx - 1)
+    b = state._info(gy - 1, gx)
+    c = state._info(gy - 1, gx + 4)
+    if c is None:
+        c = state._info(gy - 1, gx - 1)
+    pos = [n[1] for n in (a, b, c) if n is not None and n[1] >= 0]
+    return min(pos) if pos else -1
+
+
+def _spatial_direct(mvs0, mvs1, mx, my, col):
+    """8.4.1.2.2 spatial direct luma motion for one macroblock at
+    8x8 granularity (direct_8x8_inference_flag = 1: each 8x8 uses
+    the colocated CORNER 4x4 of the macroblock). ``col`` is the
+    RefPicList1[0] picture's exported motion field (all pictures
+    here are short-term). Returns (ref0, ref1,
+    [(mv0, mv1) per 8x8]) with refIdx -1 meaning predFlagLX = 0."""
+    ref0 = _min_positive_ref(mvs0, mx, my)
+    ref1 = _min_positive_ref(mvs1, mx, my)
+    if ref0 < 0 and ref1 < 0:  # directZeroPredictionFlag
+        zero = np.zeros(2, np.int64)
+        return 0, 0, [(zero, zero)] * 4
+    mvp0 = (mvs0.predict(mx * 4, my * 4, 4, ref0)
+            if ref0 >= 0 else np.zeros(2, np.int64))
+    mvp1 = (mvs1.predict(mx * 4, my * 4, 4, ref1)
+            if ref1 >= 0 else np.zeros(2, np.int64))
+    out = []
+    for k in range(4):
+        # colocated corner 4x4 of this 8x8 (outer MB corner)
+        cgx = mx * 4 + (k & 1) * 3
+        cgy = my * 4 + (k >> 1) * 3
+        col_inter = bool(col["inter"][cgy, cgx])
+        col_zero = (
+            col_inter
+            and int(col["ref"][cgy, cgx]) == 0
+            and abs(int(col["mv"][cgy, cgx, 0])) <= 1
+            and abs(int(col["mv"][cgy, cgx, 1])) <= 1
+        )
+        m0 = (np.zeros(2, np.int64)
+              if (ref0 == 0 and col_zero) else mvp0.copy())
+        m1 = (np.zeros(2, np.int64)
+              if (ref1 == 0 and col_zero) else mvp1.copy())
+        out.append((m0, m1))
+    return ref0, ref1, out
+
+
+def _temporal_direct(mx, my, col, tb, td):
+    """8.4.1.2.3 temporal direct luma motion at 8x8 granularity:
+    scale the colocated block's motion by the POC distances
+    (tb = POCcur - POC(list0 ref), td = POC(list1 ref) -
+    POC(list0 ref), both clipped to [-128, 127]); an intra colocated
+    block contributes zero motion. Both lists predict (refIdx 0)."""
+    tb = max(-128, min(127, tb))
+    td = max(-128, min(127, td))
+    tx = (16384 + abs(td) // 2) // td
+    dsf = max(-1024, min(1023, (tb * tx + 32) >> 6))
+    out = []
+    for k in range(4):
+        cgx = mx * 4 + (k & 1) * 3
+        cgy = my * 4 + (k >> 1) * 3
+        if col["inter"][cgy, cgx]:
+            mvcol = col["mv"][cgy, cgx].astype(np.int64)
+        else:
+            mvcol = np.zeros(2, np.int64)
+        m0 = (dsf * mvcol + 128) >> 8
+        m1 = m0 - mvcol
+        out.append((m0, m1))
+    return out
+
+
+# ---------------------------------------------------------------------------
+# The inter macroblock layer
+# ---------------------------------------------------------------------------
+
+
+class _Part:
+    """One inter partition or 8x8 sub-macroblock: its 4x4-unit box in
+    the MB, the boxes inside it that carry one MV each, the lists it
+    predicts from, its refIdx and MVs per list, and whether its
+    motion is coded (False: derived by skip or direct mode)."""
+
+    __slots__ = ("box", "subs", "lists", "ref", "mv", "coded")
+
+    def __init__(self, box, subs, lists, ref=None, mv=None, coded=True):
+        self.box, self.subs, self.lists = box, subs, lists
+        self.ref = ref if ref is not None else [0, 0]
+        self.mv = mv if mv is not None else [None, None]
+        self.coded = coded
+
+
+class _Put:
+    """The encoder side of the motion syntax: writes each ref_idx as
+    te(v) (9.1: one inverted bit at range 1, ue(v) above) and each mvd
+    against the predictor, passing the known values through."""
+
+    def __init__(self, sl: BitWriter) -> None:
+        self.sl = sl
+
+    def ref(self, v: int, n: int) -> int:
+        if n == 2:
+            self.sl.u(1 - v, 1)
+        else:
+            self.sl.ue(v)
+        return v
+
+    def mv(self, pred, mv):
+        self.sl.se(int(mv[0] - pred[0]))
+        self.sl.se(int(mv[1] - pred[1]))
+        return mv
+
+
+class _Get:
+    """The decoder side of the motion syntax: reads what _Put writes."""
+
+    def __init__(self, r: BitReader) -> None:
+        self.r = r
+
+    def ref(self, v: int, n: int) -> int:
+        v = 1 - self.r.u(1) if n == 2 else self.r.ue()
+        if v >= n:
+            raise ValueError(f"ref_idx {v} out of range ({n} active)")
+        return v
+
+    def mv(self, pred, mv):
+        mvx = pred[0] + self.r.se()
+        return np.array([mvx, pred[1] + self.r.se()], np.int64)
+
+
+def _spec_mvs(use: str, mvl: list) -> list:
+    """Per-list MV lists of a partition from its spec MVs (one (mv0,
+    mv1) pair each for bi); None for a list it does not use."""
+    lists = _LISTS[use]
+    return [
+        [np.asarray(m[li] if len(lists) == 2 else m, np.int64)
+         for m in mvl] if li in lists else None
+        for li in (0, 1)
+    ]
+
+
+class _InterSlice:
+    """Per-slice state of the inter layer, the same for the encoder
+    and the decoder: the slice kind and QP, the edge-padded reference
+    pictures and active counts per list, the prediction weights, the
+    direct-mode inputs of a B slice, the macroblock grid and one
+    motion field per list."""
+
+    def __init__(self, kind, mbw, mbh, qp, lists, poc=0, wt=None,
+                 implicit=False, spatial=True):
+        """``lists`` holds per reference list the DPB entries (poc,
+        planes, motion) it indexes; ``wt`` is an explicit weight
+        table, ``implicit`` selects POC-derived bi weights."""
+        self.kind, self.qp, self.wt = kind, qp, wt
+        self.pads = [_pad_refs([e[1] for e in es]) for es in lists]
+        self.nra = tuple(len(es) for es in lists)
+        self.pics = [es[0][0] for es in lists]
+        self.g = _MbGrid(mbw, mbh)
+        self.mvs = [_MvState(mbw, mbh) for _ in lists]
+        if kind is _B:
+            p0, p1 = self.pics
+            self.tbtd = (poc - p0, p1 - p0)
+            self.col = lists[1][0][2]
+            self.spatial = spatial
+            if implicit:
+                w = _implicit_weights(*self.tbtd)
+                self.wt = _bi_table(5, w["w0"], w["w1"])
+
+    def direct_parts(self, mx, my) -> list:
+        """The four 8x8 direct parts of a B macroblock, derived once
+        from the MB neighbors (every read falls outside the MB)."""
+        if self.spatial:
+            r0, r1, pairs = _spatial_direct(*self.mvs, mx, my, self.col)
+        else:
+            r0 = r1 = 0
+            pairs = _temporal_direct(mx, my, self.col, *self.tbtd)
+        lists = tuple(li for li, rf in enumerate((r0, r1)) if rf >= 0)
+        parts = []
+        for k, (m0, m1) in enumerate(pairs):
+            box = ((k & 1) * 2, (k >> 1) * 2, 2, 2)
+            parts.append(_Part(box, [box], lists, [r0, r1], [[m0], [m1]],
+                               coded=False))
+        return parts
+
+    def sub_parts(self, subs, mx, my) -> list:
+        """The four parts of a P_8x8 / B_8x8 MB from (list use,
+        sub-partition) per 8x8, direct ones derived."""
+        direct = None
+        parts = []
+        for k, (use, sm) in enumerate(subs):
+            if use == "direct":
+                direct = direct or self.direct_parts(mx, my)
+                parts.append(direct[k])
                 continue
-            if kind in ("i16", "i4", "ipcm"):
-                sl.ue(skip_run)
-                skip_run = 0
-                _encode_intra_mb(sl, g, target, spec, mx, my, qp, 5)
-                mvs.mark_intra(mx, my)
-                continue
-            if kind == "8x8":
-                subs = spec[1]
-                if len(subs) != 4:
-                    raise ValueError("P_8x8 needs four sub-MB specs")
-                submodes, subrefs, submvs = [], [], []
-                for entry in subs:
-                    if len(entry) == 2:
-                        sm, mvl = entry
-                        rf = 0
-                    else:
-                        sm, mvl, rf = entry
-                    if sm not in _SUBPARTS:
-                        raise ValueError(f"bad sub_mb_type {sm!r}")
-                    if len(mvl) != len(_SUBPARTS[sm]):
-                        raise ValueError("one MV per sub-partition")
-                    if not 0 <= rf < nra:
-                        raise ValueError(f"ref_idx {rf} out of range")
-                    submodes.append(sm)
-                    subrefs.append(rf)
-                    submvs.append([np.asarray(m, np.int64) for m in mvl])
-                sl.ue(skip_run)
-                skip_run = 0
-                sl.ue(3)  # P_8x8
-                for sm in submodes:
-                    sl.ue(_SUB_TYPE[sm])
-                if nra >= 2:
-                    for rf in subrefs:
-                        _write_te_ref(sl, rf, nra)  # ref_idx_l0
-                placed = []
-                for k in range(4):
-                    ox8, oy8 = (k & 1) * 2, (k >> 1) * 2
-                    for (sx4, sy4, w4, h4), mv in zip(
-                        _SUBPARTS[submodes[k]], submvs[k]
-                    ):
-                        gx, gy = mx * 4 + ox8 + sx4, my * 4 + oy8 + sy4
-                        pred_mv = mvs.predict(gx, gy, w4, subrefs[k])
-                        sl.se(int(mv[0] - pred_mv[0]))
-                        sl.se(int(mv[1] - pred_mv[1]))
-                        mvs.fill(gx, gy, w4, h4, mv, subrefs[k])
-                        placed.append(
-                            (ox8 + sx4, oy8 + sy4, w4, h4, mv, subrefs[k])
-                        )
-                py, pcb, pcr = _mc_mb(padded, mx, my, placed, pweights)
-                cbp, zl, cdcz, cacz = _residual_from_target(
-                    target, mx, my, py, pcb, pcr, qp, qpc
-                )
-                _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
-                                 _CBP_INTER_INV)
-                _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
-                                zl, cdcz, cacz, qp, qpc)
-                continue
-            mode = kind
-            if mode not in _PARTS:
+            ox8, oy8 = (k & 1) * 2, (k >> 1) * 2
+            parts.append(_Part(
+                (ox8, oy8, 2, 2),
+                [(ox8 + sx, oy8 + sy, w4, h4)
+                 for sx, sy, w4, h4 in _SUBPARTS[sm]],
+                _LISTS[use],
+            ))
+        return parts
+
+    def spec_parts(self, spec, mx, my):
+        """Validate a coded inter mb_spec; returns (mb_type,
+        sub_mb_types, partition mode, parts)."""
+        kind, mode = self.kind, spec[0]
+        if mode == "direct" and kind is _B:  # B_Direct_16x16
+            return 0, [], "16x16", self.direct_parts(mx, my)
+        if mode == "8x8":
+            if len(spec[1]) != 4:
+                raise ValueError(f"{kind.name}_8x8 needs four sub-MB specs")
+            subs = []
+            for e in spec[1]:
+                if kind is _P:  # (sub_mode, [mv, ...][, ref])
+                    e = ("l0",) + tuple(e) + ((0,) if len(e) == 2 else ())
+                elif e[0] == "direct":
+                    e = ("direct", "8x8", [], 0)
+                else:  # (use, sub_mode, [mv | (mv0, mv1), ...])
+                    e = tuple(e) + (0,)
+                if e[:2] not in kind.sub_types:
+                    raise ValueError(
+                        f"bad {kind.name} sub_mb spec ({e[0]!r}, {e[1]!r})")
+                if e[0] != "direct" and len(e[2]) != len(_SUBPARTS[e[1]]):
+                    raise ValueError("one MV (or bi pair) per sub-partition")
+                subs.append(e)
+            parts = self.sub_parts([e[:2] for e in subs], mx, my)
+            for p, (use, _, mvl, ref) in zip(parts, subs):
+                if p.coded:
+                    p.mv, p.ref[0] = _spec_mvs(use, mvl), self._ref(ref)
+            return (kind.mb8x8, [kind.sub_types[e[:2]] for e in subs],
+                    "8x8", parts)
+        if mode not in _PARTS:
+            if kind is _P:
                 raise NotImplementedError(
-                    f"P macroblock mode {mode!r} — B slices and "
-                    "I_4x4/I_PCM inside P slices stay gated"
-                )
-            entries = spec[1]
-            if len(entries) != len(_PARTS[mode]):
-                raise ValueError("one MV per partition required")
-            parts = [_mv_ref(e) for e in entries]
-            for _, rf in parts:
-                if not 0 <= rf < nra:
-                    raise ValueError(f"ref_idx {rf} out of range")
-            sl.ue(skip_run)
-            skip_run = 0
-            sl.ue(_MB_TYPE[mode])
-            if nra >= 2:
-                for _, rf in parts:
-                    _write_te_ref(sl, rf, nra)  # ref_idx_l0
-            placed = []
-            for pidx, ((ox4, oy4, w4, h4), (mv, rf)) in enumerate(
-                zip(_PARTS[mode], parts)
-            ):
-                pred_mv = mvs.pred_for_partition(
-                    mode, pidx, mx * 4 + ox4, my * 4 + oy4, w4, rf
-                )
-                sl.se(int(mv[0] - pred_mv[0]))
-                sl.se(int(mv[1] - pred_mv[1]))
-                mvs.fill(mx * 4 + ox4, my * 4 + oy4, w4, h4, mv, rf)
-                placed.append((ox4, oy4, w4, h4, mv, rf))
-            py, pcb, pcr = _mc_mb(padded, mx, my, placed, pweights)
-            cbp, zl, cdcz, cacz = _residual_from_target(
-                target, mx, my, py, pcb, pcr, qp, qpc
-            )
-            _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz,
-                             _CBP_INTER_INV)
-            _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
-                            zl, cdcz, cacz, qp, qpc)
-    if skip_run:
-        sl.ue(skip_run)  # trailing skipped macroblocks
-    sl.trailing()
-    recon = (
-        ry.astype(np.uint8),
-        rcb.astype(np.uint8),
-        rcr.astype(np.uint8),
-    )
-    motion = mvs.export()
-    motion["nnz"] = luma_nnz.copy()
-    return sl.bytes_(), recon, motion
+                    f"P macroblock mode {mode!r} — list-1, bi and direct "
+                    "prediction need B slices")
+            raise ValueError(f"unknown B macroblock mode {mode!r}")
+        if len(spec[1]) != len(_PARTS[mode]):
+            raise ValueError("one MV or partition spec per partition")
+        parts, uses = [], []
+        for box, e in zip(_PARTS[mode], spec[1]):
+            if kind is _P:  # mv | (mv, ref)
+                mv, ref = _mv_ref(e)
+                use, mvl = "l0", [mv]
+            else:  # ("l0", mv) | ("l1", mv) | ("bi", mv0, mv1)
+                use, ref = e[0], 0
+                if use not in _LISTS:
+                    raise ValueError(f"bad B partition use {use!r}")
+                mvl = [e[1:] if use == "bi" else e[1]]
+            parts.append(_Part(box, [box], _LISTS[use],
+                               [self._ref(ref), 0], _spec_mvs(use, mvl)))
+            uses.append(use)
+        return kind.types[(mode, tuple(uses))], [], mode, parts
+
+    def _ref(self, ref: int) -> int:
+        if not 0 <= ref < self.nra[0]:
+            raise ValueError(f"ref_idx {ref} out of range")
+        return ref
+
+    def read_parts(self, r: BitReader, mb_type: int, mx, my):
+        """(partition mode, parts, active refs per list) of a coded
+        inter MB from its mb_type, reading the sub_mb_types of an 8x8
+        one."""
+        kind = self.kind
+        if mb_type in kind.uses:
+            mode, uses = kind.uses[mb_type]
+            return mode, [_Part(box, [box], _LISTS[u])
+                          for box, u in zip(_PARTS[mode], uses)], self.nra
+        if mb_type < kind.mb8x8:  # B_Direct_16x16
+            return "16x16", self.direct_parts(mx, my), self.nra
+        subs = []
+        for _ in range(4):
+            st = r.ue()
+            if st not in kind.sub_uses:
+                raise ValueError(f"bad sub_mb_type {st} in a {kind.name} "
+                                 "slice")
+            subs.append(kind.sub_uses[st])
+        # P_8x8ref0 (mb_type 4) codes no ref_idx: every refIdx is 0
+        return ("8x8", self.sub_parts(subs, mx, my),
+                (1,) if mb_type == 4 else self.nra)
+
+    def motion(self, io, mx, my, mode, parts, nra=None) -> None:
+        """The motion syntax of one MB (7.3.5.1 / 7.3.5.2) in its
+        order — ref_idx_l0 of every part, then ref_idx_l1, then
+        mvd_l0 of every (sub-)partition, then mvd_l1 — with each MV
+        predicted (8.4.1.3) and stored as it is coded. ``io`` is a
+        _Put (encoder) or a _Get (decoder); derived parts code
+        nothing."""
+        for li, n in enumerate(nra or self.nra):
+            if n > 1:
+                for p in parts:
+                    if p.coded and li in p.lists:
+                        p.ref[li] = io.ref(p.ref[li], n)
+        for li, mvs in enumerate(self.mvs):
+            for pidx, p in enumerate(parts):
+                ox4, oy4, w4, h4 = p.box
+                if li not in p.lists:  # predFlagLX = 0
+                    mvs.mark_off(mx * 4 + ox4, my * 4 + oy4, w4, h4)
+                    continue
+                mvl = p.mv[li]
+                if mvl is None:
+                    mvl = p.mv[li] = [None] * len(p.subs)
+                for si, (sx4, sy4, sw4, sh4) in enumerate(p.subs):
+                    gx, gy = mx * 4 + sx4, my * 4 + sy4
+                    if p.coded:
+                        pred = mvs.pred_for_partition(
+                            mode, pidx, gx, gy, sw4, p.ref[li])
+                        mvl[si] = io.mv(pred, mvl[si])
+                    mvs.fill(gx, gy, sw4, sh4, mvl[si], p.ref[li])
+
+    def predict(self, mx, my, parts):
+        """Inter prediction of MB (mx, my) from its coded or derived
+        parts, one _mc_mb call per MB."""
+        placed = []
+        for p in parts:
+            m0, m1 = (p.mv[li] if li in p.lists else None for li in (0, 1))
+            for si, box in enumerate(p.subs):
+                placed.append(box + (None if m0 is None else m0[si],
+                                     p.ref[0],
+                                     None if m1 is None else m1[si],
+                                     p.ref[1]))
+        return _mc_mb(self.pads, mx, my, placed, self.wt)
+
+    def skip(self, mx, my) -> None:
+        """P_Skip / B_Skip (a macroblock in an mb_skip_run): derived
+        motion, the prediction stored as the reconstruction."""
+        if self.kind is _P:
+            box = (0, 0, 4, 4)
+            parts = [_Part(box, [box], (0,), [0, 0],
+                           [[self.mvs[0].skip_mv(mx, my)], None],
+                           coded=False)]
+        else:
+            parts = self.direct_parts(mx, my)
+        self.motion(None, mx, my, "16x16", parts)
+        g = self.g
+        for plane, blk, s in zip(g.recon, self.predict(mx, my, parts),
+                                 (16, 8, 8)):
+            plane[my * s : my * s + s, mx * s : mx * s + s] = blk
+        g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
+        for cnnz in g.cnnz:
+            cnnz[my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
+
+    def mark_intra(self, mx, my) -> None:
+        for mvs in self.mvs:
+            mvs.mark_intra(mx, my)
+
+    def finish(self, deblock):
+        """The picture as uint8 planes, loop-filtered as ``deblock`` =
+        (idc, offsets) says, and the single-list motion a later B
+        picture's direct modes read when this one is a reference
+        (8.4.1.2: a colocated block's L0 motion when it has any, else
+        its L1 motion)."""
+        g, m = self.g, self.mvs
+        mbh, mbw = g.nnz.shape[0] // 4, g.nnz.shape[1] // 4
+        pf0 = m[0].inter
+        if self.kind is _P:
+            col = {"inter": pf0, "mv": m[0].mv, "ref": m[0].ref}
+
+            def info():
+                return make_block_info(mbw, mbh, inter=pf0, nnz=g.nnz,
+                                       mv=m[0].mv, ref=m[0].ref)
+        else:
+            pf1 = m[1].inter
+            col = {"inter": pf0 | pf1,
+                   "mv": np.where(pf0[..., None], m[0].mv, m[1].mv),
+                   "ref": np.where(pf0, m[0].ref, m[1].ref)}
+
+            def info():
+                return make_block_info_b(
+                    mbw, mbh, inter=pf0 | pf1, nnz=g.nnz, mv0=m[0].mv,
+                    mv1=m[1].mv, pf0=pf0, pf1=pf1, pic0=self.pics[0],
+                    pic1=self.pics[1])
+        frame = tuple(p.astype(np.uint8) for p in g.recon)
+        return _loop_filter(frame, self.qp, deblock, info), col
+
+
+# ---------------------------------------------------------------------------
+# Slice header, reference lists, in-loop filter
+# ---------------------------------------------------------------------------
+
+
+def _inter_slice_header(
+    sl: BitWriter, kind: _Kind, qp: int, frame_num: int,
+    poc_bits: int = 0, poc: int = 0, nra: tuple | None = None,
+    wt: dict | None = None, spatial: bool = True, is_ref: bool = True,
+    deblock: tuple = (1, (0, 0)),
+) -> None:
+    """Header of a non-IDR P or B slice (7.3.3), one slice per
+    picture: ``poc_bits`` > 0 writes pic_order_cnt_lsb (POC type 0);
+    ``nra`` is the active reference count per list (the PPS default is
+    one each); ``wt`` the pred_weight_table when the PPS enables
+    explicit weights for this kind; ``spatial`` the B
+    direct_spatial_mv_pred_flag; ``is_ref`` writes dec_ref_pic_marking
+    (nal_ref_idc != 0); ``deblock`` = (idc, offsets)."""
+    nra = nra or (1,) * kind.nlists
+    sl.ue(0)  # first_mb_in_slice
+    sl.ue(kind.stype)  # slice_type (all slices of the picture)
+    sl.ue(0)  # pic_parameter_set_id
+    sl.u(frame_num % 16, 4)  # frame_num
+    if poc_bits:
+        sl.u(poc % (1 << poc_bits), poc_bits)  # pic_order_cnt_lsb
+    if kind is _B:
+        sl.u(int(spatial), 1)  # direct_spatial_mv_pred_flag
+    override = any(n != 1 for n in nra)
+    sl.u(int(override), 1)  # num_ref_idx_active_override_flag
+    if override:
+        for n in nra:
+            sl.ue(n - 1)  # num_ref_idx_lX_active_minus1
+    for _ in nra:
+        sl.u(0, 1)  # ref_pic_list_modification_flag_lX
+    if wt is not None:
+        _write_pwt(sl, wt, nra)
+    if is_ref:
+        sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
+    sl.se(qp - 26)  # slice_qp_delta
+    _write_deblock_fields(sl, *deblock)
+
+
+def _parse_inter_header(r: BitReader, sps: dict, pps: dict, is_ref: bool):
+    """Parse what _inter_slice_header writes. Returns (kind, qp, poc
+    (None unless POC type 0), nra, weight table or None, spatial,
+    (idc, offsets)); the reader is left at the first macroblock."""
+    if r.ue() != 0:
+        raise ValueError("multi-slice pictures unsupported")
+    stype = r.ue()
+    kind = {0: _P, 1: _B}.get(stype % 5) if stype <= 9 else None
+    if kind is None:
+        raise NotImplementedError(
+            f"slice_type {stype} in a non-IDR NAL — only P and B slices "
+            "decode")
+    r.ue()  # pic_parameter_set_id
+    r.u(sps["log2_mfn"])  # frame_num
+    poc = r.u(sps["log2_poc"]) if sps["poc_type"] == 0 else None
+    if kind is _B and poc is None:
+        raise ValueError("B slices need pic_order_cnt_type 0")
+    spatial = bool(r.u(1)) if kind is _B else True
+    nra = pps["nra"][: kind.nlists]
+    if r.u(1):  # num_ref_idx_active_override_flag
+        nra = tuple(r.ue() + 1 for _ in range(kind.nlists))
+    if nra[0] > 15:
+        raise ValueError(f"num_ref_idx_l0_active {nra[0]} exceeds the "
+                         "4-bit frame_num sliding window")
+    if kind is _B and nra != (1, 1):
+        raise NotImplementedError(
+            "one active reference per list is implemented for B slices")
+    for _ in nra:
+        if r.u(1):
+            raise NotImplementedError("ref_pic_list_modification unsupported")
+    explicit = pps["weighted_pred"] if kind is _P else pps["bipred_idc"] == 1
+    wt = _parse_pwt(r, nra) if explicit else None
+    if is_ref and r.u(1):
+        raise NotImplementedError("adaptive ref marking unsupported")
+    qp = 26 + r.se()
+    if not 0 <= qp <= 51:
+        raise ValueError(f"slice QP {qp} out of range")
+    deblock = _read_deblock_fields(r) if pps["deblock_present"] else (
+        1, (0, 0))
+    return kind, qp, poc, nra, wt, spatial, deblock
+
+
+def _ref_lists(kind: _Kind, dpb: list, poc, nra: tuple) -> list:
+    """RefPicList0/1 as DPB entries (poc, planes, motion), the DPB
+    newest decoded first: a P slice takes the nra newest pictures
+    (8.2.4.2.1); a B slice the nearest past picture by POC in list 0
+    and the nearest future one in list 1 (8.2.4.2.3)."""
+    if kind is _P:
+        if nra[0] > len(dpb):
+            raise ValueError(
+                f"{nra[0]} active references but only {len(dpb)} decoded")
+        return [dpb[: nra[0]]]
+    past = [e for e in dpb if e[0] < poc]
+    future = [e for e in dpb if e[0] > poc]
+    if not past or not future:
+        raise ValueError(
+            "a B slice needs one past and one future reference in the DPB")
+    return [[max(past, key=lambda e: e[0])],
+            [min(future, key=lambda e: e[0])]]
+
+
+def _loop_filter(frame, qp: int, deblock: tuple, info=None):
+    """In-loop deblocking (8.7) of a picture as its slice header's
+    (idc, (alpha_div2, beta_div2)) say; ``info`` builds the per-4x4
+    block info (None: all intra). idc 2 equals idc 0 for single-slice
+    pictures (no slice-boundary edges to exclude)."""
+    idc, offs = deblock
+    if idc == 1:
+        return frame
+    return deblock_frame(*frame, qp, info and info(),
+                         alpha_off=2 * offs[0], beta_off=2 * offs[1])
+
+
+def _deblock_arg(deblock, offsets) -> tuple:
+    """The encoders' deblock argument as header fields: False -> idc 1
+    (off), True -> idc 0, 2 -> idc 2."""
+    return (1 if not deblock else 2 if deblock == 2 else 0), offsets
+
+
+# ---------------------------------------------------------------------------
+# Pictures and streams
+# ---------------------------------------------------------------------------
 
 
 def _encode_idr(planes, qp: int, poc_bits: int, deblock: tuple):
     """The IDR anchor of a GOP or B stream: Intra_16x16 DC through the
     shared intra slice loop under a header with the deblocking-control
     fields (and a zero pic_order_cnt_lsb of ``poc_bits`` bits, if
-    any). Returns (NAL bytes, reconstruction)."""
+    any). Returns (NAL bytes, loop-filtered reconstruction)."""
     sl = BitWriter()
     _slice_header(sl, qp, poc_bits, deblock)
     g = _encode_i16_slice(sl, _check_planes(*planes), qp)
     sl.trailing()
     h, w = g.recon[0].shape
-    return _nal(3, 5, sl.bytes_()), g.frame(0, 0, w, h)
+    return (_nal(3, 5, sl.bytes_()),
+            _loop_filter(g.frame(0, 0, w, h), qp, deblock))
 
 
-def _decode_idr(rbsp: bytes, sps: dict, deblock_present: bool) -> tuple:
-    """Decode what _encode_idr writes (``deblock_present``: the PPS
-    sets deblocking_filter_control_present_flag), loop-filtered when
-    its header enables the filter."""
+def _decode_idr(rbsp: bytes, sps: dict, pps: dict) -> tuple:
+    """Decode what _encode_idr writes, loop-filtered when its header
+    enables the filter."""
     r = BitReader(rbsp)
     qp = _parse_slice_header(r, sps)
-    idc, offs = _read_deblock_fields(r) if deblock_present else (1, (0, 0))
+    deblock = _read_deblock_fields(r) if pps["deblock_present"] else (
+        1, (0, 0))
     mbw, mbh = sps["mbw"], sps["mbh"]
     frame = _decode_intra_slice(r, mbw, mbh, qp).frame(
-        0, 0, mbw * 16, mbh * 16
-    )
-    if idc == 1:
-        return frame
-    # idc 2 == idc 0 for single-slice frames (there are no
-    # slice-boundary internal edges to exclude)
-    from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
-        deblock_frame,
-    )
+        0, 0, mbw * 16, mbh * 16)
+    return _loop_filter(frame, qp, deblock)
 
-    return deblock_frame(
-        *frame, qp, alpha_off=2 * offs[0], beta_off=2 * offs[1]
-    )
+
+def _encode_inter(kind, target, specs, qp, lists, frame_num, deblock,
+                  poc_bits=0, poc=0, wt=None, implicit=False, spatial=True,
+                  is_ref=True):
+    """The one CAVLC inter slice encoder: picture ``target`` as a P or
+    B slice against ``lists`` (DPB entries per reference list), one
+    raster-ordered mb_spec per macroblock. Returns (NAL bytes,
+    loop-filtered reconstruction, colocated motion)."""
+    h, w = target[0].shape
+    mbw = w // 16
+    if len(specs) != mbw * (h // 16):
+        raise ValueError("one mb_spec per macroblock required")
+    sc = _InterSlice(kind, mbw, h // 16, qp, lists, poc, wt, implicit,
+                     spatial)
+    g, qpc = sc.g, _chroma_qp(qp)
+    sl = BitWriter()
+    _inter_slice_header(sl, kind, qp, frame_num, poc_bits, poc, sc.nra,
+                        wt, spatial, is_ref, deblock)
+    put = _Put(sl)
+    skip_run = 0
+    for addr, spec in enumerate(specs):
+        mx, my = addr % mbw, addr // mbw
+        if spec[0] == "skip":
+            sc.skip(mx, my)
+            skip_run += 1
+            continue
+        sl.ue(skip_run)  # mb_skip_run
+        skip_run = 0
+        if spec[0] in ("i16", "i4", "ipcm"):
+            _encode_intra_mb(sl, g, target, spec, mx, my, qp, kind.intra)
+            sc.mark_intra(mx, my)
+            continue
+        mb_type, sub_types, mode, parts = sc.spec_parts(spec, mx, my)
+        sl.ue(mb_type)
+        for st in sub_types:
+            sl.ue(st)
+        sc.motion(put, mx, my, mode, parts)
+        py, pcb, pcr = sc.predict(mx, my, parts)
+        cbp, zl, cdcz, cacz = _residual_from_target(
+            target, mx, my, py, pcb, pcr, qp, qpc)
+        _write_residuals(sl, g, mx, my, cbp, zl, cdcz, cacz, _CBP_INTER_INV)
+        _recon_inter_mb(g.recon, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
+                        qp, qpc)
+    if skip_run:
+        sl.ue(skip_run)  # trailing skipped macroblocks
+    sl.trailing()
+    frame, motion = sc.finish(deblock)
+    return _nal(2 if is_ref else 0, 1, sl.bytes_()), frame, motion
+
+
+def _decode_inter(rbsp: bytes, sps: dict, pps: dict, dpb: list,
+                  is_ref: bool):
+    """The one CAVLC inter slice decoder: parse the header, take the
+    reference lists from ``dpb`` and decode every macroblock. Returns
+    (loop-filtered frame, colocated motion, poc or None)."""
+    r = BitReader(rbsp)
+    kind, qp, poc, nra, wt, spatial, deblock = _parse_inter_header(
+        r, sps, pps, is_ref)
+    mbw, mbh = sps["mbw"], sps["mbh"]
+    sc = _InterSlice(kind, mbw, mbh, qp, _ref_lists(kind, dpb, poc, nra),
+                     poc, wt, pps["bipred_idc"] == 2, spatial)
+    g, qpc = sc.g, _chroma_qp(qp)
+    get = _Get(r)
+    n_mbs = mbw * mbh
+    addr = 0
+    while addr < n_mbs:
+        run = r.ue()  # mb_skip_run
+        if run > n_mbs - addr:
+            raise ValueError("mb_skip_run overflows the picture")
+        for a in range(addr, addr + run):
+            sc.skip(a % mbw, a // mbw)
+        addr += run
+        if addr >= n_mbs:
+            break
+        mx, my = addr % mbw, addr // mbw
+        addr += 1
+        mb_type = r.ue()
+        if mb_type >= kind.intra:
+            if mb_type > kind.intra + 25:
+                raise ValueError(
+                    f"invalid mb_type {mb_type} in {kind.name} slice")
+            qp = _decode_intra_mb(r, g, mx, my, mb_type - kind.intra, qp)
+            qpc = _chroma_qp(qp)
+            sc.mark_intra(mx, my)
+            continue
+        mode, parts, mb_nra = sc.read_parts(r, mb_type, mx, my)
+        sc.motion(get, mx, my, mode, parts, mb_nra)
+        py, pcb, pcr = sc.predict(mx, my, parts)
+        cbp, qpd, zl, cdcz, cacz = _read_residuals(r, g, mx, my, _CBP_INTER)
+        if cbp:
+            qp = (qp + qpd + 52) % 52
+            qpc = _chroma_qp(qp)
+        _recon_inter_mb(g.recon, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
+                        qp, qpc)
+    frame, motion = sc.finish(deblock)
+    return frame, motion, poc
+
+
+def _decode_stream(payload: bytes) -> tuple[list, list]:
+    """The one decoder loop of CAVLC IDR + P + B streams, behind
+    decode_h264_sequence and h264_bslice.decode_h264_b_stream: walk
+    the NAL units, reset the DPB at the IDR, decode each P or B slice
+    against it and insert every reference picture (nal_ref_idc > 0)
+    with its motion, newest first, evicting past max_num_ref_frames.
+    Returns (frames, pocs) in decode order; without POC type 0 a
+    picture's POC is twice its decode index."""
+    sps = pps = None
+    frames: list = []
+    pocs: list = []
+    dpb: list = []  # (poc, planes, motion), newest decoded first
+    for nal in _split_nals(bytes(payload)):
+        ntype = nal[0] & 0x1F
+        rbsp = _ep_remove(nal[1:])
+        if ntype == 7:
+            sps = _parse_sps(rbsp)
+        elif ntype == 8:
+            pps = _parse_pps(rbsp)
+            if pps["cabac"]:
+                raise NotImplementedError(
+                    "CABAC inter streams decode with "
+                    "h264_cabac_inter.decode_h264_cabac_p")
+        elif ntype in (1, 5):
+            if sps is None or pps is None:
+                raise ValueError("coded slice before its SPS and PPS")
+            if ntype == 5:
+                frame, poc = _decode_idr(rbsp, sps, pps), 0
+                motion = _intra_motion(sps["mbw"], sps["mbh"])
+                dpb = []
+            elif not dpb:
+                raise ValueError("coded slice before references exist")
+            else:
+                frame, motion, poc = _decode_inter(
+                    rbsp, sps, pps, dpb, bool(nal[0] & 0x60))
+                if poc is None:
+                    poc = 2 * len(frames)
+            frames.append(frame)
+            pocs.append(poc)
+            if nal[0] & 0x60:  # nal_ref_idc: a reference picture
+                dpb.insert(0, (poc, frame, motion))
+                del dpb[max(1, sps["max_refs"]):]
+    if not frames:
+        raise ValueError("no coded frames found")
+    return frames, pocs
 
 
 def encode_h264_p_gop(
@@ -1035,10 +1453,10 @@ def encode_h264_p_gop(
     """Encode a GOP: frames[0] becomes an Intra_16x16 IDR anchor (DC
     prediction, the shared intra macroblock layer, under an IDR header
     carrying the deblocking-control fields); every later frame becomes
-    a CAVLC P frame predicting from
-    up to ``num_refs`` previously DECODED frames (list0 most recent
-    first, per 8.2.4.2.1; ref_idx_l0 coded te(v) when two are
-    active; sliding-window DPB eviction beyond ``num_refs``).
+    a CAVLC P slice of the shared inter layer, predicting from up to
+    ``num_refs`` previously DECODED frames (list0 most recent first,
+    per 8.2.4.2.1; ref_idx_l0 coded te(v); sliding-window DPB eviction
+    beyond ``num_refs``).
 
     ``specs_per_p`` holds one raster-ordered mb_specs list per P
     frame; each entry is one of
@@ -1056,6 +1474,13 @@ def encode_h264_p_gop(
         sub_mode in {"8x8", "8x4", "4x8", "4x4"}, one MV per
         sub-partition, optional per-8x8 refIdx.
 
+    ``weights`` (explicit weighted prediction, weighted_pred_flag):
+    {"luma_denom", "chroma_denom", "refs": [entry per reference]} with
+    entries {"wy", "oy", "wc", "oc", "wcr", "ocr"}; a missing weight
+    keeps the default, denominators are 0..7 and weights and offsets
+    -128..127. ``deblock``: False (loop filter off), True (on) or 2
+    (on, idc 2); ``deblock_offsets`` = (alpha_div2, beta_div2).
+
     Returns (annex_b_bytes, [recon planes per frame]) where every
     recon triple is the decoder-mirrored bit-exact contract."""
     if len(frames) < 2:
@@ -1069,62 +1494,26 @@ def encode_h264_p_gop(
     h, w = frames[0][0].shape
     if h % 16 or w % 16:
         raise ValueError("inter sequences require dimensions % 16 == 0")
-    mbw, mbh = w // 16, h // 16
-    # deblock False -> idc 1 (off); True -> idc 0; 2 -> idc 2
-    # (filtering on, slice-boundary edges excluded — identical to 0
-    # for the single-slice frames this encoder writes)
-    d_idc = 1 if not deblock else (2 if deblock == 2 else 0)
-    idr_nal, anchor = _encode_idr(frames[0], qp, 0, (d_idc, deblock_offsets))
-    wtab = (
-        _norm_p_weights(weights, num_refs) if weights is not None
-        else None
-    )
+    wt = None
+    if weights is not None:
+        refs = list(weights.get("refs", [])) + [{}] * num_refs
+        wt = _norm_weights(weights, [refs[:num_refs]])
+    dbk = _deblock_arg(deblock, deblock_offsets)
+    idr_nal, anchor = _encode_idr(frames[0], qp, 0, dbk)
     stream = (
-        _nal(3, 7, _sps_rbsp_ref1(mbw, mbh, w, h, num_refs))
-        + _nal(3, 8, _pps_rbsp_deblock(weighted_pred=wtab is not None))
+        _nal(3, 7, _sps_rbsp(w // 16, h // 16, w, h, num_refs))
+        + _nal(3, 8, _pps_rbsp(deblock=True, weighted_pred=wt is not None))
         + idr_nal
     )
-    if deblock:
-        # in-loop: the FILTERED reconstruction is the reference
-        from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-            deblock_frame,
-        )
-
-        anchor = deblock_frame(  # all-intra info
-            *anchor, qp,
-            alpha_off=2 * deblock_offsets[0],
-            beta_off=2 * deblock_offsets[1],
-        )
     recons = [anchor]
-    refs = [anchor]
+    dpb = [(0, anchor, None)]
     for fi, (target, specs) in enumerate(zip(frames[1:], specs_per_p), 1):
-        if len(specs) != mbw * mbh:
-            raise ValueError("one mb_spec per macroblock required")
-        nra = min(num_refs, len(refs))
-        rbsp, recon, motion = _encode_p_frame(
-            target, refs[:nra], specs, qp, fi, nra, wtab,
-            deblock_idc=d_idc,
-            deblock_offs=deblock_offsets,
-        )
-        if deblock:
-            from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                deblock_frame,
-                make_block_info,
-            )
-
-            info = make_block_info(
-                mbw, mbh, inter=motion["inter"], nnz=motion["nnz"],
-                mv=motion["mv"], ref=motion["ref"],
-            )
-            recon = deblock_frame(
-                *recon, qp, info,
-                alpha_off=2 * deblock_offsets[0],
-                beta_off=2 * deblock_offsets[1],
-            )
-        stream += _nal(2, 1, rbsp)
+        nal, recon, _ = _encode_inter(_P, target, specs, qp, [dpb], fi, dbk,
+                                      wt=wt)
+        stream += nal
         recons.append(recon)
-        refs.insert(0, recon)
-        del refs[num_refs:]
+        dpb.insert(0, (2 * fi, recon, None))
+        del dpb[num_refs:]
     return stream, recons
 
 
@@ -1144,214 +1533,17 @@ def encode_h264_p_sequence(
     return stream, recons[0], recons[1]
 
 
-# ---------------------------------------------------------------------------
-# Sequence decoder
-# ---------------------------------------------------------------------------
-
-
 def decode_h264_sequence(
     payload: bytes,
 ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Decode an IDR + P CAVLC sequence; returns the decoded frames
-    in order. The IDR anchor's header is parsed here and its
-    macroblocks decode through the shared intra macroblock layer; P
-    slices decode against a sliding-window DPB of previously
-    decoded frames (list0 most recent first), with P_8x8
-    sub-partitions, intra (I_4x4 / Intra_16x16 / I_PCM) macroblocks
-    and te(v) ref_idx_l0 handled per 7.3.5 / 8.4.1.3."""
-    sps = None
-    deblock_present = False
-    weighted_pred = False
-    frames: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-    refs: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-    for nal in _split_nals(bytes(payload)):
-        ntype = nal[0] & 0x1F
-        rbsp = _ep_remove(nal[1:])
-        if ntype == 7:
-            sps = _parse_sps(rbsp)
-        elif ntype == 8:
-            r = BitReader(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
-                raise NotImplementedError(
-                    "CABAC P slices — inter is CAVLC-only so far"
-                )
-            r.u(1)
-            r.ue()
-            r.ue()
-            r.ue()
-            weighted_pred = bool(r.u(1))
-            r.u(2)
-            r.se()
-            r.se()
-            r.se()
-            deblock_present = bool(r.u(1))
-        elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR before SPS")
-            frame = _decode_idr(rbsp, sps, deblock_present)
-            frames.append(frame)
-            refs = [frame]  # IDR resets the DPB
-        elif ntype == 1:
-            if not refs:
-                raise ValueError("P slice before any reference frame")
-            r = BitReader(rbsp)
-            qp, nra, pw, idc, offs = _parse_p_slice_header(
-                r, weighted_pred
-            )
-            if nra > len(refs):
-                raise ValueError(
-                    f"{nra} active references but only {len(refs)} "
-                    "decoded"
-                )
-            if idc != 1:
-                from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (  # noqa: E501
-                    deblock_frame,
-                    make_block_info,
-                )
-
-                frame, motion = _decode_p_frame(
-                    r, sps, qp, refs, nra, weights=pw,
-                    return_motion=True,
-                )
-                info = make_block_info(
-                    sps["mbw"], sps["mbh"], inter=motion["inter"],
-                    nnz=motion["nnz"], mv=motion["mv"],
-                    ref=motion["ref"],
-                )
-                frame = deblock_frame(
-                    *frame, qp, info,
-                    alpha_off=2 * offs[0], beta_off=2 * offs[1],
-                )
-            else:
-                frame = _decode_p_frame(
-                    r, sps, qp, refs, nra, weights=pw
-                )
-            frames.append(frame)
-            if (nal[0] >> 5) & 3:  # nal_ref_idc: reference picture
-                refs.insert(0, frame)
-                del refs[max(1, sps.get("max_refs", 1)):]
-    if not frames:
-        raise ValueError("no coded frames found")
-    return frames
-
-
-def _decode_p_frame(
-    r: BitReader, sps: dict, qp: int, refs: list, nra: int,
-    return_motion: bool = False,
-    weights: dict | None = None,
-):
-    mbw, mbh = sps["mbw"], sps["mbh"]
-    padded = _pad_refs(refs[:nra])
-    qpc = _chroma_qp(qp)
-
-    g = _MbGrid(mbw, mbh)
-    ry, rcb, rcr = recons = g.recon
-    luma_nnz, cnnz = g.nnz, g.cnnz
-    mvs = _MvState(mbw, mbh)
-
-    def decode_skip(mx, my):
-        mv = mvs.skip_mv(mx, my)
-        py, pcb, pcr = _mc_mb(padded, mx, my, [(0, 0, 4, 4, mv, 0)],
-                              weights)
-        ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = np.clip(
-            py, 0, 255
-        )
-        rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(pcb, 0, 255)
-        rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(pcr, 0, 255)
-        mvs.fill(mx * 4, my * 4, 4, 4, mv, 0)
-        luma_nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
-        for pi in (0, 1):
-            cnnz[pi][my * 2 : my * 2 + 2, mx * 2 : mx * 2 + 2] = 0
-
-    n_mbs = mbw * mbh
-    addr = 0
-    cur_qp = qp
-    while addr < n_mbs:
-        skip_run = r.ue()
-        for _ in range(skip_run):
-            if addr >= n_mbs:
-                raise ValueError("mb_skip_run overflows the picture")
-            decode_skip(addr % mbw, addr // mbw)
-            addr += 1
-        if addr >= n_mbs:
-            break
-        mx, my = addr % mbw, addr // mbw
-        mb_type = r.ue()
-        if mb_type >= 5:
-            # ----- intra macroblock inside the P slice -----
-            if mb_type > 30:
-                raise ValueError(f"invalid mb_type {mb_type} in P slice")
-            cur_qp = _decode_intra_mb(r, g, mx, my, mb_type - 5, cur_qp)
-            qpc = _chroma_qp(cur_qp)
-            mvs.mark_intra(mx, my)
-            addr += 1
-            continue
-        if mb_type in (3, 4):
-            # ----- P_8x8 / P_8x8ref0 sub-macroblock partitions -----
-            submodes = []
-            for _ in range(4):
-                st = r.ue()
-                if st > 3:
-                    raise ValueError(f"bad sub_mb_type {st}")
-                submodes.append(_SUB_TYPE_INV[st])
-            subrefs = [0] * 4
-            if mb_type == 3 and nra >= 2:
-                subrefs = [_read_te_ref(r, nra) for _ in range(4)]
-            placed = []
-            for k in range(4):
-                ox8, oy8 = (k & 1) * 2, (k >> 1) * 2
-                for sx4, sy4, w4, h4 in _SUBPARTS[submodes[k]]:
-                    mvdx, mvdy = r.se(), r.se()
-                    gx, gy = mx * 4 + ox8 + sx4, my * 4 + oy8 + sy4
-                    pred_mv = mvs.predict(gx, gy, w4, subrefs[k])
-                    mv = np.array(
-                        [pred_mv[0] + mvdx, pred_mv[1] + mvdy], np.int64
-                    )
-                    mvs.fill(gx, gy, w4, h4, mv, subrefs[k])
-                    placed.append(
-                        (ox8 + sx4, oy8 + sy4, w4, h4, mv, subrefs[k])
-                    )
-        else:
-            mode = _MB_TYPE_INV[mb_type]
-            prefs = [0] * len(_PARTS[mode])
-            if nra >= 2:
-                prefs = [_read_te_ref(r, nra)
-                         for _ in range(len(_PARTS[mode]))]
-            placed = []
-            for pidx, (ox4, oy4, w4, h4) in enumerate(_PARTS[mode]):
-                mvdx, mvdy = r.se(), r.se()
-                pred_mv = mvs.pred_for_partition(
-                    mode, pidx, mx * 4 + ox4, my * 4 + oy4, w4,
-                    prefs[pidx],
-                )
-                mv = np.array(
-                    [pred_mv[0] + mvdx, pred_mv[1] + mvdy], np.int64
-                )
-                mvs.fill(mx * 4 + ox4, my * 4 + oy4, w4, h4, mv,
-                         prefs[pidx])
-                placed.append((ox4, oy4, w4, h4, mv, prefs[pidx]))
-        py, pcb, pcr = _mc_mb(padded, mx, my, placed, weights)
-        cbp, qpd, zl, cdcz, cacz = _read_residuals(
-            r, g, mx, my, _CBP_INTER
-        )
-        if cbp:
-            cur_qp = (cur_qp + qpd + 52) % 52
-            qpc = _chroma_qp(cur_qp)
-        _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp,
-                        zl, cdcz, cacz, cur_qp, qpc)
-        addr += 1
-    planes = (
-        ry.astype(np.uint8),
-        rcb.astype(np.uint8),
-        rcr.astype(np.uint8),
-    )
-    if return_motion:
-        export = mvs.export()
-        export["nnz"] = luma_nnz.copy()
-        return planes, export
-    return planes
+    """Decode a CAVLC IDR + P (+ B) stream; returns the decoded frames
+    in decode order. The IDR anchor decodes through the shared intra
+    macroblock layer, every P or B slice through the shared inter
+    layer against a sliding-window DPB of previously decoded frames
+    (P list0 most recent first, te(v) ref_idx_l0, P_8x8
+    sub-partitions, intra macroblocks, weighted prediction and in-loop
+    deblocking per the stream's PPS and slice headers)."""
+    return _decode_stream(payload)[0]
 
 
 # ---------------------------------------------------------------------------

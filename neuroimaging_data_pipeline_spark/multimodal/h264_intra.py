@@ -80,6 +80,7 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _ep_remove,
     _idr_stream,
     _pad_planes,
+    _parse_pps,
     _parse_slice_header,
     _parse_sps,
     _read_pcm_mb,
@@ -1617,10 +1618,7 @@ def decode_h264_frame(
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            r = BitReader(rbsp)
-            r.ue()
-            r.ue()
-            if r.u(1):
+            if _parse_pps(rbsp)["cabac"]:
                 # CABAC entropy coding (r9, closes the r8 gate):
                 # delegate the whole stream to the CABAC intra
                 # decoder — shared prediction/transform layer,

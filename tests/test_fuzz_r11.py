@@ -161,7 +161,41 @@ def _intra_in_inter_streams():
                                      ("i16",), ("skip",)], 2)],
         qp=22,
     )
-    return ((p_gop, decode_h264_sequence), (b_seq, decode_h264_b_stream))
+    p_weighted, _ = encode_h264_p_gop(
+        [_planes(32, 48, s) for s in (17, 18, 19, 20)],
+        [[("16x16", [((2, 1), 0)]), ("skip",), ("i4",), ("ipcm",),
+          ("8x16", [(1, -1), (0, 3)]), ("16x16", [(-2, 2)])],
+         [("16x16", [((1, 1), 1)]), ("8x8", [("8x8", [(0, 1)], 1),
+          ("4x4", [(1, 0), (0, 0), (2, 1), (-1, 1)], 0),
+          ("8x4", [(0, 0), (1, 2)], 1), ("4x8", [(3, 0), (0, 0)], 0)]),
+          ("skip",), ("i16",), ("16x8", [((0, 2), 1), ((1, 0), 0)]),
+          ("ipcm",)],
+         [("16x16", [((0, 0), 2)]), ("skip",), ("8x16", [((1, 1), 2),
+          ((2, -1), 1)]), ("i4", 6), ("16x16", [((-1, 0), 0)]),
+          ("skip",)]],
+        qp=20, num_refs=3,
+        weights={"luma_denom": 4, "chroma_denom": 2,
+                 "refs": [{"wy": 18, "oy": -3, "wc": 5, "oc": 2},
+                          {"wy": 13}, {"wcr": 3, "ocr": 1}]},
+    )
+    b_weighted, _, _ = encode_h264_b_sequence(
+        [("idr", _planes(32, 48, 21)),
+         ("p", _planes(32, 48, 22), [("16x16", [(1, 0)]), ("i4",),
+                                     ("skip",), ("ipcm",), ("i16",),
+                                     ("16x16", [(0, -2)])], 4),
+         ("b", _planes(32, 48, 23),
+          [("8x8", [("direct",), ("bi", "8x4", [((1, 0), (0, 1))] * 2),
+                    ("l1", "4x4", [(1, 1)] * 4), ("l0", "8x8", [(2, 0)])]),
+           ("direct",), ("skip",), ("ipcm",), ("i4", 1),
+           ("16x8", [("l0", (1, 1)), ("bi", (0, 0), (2, 2))])], 2)],
+        qp=24,
+        weights={"luma_denom": 5, "chroma_denom": 3,
+                 "l0": {"wy": 40, "oy": 2, "wc": 7, "oc": -1},
+                 "l1": {"wy": 24, "oy": -4}},
+    )
+    return ((p_gop, decode_h264_sequence), (b_seq, decode_h264_b_stream),
+            (p_weighted, decode_h264_sequence),
+            (b_weighted, decode_h264_b_stream))
 
 
 INTRA_IN_INTER = _intra_in_inter_streams()

@@ -11,10 +11,10 @@ import numpy as np
 import pytest
 
 from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
-    _B_USES,
     decode_h264_b_stream,
     encode_h264_b_sequence,
 )
+from neuroimaging_data_pipeline_spark.multimodal.h264_inter import _B_USES
 
 
 def _planes(h, w, seed):
@@ -184,7 +184,7 @@ def test_b_ffmpeg_cross_pin(tmp_path):
 
 
 def test_all_12_b_sub_mb_types_roundtrip():
-    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         _B_SUB_USES,
     )
 
@@ -351,11 +351,8 @@ def test_b_skip_and_direct_roundtrip():
 
 
 def test_spatial_direct_derivation_units():
-    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
-        _intra_motion, _spatial_direct,
-    )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
-        _MvState,
+        _intra_motion, _MvState, _spatial_direct,
     )
 
     # no neighbors, intra colocated: directZeroPrediction — both
@@ -423,7 +420,7 @@ def test_direct_ffmpeg_cross_pin(tmp_path):
 
 
 def test_temporal_direct_roundtrip_and_scaling():
-    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         _intra_motion, _temporal_direct,
     )
 
@@ -488,7 +485,7 @@ def test_b_direct_8x8_roundtrip_both_modes():
 
 
 def test_implicit_weighted_prediction():
-    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
         _implicit_weights,
     )
 
@@ -705,3 +702,21 @@ def test_b_pyramid_temporal_direct_reads_bref_motion():
     assert any(
         not np.array_equal(a, b) for a, b in zip(still, moving)
     )
+
+
+def test_ipcm_in_b_stream_p_frame_roundtrips():
+    """An I_PCM macroblock in a P frame of a B stream round-trips: its
+    pcm_alignment_zero_bits must fall where the decoder expects them
+    behind a P slice header that carries pic_order_cnt_lsb."""
+    f0, f1 = _planes(32, 32, 90), _planes(32, 32, 91)
+    stream, recons, pocs = encode_h264_b_sequence(
+        [("idr", f0),
+         ("p", f1, [("ipcm",), ("skip",), ("skip",), ("skip",)], 2)]
+    )
+    frames, dpocs = decode_h264_b_stream(stream)
+    assert dpocs == pocs == [0, 2]
+    for got, want in zip(frames, recons):
+        for a, b in zip(got, want):
+            np.testing.assert_array_equal(a, b)
+    # I_PCM is lossless
+    np.testing.assert_array_equal(recons[1][0][:16, :16], f1[0][:16, :16])

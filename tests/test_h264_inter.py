@@ -699,12 +699,13 @@ def test_corrupt_i4x4_cbp_in_inter_slice_raises_valueerror(slice_kind):
     from neuroimaging_data_pipeline_spark.bitio import BitWriter
     from neuroimaging_data_pipeline_spark.multimodal.h264 import _nal
     from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
-        _b_slice_header,
         decode_h264_b_stream,
         encode_h264_b_sequence,
     )
     from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
-        _p_slice_header,
+        _B,
+        _P,
+        _inter_slice_header,
         encode_h264_p_gop,
     )
 
@@ -713,14 +714,15 @@ def test_corrupt_i4x4_cbp_in_inter_slice_raises_valueerror(slice_kind):
     if slice_kind == "p":
         stream, _ = encode_h264_p_gop([f0, f1], [[("skip",)]])
         decode = decode_h264_sequence
-        _p_slice_header(sl, 26, frame_num=1)
+        _inter_slice_header(sl, _P, 26, frame_num=1, is_ref=False)
         intra_base = 5
     else:
         stream, _, _ = encode_h264_b_sequence(
             [("idr", f0), ("p", f1, [("skip",)], 4)]
         )
         decode = decode_h264_b_stream
-        _b_slice_header(sl, 26, frame_num=2, poc_lsb=2)
+        _inter_slice_header(sl, _B, 26, frame_num=2, poc_bits=6, poc=2,
+                            is_ref=False)
         intra_base = 23
     decode(stream)  # sanity: the prefix decodes
     sl.ue(0)  # mb_skip_run
@@ -733,3 +735,68 @@ def test_corrupt_i4x4_cbp_in_inter_slice_raises_valueerror(slice_kind):
     sl.trailing()
     with pytest.raises(ValueError, match="coded_block_pattern"):
         decode(stream + _nal(0, 1, sl.bytes_()))
+
+
+@pytest.mark.parametrize("slice_kind", ["p", "b"])
+def test_pred_weight_table_out_of_range_raises(slice_kind):
+    """7.4.3.2 bounds the log2 weight denominators to 0..7 and the
+    weights and offsets to -128..127. A slice header carrying
+    luma_log2_weight_denom 8 must be rejected by the decoder (an
+    unbounded ue(v) there would feed 1 << denom into the sample
+    arithmetic), and both encoders must reject such user weights."""
+    from neuroimaging_data_pipeline_spark.bitio import BitWriter
+    from neuroimaging_data_pipeline_spark.multimodal.h264 import _nal
+    from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
+        decode_h264_b_stream,
+        encode_h264_b_sequence,
+    )
+    from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
+        encode_h264_p_gop,
+    )
+
+    f0, f1 = _rand_frames(78, 16, 16)
+    good = {"luma_denom": 1, "refs": [{"wy": 2}], "l0": {"wy": 2}}
+    sl = BitWriter()
+    if slice_kind == "p":
+        def encode(w):
+            return encode_h264_p_gop([f0, f1], [[("skip",)]], weights=w)[0]
+
+        decode = decode_h264_sequence
+        sl.ue(0)  # first_mb_in_slice
+        sl.ue(5)  # slice_type P
+        sl.ue(0)  # pic_parameter_set_id
+        sl.u(2, 4)  # frame_num
+        sl.u(0, 1)  # num_ref_idx_active_override_flag
+        sl.u(0, 1)  # ref_pic_list_modification_flag_l0
+    else:
+        def encode(w):
+            return encode_h264_b_sequence(
+                [("idr", f0), ("p", f1, [("skip",)], 4)], weights=w)[0]
+
+        decode = decode_h264_b_stream
+        sl.ue(0)  # first_mb_in_slice
+        sl.ue(6)  # slice_type B
+        sl.ue(0)  # pic_parameter_set_id
+        sl.u(2, 4)  # frame_num
+        sl.u(2, 6)  # pic_order_cnt_lsb
+        sl.u(1, 1)  # direct_spatial_mv_pred_flag
+        sl.u(0, 3)  # no override, no list modification (l0, l1)
+    stream = encode(good)
+    decode(stream)  # sanity: the prefix decodes
+    sl.ue(8)  # luma_log2_weight_denom: one past 7.4.3.2's range
+    sl.ue(0)  # chroma_log2_weight_denom
+    sl.u(0, 2 * (1 if slice_kind == "p" else 2))  # flag-0 entries
+    if slice_kind == "p":
+        sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag (reference P)
+    sl.se(0)  # slice_qp_delta
+    sl.ue(1)  # disable_deblocking_filter_idc
+    sl.ue(1)  # mb_skip_run: the one macroblock
+    sl.trailing()
+    nal = _nal(2 if slice_kind == "p" else 0, 1, sl.bytes_())
+    with pytest.raises(ValueError, match="log2_weight_denom"):
+        decode(stream + nal)
+    with pytest.raises(ValueError, match="log2_weight_denom"):
+        encode(dict(good, luma_denom=8))
+    with pytest.raises(ValueError, match="weight or offset"):
+        encode(dict(good, refs=[{"wy": 2, "oy": 128}],
+                    l0={"wy": 2, "oy": 128}))

@@ -216,6 +216,25 @@ def _b_temporal():
     return stream, recons
 
 
+def _b_seq_p_ipcm():
+    """I_PCM (and I_4x4, Intra_16x16) in the P frame of a B stream."""
+    f0, fp, fb = (_planes(32, 48, 70 + i) for i in range(3))
+    stream, recons, pocs = encode_h264_b_sequence(
+        [("idr", f0),
+         ("p", fp, [("ipcm",), ("skip",), ("16x16", [(3, -1)]), ("i4", 2),
+                    ("ipcm",), ("i16",)], 4),
+         ("b", fb, [("skip",), ("ipcm",), ("direct",),
+                    ("16x16", [("bi", (1, 1), (-2, 3))]), ("skip",),
+                    ("ipcm",)], 2)],
+        qp=26,
+    )
+    frames, dpocs = decode_h264_b_stream(stream)
+    assert dpocs == pocs
+    for got, want in zip(frames, recons):
+        _same(got, want)
+    return stream, recons
+
+
 def _p_gop_weighted_ref1():
     frames = [_planes(32, 48, 50 + i) for i in range(3)]
     specs = [_P_SPECS[0],
@@ -284,6 +303,7 @@ CASES["b_seq_explicit_deblock"] = _b_seq(
     True,
 )
 CASES["b_seq_temporal_b8x8_bref"] = _b_temporal
+CASES["b_seq_p_ipcm"] = _b_seq_p_ipcm
 CASES["p_gop_weighted_ref1"] = _p_gop_weighted_ref1
 CASES["cabac_p_gop"] = _cabac_p_gop
 CASES["cabac_qp0"] = _cabac(0, 2)
@@ -292,6 +312,7 @@ CASES["cabac_qp30"] = _cabac(30, 5)
 PINS = {
     "b_seq_explicit_deblock": "97ad9b7f74b6d729c8cc",
     "b_seq_implicit": "089d351cfcafc77d43ce",
+    "b_seq_p_ipcm": "f3a3668d36dbbb3e9325",
     "b_seq_temporal_b8x8_bref": "e641301ac80d915be376",
     "cabac_p_gop": "d1f85cd310b5bdb60a1b",
     "cabac_qp0": "74da4e91d749ec1c6676",
