@@ -275,6 +275,47 @@ def _cabac_p_gop():
     return stream, recons
 
 
+def _cabac_p_gop_ref1():
+    """num_refs=1 (no ref_idx coded) at QP 51: a skip-heavy slice whose
+    last macroblock is coded, |mvd| >= 9 (the EG3 suffix) and a P_8x8
+    with all four sub types."""
+    frames = [_planes(32, 48, 80 + i) for i in range(3)]
+    specs = [
+        [("skip",), ("skip",), ("16x16", [(40, -36)]), ("skip",),
+         ("skip",), ("16x8", [(-20, 12), (3, -30)])],
+        [("8x8", [("8x8", [(1, 1)]), ("8x4", [(2, 0), (0, 2)]),
+                  ("4x8", [(-1, 3), (5, -2)]),
+                  ("4x4", [(0, 1), (1, 0), (2, 2), (-2, -1)])]),
+         ("16x16", [(-44, 50)]), ("skip",), ("8x16", [(12, 12), (-9, 0)]),
+         ("i16",), ("16x16", [(0, 0)])],
+    ]
+    table = synthetic_p_init(9)
+    stream, recons = encode_h264_cabac_p_gop(
+        frames, specs, qp=51, num_refs=1, init_table=table
+    )
+    for got, want in zip(decode_h264_cabac_p(stream, init_table=table),
+                         recons):
+        _same(got, want)
+    return stream, recons
+
+
+def _cabac_p_gop_intra():
+    """An Intra_16x16 first P macroblock, then an all-Intra_16x16 P
+    slice."""
+    frames = [_planes(32, 32, 90 + i) for i in range(3)]
+    specs = [[("i16",), ("16x16", [(3, -1)]), ("skip",),
+              ("8x16", [(1, 1), (-2, 2)])],
+             [("i16",)] * 4]
+    table = synthetic_p_init(2)
+    stream, recons = encode_h264_cabac_p_gop(
+        frames, specs, qp=20, num_refs=2, init_table=table
+    )
+    for got, want in zip(decode_h264_cabac_p(stream, init_table=table),
+                         recons):
+        _same(got, want)
+    return stream, recons
+
+
 def _cabac(qp, mode):
     def run():
         stream, *recon = encode_h264_cabac_intra(*_smooth(24, 40, 5), qp=qp,
@@ -308,13 +349,26 @@ CASES["p_gop_weighted_ref1"] = _p_gop_weighted_ref1
 CASES["cabac_p_gop"] = _cabac_p_gop
 CASES["cabac_qp0"] = _cabac(0, 2)
 CASES["cabac_qp30"] = _cabac(30, 5)
+CASES["cabac_p_gop_ref1_qp51"] = _cabac_p_gop_ref1
+CASES["cabac_p_gop_intra"] = _cabac_p_gop_intra
+for _m in (0, 1, 3, 4, 6, 7, 8):
+    CASES[f"cabac_i4_mode{_m}"] = _cabac(16, _m)
 
 PINS = {
     "b_seq_explicit_deblock": "97ad9b7f74b6d729c8cc",
     "b_seq_implicit": "089d351cfcafc77d43ce",
     "b_seq_p_ipcm": "f3a3668d36dbbb3e9325",
     "b_seq_temporal_b8x8_bref": "e641301ac80d915be376",
+    "cabac_i4_mode0": "87ae2c761626c90c6698",
+    "cabac_i4_mode1": "bab5b5030343ad4dd2f1",
+    "cabac_i4_mode3": "5bf0814cd8e91a06861e",
+    "cabac_i4_mode4": "b877d2fa136282024865",
+    "cabac_i4_mode6": "e303ba833a05ddc5da3b",
+    "cabac_i4_mode7": "de133d737585353a9f2a",
+    "cabac_i4_mode8": "c0a964f27096d36b194b",
     "cabac_p_gop": "d1f85cd310b5bdb60a1b",
+    "cabac_p_gop_intra": "39c36161318986202f36",
+    "cabac_p_gop_ref1_qp51": "1d9c56e82332ea48061d",
     "cabac_qp0": "74da4e91d749ec1c6676",
     "cabac_qp30": "a661121bd4fc5c793226",
     "i16_qp0_pm0_cm0": "fc3c09375ced6865b75e",
