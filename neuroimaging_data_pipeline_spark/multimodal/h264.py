@@ -261,14 +261,23 @@ def _read_deblock_fields(r: BitReader) -> tuple[int, tuple]:
     return idc, offs
 
 
+def _cabac_align(sl: BitWriter) -> None:
+    """cabac_alignment_one_bits up to the byte boundary where a CABAC
+    slice's data starts (7.3.4)."""
+    pad = -sl.n % 8
+    sl.u((1 << pad) - 1, pad)
+
+
 def _slice_header(
-    sl: BitWriter, qp: int = 26, poc_bits: int = 0, deblock=None
+    sl: BitWriter, qp: int = 26, poc_bits: int = 0, deblock=None,
+    cabac: bool = False,
 ) -> None:
     """IDR I-slice header (single slice per picture, QP via
     slice_qp_delta against pic_init_qp 26). ``poc_bits`` > 0 writes a
     zero pic_order_cnt_lsb of that width (POC type 0 SPS);
     ``deblock`` = (idc, offsets) writes the deblocking-control fields
-    (control-present PPS)."""
+    (control-present PPS); ``cabac`` (a CABAC PPS) aligns the slice
+    data with cabac_alignment_one_bits."""
     sl.ue(0)  # first_mb_in_slice
     sl.ue(7)  # slice_type: I (all slices)
     sl.ue(0)  # pic_parameter_set_id
@@ -282,6 +291,8 @@ def _slice_header(
     sl.se(qp - 26)  # slice_qp_delta
     if deblock is not None:
         _write_deblock_fields(sl, *deblock)
+    if cabac:
+        _cabac_align(sl)
 
 
 def _write_pcm_mb(sl: BitWriter, planes, mx: int, my: int) -> None:
@@ -430,10 +441,15 @@ def _parse_pps(rbsp: bytes) -> dict:
                 bipred_idc=bipred_idc, deblock_present=bool(r.u(1)))
 
 
-def _parse_slice_header(r: BitReader, sps: dict) -> int:
-    """Parse an IDR I-slice header up to slice_qp_delta; returns the
-    slice QP. A POC type 0 stream carries pic_order_cnt_lsb, which
-    must be 0 for the IDR every DPB here is keyed from."""
+def _parse_slice_header(
+    r: BitReader, sps: dict, pps: dict | None = None
+) -> tuple[int, tuple]:
+    """Parse what _slice_header writes; returns (slice QP, deblocking
+    (idc, offsets)). A POC type 0 stream carries pic_order_cnt_lsb,
+    which must be 0 for the IDR every DPB here is keyed from. Without
+    ``pps`` the parse stops after slice_qp_delta; with it, the
+    deblocking fields are read when the PPS carries them and a CABAC
+    slice is aligned to its data."""
     if r.ue() != 0:
         raise ValueError("multi-slice pictures unsupported")
     stype = r.ue()
@@ -446,7 +462,16 @@ def _parse_slice_header(r: BitReader, sps: dict) -> int:
         raise ValueError("IDR pic_order_cnt_lsb must be 0")
     r.u(1)
     r.u(1)  # dec_ref_pic_marking
-    return 26 + r.se()  # pic_init_qp 26 + slice_qp_delta
+    qp = 26 + r.se()  # pic_init_qp 26 + slice_qp_delta
+    if not 0 <= qp <= 51:
+        raise ValueError(f"slice QP {qp} out of range")
+    deblock = (1, (0, 0))
+    if pps is not None:
+        if pps["deblock_present"]:
+            deblock = _read_deblock_fields(r)
+        if pps["cabac"]:
+            r.align()
+    return qp, deblock
 
 
 def decode_h264_ipcm(

@@ -1,10 +1,5 @@
-"""H.264 CABAC entropy layer for intra slices (ITU-T H.264 clause 9.3).
-
-Closes the round-8 declared gate (h264_intra.py raised "CABAC PPS
-unsupported"): the context-adaptive binary arithmetic coder used by
-virtually all real-world H.264 video, implemented from the published
-spec for the intra tool set this codec family already decodes
-bit-exactly under CAVLC:
+"""H.264 CABAC entropy layer (ITU-T H.264 clause 9.3) for I and P
+slices, implemented from the published spec:
 
 - the binary arithmetic DECODING engine (9.3.3.2): 9-bit offset
   register, rangeTabLPS (Table 9-44), state transitions (Table 9-45),
@@ -12,30 +7,31 @@ bit-exactly under CAVLC:
 - the matching arithmetic ENCODER (9.3.4): low/range registers,
   outstanding-bit carry resolution (PutBit), bypass and terminate
   encoding, the final flush that plants the rbsp_stop_one_bit;
-- context-variable initialization (9.3.1.1): the I-slice column of
-  the published (m, n) tables for every context an intra 4:2:0 slice
-  can touch (ctxIdx 3..10 mb_type, 60..69 qp-delta/chroma-mode/intra
-  modes, 73..84 CBP, 85..104 coded_block_flag, 105..165 / 166..226
-  frame-coded significance maps, 227..275 level magnitudes);
-- binarizations (9.3.2): the I mb_type tree with its mid-string
-  terminate bin, TU / FL / mapped-unary, and UEG0 suffixes for
-  coefficient levels;
-- residual_block_cabac (7.3.5.3.3): per-block coded_block_flag with
-  spatial neighbor contexts, significant / last-significant scan
-  flags, and reverse-scan level decoding with the Eq1/Gt1 context
-  ramp;
-- a full IDR encoder emitting MIXED Intra_16x16 + I_4x4 macroblocks
-  in one CABAC slice, and the matching decoder. Prediction,
-  transform, quantization and reconstruction are SHARED with the
-  proven CAVLC implementation (h264_intra.py) — this module is
-  exactly the entropy layer.
+- context-variable initialization (9.3.1.1) from an (m, n) table: the
+  I-slice column of the published tables for every context an intra
+  4:2:0 slice can touch. The P/B columns are not transcribed;
+  h264_cabac_inter takes an explicit P table instead;
+- binarizations (9.3.2) and context selection (9.3.3.1.1): the I and
+  P mb_type trees with the mid-string I_PCM terminate bin, sub_mb_type,
+  mb_skip_flag, unary ref_idx, UEG3 mvd, coded_block_pattern,
+  mb_qp_delta, the Intra_4x4 mode flags and residual_block_cabac
+  (7.3.5.3.3: coded_block_flag, significance map, UEG0 levels);
+- ONE macroblock layer for I and P slices (_encode_cabac_mbs /
+  _decode_cabac_mbs) that codes only this syntax. Prediction,
+  transform, quantization and reconstruction come from the intra layer
+  of h264_intra.py; motion, P_Skip and inter prediction from the
+  _InterSlice of h264_inter.py; slice headers, SPS and PPS from
+  h264.py, whose header writers add cabac_init_idc and the
+  cabac_alignment_one_bits for a CABAC PPS.
 
-Conformance: the engine and tables are transcribed from the published
-spec; the encoder<->decoder round-trip is bit-exact by construction
-(pinned across QPs and macroblock mixes in tests/test_h264_cabac.py),
-and the same test file carries a capability-gated ffmpeg cross-pin
-that verifies decoder parity against libavcodec wherever ffmpeg is
-installed (this container has none — the gate skips loudly).
+The encoders emit Intra_16x16 (DC) and I_4x4 macroblocks in I slices
+and Intra_16x16 plus every P partition in P slices; I_PCM, and I_4x4
+in P slices, raise NotImplementedError. Conformance: the engine and
+the I-slice tables are transcribed from the published spec; the
+encoder<->decoder round trip is bit-exact by construction
+(tests/test_h264_cabac.py, byte pins in tests/test_h264_stream_pins.py),
+and a capability-gated ffmpeg cross-pin checks decoder parity against
+libavcodec where ffmpeg is installed.
 
 Reference parity: preprocess_parallel.sh shells out to external tools
 for any video-adjacent work; this is the engine-side equivalent for
@@ -52,35 +48,34 @@ from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
-    _check_planes,
     _ep_remove,
     _nal,
+    _pad_planes,
     _parse_pps,
+    _parse_slice_header,
     _parse_sps,
     _pps_rbsp,
+    _slice_header,
     _split_nals,
     _sps_rbsp,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-    _CF,
-    _H4,
     _MODE_NEEDS,
     _ZBLK,
     _ZIGA,
     _ZIGA1,
-    _chroma_fwd,
+    _MbGrid,
+    _cbp_luma,
     _chroma_qp,
-    _decoded_before_factory,
-    _dequant_ac,
-    _fwd4x4,
-    _inv4x4,
-    _pred4,
-    _pred8_chroma_dc,
-    _pred16,
-    _quant,
-    _quant_dc4,
-    _recon_chroma8,
-    _recon_mb16,
+    _i4x4_fwd,
+    _i16_fwd,
+    _i16_preds,
+    _pred_mode4,
+    _recon_inter_mb,
+    _residual_from_target,
+    _store_chroma,
+    _store_i4x4,
+    _store_i16,
 )
 
 # ---------------------------------------------------------------------------
@@ -216,15 +211,16 @@ _LEVEL_OFF = (227, 237, 247, 257, 266)
 
 
 class _Ctx:
-    """Per-slice context variable array (9.3.1.1 initialization)."""
+    """Per-slice context variable array (9.3.1.1 initialization) from
+    an (m, n) table: the I-slice one by default."""
 
     __slots__ = ("state", "mps")
 
-    def __init__(self, qp: int) -> None:
+    def __init__(self, qp: int, table: dict = _CTX_INIT_I) -> None:
         self.state = {}
         self.mps = {}
         q = min(max(qp, 0), 51)
-        for ctx, (m, n) in _CTX_INIT_I.items():
+        for ctx, (m, n) in table.items():
             pre = min(max(1, ((m * q) >> 4) + n), 126)
             if pre <= 63:
                 self.state[ctx], self.mps[ctx] = 63 - pre, 0
@@ -581,205 +577,581 @@ def _dec_residual(
 
 
 # ---------------------------------------------------------------------------
-# Macroblock-layer neighbor state
+# Neighbour state and context selection (9.3.3.1.1)
 # ---------------------------------------------------------------------------
 
 
+def _nb(grid, x, y, n, unav):
+    """The entries of ``grid`` left of and above block (x, y), with n
+    blocks per macroblock side; ``unav`` for a block outside the
+    picture. With n > 1 a block inside the current macroblock is
+    ``unav`` too, where 9.3.3.1.1.9 reads its coded_block_flag: the
+    pinned streams are coded with this rule, so changing it changes
+    their bytes."""
+    return (grid[y, x - 1] if x and not x % n else unav,
+            grid[y - 1, x] if y and not y % n else unav)
+
+
+def _cbf_inc(grid, x, y, n, unav) -> int:
+    """coded_block_flag ctxIdxInc (9.3.3.1.1.9) of block (x, y) of a
+    flag grid; ``unav`` is 1 in an intra macroblock, 0 in an inter
+    one."""
+    a, b = _nb(grid, x, y, n, unav)
+    return int(a) + 2 * int(b)
+
+
 class _MbState:
-    """Cross-macroblock context state shared by encoder and decoder:
-    everything 9.3.3.1.1.x needs to derive ctxIdxInc values."""
+    """Per-slice neighbour state of the CABAC macroblock layer, the same
+    for the encoder and the decoder: the _MbGrid ``g`` being coded (its
+    nnz and cnnz grids hold the coded_block_flag of every luma and
+    chroma AC 4x4 block, its mode grid marks the I_4x4 macroblocks)
+    and, per macroblock, the coded_block_pattern, the skip flag and the
+    coded_block_flag of the luma DC and both chroma DC blocks; per 4x4
+    block the absolute mvd components; whether the last mb_qp_delta
+    was nonzero. Every macroblock left of or above the current one is
+    already coded (one slice per picture), so availability is the
+    picture edge alone."""
 
-    def __init__(self, mbw: int, mbh: int) -> None:
-        self.mbw, self.mbh = mbw, mbh
-        self.is_i4x4 = np.zeros((mbh, mbw), bool)
-        self.coded = np.zeros((mbh, mbw), bool)  # availability
-        self.cbp_luma = np.zeros((mbh, mbw), np.int64)
-        self.cbp_chroma = np.zeros((mbh, mbw), np.int64)
-        self.cbf_luma4 = np.zeros((mbh * 4, mbw * 4), np.int64)
-        self.cbf_lumadc = np.zeros((mbh, mbw), np.int64)
-        self.has_lumadc = np.zeros((mbh, mbw), bool)  # is Intra16x16
-        self.cbf_cdc = {0: np.zeros((mbh, mbw), np.int64),
-                        1: np.zeros((mbh, mbw), np.int64)}
-        self.cbf_c4 = {0: np.zeros((mbh * 2, mbw * 2), np.int64),
-                       1: np.zeros((mbh * 2, mbw * 2), np.int64)}
-        self.prev_qp_delta_nz = 0
+    def __init__(self, g: _MbGrid) -> None:
+        self.g = g
+        mbh, mbw = g.nnz.shape[0] // 4, g.nnz.shape[1] // 4
+        self.cbp = np.zeros((mbh, mbw), np.int64)
+        self.skip = np.zeros((mbh, mbw), bool)
+        self.dc = np.zeros((3, mbh, mbw), np.int64)
+        self.absmvd = np.zeros((mbh * 4, mbw * 4, 2), np.int64)
+        self.qpd_nz = 0
 
-    # --- mb_type bin0 (9.3.3.1.1.3) ---
-    def mb_type_inc(self, mx: int, my: int) -> int:
-        inc = 0
-        if mx > 0 and self.coded[my, mx - 1] and not self.is_i4x4[my, mx - 1]:
-            inc += 1
-        if my > 0 and self.coded[my - 1, mx] and not self.is_i4x4[my - 1, mx]:
-            inc += 1
-        return inc
+    def mb_type_inc(self, mx, my) -> int:
+        """I-slice mb_type bin 0 (9.3.3.1.1.3): neighbours not I_4x4."""
+        return sum(int(m < 0) for m in _nb(self.g.modes4, mx * 4, my * 4,
+                                           4, 0))
 
-    # --- coded_block_pattern luma bins (9.3.3.1.1.4) ---
-    def _cbp_bit(self, mx: int, my: int, blk: int, cur_bits: int,
-                 cur_mx: int, cur_my: int) -> int | None:
-        """cbp bit of 8x8 block blk in mb (mx,my); None = unavailable.
-        The current (partially coded) mb uses cur_bits."""
-        if mx < 0 or my < 0:
-            return None
-        if mx == cur_mx and my == cur_my:
-            return (cur_bits >> blk) & 1
-        if not self.coded[my, mx]:
-            return None
-        return (int(self.cbp_luma[my, mx]) >> blk) & 1
+    def skip_inc(self, mx, my) -> int:
+        """mb_skip_flag (9.3.3.1.1.1): neighbours not skipped."""
+        return sum(not s for s in _nb(self.skip, mx, my, 1, True))
 
-    def cbp_luma_inc(self, mx: int, my: int, blk: int,
-                     cur_bits: int) -> int:
-        bx, by = blk & 1, blk >> 1
-        # left neighbor 8x8
-        if bx == 0:
-            a = self._cbp_bit(mx - 1, my, by * 2 + 1, cur_bits, mx, my)
-        else:
-            a = self._cbp_bit(mx, my, by * 2, cur_bits, mx, my)
-        if by == 0:
-            b = self._cbp_bit(mx, my - 1, 2 + bx, cur_bits, mx, my)
-        else:
-            b = self._cbp_bit(mx, my, bx, cur_bits, mx, my)
-        cond_a = 1 if (a is not None and a == 0) else 0
-        cond_b = 1 if (b is not None and b == 0) else 0
-        return cond_a + 2 * cond_b
+    def cbp_luma_ctx(self, mx, my, blk, cur) -> int:
+        """coded_block_pattern luma bin ``blk`` (9.3.3.1.1.4): the left
+        and upper 8x8 blocks whose bit is 0, the current macroblock's
+        bits taken from ``cur``."""
+        a = (cur >> (blk - 1) if blk & 1 else
+             self.cbp[my, mx - 1] >> (blk + 1) if mx else 1) & 1
+        b = (cur >> (blk - 2) if blk & 2 else
+             self.cbp[my - 1, mx] >> (blk + 2) if my else 1) & 1
+        return 73 + (1 - int(a)) + 2 * (1 - int(b))
 
-    def cbp_chroma_inc(self, mx: int, my: int, binidx: int) -> int:
-        def cond(nx: int, ny: int) -> int:
-            if nx < 0 or ny < 0 or not self.coded[ny, nx]:
-                return 0
-            v = int(self.cbp_chroma[ny, nx])
-            return (1 if v != 0 else 0) if binidx == 0 else (
-                1 if v == 2 else 0
-            )
+    def cbp_chroma_ctx(self, mx, my, b) -> int:
+        """coded_block_pattern chroma bin ``b``: neighbours whose
+        CodedBlockPatternChroma exceeds ``b``."""
+        a, u = _nb(self.cbp, mx, my, 1, 0)
+        return 77 + 4 * b + int(a >> 4 > b) + 2 * int(u >> 4 > b)
 
-        inc = cond(mx - 1, my) + 2 * cond(mx, my - 1)
-        return inc if binidx == 0 else 4 + inc
+    def mvd_inc(self, gx, gy, comp) -> int:
+        """mvd bin 0 (9.3.3.1.1.7): absMvdComp(A) + absMvdComp(B)
+        against the 3 / 32 thresholds."""
+        e = sum(_nb(self.absmvd[..., comp], gx, gy, 1, 0))
+        return 0 if e < 3 else 1 if e <= 32 else 2
 
-    # --- coded_block_flag (9.3.3.1.1.9); current mb is always intra ---
-    def cbf_inc_lumadc(self, mx: int, my: int) -> int:
-        def cond(nx: int, ny: int) -> int:
-            if nx < 0 or ny < 0:
-                return 1  # mbN unavailable, current mb intra
-            if not self.coded[ny, nx]:
-                return 1
-            if not self.has_lumadc[ny, nx]:
-                return 0  # transBlockN absent (neighbor not I16x16)
-            return int(self.cbf_lumadc[ny, nx])
 
-        return cond(mx - 1, my) + 2 * cond(mx, my - 1)
+# ---------------------------------------------------------------------------
+# Binarizations (9.3.2)
+# ---------------------------------------------------------------------------
 
-    def cbf_inc_luma4(self, gx: int, gy: int) -> int:
-        def cond(nx: int, ny: int) -> int:
-            if nx < 0 or ny < 0:
-                return 1
-            if not self.coded[ny // 4, nx // 4]:
-                return 1
-            return int(self.cbf_luma4[ny, nx])
+# P mb_type prefix bins (ctx 14..16) by mb_type: P_L0_16x16, P_L0_L0_16x8,
+# P_L0_L0_8x16, P_8x8; 5 is the prefix of every intra mb_type
+_MB_BIN = {0: (0, 0, 0), 1: (0, 1, 1), 2: (0, 1, 0), 3: (0, 0, 1), 5: (1,)}
+# P sub_mb_type bins (ctx 21..23): P_L0_8x8, 8x4, 4x8, 4x4
+_SUB_BIN = {0: (1,), 1: (0, 0), 2: (0, 1, 1), 3: (0, 1, 0)}
+_MB_OF_BINS = {b: t for t, b in _MB_BIN.items()}
+_SUB_OF_BINS = {b: t for t, b in _SUB_BIN.items()}
+# contexts of an intra mb_type's bins per slice type: bin 0, then the
+# bins after the I_PCM terminate (luma CBP, chroma CBP != 0, chroma CBP
+# == 2, the two prediction-mode bins). Bin 0 of an I slice adds the
+# neighbour increment. In P slices 9.3.3.1.2 puts the chroma CBP == 2
+# bin on 19 and P mb_type prefix bin 2 after a 1 on 17; this layer uses
+# 20 and 16, as the pinned P streams (synthetic init tables) do.
+_I_LAYOUT = (3, 6, 7, 8, 9, 10)
+_P_LAYOUT = (17, 18, 19, 20, 20, 20)
 
-        return cond(gx - 1, gy) + 2 * cond(gx, gy - 1)
 
-    def cbf_inc_cdc(self, mx: int, my: int, pi: int) -> int:
-        def cond(nx: int, ny: int) -> int:
-            if nx < 0 or ny < 0:
-                return 1
-            if not self.coded[ny, nx]:
-                return 1
-            return int(self.cbf_cdc[pi][ny, nx])
+def _enc_bins(enc: _Enc, ctxs: _Ctx, base: int, bins) -> None:
+    for i, b in enumerate(bins):
+        enc.decision(ctxs, base + i, b)
 
-        return cond(mx - 1, my) + 2 * cond(mx, my - 1)
 
-    def cbf_inc_c4(self, cx: int, cy: int, pi: int) -> int:
-        def cond(nx: int, ny: int) -> int:
-            if nx < 0 or ny < 0:
-                return 1
-            if not self.coded[ny // 2, nx // 2]:
-                return 1
-            return int(self.cbf_c4[pi][ny, nx])
+def _dec_bins(dec: _Dec, ctxs: _Ctx, base: int, codes: dict) -> int:
+    """Read bins on contexts base, base + 1, ... until they spell a key
+    of the prefix-free ``codes``."""
+    bins = ()
+    while bins not in codes:
+        bins += (dec.decision(ctxs, base + len(bins)),)
+    return codes[bins]
 
-        return cond(cx - 1, cy) + 2 * cond(cx, cy - 1)
+
+def _enc_intra_type(enc: _Enc, ctxs: _Ctx, lay, inc: int,
+                    itype: int) -> None:
+    """I mb_type ``itype`` (0 I_4x4, 1..24 Intra_16x16; Table 9-36)
+    over the context layout ``lay``."""
+    enc.decision(ctxs, lay[0] + inc, int(itype > 0))
+    if itype:
+        enc.terminate(0)  # not I_PCM
+        t = itype - 1
+        cbpc = t // 4 % 3
+        enc.decision(ctxs, lay[1], int(t >= 12))
+        enc.decision(ctxs, lay[2], int(cbpc > 0))
+        if cbpc:
+            enc.decision(ctxs, lay[3], int(cbpc == 2))
+        enc.decision(ctxs, lay[4], t >> 1 & 1)
+        enc.decision(ctxs, lay[5], t & 1)
+
+
+def _dec_intra_type(dec: _Dec, ctxs: _Ctx, lay, inc: int) -> int:
+    if not dec.decision(ctxs, lay[0] + inc):
+        return 0
+    if dec.terminate():
+        raise NotImplementedError(
+            "I_PCM inside a CABAC slice — this encoder never emits it")
+    t = 12 * dec.decision(ctxs, lay[1])
+    if dec.decision(ctxs, lay[2]):
+        t += 8 if dec.decision(ctxs, lay[3]) else 4
+    t += 2 * dec.decision(ctxs, lay[4])
+    return 1 + t + dec.decision(ctxs, lay[5])
+
+
+def _enc_mb_type(enc, ctxs, st: _MbState, mx, my, p: bool,
+                 mb_type: int) -> None:
+    """mb_type of an I slice (the I mb_type) or a P slice (0..3 inter,
+    5 + the I mb_type for intra; 9.3.2.5)."""
+    if not p:
+        _enc_intra_type(enc, ctxs, _I_LAYOUT, st.mb_type_inc(mx, my),
+                        mb_type)
+        return
+    _enc_bins(enc, ctxs, 14, _MB_BIN[min(mb_type, 5)])
+    if mb_type >= 5:
+        _enc_intra_type(enc, ctxs, _P_LAYOUT, 0, mb_type - 5)
+
+
+def _dec_mb_type(dec, ctxs, st: _MbState, mx, my, p: bool) -> int:
+    if not p:
+        return _dec_intra_type(dec, ctxs, _I_LAYOUT, st.mb_type_inc(mx, my))
+    t = _dec_bins(dec, ctxs, 14, _MB_OF_BINS)
+    if t < 5:
+        return t
+    t = _dec_intra_type(dec, ctxs, _P_LAYOUT, 0)
+    if not t:
+        raise NotImplementedError(
+            "I_4x4 inside a CABAC P slice — P_CTX_IDS has no context for "
+            "its prediction modes")
+    return 5 + t
+
+
+def _ref_ctx(k: int, inc: int) -> int:
+    """ref_idx bin k: 54 + inc, then 58, then 59 (unary, 9.3.3.1.1.6)."""
+    return 54 + inc if k == 0 else min(57 + k, 59)
+
+
+def _enc_mvd(enc: _Enc, ctxs: _Ctx, base: int, inc: int,
+             mvd: int) -> None:
+    """UEG3 (9.3.2.3): TU prefix cMax 9 over base + {inc, 3, 4, 5,
+    6, 6, ...}, EG3 bypass suffix for |mvd| >= 9, bypass sign."""
+    a = abs(mvd)
+    prefix = min(a, 9)
+    for k in range(prefix):
+        ctx = base + (inc if k == 0 else min(k + 2, 6))
+        enc.decision(ctxs, ctx, 1)
+    if prefix < 9:
+        ctx = base + (inc if prefix == 0 else min(prefix + 2, 6))
+        enc.decision(ctxs, ctx, 0)
+    else:
+        # EG3 suffix of (a - 9)
+        v = a - 9
+        k = 3
+        while v >= (1 << k):
+            enc.bypass(1)
+            v -= 1 << k
+            k += 1
+        enc.bypass(0)
+        for i in range(k - 1, -1, -1):
+            enc.bypass((v >> i) & 1)
+    if a:
+        enc.bypass(1 if mvd < 0 else 0)
+
+
+def _dec_mvd(dec: _Dec, ctxs: _Ctx, base: int, inc: int) -> int:
+    a = 0
+    while a < 9:
+        ctx = base + (inc if a == 0 else min(a + 2, 6))
+        if not dec.decision(ctxs, ctx):
+            break
+        a += 1
+    if a == 9:
+        k = 3
+        while dec.bypass():
+            a += 1 << k
+            k += 1
+            if k > 30:
+                raise ValueError("runaway mvd exponent")
+        v = 0
+        for _ in range(k):
+            v = (v << 1) | dec.bypass()
+        a += v
+    if a and dec.bypass():
+        return -a
+    return a
+
+
+class _CabacPut:
+    """The encoder side of _InterSlice.motion in a CABAC P slice:
+    ref_idx as unary bins, each mvd component as UEG3 bins, with their
+    neighbour increments at the partition's 4x4 position, ``refs``
+    being the slice's list-0 refIdx grid. The refIdx of the current
+    macroblock's partitions enter that grid only with their motion
+    vectors, after every ref_idx of the macroblock is coded, where
+    9.3.3.1.1.6 reads them as soon as they are coded; the pinned P
+    streams are coded with this rule."""
+
+    def __init__(self, coder, ctxs: _Ctx, st: _MbState, refs) -> None:
+        self.coder, self.ctxs, self.st, self.refs = coder, ctxs, st, refs
+
+    def ref_inc(self, gx, gy) -> int:
+        a, b = _nb(self.refs, gx, gy, 1, 0)
+        return int(a > 0) + 2 * int(b > 0)
+
+    def ref(self, v: int, n: int, gx, gy) -> int:
+        inc = self.ref_inc(gx, gy)
+        for k in range(v + 1):
+            self.coder.decision(self.ctxs, _ref_ctx(k, inc), int(k < v))
+        return v
+
+    def mv(self, pred, mv, gx, gy, w4, h4):
+        for comp in (0, 1):
+            d = int(mv[comp] - pred[comp])
+            _enc_mvd(self.coder, self.ctxs, 40 + 7 * comp,
+                     self.st.mvd_inc(gx, gy, comp), d)
+            self.st.absmvd[gy : gy + h4, gx : gx + w4, comp] = abs(d)
+        return mv
+
+
+class _CabacGet(_CabacPut):
+    """The decoder side: reads what _CabacPut writes. A ref_idx at or
+    past the active count raises ValueError."""
+
+    def ref(self, v: int, n: int, gx, gy) -> int:
+        inc = self.ref_inc(gx, gy)
+        v = 0
+        while self.coder.decision(self.ctxs, _ref_ctx(v, inc)):
+            v += 1
+            if v >= n:
+                raise ValueError(f"ref_idx {v} out of range ({n} active)")
+        return v
+
+    def mv(self, pred, mv, gx, gy, w4, h4):
+        out = np.empty(2, np.int64)
+        for comp in (0, 1):
+            d = _dec_mvd(self.coder, self.ctxs, 40 + 7 * comp,
+                         self.st.mvd_inc(gx, gy, comp))
+            out[comp] = pred[comp] + d
+            self.st.absmvd[gy : gy + h4, gx : gx + w4, comp] = abs(d)
+        return out
 
 
 def _enc_mb_qp_delta(enc: _Enc, ctxs: _Ctx, st: _MbState, delta: int) -> None:
-    mapped = 2 * delta - 1 if delta > 0 else -2 * delta
-    inc = 1 if st.prev_qp_delta_nz else 0
-    if mapped == 0:
-        enc.decision(ctxs, 60 + inc, 0)
-    else:
-        enc.decision(ctxs, 60 + inc, 1)
-        for k in range(1, mapped):
-            enc.decision(ctxs, 62 if k == 1 else 63, 1)
-        enc.decision(ctxs, 62 if mapped == 1 else 63, 0)
-    st.prev_qp_delta_nz = 1 if delta else 0
+    """mb_qp_delta as mapped unary bins on 60 + inc, 62, 63, ..."""
+    ctx = 60 + st.qpd_nz
+    for k in range(2 * delta - 1 if delta > 0 else -2 * delta):
+        enc.decision(ctxs, ctx, 1)
+        ctx = 62 if k == 0 else 63
+    enc.decision(ctxs, ctx, 0)
+    st.qpd_nz = int(delta != 0)
 
 
 def _dec_mb_qp_delta(dec: _Dec, ctxs: _Ctx, st: _MbState) -> int:
-    inc = 1 if st.prev_qp_delta_nz else 0
-    mapped = 0
-    if dec.decision(ctxs, 60 + inc):
-        mapped = 1
-        while dec.decision(ctxs, 62 if mapped == 1 else 63):
-            mapped += 1
+    """Read what _enc_mb_qp_delta writes; a value outside 7.4.5's
+    -26..+25 raises ValueError."""
+    mapped, ctx = 0, 60 + st.qpd_nz
+    while mapped <= 52 and dec.decision(ctxs, ctx):
+        mapped += 1
+        ctx = 62 if mapped == 1 else 63
     delta = (mapped + 1) // 2 if mapped % 2 else -(mapped // 2)
-    st.prev_qp_delta_nz = 1 if delta else 0
+    if not -26 <= delta <= 25:
+        raise ValueError(f"mb_qp_delta {delta} outside -26..25")
+    st.qpd_nz = int(delta != 0)
     return delta
 
 
 # ---------------------------------------------------------------------------
-# Full encoder: mixed Intra_16x16 / I_4x4 CABAC slice
+# The macroblock layer of I and P slices
 # ---------------------------------------------------------------------------
 
 
-def _slice_header_cabac(sl: BitWriter, qp: int) -> None:
-    sl.ue(0)  # first_mb_in_slice
-    sl.ue(7)  # slice_type: I (all slices)
-    sl.ue(0)  # pic_parameter_set_id
-    sl.u(0, 4)  # frame_num
-    sl.ue(0)  # idr_pic_id
-    sl.u(0, 1)  # no_output_of_prior_pics_flag
-    sl.u(0, 1)  # long_term_reference_flag
-    sl.se(qp - 26)  # slice_qp_delta
-    sl.ue(1)  # disable_deblocking_filter_idc: off
-    # cabac_alignment_one_bit
-    while sl.n % 8:
-        sl.u(1, 1)
+def _enc_residuals(enc: _Enc, ctxs: _Ctx, st: _MbState, mx, my, intra,
+                   cbp, luma, cdcz, cacz, zdc=None) -> None:
+    """coded_block_pattern (carried by the mb_type of an Intra_16x16
+    macroblock, whose luma DC levels ``zdc`` then lead and whose
+    ``luma`` levels are AC only), mb_qp_delta 0 when anything is coded,
+    then the residual blocks (7.3.5.3) with their coded_block_flags.
+    ``intra`` is the flag value of a neighbour outside the picture."""
+    g = st.g
+    if zdc is None:
+        for blk in range(4):
+            enc.decision(ctxs, st.cbp_luma_ctx(mx, my, blk, cbp),
+                         cbp >> blk & 1)
+        enc.decision(ctxs, st.cbp_chroma_ctx(mx, my, 0), int(cbp > 15))
+        if cbp > 15:
+            enc.decision(ctxs, st.cbp_chroma_ctx(mx, my, 1), int(cbp > 31))
+    st.cbp[my, mx] = cbp
+    if cbp or zdc is not None:
+        _enc_mb_qp_delta(enc, ctxs, st, 0)
+    else:
+        st.qpd_nz = 0
+    if zdc is not None:
+        st.dc[0, my, mx] = _enc_residual(
+            enc, ctxs, zdc.ravel()[_ZIGA].tolist(), 0,
+            _cbf_inc(st.dc[0], mx, my, 1, 1))
+    cat, zig = (2, _ZIGA) if zdc is None else (1, _ZIGA1)
+    for k, (bx, by) in enumerate(_ZBLK):
+        gx, gy = mx * 4 + bx, my * 4 + by
+        g.nnz[gy, gx] = cbp >> (k >> 2) & 1 and _enc_residual(
+            enc, ctxs, luma[by, bx].ravel()[zig].tolist(), cat,
+            _cbf_inc(g.nnz, gx, gy, 4, intra))
+    for pi in (0, 1):
+        st.dc[1 + pi, my, mx] = cbp > 15 and _enc_residual(
+            enc, ctxs, cdcz[pi].ravel().tolist(), 3,
+            _cbf_inc(st.dc[1 + pi], mx, my, 1, intra))
+    for pi, cnnz in enumerate(g.cnnz):
+        for k in range(4):
+            cx, cy = mx * 2 + (k & 1), my * 2 + (k >> 1)
+            cnnz[cy, cx] = cbp > 31 and _enc_residual(
+                enc, ctxs, cacz[pi][k >> 1, k & 1].ravel()[_ZIGA1].tolist(),
+                4, _cbf_inc(cnnz, cx, cy, 2, intra))
 
 
-def _enc_mb_type_i(enc: _Enc, ctxs: _Ctx, st: _MbState, mx: int, my: int,
-                   i4x4: bool, cbpl15: bool, cbpc: int, pm: int) -> None:
-    inc = st.mb_type_inc(mx, my)
-    if i4x4:
-        enc.decision(ctxs, 3 + inc, 0)
+def _dec_residuals(dec: _Dec, ctxs: _Ctx, st: _MbState, mx, my, intra,
+                   cbp=None):
+    """Parse what _enc_residuals writes (``cbp`` given by the mb_type
+    of an Intra_16x16 macroblock). Returns (cbp, mb_qp_delta, luma DC
+    levels or None, luma levels (4, 4, 4, 4), chroma DC levels (2, 2,
+    2), chroma AC levels (2, 2, 2, 4, 4))."""
+    g, i16 = st.g, cbp is not None
+    if not i16:
+        cbp = 0
+        for blk in range(4):
+            cbp |= dec.decision(ctxs, st.cbp_luma_ctx(mx, my, blk, cbp)) << blk
+        if dec.decision(ctxs, st.cbp_chroma_ctx(mx, my, 0)):
+            cbp |= 32 if dec.decision(ctxs, st.cbp_chroma_ctx(mx, my, 1)) \
+                else 16
+    st.cbp[my, mx] = cbp
+    qpd = 0
+    if cbp or i16:
+        qpd = _dec_mb_qp_delta(dec, ctxs, st)
+    else:
+        st.qpd_nz = 0
+    zdc = None
+    if i16:
+        zdc = np.zeros(16, np.int64)
+        zdc[_ZIGA], st.dc[0, my, mx] = _dec_residual(
+            dec, ctxs, 0, _cbf_inc(st.dc[0], mx, my, 1, 1), 16)
+        zdc = zdc.reshape(4, 4)
+    cat, zig = (1, _ZIGA1) if i16 else (2, _ZIGA)
+    luma = np.zeros((4, 4, 16), np.int64)
+    for k, (bx, by) in enumerate(_ZBLK):
+        gx, gy = mx * 4 + bx, my * 4 + by
+        g.nnz[gy, gx] = 0
+        if cbp >> (k >> 2) & 1:
+            luma[by, bx, zig], g.nnz[gy, gx] = _dec_residual(
+                dec, ctxs, cat, _cbf_inc(g.nnz, gx, gy, 4, intra), len(zig))
+    cdcz = np.zeros((2, 4), np.int64)
+    cacz = np.zeros((2, 4, 16), np.int64)
+    for pi in (0, 1):
+        st.dc[1 + pi, my, mx] = 0
+        if cbp > 15:
+            cdcz[pi], st.dc[1 + pi, my, mx] = _dec_residual(
+                dec, ctxs, 3, _cbf_inc(st.dc[1 + pi], mx, my, 1, intra), 4)
+    for pi, cnnz in enumerate(g.cnnz):
+        for k in range(4):
+            cx, cy = mx * 2 + (k & 1), my * 2 + (k >> 1)
+            cnnz[cy, cx] = 0
+            if cbp > 31:
+                cacz[pi, k, _ZIGA1], cnnz[cy, cx] = _dec_residual(
+                    dec, ctxs, 4, _cbf_inc(cnnz, cx, cy, 2, intra), 15)
+    return (cbp, qpd, zdc, luma.reshape(4, 4, 4, 4), cdcz.reshape(2, 2, 2),
+            cacz.reshape(2, 2, 2, 4, 4))
+
+
+def _enc_intra_mb(enc: _Enc, ctxs: _Ctx, st: _MbState, src, spec, mx, my,
+                  qp, base) -> None:
+    """An intra macroblock from its mb_spec into an I (``base`` 0) or P
+    (``base`` 5) slice: ("i16",) Intra_16x16 DC, or in I slices
+    ("i4", mode) I_4x4 — transformed and reconstructed by h264_intra."""
+    g, p = st.g, base > 0
+    if spec[0] == "i16":
+        pred, cpred, acz, zdc, cdcz, cacz, cbpc = _i16_fwd(g, src, mx, my,
+                                                          qp, 2, 0)
+        cbpl = 0 if acz is None else 15
+        _enc_mb_type(enc, ctxs, st, mx, my, p,
+                     base + 3 + 4 * cbpc + (cbpl and 12))
+        enc.decision(ctxs, 64, 0)  # intra_chroma_pred_mode: DC
+        _enc_residuals(enc, ctxs, st, mx, my, 1, cbpl | cbpc << 4, acz,
+                       cdcz, cacz, zdc)
+        _store_i16(g, mx, my, pred, cpred, acz, zdc, cdcz, cacz, cbpc, qp)
         return
-    enc.decision(ctxs, 3 + inc, 1)
-    enc.terminate(0)  # not I_PCM
-    enc.decision(ctxs, 6, 1 if cbpl15 else 0)
-    if cbpc == 0:
-        enc.decision(ctxs, 7, 0)
-        enc.decision(ctxs, 9, (pm >> 1) & 1)
-        enc.decision(ctxs, 10, pm & 1)
-    else:
-        enc.decision(ctxs, 7, 1)
-        enc.decision(ctxs, 8, 1 if cbpc == 2 else 0)
-        enc.decision(ctxs, 9, (pm >> 1) & 1)
-        enc.decision(ctxs, 10, pm & 1)
-
-
-def _dec_mb_type_i(dec: _Dec, ctxs: _Ctx, st: _MbState, mx: int,
-                   my: int) -> tuple[bool, bool, int, int]:
-    """Returns (is_i4x4, cbpl15, cbpc, pm). Raises on I_PCM."""
-    inc = st.mb_type_inc(mx, my)
-    if not dec.decision(ctxs, 3 + inc):
-        return True, False, 0, 0
-    if dec.terminate():
+    if p or spec[0] != "i4":
         raise NotImplementedError(
-            "I_PCM inside a CABAC slice — this encoder never emits it"
-        )
-    cbpl15 = bool(dec.decision(ctxs, 6))
-    if dec.decision(ctxs, 7):
-        cbpc = 2 if dec.decision(ctxs, 8) else 1
+            f"{spec[0]!r} inside a CABAC {'P' if p else 'I'} slice — only "
+            "Intra_16x16 (and I_4x4 in I slices) is emitted")
+    zl, cpred, cdcz, cacz, cbpc = _i4x4_fwd(g, src, mx, my, qp, spec[1])
+    _enc_mb_type(enc, ctxs, st, mx, my, False, 0)
+    for bx, by in _ZBLK:
+        gx, gy = mx * 4 + bx, my * 4 + by
+        pm4, m = _pred_mode4(g.modes4, gx, gy), int(g.modes4[gy, gx])
+        enc.decision(ctxs, 68, int(m == pm4))
+        if m != pm4:
+            rem = m - (m > pm4)
+            for k in range(3):
+                enc.decision(ctxs, 69, rem >> k & 1)
+    enc.decision(ctxs, 64, 0)  # intra_chroma_pred_mode: DC
+    _enc_residuals(enc, ctxs, st, mx, my, 1, _cbp_luma(zl) | cbpc << 4, zl,
+                   cdcz, cacz)
+    _store_chroma(g, mx, my, cpred, cdcz, cacz, cbpc, _chroma_qp(qp))
+
+
+def _dec_intra_mb(dec: _Dec, ctxs: _Ctx, st: _MbState, mx, my, itype,
+                  qp) -> int:
+    """Decode an intra macroblock after its I mb_type ``itype`` into
+    the grid. Returns the updated QP."""
+    g = st.g
+    if itype == 0:
+        for bx, by in _ZBLK:
+            gx, gy = mx * 4 + bx, my * 4 + by
+            pm4 = _pred_mode4(g.modes4, gx, gy)
+            if dec.decision(ctxs, 68):
+                g.modes4[gy, gx] = pm4
+            else:
+                rem = (dec.decision(ctxs, 69) | dec.decision(ctxs, 69) << 1
+                       | dec.decision(ctxs, 69) << 2)
+                g.modes4[gy, gx] = rem + (rem >= pm4)
+    if dec.decision(ctxs, 64):
+        raise NotImplementedError(
+            "chroma prediction mode != DC — only DC is implemented")
+    t = itype - 1
+    cbp, qpd, zdc, luma, cdcz, cacz = _dec_residuals(
+        dec, ctxs, st, mx, my, 1,
+        None if itype == 0 else (15 if t >= 12 else 0) | t // 4 % 3 << 4)
+    qp = (qp + qpd) % 52
+    if itype:
+        _store_i16(g, mx, my, *_i16_preds(g, mx, my, t % 4, 0),
+                   luma if cbp & 15 else None, zdc, cdcz, cacz, cbp >> 4, qp)
     else:
-        cbpc = 0
-    pm = (dec.decision(ctxs, 9) << 1) | dec.decision(ctxs, 10)
-    return False, cbpl15, cbpc, pm
+        _store_i4x4(g, mx, my, 0, luma, cdcz, cacz, cbp >> 4, qp)
+    return qp
+
+
+def _encode_cabac_mbs(sl: BitWriter, ctxs: _Ctx, g: _MbGrid, src, specs,
+                      qp: int, sc=None) -> None:
+    """The macroblock layer of one CABAC slice into ``sl`` after its
+    header: one mb_spec per macroblock in raster order, coded from the
+    source planes ``src`` into ``g``. ``sc`` is the _InterSlice of a P
+    slice (None: an I slice, intra specs only). mb_skip_flag leads
+    every P macroblock and end_of_slice_flag follows every macroblock;
+    the slice data ends with its stop bit, zero-aligned."""
+    enc, st = _Enc(sl), _MbState(g)
+    mbw, last, qpc = g.nnz.shape[1] // 4, len(specs) - 1, _chroma_qp(qp)
+    if sc is not None:
+        io = _CabacPut(enc, ctxs, st, sc.mvs[0].ref)
+    for addr, spec in enumerate(specs):
+        mx, my = addr % mbw, addr // mbw
+        if sc is not None:
+            enc.decision(ctxs, 11 + st.skip_inc(mx, my),
+                         int(spec[0] == "skip"))
+        if spec[0] == "skip":
+            sc.skip(mx, my)
+            st.skip[my, mx] = True
+            st.qpd_nz = 0
+        elif spec[0] in ("i16", "i4", "ipcm"):
+            _enc_intra_mb(enc, ctxs, st, src, spec, mx, my, qp,
+                          0 if sc is None else 5)
+            if sc is not None:
+                sc.mark_intra(mx, my)
+        else:
+            mb_type, subs, mode, parts = sc.spec_parts(spec, mx, my)
+            _enc_mb_type(enc, ctxs, st, mx, my, True, mb_type)
+            for t in subs:
+                _enc_bins(enc, ctxs, 21, _SUB_BIN[t])
+            sc.motion(io, mx, my, mode, parts)
+            py, pcb, pcr = sc.predict(mx, my, parts)
+            cbp, zl, cdcz, cacz = _residual_from_target(
+                src, mx, my, py, pcb, pcr, qp, qpc)
+            _enc_residuals(enc, ctxs, st, mx, my, 0, cbp, zl, cdcz, cacz)
+            _recon_inter_mb(g.recon, mx, my, py, pcb, pcr, cbp, zl, cdcz,
+                            cacz, qp, qpc)
+        enc.terminate(int(addr == last))
+    sl.align_zero()
+
+
+def _decode_cabac_mbs(r: BitReader, ctxs: _Ctx, g: _MbGrid, qp: int,
+                      sc=None) -> None:
+    """Decode what _encode_cabac_mbs writes, from the reader's
+    (aligned) position into ``g``. end_of_slice_flag must be 1 after
+    the last macroblock and 0 after every other (ValueError)."""
+    dec, st = _Dec(r.data, r.pos), _MbState(g)
+    mbh, mbw = g.nnz.shape[0] // 4, g.nnz.shape[1] // 4
+    p = sc is not None
+    if p:
+        io = _CabacGet(dec, ctxs, st, sc.mvs[0].ref)
+
+        def read_sub():
+            return _dec_bins(dec, ctxs, 21, _SUB_OF_BINS)
+
+    for addr in range(mbw * mbh):
+        mx, my = addr % mbw, addr // mbw
+        if p and dec.decision(ctxs, 11 + st.skip_inc(mx, my)):
+            sc.skip(mx, my)
+            st.skip[my, mx] = True
+            st.qpd_nz = 0
+        else:
+            mb_type = _dec_mb_type(dec, ctxs, st, mx, my, p)
+            if not p or mb_type >= 5:
+                qp = _dec_intra_mb(dec, ctxs, st, mx, my, mb_type - 5 * p,
+                                   qp)
+                if p:
+                    sc.mark_intra(mx, my)
+            else:
+                mode, parts, nra = sc.read_parts(read_sub, mb_type, mx, my)
+                sc.motion(io, mx, my, mode, parts, nra)
+                py, pcb, pcr = sc.predict(mx, my, parts)
+                cbp, qpd, _, zl, cdcz, cacz = _dec_residuals(
+                    dec, ctxs, st, mx, my, 0)
+                qp = (qp + qpd) % 52
+                _recon_inter_mb(g.recon, mx, my, py, pcb, pcr, cbp, zl,
+                                cdcz, cacz, qp, _chroma_qp(qp))
+        end = dec.terminate()
+        if end != (addr == mbw * mbh - 1):
+            raise ValueError(
+                f"end_of_slice_flag {end} at mb ({mx},{my}) of "
+                f"{mbw}x{mbh} — CABAC desync")
+
+
+# ---------------------------------------------------------------------------
+# I-slice entry points
+# ---------------------------------------------------------------------------
+
+
+def _encode_cabac_idr(src, qp: int, i4x4_mode: int):
+    """A CABAC IDR I slice of the whole-macroblock planes ``src``:
+    Intra_16x16 (DC) on the (mx + my)-even checkerboard and I_4x4
+    (preferred luma mode ``i4x4_mode``, DC at edges) on the odd cells,
+    so mb_type, CBP and coded_block_flag contexts see both neighbour
+    classes in one slice. Returns (NAL bytes, _MbGrid)."""
+    if not 0 <= qp <= 51:
+        raise ValueError("QP must be in 0..51")
+    mbh, mbw = src[0].shape[0] // 16, src[0].shape[1] // 16
+    sl = BitWriter()
+    _slice_header(sl, qp, 0, (1, (0, 0)), cabac=True)
+    g = _MbGrid(mbw, mbh)
+    specs = [("i4", i4x4_mode) if (a % mbw + a // mbw) % 2 else ("i16",)
+             for a in range(mbw * mbh)]
+    _encode_cabac_mbs(sl, _Ctx(qp), g, src, specs, qp)
+    return _nal(3, 5, sl.bytes_()), g
 
 
 def encode_h264_cabac_intra(
@@ -797,463 +1169,46 @@ def encode_h264_cabac_intra(
     (annex_b_bytes, recon_y, recon_cb, recon_cr); the recon planes
     are the decoder-mirrored bit-exact contract, same as the CAVLC
     encoders."""
-    if not 0 <= qp <= 51:
-        raise ValueError("QP must be in 0..51")
     if i4x4_mode not in _MODE_NEEDS:
         raise ValueError("luma 4x4 mode must be 0..8")
-    y, cb, cr = _check_planes(y, cb, cr)
-    h, w = y.shape
-    ch, cw = h // 2, w // 2
-    mbw, mbh = -(-w // 16), -(-h // 16)
-    yp = np.pad(y, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
-    cbp_ = np.pad(cb, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    crp_ = np.pad(cr, ((0, mbh * 8 - ch), (0, mbw * 8 - cw)), mode="edge")
-    qpc = _chroma_qp(qp)
-
-    ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-    rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-    rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-    modes = np.full((mbh * 4, mbw * 4), -1, np.int64)
-    before = _decoded_before_factory(mbw)
-    st = _MbState(mbw, mbh)
-
-    sl = BitWriter()
-    _slice_header_cabac(sl, qp)
-    ctxs = _Ctx(qp)
-    enc = _Enc(sl)
-
-    for my in range(mbh):
-        for mx in range(mbw):
-            i4x4 = (mx + my) % 2 == 1
-            if i4x4:
-                # --- I_4x4: predict/transform per 4x4 in z-order ---
-                coefs = {}
-                chosen = {}
-                for bx, by in _ZBLK:
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    m = i4x4_mode
-                    need_t, need_l = _MODE_NEEDS[m]
-                    if (need_t and gy == 0) or (need_l and gx == 0):
-                        m = 2
-                    chosen[(bx, by)] = m
-                    modes[gy, gx] = m
-                    pred = _pred4(
-                        ry, gx, gy, m, mbw * 4,
-                        lambda a, b, _gx=gx, _gy=gy: before(a, b, _gx, _gy),
-                    )
-                    src = yp[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4]
-                    z = _quant(_fwd4x4(src.astype(np.int64) - pred), qp)
-                    coefs[(bx, by)] = z
-                    blk = (_inv4x4(_dequant_ac(z, qp)) + 32) >> 6
-                    ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-                        pred + blk, 0, 255
-                    )
-                cbp_luma = 0
-                for g in range(4):
-                    if any(coefs[_ZBLK[g * 4 + k]].any() for k in range(4)):
-                        cbp_luma |= 1 << g
-            else:
-                # --- Intra_16x16, DC prediction ---
-                pred = _pred16(ry, my, mx, 2)
-                resid = yp[my * 16 : my * 16 + 16,
-                           mx * 16 : mx * 16 + 16].astype(np.int64) - pred
-                blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
-                wm = np.matmul(np.matmul(_CF, blocks), _CF.T)
-                dc = wm[..., 0, 0]
-                acz = _quant(wm, qp)
-                acz[..., 0, 0] = 0
-                zdc = _quant_dc4((_H4 @ dc @ _H4) // 2, qp)
-                cbp_luma = 15 if acz.any() else 0
-            # --- chroma (shared shape) ---
-            cpred = (_pred8_chroma_dc(rcb, my, mx),
-                     _pred8_chroma_dc(rcr, my, mx))
-            cdcz, cacz, cbpc = _chroma_fwd(
-                (yp, cbp_, crp_), cpred, mx, my, qpc
-            )
-
-            # --- syntax ---
-            if i4x4:
-                _enc_mb_type_i(enc, ctxs, st, mx, my, True, False, 0, 0)
-                for bx, by in _ZBLK:
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    ma = modes[gy, gx - 1] if gx > 0 else -1
-                    mb_ = modes[gy - 1, gx] if gy > 0 else -1
-                    pred_mode = min(
-                        2 if ma < 0 else int(ma), 2 if mb_ < 0 else int(mb_)
-                    )
-                    m = chosen[(bx, by)]
-                    if m == pred_mode:
-                        enc.decision(ctxs, 68, 1)
-                    else:
-                        enc.decision(ctxs, 68, 0)
-                        rem = m - (1 if m > pred_mode else 0)
-                        enc.decision(ctxs, 69, rem & 1)
-                        enc.decision(ctxs, 69, (rem >> 1) & 1)
-                        enc.decision(ctxs, 69, (rem >> 2) & 1)
-                # intra_chroma_pred_mode: DC (TU bin 0)
-                enc.decision(ctxs, 64, 0)
-                # coded_block_pattern
-                for blk in range(4):
-                    enc.decision(
-                        ctxs,
-                        73 + st.cbp_luma_inc(mx, my, blk, cbp_luma),
-                        (cbp_luma >> blk) & 1,
-                    )
-                enc.decision(
-                    ctxs, 77 + st.cbp_chroma_inc(mx, my, 0),
-                    1 if cbpc > 0 else 0,
-                )
-                if cbpc > 0:
-                    enc.decision(
-                        ctxs, 77 + st.cbp_chroma_inc(mx, my, 1),
-                        1 if cbpc == 2 else 0,
-                    )
-                if cbp_luma or cbpc:
-                    _enc_mb_qp_delta(enc, ctxs, st, 0)
-                # luma residuals (cat2)
-                for g in range(4):
-                    for k in range(4):
-                        bx, by = _ZBLK[g * 4 + k]
-                        gx, gy = mx * 4 + bx, my * 4 + by
-                        if not cbp_luma & (1 << g):
-                            st.cbf_luma4[gy, gx] = 0
-                            continue
-                        cf = coefs[(bx, by)].ravel()[_ZIGA].tolist()
-                        st.cbf_luma4[gy, gx] = _enc_residual(
-                            enc, ctxs, cf, 2, st.cbf_inc_luma4(gx, gy)
-                        )
-                st.has_lumadc[my, mx] = False
-            else:
-                _enc_mb_type_i(
-                    enc, ctxs, st, mx, my, False, cbp_luma == 15, cbpc, 2
-                )
-                enc.decision(ctxs, 64, 0)  # chroma DC mode
-                _enc_mb_qp_delta(enc, ctxs, st, 0)
-                # luma DC (cat0)
-                dccf = zdc.ravel()[_ZIGA].tolist()
-                st.cbf_lumadc[my, mx] = _enc_residual(
-                    enc, ctxs, dccf, 0, st.cbf_inc_lumadc(mx, my)
-                )
-                st.has_lumadc[my, mx] = True
-                # luma AC (cat1)
-                if cbp_luma:
-                    for bx, by in _ZBLK:
-                        gx, gy = mx * 4 + bx, my * 4 + by
-                        cf = acz[by, bx].ravel()[_ZIGA1].tolist()
-                        st.cbf_luma4[gy, gx] = _enc_residual(
-                            enc, ctxs, cf, 1, st.cbf_inc_luma4(gx, gy)
-                        )
-                else:
-                    st.cbf_luma4[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 0
-            # chroma residuals (shared)
-            if cbpc > 0:
-                for pi in (0, 1):
-                    zd = cdcz[pi]
-                    cf = [int(zd[0, 0]), int(zd[0, 1]),
-                          int(zd[1, 0]), int(zd[1, 1])]
-                    st.cbf_cdc[pi][my, mx] = _enc_residual(
-                        enc, ctxs, cf, 3, st.cbf_inc_cdc(mx, my, pi)
-                    )
-            else:
-                for pi in (0, 1):
-                    st.cbf_cdc[pi][my, mx] = 0
-            if cbpc > 1:
-                for pi in (0, 1):
-                    for by in range(2):
-                        for bx in range(2):
-                            cx, cy = mx * 2 + bx, my * 2 + by
-                            cf = cacz[pi][by, bx].ravel()[_ZIGA1].tolist()
-                            st.cbf_c4[pi][cy, cx] = _enc_residual(
-                                enc, ctxs, cf, 4,
-                                st.cbf_inc_c4(cx, cy, pi),
-                            )
-            else:
-                for pi in (0, 1):
-                    st.cbf_c4[pi][my * 2 : my * 2 + 2,
-                                  mx * 2 : mx * 2 + 2] = 0
-            # --- reconstruction ---
-            if not i4x4:
-                ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
-                    _recon_mb16(pred, acz if cbp_luma else None, zdc, qp)
-                )
-            for pi, reconp in ((0, rcb), (1, rcr)):
-                reconp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                    _recon_chroma8(
-                        cpred[pi],
-                        cacz[pi] if cbpc > 1 else None,
-                        cdcz[pi] if cbpc > 0 else None,
-                        qpc,
-                    )
-                )
-            # --- cross-mb state ---
-            st.is_i4x4[my, mx] = i4x4
-            st.coded[my, mx] = True
-            st.cbp_luma[my, mx] = cbp_luma
-            st.cbp_chroma[my, mx] = cbpc
-            # end_of_slice_flag
-            last_mb = my == mbh - 1 and mx == mbw - 1
-            enc.terminate(1 if last_mb else 0)
-    sl.align_zero()
+    src = _pad_planes(y, cb, cr)
+    h, w = np.shape(y)
+    nal, g = _encode_cabac_idr(src, qp, i4x4_mode)
     stream = (
-        _nal(3, 7, _sps_rbsp(mbw, mbh, w, h))
+        _nal(3, 7, _sps_rbsp(-(-w // 16), -(-h // 16), w, h))
         + _nal(3, 8, _pps_rbsp(cabac=True, deblock=True))
-        + _nal(3, 5, sl.bytes_())
+        + nal
     )
-    return (
-        stream,
-        ry[:h, :w].astype(np.uint8),
-        rcb[:ch, :cw].astype(np.uint8),
-        rcr[:ch, :cw].astype(np.uint8),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Decoder
-# ---------------------------------------------------------------------------
-
-
-def _parse_slice_header_cabac(r: BitReader) -> int:
-    """IDR I-slice header for the CABAC PPS above; returns SliceQPy.
-    Mirrors h264.py's _parse_slice_header plus the deblocking idc."""
-    r.ue()  # first_mb_in_slice
-    stype = r.ue()
-    if stype % 5 != 2:
-        raise NotImplementedError(
-            f"slice_type {stype} — this entry point decodes I "
-            "slices; CABAC P slices live in h264_cabac_inter.py "
-            "(machinery complete; the 9.3.1.1 P-column init data is "
-            "the remaining gate)"
-        )
-    r.ue()  # pps id
-    r.u(4)  # frame_num
-    r.ue()  # idr_pic_id
-    r.u(1)
-    r.u(1)
-    qp = 26 + r.se()
-    r.ue()  # disable_deblocking_filter_idc
-    r.align()
-    return qp
+    return (stream, *g.frame(0, 0, w, h))
 
 
 def decode_h264_cabac(payload: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode an Annex B CABAC intra stream (Intra_16x16 + I_4x4,
-    4:2:0, frame-coded) to (y, cb, cr) planes."""
-    sps = None
-    planes = None
+    """Decode the IDR picture of an Annex B CABAC stream (Intra_16x16 +
+    I_4x4, 4:2:0, frame-coded) to (y, cb, cr) planes."""
+    sps = pps = planes = None
     for nal in _split_nals(bytes(payload)):
         ntype = nal[0] & 0x1F
         rbsp = _ep_remove(nal[1:])
         if ntype == 7:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
-            if not _parse_pps(rbsp)["cabac"]:
+            pps = _parse_pps(rbsp)
+            if not pps["cabac"]:
                 raise ValueError(
                     "CAVLC PPS given to the CABAC decoder — use "
                     "h264_intra.decode_h264_frame, which dispatches"
                 )
         elif ntype == 5:
-            if sps is None:
-                raise ValueError("IDR slice before SPS")
+            if sps is None or pps is None:
+                raise ValueError("IDR slice before its SPS and PPS")
             r = BitReader(rbsp)
-            qp = _parse_slice_header_cabac(r)
-            planes = _decode_idr_cabac(rbsp, r.pos, sps, qp)
+            qp, _ = _parse_slice_header(r, sps, pps)
+            g = _MbGrid(sps["mbw"], sps["mbh"])
+            _decode_cabac_mbs(r, _Ctx(qp), g, qp)
+            planes = g.frame(sps["x0"], sps["y0"], sps["w"], sps["h"])
     if planes is None:
         raise ValueError("no IDR slice found")
     return planes
-
-
-def _decode_idr_cabac(rbsp: bytes, pos_bits: int, sps: dict, qp: int):
-    mbw, mbh = sps["mbw"], sps["mbh"]
-    qpc = _chroma_qp(qp)
-    ry = np.zeros((mbh * 16, mbw * 16), np.int64)
-    rcb = np.zeros((mbh * 8, mbw * 8), np.int64)
-    rcr = np.zeros((mbh * 8, mbw * 8), np.int64)
-    modes = np.full((mbh * 4, mbw * 4), -1, np.int64)
-    before = _decoded_before_factory(mbw)
-    st = _MbState(mbw, mbh)
-    ctxs = _Ctx(qp)
-    dec = _Dec(rbsp, pos_bits)
-
-    for my in range(mbh):
-        for mx in range(mbw):
-            i4x4, cbpl15, cbpc16, pm = _dec_mb_type_i(dec, ctxs, st, mx, my)
-            if i4x4:
-                chosen = {}
-                for bx, by in _ZBLK:
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    ma = modes[gy, gx - 1] if gx > 0 else -1
-                    mb_ = modes[gy - 1, gx] if gy > 0 else -1
-                    pred_mode = min(
-                        2 if ma < 0 else int(ma), 2 if mb_ < 0 else int(mb_)
-                    )
-                    if dec.decision(ctxs, 68):
-                        m = pred_mode
-                    else:
-                        rem = (
-                            dec.decision(ctxs, 69)
-                            | (dec.decision(ctxs, 69) << 1)
-                            | (dec.decision(ctxs, 69) << 2)
-                        )
-                        m = rem if rem < pred_mode else rem + 1
-                    chosen[(bx, by)] = m
-                    modes[gy, gx] = m
-                if dec.decision(ctxs, 64 + _chroma_mode_inc(st, mx, my)):
-                    raise NotImplementedError(
-                        "chroma prediction mode != DC — only DC is "
-                        "implemented (matches the CAVLC decoder)"
-                    )
-                cbp_luma = 0
-                for blk in range(4):
-                    if dec.decision(
-                        ctxs, 73 + st.cbp_luma_inc(mx, my, blk, cbp_luma)
-                    ):
-                        cbp_luma |= 1 << blk
-                cbpc = 0
-                if dec.decision(ctxs, 77 + st.cbp_chroma_inc(mx, my, 0)):
-                    cbpc = 2 if dec.decision(
-                        ctxs, 77 + st.cbp_chroma_inc(mx, my, 1)
-                    ) else 1
-                if cbp_luma or cbpc:
-                    qp = (qp + _dec_mb_qp_delta(dec, ctxs, st) + 52) % 52
-                    qpc = _chroma_qp(qp)
-                coefs4 = {}
-                for g in range(4):
-                    for k in range(4):
-                        bx, by = _ZBLK[g * 4 + k]
-                        gx, gy = mx * 4 + bx, my * 4 + by
-                        if not cbp_luma & (1 << g):
-                            coefs4[(bx, by)] = np.zeros((4, 4), np.int64)
-                            st.cbf_luma4[gy, gx] = 0
-                            continue
-                        cf, cbf = _dec_residual(
-                            dec, ctxs, 2, st.cbf_inc_luma4(gx, gy), 16
-                        )
-                        z = np.zeros(16, np.int64)
-                        z[_ZIGA] = cf
-                        coefs4[(bx, by)] = z.reshape(4, 4)
-                        st.cbf_luma4[gy, gx] = cbf
-                st.has_lumadc[my, mx] = False
-                zdc = None
-                acz16 = None
-            else:
-                cbp_luma = 15 if cbpl15 else 0
-                cbpc = cbpc16
-                if dec.decision(ctxs, 64 + _chroma_mode_inc(st, mx, my)):
-                    raise NotImplementedError(
-                        "chroma prediction mode != DC — only DC is "
-                        "implemented (matches the CAVLC decoder)"
-                    )
-                qp = (qp + _dec_mb_qp_delta(dec, ctxs, st) + 52) % 52
-                qpc = _chroma_qp(qp)
-                dccf, cbf = _dec_residual(
-                    dec, ctxs, 0, st.cbf_inc_lumadc(mx, my), 16
-                )
-                zdc = np.zeros(16, np.int64)
-                zdc[_ZIGA] = dccf
-                zdc = zdc.reshape(4, 4)
-                st.cbf_lumadc[my, mx] = cbf
-                st.has_lumadc[my, mx] = True
-                acz16 = np.zeros((4, 4, 4, 4), np.int64)
-                if cbp_luma:
-                    for bx, by in _ZBLK:
-                        gx, gy = mx * 4 + bx, my * 4 + by
-                        cf, cbf4 = _dec_residual(
-                            dec, ctxs, 1, st.cbf_inc_luma4(gx, gy), 15
-                        )
-                        z = np.zeros(16, np.int64)
-                        z[_ZIGA1] = cf
-                        acz16[by, bx] = z.reshape(4, 4)
-                        st.cbf_luma4[gy, gx] = cbf4
-                else:
-                    st.cbf_luma4[my * 4 : my * 4 + 4,
-                                 mx * 4 : mx * 4 + 4] = 0
-            # chroma residuals
-            cdcz = {0: np.zeros((2, 2), np.int64),
-                    1: np.zeros((2, 2), np.int64)}
-            cacz = {0: np.zeros((2, 2, 4, 4), np.int64),
-                    1: np.zeros((2, 2, 4, 4), np.int64)}
-            if cbpc > 0:
-                for pi in (0, 1):
-                    cf, cbf = _dec_residual(
-                        dec, ctxs, 3, st.cbf_inc_cdc(mx, my, pi), 4
-                    )
-                    cdcz[pi] = np.array(
-                        [[cf[0], cf[1]], [cf[2], cf[3]]], np.int64
-                    )
-                    st.cbf_cdc[pi][my, mx] = cbf
-            else:
-                for pi in (0, 1):
-                    st.cbf_cdc[pi][my, mx] = 0
-            if cbpc > 1:
-                for pi in (0, 1):
-                    for by in range(2):
-                        for bx in range(2):
-                            cx, cy = mx * 2 + bx, my * 2 + by
-                            cf, cbf = _dec_residual(
-                                dec, ctxs, 4, st.cbf_inc_c4(cx, cy, pi), 15
-                            )
-                            z = np.zeros(16, np.int64)
-                            z[_ZIGA1] = cf
-                            cacz[pi][by, bx] = z.reshape(4, 4)
-                            st.cbf_c4[pi][cy, cx] = cbf
-            else:
-                for pi in (0, 1):
-                    st.cbf_c4[pi][my * 2 : my * 2 + 2,
-                                  mx * 2 : mx * 2 + 2] = 0
-            # --- reconstruction (identical math to the CAVLC path) ---
-            if i4x4:
-                for bx, by in _ZBLK:
-                    gx, gy = mx * 4 + bx, my * 4 + by
-                    pred = _pred4(
-                        ry, gx, gy, int(modes[gy, gx]), mbw * 4,
-                        lambda a, b, _gx=gx, _gy=gy: before(a, b, _gx, _gy),
-                    )
-                    blk = (
-                        _inv4x4(_dequant_ac(coefs4[(bx, by)], qp)) + 32
-                    ) >> 6
-                    ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-                        pred + blk, 0, 255
-                    )
-            else:
-                pred = _pred16(ry, my, mx, pm)
-                ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = (
-                    _recon_mb16(pred, acz16 if cbp_luma else None, zdc, qp)
-                )
-            for pi, reconp in ((0, rcb), (1, rcr)):
-                cp = _pred8_chroma_dc(reconp, my, mx)
-                reconp[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = (
-                    _recon_chroma8(
-                        cp,
-                        cacz[pi] if cbpc > 1 else None,
-                        cdcz[pi] if cbpc > 0 else None,
-                        qpc,
-                    )
-                )
-            st.is_i4x4[my, mx] = i4x4
-            st.coded[my, mx] = True
-            st.cbp_luma[my, mx] = cbp_luma
-            st.cbp_chroma[my, mx] = cbpc
-            end = dec.terminate()
-            last_mb = my == mbh - 1 and mx == mbw - 1
-            if end != (1 if last_mb else 0):
-                raise ValueError(
-                    f"end_of_slice_flag {end} at mb ({mx},{my}) of "
-                    f"{mbw}x{mbh} — CABAC desync"
-                )
-    x0, y0, w, h = sps["x0"], sps["y0"], sps["w"], sps["h"]
-    return (
-        ry[y0 : y0 + h, x0 : x0 + w].astype(np.uint8),
-        rcb[y0 // 2 : (y0 + h) // 2, x0 // 2 : (x0 + w) // 2].astype(np.uint8),
-        rcr[y0 // 2 : (y0 + h) // 2, x0 // 2 : (x0 + w) // 2].astype(np.uint8),
-    )
-
-
-def _chroma_mode_inc(st: _MbState, mx: int, my: int) -> int:
-    # 9.3.3.1.1.8 — every mb this codec emits uses chroma mode 0, so
-    # both condTermFlags are always 0; kept as a function so a future
-    # non-DC encoder extends ONE place.
-    return 0
 
 
 # ---------------------------------------------------------------------------

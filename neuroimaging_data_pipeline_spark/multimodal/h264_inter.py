@@ -58,7 +58,10 @@ The P GOP encoder lives here and the B sequence encoder in
 h264_bslice.py; both write the same SPS/PPS builders (h264.py) and
 the same IDR anchor. The encoder<->decoder round trip is bit-exact by
 construction, and tests/test_h264_stream_pins.py pins the emitted
-bytes; CABAC P slices live in h264_cabac_inter.py.
+bytes. CABAC P GOPs (h264_cabac_inter.py) run on the same GOP encoder,
+inter slice encoder and decoder, stream loop and _InterSlice, with
+the macroblock syntax coded by h264_cabac's macroblock layer when the
+PPS selects CABAC.
 """
 
 from __future__ import annotations
@@ -71,6 +74,7 @@ from pyspark.sql import DataFrame
 
 from neuroimaging_data_pipeline_spark.bitio import BitReader, BitWriter
 from neuroimaging_data_pipeline_spark.multimodal.h264 import (
+    _cabac_align,
     _check_planes,
     _ep_remove,
     _nal,
@@ -84,26 +88,27 @@ from neuroimaging_data_pipeline_spark.multimodal.h264 import (
     _sps_rbsp,
     _write_deblock_fields,
 )
+from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
+    _Ctx,
+    _decode_cabac_mbs,
+    _encode_cabac_idr,
+    _encode_cabac_mbs,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264_deblock import (
     deblock_frame,
     make_block_info,
     make_block_info_b,
 )
 from neuroimaging_data_pipeline_spark.multimodal.h264_intra import (
-    _CF,
     _MbGrid,
-    _cbp_luma,
-    _chroma_fwd,
     _chroma_qp,
     _decode_intra_mb,
     _decode_intra_slice,
-    _dequant_ac,
-    _dequant_dc2,
     _encode_i16_slice,
     _encode_intra_mb,
-    _inv4x4,
-    _quant,
     _read_residuals,
+    _recon_inter_mb,
+    _residual_from_target,
     _write_residuals,
 )
 
@@ -619,7 +624,7 @@ def _weigh(wt: dict, a, ea, b=None, eb=None) -> list:
 
 
 # ---------------------------------------------------------------------------
-# Partition prediction and residual (shared with h264_cabac_inter)
+# Partition prediction
 # ---------------------------------------------------------------------------
 
 
@@ -704,51 +709,6 @@ def _mc_mb(pads: list, mx: int, my: int, placed: list, wt=None):
         for plane, blk, s in zip(pred, p, (4, 2, 2)):
             plane[oy4 * s : (oy4 + h4) * s, ox4 * s : (ox4 + w4) * s] = blk
     return pred
-
-
-def _residual_from_target(targets, mx, my, py, pcb, pcr, qp, qpc):
-    """Quantize (target - prediction) for one inter MB. Returns
-    (cbp, zl, cdcz, cacz)."""
-    tgt = targets[0][my * 16 : my * 16 + 16,
-                     mx * 16 : mx * 16 + 16].astype(np.int64)
-    resid = tgt - py
-    blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
-    zl = _quant(np.matmul(np.matmul(_CF, blocks), _CF.T), qp)
-    cdcz, cacz, cbpc = _chroma_fwd(targets, (pcb, pcr), mx, my, qpc)
-    return _cbp_luma(zl) | (cbpc << 4), zl, cdcz, cacz
-
-
-def _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
-                    qp, qpc):
-    """Add the dequantized residual to the MC prediction and write
-    the reconstructed MB into (ry, rcb, rcr). The sixteen luma and
-    eight chroma 4x4 blocks go through ONE batched inverse transform
-    (dequant is per-plane, the butterfly is shape-agnostic)."""
-    ry, rcb, rcr = recons
-    cbpc = cbp >> 4
-    wr = np.empty((24, 4, 4), np.int64)
-    wr[:16] = _dequant_ac(zl, qp).reshape(16, 4, 4)
-    if cbpc > 1:
-        wr[16:20] = _dequant_ac(cacz[0], qpc).reshape(4, 4, 4)
-        wr[20:24] = _dequant_ac(cacz[1], qpc).reshape(4, 4, 4)
-    else:
-        wr[16:] = 0
-    if cbpc > 0:
-        wr[16:20, 0, 0] = _dequant_dc2(cdcz[0], qpc).ravel()
-        wr[20:24, 0, 0] = _dequant_dc2(cdcz[1], qpc).ravel()
-    blk = (_inv4x4(wr) + 32) >> 6
-    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = np.clip(
-        py + blk[:16].reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
-        .reshape(16, 16), 0, 255
-    )
-    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
-        pcb + blk[16:20].reshape(2, 2, 4, 4).transpose(0, 2, 1, 3)
-        .reshape(8, 8), 0, 255
-    )
-    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
-        pcr + blk[20:24].reshape(2, 2, 4, 4).transpose(0, 2, 1, 3)
-        .reshape(8, 8), 0, 255
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -860,39 +820,42 @@ class _Part:
 
 
 class _Put:
-    """The encoder side of the motion syntax: writes each ref_idx as
-    te(v) (9.1: one inverted bit at range 1, ue(v) above) and each mvd
-    against the predictor, passing the known values through."""
+    """The CAVLC encoder side of the motion syntax: writes each ref_idx
+    as te(v) (9.1: one inverted bit at range 1, ue(v) above) and each
+    mvd against the predictor, passing the known values through. The
+    4x4 position and size of the partition go unused: CAVLC codes no
+    neighbour context (h264_cabac's io pair does)."""
 
     def __init__(self, sl: BitWriter) -> None:
         self.sl = sl
 
-    def ref(self, v: int, n: int) -> int:
+    def ref(self, v: int, n: int, gx, gy) -> int:
         if n == 2:
             self.sl.u(1 - v, 1)
         else:
             self.sl.ue(v)
         return v
 
-    def mv(self, pred, mv):
+    def mv(self, pred, mv, gx, gy, w4, h4):
         self.sl.se(int(mv[0] - pred[0]))
         self.sl.se(int(mv[1] - pred[1]))
         return mv
 
 
 class _Get:
-    """The decoder side of the motion syntax: reads what _Put writes."""
+    """The CAVLC decoder side of the motion syntax: reads what _Put
+    writes."""
 
     def __init__(self, r: BitReader) -> None:
         self.r = r
 
-    def ref(self, v: int, n: int) -> int:
+    def ref(self, v: int, n: int, gx, gy) -> int:
         v = 1 - self.r.u(1) if n == 2 else self.r.ue()
         if v >= n:
             raise ValueError(f"ref_idx {v} out of range ({n} active)")
         return v
 
-    def mv(self, pred, mv):
+    def mv(self, pred, mv, gx, gy, w4, h4):
         mvx = pred[0] + self.r.se()
         return np.array([mvx, pred[1] + self.r.se()], np.int64)
 
@@ -1027,10 +990,10 @@ class _InterSlice:
             raise ValueError(f"ref_idx {ref} out of range")
         return ref
 
-    def read_parts(self, r: BitReader, mb_type: int, mx, my):
+    def read_parts(self, read_sub, mb_type: int, mx, my):
         """(partition mode, parts, active refs per list) of a coded
         inter MB from its mb_type, reading the sub_mb_types of an 8x8
-        one."""
+        one with ``read_sub()``."""
         kind = self.kind
         if mb_type in kind.uses:
             mode, uses = kind.uses[mb_type]
@@ -1040,7 +1003,7 @@ class _InterSlice:
             return "16x16", self.direct_parts(mx, my), self.nra
         subs = []
         for _ in range(4):
-            st = r.ue()
+            st = read_sub()
             if st not in kind.sub_uses:
                 raise ValueError(f"bad sub_mb_type {st} in a {kind.name} "
                                  "slice")
@@ -1053,14 +1016,16 @@ class _InterSlice:
         """The motion syntax of one MB (7.3.5.1 / 7.3.5.2) in its
         order — ref_idx_l0 of every part, then ref_idx_l1, then
         mvd_l0 of every (sub-)partition, then mvd_l1 — with each MV
-        predicted (8.4.1.3) and stored as it is coded. ``io`` is a
-        _Put (encoder) or a _Get (decoder); derived parts code
-        nothing."""
+        predicted (8.4.1.3) and stored as it is coded. ``io`` is an
+        encoder or decoder side of one entropy coder (_Put / _Get here,
+        _CabacPut / _CabacGet in h264_cabac), given each element's
+        partition position in 4x4 units; derived parts code nothing."""
         for li, n in enumerate(nra or self.nra):
             if n > 1:
                 for p in parts:
                     if p.coded and li in p.lists:
-                        p.ref[li] = io.ref(p.ref[li], n)
+                        p.ref[li] = io.ref(p.ref[li], n, mx * 4 + p.box[0],
+                                           my * 4 + p.box[1])
         for li, mvs in enumerate(self.mvs):
             for pidx, p in enumerate(parts):
                 ox4, oy4, w4, h4 = p.box
@@ -1075,7 +1040,7 @@ class _InterSlice:
                     if p.coded:
                         pred = mvs.pred_for_partition(
                             mode, pidx, gx, gy, sw4, p.ref[li])
-                        mvl[si] = io.mv(pred, mvl[si])
+                        mvl[si] = io.mv(pred, mvl[si], gx, gy, sw4, sh4)
                     mvs.fill(gx, gy, sw4, sh4, mvl[si], p.ref[li])
 
     def predict(self, mx, my, parts):
@@ -1153,7 +1118,7 @@ def _inter_slice_header(
     sl: BitWriter, kind: _Kind, qp: int, frame_num: int,
     poc_bits: int = 0, poc: int = 0, nra: tuple | None = None,
     wt: dict | None = None, spatial: bool = True, is_ref: bool = True,
-    deblock: tuple = (1, (0, 0)),
+    deblock: tuple = (1, (0, 0)), cabac: bool = False,
 ) -> None:
     """Header of a non-IDR P or B slice (7.3.3), one slice per
     picture: ``poc_bits`` > 0 writes pic_order_cnt_lsb (POC type 0);
@@ -1161,7 +1126,8 @@ def _inter_slice_header(
     one each); ``wt`` the pred_weight_table when the PPS enables
     explicit weights for this kind; ``spatial`` the B
     direct_spatial_mv_pred_flag; ``is_ref`` writes dec_ref_pic_marking
-    (nal_ref_idc != 0); ``deblock`` = (idc, offsets)."""
+    (nal_ref_idc != 0); ``deblock`` = (idc, offsets); ``cabac`` (a
+    CABAC PPS) writes cabac_init_idc 0 and aligns the slice data."""
     nra = nra or (1,) * kind.nlists
     sl.ue(0)  # first_mb_in_slice
     sl.ue(kind.stype)  # slice_type (all slices of the picture)
@@ -1182,14 +1148,19 @@ def _inter_slice_header(
         _write_pwt(sl, wt, nra)
     if is_ref:
         sl.u(0, 1)  # adaptive_ref_pic_marking_mode_flag
+    if cabac:
+        sl.ue(0)  # cabac_init_idc
     sl.se(qp - 26)  # slice_qp_delta
     _write_deblock_fields(sl, *deblock)
+    if cabac:
+        _cabac_align(sl)
 
 
 def _parse_inter_header(r: BitReader, sps: dict, pps: dict, is_ref: bool):
     """Parse what _inter_slice_header writes. Returns (kind, qp, poc
     (None unless POC type 0), nra, weight table or None, spatial,
-    (idc, offsets)); the reader is left at the first macroblock."""
+    (idc, offsets)); the reader is left at the first macroblock (the
+    aligned slice data under a CABAC PPS)."""
     if r.ue() != 0:
         raise ValueError("multi-slice pictures unsupported")
     stype = r.ue()
@@ -1220,11 +1191,20 @@ def _parse_inter_header(r: BitReader, sps: dict, pps: dict, is_ref: bool):
     wt = _parse_pwt(r, nra) if explicit else None
     if is_ref and r.u(1):
         raise NotImplementedError("adaptive ref marking unsupported")
+    if pps["cabac"]:
+        if kind is _B:
+            raise NotImplementedError("CABAC B slices unsupported")
+        idc = r.ue()
+        if idc:
+            raise NotImplementedError(
+                f"cabac_init_idc {idc}: only column 0 is wired")
     qp = 26 + r.se()
     if not 0 <= qp <= 51:
         raise ValueError(f"slice QP {qp} out of range")
     deblock = _read_deblock_fields(r) if pps["deblock_present"] else (
         1, (0, 0))
+    if pps["cabac"]:
+        r.align()
     return kind, qp, poc, nra, wt, spatial, deblock
 
 
@@ -1285,35 +1265,50 @@ def _encode_idr(planes, qp: int, poc_bits: int, deblock: tuple):
 
 
 def _decode_idr(rbsp: bytes, sps: dict, pps: dict) -> tuple:
-    """Decode what _encode_idr writes, loop-filtered when its header
-    enables the filter."""
+    """Decode what _encode_idr (or h264_cabac's CABAC anchor, under a
+    CABAC PPS) writes, loop-filtered when its header enables the
+    filter."""
     r = BitReader(rbsp)
-    qp = _parse_slice_header(r, sps)
-    deblock = _read_deblock_fields(r) if pps["deblock_present"] else (
-        1, (0, 0))
+    qp, deblock = _parse_slice_header(r, sps, pps)
     mbw, mbh = sps["mbw"], sps["mbh"]
-    frame = _decode_intra_slice(r, mbw, mbh, qp).frame(
-        0, 0, mbw * 16, mbh * 16)
-    return _loop_filter(frame, qp, deblock)
+    if pps["cabac"]:
+        g = _MbGrid(mbw, mbh)
+        _decode_cabac_mbs(r, _Ctx(qp), g, qp)
+    else:
+        g = _decode_intra_slice(r, mbw, mbh, qp)
+    return _loop_filter(g.frame(0, 0, mbw * 16, mbh * 16), qp, deblock)
 
 
 def _encode_inter(kind, target, specs, qp, lists, frame_num, deblock,
                   poc_bits=0, poc=0, wt=None, implicit=False, spatial=True,
-                  is_ref=True):
-    """The one CAVLC inter slice encoder: picture ``target`` as a P or
-    B slice against ``lists`` (DPB entries per reference list), one
-    raster-ordered mb_spec per macroblock. Returns (NAL bytes,
-    loop-filtered reconstruction, colocated motion)."""
+                  is_ref=True, p_ctx=None):
+    """The one inter slice encoder: picture ``target`` as a P or B
+    slice against ``lists`` (DPB entries per reference list), one
+    raster-ordered mb_spec per macroblock, CAVLC-coded, or CABAC-coded
+    when ``p_ctx`` (QP -> P-slice context variables) is given. Returns
+    (NAL bytes, loop-filtered reconstruction, colocated motion)."""
     h, w = target[0].shape
     mbw = w // 16
     if len(specs) != mbw * (h // 16):
         raise ValueError("one mb_spec per macroblock required")
     sc = _InterSlice(kind, mbw, h // 16, qp, lists, poc, wt, implicit,
                      spatial)
-    g, qpc = sc.g, _chroma_qp(qp)
     sl = BitWriter()
     _inter_slice_header(sl, kind, qp, frame_num, poc_bits, poc, sc.nra,
-                        wt, spatial, is_ref, deblock)
+                        wt, spatial, is_ref, deblock, p_ctx is not None)
+    if p_ctx is None:
+        _encode_cavlc_mbs(sl, sc, target, specs, qp)
+    else:
+        _encode_cabac_mbs(sl, p_ctx(qp), sc.g, target, specs, qp, sc)
+    frame, motion = sc.finish(deblock)
+    return _nal(2 if is_ref else 0, 1, sl.bytes_()), frame, motion
+
+
+def _encode_cavlc_mbs(sl, sc, target, specs, qp) -> None:
+    """The CAVLC macroblock layer of an inter slice (7.3.4 with
+    mb_skip_run), closed with its trailing bits."""
+    g, kind, qpc = sc.g, sc.kind, _chroma_qp(qp)
+    mbw = g.nnz.shape[1] // 4
     put = _Put(sl)
     skip_run = 0
     for addr, spec in enumerate(specs):
@@ -1342,23 +1337,39 @@ def _encode_inter(kind, target, specs, qp, lists, frame_num, deblock,
     if skip_run:
         sl.ue(skip_run)  # trailing skipped macroblocks
     sl.trailing()
-    frame, motion = sc.finish(deblock)
-    return _nal(2 if is_ref else 0, 1, sl.bytes_()), frame, motion
 
 
 def _decode_inter(rbsp: bytes, sps: dict, pps: dict, dpb: list,
-                  is_ref: bool):
-    """The one CAVLC inter slice decoder: parse the header, take the
-    reference lists from ``dpb`` and decode every macroblock. Returns
-    (loop-filtered frame, colocated motion, poc or None)."""
+                  is_ref: bool, p_ctx=None):
+    """The one inter slice decoder: parse the header, take the
+    reference lists from ``dpb`` and decode every macroblock, CABAC
+    under a CABAC PPS with the contexts ``p_ctx`` (QP -> P-slice
+    context variables) makes. Returns (loop-filtered frame, colocated
+    motion, poc or None)."""
     r = BitReader(rbsp)
     kind, qp, poc, nra, wt, spatial, deblock = _parse_inter_header(
         r, sps, pps, is_ref)
-    mbw, mbh = sps["mbw"], sps["mbh"]
-    sc = _InterSlice(kind, mbw, mbh, qp, _ref_lists(kind, dpb, poc, nra),
-                     poc, wt, pps["bipred_idc"] == 2, spatial)
-    g, qpc = sc.g, _chroma_qp(qp)
-    get = _Get(r)
+    sc = _InterSlice(kind, sps["mbw"], sps["mbh"], qp,
+                     _ref_lists(kind, dpb, poc, nra), poc, wt,
+                     pps["bipred_idc"] == 2, spatial)
+    if not pps["cabac"]:
+        _decode_cavlc_mbs(r, sc, qp)
+    elif p_ctx is None:
+        raise NotImplementedError(
+            "CABAC P slices need the 9.3.1.1 P-column init data (not "
+            "transcribed): decode them with "
+            "h264_cabac_inter.decode_h264_cabac_p and an init_table")
+    else:
+        _decode_cabac_mbs(r, p_ctx(qp), sc.g, qp, sc)
+    frame, motion = sc.finish(deblock)
+    return frame, motion, poc
+
+
+def _decode_cavlc_mbs(r: BitReader, sc, qp: int) -> None:
+    """Parse what _encode_cavlc_mbs writes into ``sc``'s grid."""
+    g, kind, qpc = sc.g, sc.kind, _chroma_qp(qp)
+    mbh, mbw = g.nnz.shape[0] // 4, g.nnz.shape[1] // 4
+    get, read_sub = _Get(r), r.ue
     n_mbs = mbw * mbh
     addr = 0
     while addr < n_mbs:
@@ -1381,7 +1392,7 @@ def _decode_inter(rbsp: bytes, sps: dict, pps: dict, dpb: list,
             qpc = _chroma_qp(qp)
             sc.mark_intra(mx, my)
             continue
-        mode, parts, mb_nra = sc.read_parts(r, mb_type, mx, my)
+        mode, parts, mb_nra = sc.read_parts(read_sub, mb_type, mx, my)
         sc.motion(get, mx, my, mode, parts, mb_nra)
         py, pcb, pcr = sc.predict(mx, my, parts)
         cbp, qpd, zl, cdcz, cacz = _read_residuals(r, g, mx, my, _CBP_INTER)
@@ -1390,18 +1401,19 @@ def _decode_inter(rbsp: bytes, sps: dict, pps: dict, dpb: list,
             qpc = _chroma_qp(qp)
         _recon_inter_mb(g.recon, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
                         qp, qpc)
-    frame, motion = sc.finish(deblock)
-    return frame, motion, poc
 
 
-def _decode_stream(payload: bytes) -> tuple[list, list]:
-    """The one decoder loop of CAVLC IDR + P + B streams, behind
-    decode_h264_sequence and h264_bslice.decode_h264_b_stream: walk
-    the NAL units, reset the DPB at the IDR, decode each P or B slice
-    against it and insert every reference picture (nal_ref_idc > 0)
-    with its motion, newest first, evicting past max_num_ref_frames.
-    Returns (frames, pocs) in decode order; without POC type 0 a
-    picture's POC is twice its decode index."""
+def _decode_stream(payload: bytes, p_ctx=None) -> tuple[list, list]:
+    """The one decoder loop of IDR + P + B streams, behind
+    decode_h264_sequence, h264_bslice.decode_h264_b_stream and
+    h264_cabac_inter.decode_h264_cabac_p: walk the NAL units, reset the
+    DPB at the IDR, decode each P or B slice against it and insert
+    every reference picture (nal_ref_idc > 0) with its motion, newest
+    first, evicting past max_num_ref_frames. Slices decode CAVLC or
+    CABAC as the PPS says; CABAC P slices need ``p_ctx`` (QP -> context
+    variables from an explicit init table). Returns (frames, pocs) in
+    decode order; without POC type 0 a picture's POC is twice its
+    decode index."""
     sps = pps = None
     frames: list = []
     pocs: list = []
@@ -1413,10 +1425,6 @@ def _decode_stream(payload: bytes) -> tuple[list, list]:
             sps = _parse_sps(rbsp)
         elif ntype == 8:
             pps = _parse_pps(rbsp)
-            if pps["cabac"]:
-                raise NotImplementedError(
-                    "CABAC inter streams decode with "
-                    "h264_cabac_inter.decode_h264_cabac_p")
         elif ntype in (1, 5):
             if sps is None or pps is None:
                 raise ValueError("coded slice before its SPS and PPS")
@@ -1428,7 +1436,7 @@ def _decode_stream(payload: bytes) -> tuple[list, list]:
                 raise ValueError("coded slice before references exist")
             else:
                 frame, motion, poc = _decode_inter(
-                    rbsp, sps, pps, dpb, bool(nal[0] & 0x60))
+                    rbsp, sps, pps, dpb, bool(nal[0] & 0x60), p_ctx)
                 if poc is None:
                     poc = 2 * len(frames)
             frames.append(frame)
@@ -1483,6 +1491,15 @@ def encode_h264_p_gop(
 
     Returns (annex_b_bytes, [recon planes per frame]) where every
     recon triple is the decoder-mirrored bit-exact contract."""
+    return _encode_p_gop(frames, specs_per_p, qp, num_refs, weights,
+                         deblock, deblock_offsets)
+
+
+def _encode_p_gop(frames, specs_per_p, qp, num_refs, weights=None,
+                  deblock=False, deblock_offsets=(0, 0), p_ctx=None):
+    """The IDR + P GOP behind encode_h264_p_gop and, with ``p_ctx`` (QP
+    -> P-slice context variables), h264_cabac_inter's CABAC twin, whose
+    anchor is h264_cabac's I slice."""
     if len(frames) < 2:
         raise ValueError("a GOP needs an anchor + at least one P frame")
     if len(specs_per_p) != len(frames) - 1:
@@ -1499,17 +1516,21 @@ def encode_h264_p_gop(
         refs = list(weights.get("refs", [])) + [{}] * num_refs
         wt = _norm_weights(weights, [refs[:num_refs]])
     dbk = _deblock_arg(deblock, deblock_offsets)
-    idr_nal, anchor = _encode_idr(frames[0], qp, 0, dbk)
+    if p_ctx is None:
+        idr_nal, anchor = _encode_idr(frames[0], qp, 0, dbk)
+    else:
+        idr_nal, g = _encode_cabac_idr(_check_planes(*frames[0]), qp, 2)
+        anchor = g.frame(0, 0, w, h)
     stream = (
         _nal(3, 7, _sps_rbsp(w // 16, h // 16, w, h, num_refs))
-        + _nal(3, 8, _pps_rbsp(deblock=True, weighted_pred=wt is not None))
+        + _nal(3, 8, _pps_rbsp(p_ctx is not None, True, wt is not None))
         + idr_nal
     )
     recons = [anchor]
     dpb = [(0, anchor, None)]
     for fi, (target, specs) in enumerate(zip(frames[1:], specs_per_p), 1):
         nal, recon, _ = _encode_inter(_P, target, specs, qp, [dpb], fi, dbk,
-                                      wt=wt)
+                                      wt=wt, p_ctx=p_ctx)
         stream += nal
         recons.append(recon)
         dpb.insert(0, (2 * fi, recon, None))

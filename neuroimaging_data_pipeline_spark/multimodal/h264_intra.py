@@ -60,7 +60,11 @@ per-macroblock encoders and the decoder below (_encode_i16_mb,
 _encode_i4x4_mb, _decode_intra_mb over one _MbGrid of per-slice
 state) serve the I slices here AND the intra macroblocks of the P
 (h264_inter) and B (h264_bslice) slices, whose IDR anchors also run
-the same slice loop under their own headers.
+the same slice loop under their own headers. Their transform halves
+(_i16_fwd, _i4x4_fwd), the reconstruction (_store_i16, _store_i4x4,
+_store_chroma) and the inter residual transform (_residual_from_target,
+_recon_inter_mb) are shared with the CABAC macroblock layer
+(h264_cabac), which only adds its own entropy syntax.
 
 Scale: opaque binary + Arrow ``mapInPandas``, narrow, zero shuffle —
 the same adapter split the reference applies at its NIfTI boundary
@@ -1009,23 +1013,6 @@ def _nc_for(nnz: np.ndarray, bx: int, by: int) -> int:
     return 0
 
 
-def _recon_mb16(
-    pred: np.ndarray, acz: np.ndarray | None, zdc: np.ndarray, qp: int
-) -> np.ndarray:
-    """Batched Intra_16x16 luma reconstruction: dequant the (4,4,4,4)
-    quantized AC stack (None = CBP 0), splice the dequantized DC
-    Hadamard block in, inverse-transform all sixteen blocks at once,
-    add the prediction, clip."""
-    wr = (
-        _dequant_ac(acz, qp)
-        if acz is not None
-        else np.zeros((4, 4, 4, 4), np.int64)
-    )
-    wr[..., 0, 0] = _dequant_dc4(zdc, qp)
-    blk = (_inv4x4(wr) + 32) >> 6
-    return np.clip(pred + blk.transpose(0, 2, 1, 3).reshape(16, 16), 0, 255)
-
-
 def _recon_i16_planes(
     pred_y: np.ndarray,
     pred_cb: np.ndarray,
@@ -1039,10 +1026,11 @@ def _recon_i16_planes(
     qp: int,
     qpc: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Whole-MB Intra_16x16 reconstruction: the sixteen luma + eight
-    chroma 4x4 blocks through ONE batched inverse transform — the
-    same math as _recon_mb16 + two _recon_chroma8 calls, minus two
-    numpy dispatch rounds per macroblock. Returns (y16, cb8, cr8)."""
+    """Whole-MB Intra_16x16 reconstruction: dequantize the (4,4,4,4)
+    luma AC stack (None = CBP 0), splice the dequantized DC Hadamard
+    blocks in and put the sixteen luma + eight chroma 4x4 blocks
+    through ONE batched inverse transform — the same math per chroma
+    plane as _recon_chroma8. Returns (y16, cb8, cr8)."""
     wr = np.empty((24, 4, 4), np.int64)
     if acz is not None:
         wr[:16] = _dequant_ac(acz, qp).reshape(16, 4, 4)
@@ -1326,6 +1314,21 @@ def _store_i16(g: _MbGrid, mx, my, pred, cpred, acz, zdc, cdcz, cacz,
     rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = cr8
 
 
+def _store_i4x4(g: _MbGrid, mx, my, cm, zl, cdcz, cacz, cbpc, qp):
+    """Reconstruct a decoded I_4x4 MB (its modes in ``g.modes4``) into
+    ``g``: luma in z-order, each block predicted from the blocks
+    reconstructed before it, then chroma predicted in mode ``cm``."""
+    ry, rcb, rcr = g.recon
+    blk = (_inv4x4(_dequant_ac(zl, qp)) + 32) >> 6
+    for bx, by in _ZBLK:
+        gx, gy = mx * 4 + bx, my * 4 + by
+        ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
+            g.pred4(gx, gy, int(g.modes4[gy, gx])) + blk[by, bx], 0, 255
+        )
+    cpred = (_pred8_chroma(rcb, my, mx, cm), _pred8_chroma(rcr, my, mx, cm))
+    _store_chroma(g, mx, my, cpred, cdcz, cacz, cbpc, _chroma_qp(qp))
+
+
 def _store_chroma(g: _MbGrid, mx, my, cpred, cdcz, cacz, cbpc, qpc):
     """Reconstruct MB (mx, my)'s two 8x8 chroma blocks into ``g``."""
     for pi in (0, 1):
@@ -1337,14 +1340,21 @@ def _store_chroma(g: _MbGrid, mx, my, cpred, cdcz, cacz, cbpc, qpc):
         )
 
 
-def _encode_i16_mb(sl, g: _MbGrid, src, mx, my, qp, pm, cm, base):
-    """Intra_16x16 macroblock coded from source planes ``src``: luma
-    prediction ``pm`` (0 V / 1 H / 2 DC / 3 Plane), chroma prediction
-    ``cm`` (0 DC / 1 H / 2 V / 3 Plane). ``base`` is the slice type's
-    intra mb_type offset (0 in I, 5 in P, 23 in B slices)."""
+def _i16_preds(g: _MbGrid, mx, my, pm, cm):
+    """(luma, (Cb, Cr)) Intra_16x16 predictions of MB (mx, my): luma
+    mode ``pm`` (0 V / 1 H / 2 DC / 3 Plane), chroma mode ``cm`` (0 DC
+    / 1 H / 2 V / 3 Plane)."""
     ry, rcb, rcr = g.recon
-    qpc = _chroma_qp(qp)
-    pred = _pred16(ry, my, mx, pm)
+    return _pred16(ry, my, mx, pm), (_pred8_chroma(rcb, my, mx, cm),
+                                     _pred8_chroma(rcr, my, mx, cm))
+
+
+def _i16_fwd(g: _MbGrid, src, mx, my, qp, pm, cm):
+    """The transform half of an Intra_16x16 macroblock coded from
+    source planes ``src``, shared by both entropy coders: returns
+    (pred, cpred, acz, zdc, cdcz, cacz, cbpc), ``acz`` the (4, 4, 4, 4)
+    AC levels or None when they are all zero."""
+    pred, cpred = _i16_preds(g, mx, my, pm, cm)
     resid = src[0][my * 16 : my * 16 + 16,
                    mx * 16 : mx * 16 + 16].astype(np.int64) - pred
     # all sixteen 4x4 sub-blocks transformed in one batch
@@ -1353,17 +1363,70 @@ def _encode_i16_mb(sl, g: _MbGrid, src, mx, my, qp, pm, cm, base):
     acz = _quant(wm, qp)
     acz[..., 0, 0] = 0
     zdc = _quant_dc4((_H4 @ wm[..., 0, 0] @ _H4) // 2, qp)
-    cbpl = 15 if acz.any() else 0
-    cpred = (_pred8_chroma(rcb, my, mx, cm), _pred8_chroma(rcr, my, mx, cm))
-    cdcz, cacz, cbpc = _chroma_fwd(src, cpred, mx, my, qpc)
-    sl.ue(base + 1 + pm + 4 * cbpc + (12 if cbpl else 0))
+    cdcz, cacz, cbpc = _chroma_fwd(src, cpred, mx, my, _chroma_qp(qp))
+    return (pred, cpred, acz if acz.any() else None, zdc, cdcz, cacz,
+            cbpc)
+
+
+def _residual_from_target(targets, mx, my, py, pcb, pcr, qp, qpc):
+    """Quantize (target - prediction) for one inter MB. Returns
+    (cbp, zl, cdcz, cacz)."""
+    tgt = targets[0][my * 16 : my * 16 + 16,
+                     mx * 16 : mx * 16 + 16].astype(np.int64)
+    resid = tgt - py
+    blocks = resid.reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
+    zl = _quant(np.matmul(np.matmul(_CF, blocks), _CF.T), qp)
+    cdcz, cacz, cbpc = _chroma_fwd(targets, (pcb, pcr), mx, my, qpc)
+    return _cbp_luma(zl) | (cbpc << 4), zl, cdcz, cacz
+
+
+def _recon_inter_mb(recons, mx, my, py, pcb, pcr, cbp, zl, cdcz, cacz,
+                    qp, qpc):
+    """Add the dequantized residual to the MC prediction and write
+    the reconstructed MB into (ry, rcb, rcr). The sixteen luma and
+    eight chroma 4x4 blocks go through ONE batched inverse transform
+    (dequant is per-plane, the butterfly is shape-agnostic)."""
+    ry, rcb, rcr = recons
+    cbpc = cbp >> 4
+    wr = np.empty((24, 4, 4), np.int64)
+    wr[:16] = _dequant_ac(zl, qp).reshape(16, 4, 4)
+    if cbpc > 1:
+        wr[16:20] = _dequant_ac(cacz[0], qpc).reshape(4, 4, 4)
+        wr[20:24] = _dequant_ac(cacz[1], qpc).reshape(4, 4, 4)
+    else:
+        wr[16:] = 0
+    if cbpc > 0:
+        wr[16:20, 0, 0] = _dequant_dc2(cdcz[0], qpc).ravel()
+        wr[20:24, 0, 0] = _dequant_dc2(cdcz[1], qpc).ravel()
+    blk = (_inv4x4(wr) + 32) >> 6
+    ry[my * 16 : my * 16 + 16, mx * 16 : mx * 16 + 16] = np.clip(
+        py + blk[:16].reshape(4, 4, 4, 4).transpose(0, 2, 1, 3)
+        .reshape(16, 16), 0, 255
+    )
+    rcb[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
+        pcb + blk[16:20].reshape(2, 2, 4, 4).transpose(0, 2, 1, 3)
+        .reshape(8, 8), 0, 255
+    )
+    rcr[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = np.clip(
+        pcr + blk[20:24].reshape(2, 2, 4, 4).transpose(0, 2, 1, 3)
+        .reshape(8, 8), 0, 255
+    )
+
+
+def _encode_i16_mb(sl, g: _MbGrid, src, mx, my, qp, pm, cm, base):
+    """Intra_16x16 macroblock with luma prediction ``pm`` and chroma
+    prediction ``cm`` (see _i16_preds). ``base`` is the slice type's
+    intra mb_type offset (0 in I, 5 in P, 23 in B slices)."""
+    pred, cpred, acz, zdc, cdcz, cacz, cbpc = _i16_fwd(g, src, mx, my, qp,
+                                                      pm, cm)
+    sl.ue(base + 1 + pm + 4 * cbpc + (0 if acz is None else 12))
     sl.ue(cm)  # intra_chroma_pred_mode
     sl.se(0)  # mb_qp_delta
     # luma DC block: nC from the 4x4 grid at block (0,0)
     encode_residual_block(
         sl, zdc.ravel()[_ZIGA].tolist(), _nc_for(g.nnz, mx * 4, my * 4), 16
     )
-    if cbpl:
+    if acz is not None:
         for bx, by in _ZBLK:
             gx, gy = mx * 4 + bx, my * 4 + by
             g.nnz[gy, gx] = encode_residual_block(
@@ -1373,17 +1436,16 @@ def _encode_i16_mb(sl, g: _MbGrid, src, mx, my, qp, pm, cm, base):
     else:
         g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
     _write_chroma(sl, g, mx, my, cbpc, cdcz, cacz)
-    _store_i16(g, mx, my, pred, cpred, acz if cbpl else None, zdc,
-               cdcz, cacz, cbpc, qp)
+    _store_i16(g, mx, my, pred, cpred, acz, zdc, cdcz, cacz, cbpc, qp)
 
 
-def _encode_i4x4_mb(sl, g: _MbGrid, src, mx, my, qp, mode, base):
-    """I_4x4 macroblock (mb_type ``base``) coded from ``src``: per-4x4
-    intra prediction chained through the reconstruction, preferring
+def _i4x4_fwd(g: _MbGrid, src, mx, my, qp, mode):
+    """The transform half of an I_4x4 macroblock coded from ``src``,
+    shared by both entropy coders: per-4x4 intra prediction chained
+    through the reconstruction (luma is reconstructed here), preferring
     luma mode ``mode`` and falling back to DC where a neighbour is
-    missing; DC chroma."""
+    missing; DC chroma. Returns (zl, cpred, cdcz, cacz, cbpc)."""
     ry, rcb, rcr = g.recon
-    qpc = _chroma_qp(qp)
     # predict/transform/reconstruct each 4x4 in z-order (the recon
     # feeds the next block's prediction)
     zl = np.empty((4, 4, 4, 4), np.int64)
@@ -1398,7 +1460,13 @@ def _encode_i4x4_mb(sl, g: _MbGrid, src, mx, my, qp, mode, base):
             pred + blk, 0, 255
         )
     cpred = (_pred8_chroma_dc(rcb, my, mx), _pred8_chroma_dc(rcr, my, mx))
-    cdcz, cacz, cbpc = _chroma_fwd(src, cpred, mx, my, qpc)
+    return (zl, cpred) + _chroma_fwd(src, cpred, mx, my, _chroma_qp(qp))
+
+
+def _encode_i4x4_mb(sl, g: _MbGrid, src, mx, my, qp, mode, base):
+    """I_4x4 macroblock (mb_type ``base``) with preferred luma mode
+    ``mode`` (see _i4x4_fwd)."""
+    zl, cpred, cdcz, cacz, cbpc = _i4x4_fwd(g, src, mx, my, qp, mode)
     sl.ue(base)  # mb_type: I_4x4
     for bx, by in _ZBLK:
         gx, gy = mx * 4 + bx, my * 4 + by
@@ -1413,7 +1481,7 @@ def _encode_i4x4_mb(sl, g: _MbGrid, src, mx, my, qp, mode, base):
     # dropped blocks were reconstructed as pure prediction already
     _write_residuals(sl, g, mx, my, _cbp_luma(zl) | (cbpc << 4), zl,
                      cdcz, cacz, _CBP_INTRA_INV)
-    _store_chroma(g, mx, my, cpred, cdcz, cacz, cbpc, qpc)
+    _store_chroma(g, mx, my, cpred, cdcz, cacz, cbpc, _chroma_qp(qp))
 
 
 def _encode_intra_mb(sl, g: _MbGrid, src, spec, mx, my, qp, base):
@@ -1445,7 +1513,6 @@ def _decode_intra_mb(r: BitReader, g: _MbGrid, mx, my, itype, qp) -> int:
     """Decode one intra macroblock after its mb_type (``itype`` = the
     mb_type minus the slice type's intra offset: 0 I_4x4, 1..24
     Intra_16x16, 25 I_PCM) into ``g``. Returns the updated QP."""
-    ry, rcb, rcr = g.recon
     if itype == 25:
         _read_pcm_mb(r, g.recon, mx, my)
         _mark_pcm(g, mx, my)
@@ -1466,18 +1533,7 @@ def _decode_intra_mb(r: BitReader, g: _MbGrid, mx, my, itype, qp) -> int:
         cbp, qpd, zl, cdcz, cacz = _read_residuals(r, g, mx, my,
                                                    _CBP_INTRA)
         qp = (qp + qpd + 52) % 52
-        blk = (_inv4x4(_dequant_ac(zl, qp)) + 32) >> 6
-        # luma recon in z-order, each prediction from the blocks
-        # reconstructed before it
-        for bx, by in _ZBLK:
-            gx, gy = mx * 4 + bx, my * 4 + by
-            ry[gy * 4 : gy * 4 + 4, gx * 4 : gx * 4 + 4] = np.clip(
-                g.pred4(gx, gy, int(g.modes4[gy, gx])) + blk[by, bx], 0, 255
-            )
-        cpred = (_pred8_chroma(rcb, my, mx, cm),
-                 _pred8_chroma(rcr, my, mx, cm))
-        _store_chroma(g, mx, my, cpred, cdcz, cacz, cbp >> 4,
-                      _chroma_qp(qp))
+        _store_i4x4(g, mx, my, cm, zl, cdcz, cacz, cbp >> 4, qp)
         return qp
     t = itype - 1
     cbpl, cbpc, pm = t >= 12, (t % 12) // 4, t % 4
@@ -1500,8 +1556,7 @@ def _decode_intra_mb(r: BitReader, g: _MbGrid, mx, my, itype, qp) -> int:
     else:
         g.nnz[my * 4 : my * 4 + 4, mx * 4 : mx * 4 + 4] = 0
     cdcz, cacz = _read_chroma(r, g, mx, my, cbpc)
-    cpred = (_pred8_chroma(rcb, my, mx, cm), _pred8_chroma(rcr, my, mx, cm))
-    _store_i16(g, mx, my, _pred16(ry, my, mx, pm), cpred, acz,
+    _store_i16(g, mx, my, *_i16_preds(g, mx, my, pm, cm), acz,
                zdc.reshape(4, 4), cdcz, cacz, cbpc, qp)
     return qp
 
@@ -1632,7 +1687,7 @@ def decode_h264_frame(
             if sps is None:
                 raise ValueError("IDR slice before SPS")
             r = BitReader(rbsp)
-            qp = _parse_slice_header(r, sps)
+            qp, _ = _parse_slice_header(r, sps)
             g = _decode_intra_slice(r, sps["mbw"], sps["mbh"], qp)
             planes = g.frame(sps["x0"], sps["y0"], sps["w"], sps["h"])
     if planes is None:

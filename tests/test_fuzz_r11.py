@@ -18,6 +18,10 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_bslice import (
     decode_h264_b_stream,
     encode_h264_b_sequence,
 )
+from neuroimaging_data_pipeline_spark.multimodal.h264_cabac_inter import (
+    decode_h264_cabac_p,
+    synthetic_p_init,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264_inter import (
     decode_h264_sequence,
     encode_h264_p_gop,
@@ -29,6 +33,7 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_mp4 import (
     mux_h264_mp4,
     parse_avcc,
 )
+from tests.test_h264_stream_pins import _cabac_p_gop
 
 _CTRL = (ValueError, NotImplementedError)
 
@@ -193,9 +198,12 @@ def _intra_in_inter_streams():
                  "l0": {"wy": 40, "oy": 2, "wc": 7, "oc": -1},
                  "l1": {"wy": 24, "oy": -4}},
     )
+    cabac_p, _ = _cabac_p_gop()
     return ((p_gop, decode_h264_sequence), (b_seq, decode_h264_b_stream),
             (p_weighted, decode_h264_sequence),
-            (b_weighted, decode_h264_b_stream))
+            (b_weighted, decode_h264_b_stream),
+            (cabac_p, lambda s: decode_h264_cabac_p(
+                s, init_table=synthetic_p_init(5))))
 
 
 INTRA_IN_INTER = _intra_in_inter_streams()
@@ -217,8 +225,9 @@ def _inter_slice_spans(stream: bytes) -> list:
 @given(seed=st.integers(0, 2**31), n=st.integers(1, 3))
 def test_intra_in_inter_bitflips_controlled(seed, n):
     """Bit flips in the P and B slices of streams whose inter slices
-    carry I_4x4, Intra_16x16 and I_PCM macroblocks: decode succeeds or
-    raises ValueError / NotImplementedError, nothing else."""
+    carry I_4x4, Intra_16x16 and I_PCM macroblocks, and of a CABAC P
+    GOP: decode succeeds or raises ValueError / NotImplementedError,
+    nothing else."""
     rng = np.random.default_rng(seed)
     for stream, decode in INTRA_IN_INTER:
         decode(stream)  # sanity

@@ -8,6 +8,11 @@ these round trips pin the machinery, not the table values)."""
 import numpy as np
 import pytest
 
+from neuroimaging_data_pipeline_spark.multimodal.h264_cabac import (
+    _Dec,
+    _dec_mb_qp_delta,
+    _MbState,
+)
 from neuroimaging_data_pipeline_spark.multimodal.h264_cabac_inter import (
     P_CTX_IDS,
     decode_h264_cabac_p,
@@ -15,6 +20,8 @@ from neuroimaging_data_pipeline_spark.multimodal.h264_cabac_inter import (
     make_p_ctx,
     synthetic_p_init,
 )
+from neuroimaging_data_pipeline_spark.multimodal.h264_intra import _MbGrid
+from tests.test_h264_stream_pins import _cabac_p_gop
 
 
 def _planes(h, w, seed):
@@ -115,7 +122,7 @@ def test_different_tables_desync():
             for a, b in zip(decoded[1], recons[1])
         )
         assert not same
-    except (ValueError, KeyError, NotImplementedError, IndexError):
+    except (ValueError, NotImplementedError):
         pass  # desync detected as a parse error — equally conclusive
 
 
@@ -187,3 +194,51 @@ def test_intra_in_p_ctx_coverage():
         encode_h264_cabac_p_gop(
             frames, [[("i16",)] * 4], qp=20, init_table=table
         )
+
+
+def test_skipped_last_mb_roundtrips():
+    """A P_Skip in the picture's last macroblock is followed by
+    end_of_slice_flag 1 (it used to get 0, and the frame mis-decoded
+    without an error)."""
+    frames = [_planes(32, 32, 40), _planes(32, 32, 41)]
+    specs = [[("16x16", [(1, 0)]), ("16x16", [(0, 2)]),
+              ("16x16", [(0, 0)]), ("skip",)]]
+    table = synthetic_p_init(3)
+    st, recons = encode_h264_cabac_p_gop(
+        frames, specs, qp=26, init_table=table
+    )
+    for fr, rc in zip(decode_h264_cabac_p(st, init_table=table), recons):
+        for a, b in zip(fr, rc):
+            np.testing.assert_array_equal(a, b)
+
+
+def test_ref_idx_past_active_count_raises():
+    """A spec ref_idx past the active references fails as the CAVLC
+    encoder does, not with an IndexError from motion compensation."""
+    frames = [_planes(32, 32, 50), _planes(32, 32, 51)]
+    specs = [[("16x16", [((0, 0), 1)])] + [("skip",)] * 3]
+    with pytest.raises(ValueError, match="ref_idx 1 out of range"):
+        encode_h264_cabac_p_gop(frames, specs, qp=20, num_refs=2,
+                                init_table=synthetic_p_init(0))
+
+
+def test_corrupt_ref_idx_raises_valueerror():
+    """A flip set in the P slices of the cabac_p_gop pin stream that
+    decodes a ref_idx past the active count: ValueError, not an
+    IndexError from motion compensation."""
+    stream, _ = _cabac_p_gop()
+    data = bytearray(stream)
+    for i, bit in ((3988, 1), (2987, 4), (2897, 1)):
+        data[i] ^= 1 << bit
+    with pytest.raises(ValueError):
+        decode_h264_cabac_p(bytes(data), init_table=synthetic_p_init(5))
+
+
+@pytest.mark.parametrize("buf", ["e0724ff27297", "e4281cc22653"])
+def test_mb_qp_delta_out_of_range_raises(buf):
+    """mb_qp_delta bins spelling a value outside -26..+25 (7.4.5; these
+    buffers read as 44 and -27 without the bound) raise ValueError."""
+    st = _MbState(_MbGrid(1, 1))
+    with pytest.raises(ValueError, match="mb_qp_delta"):
+        _dec_mb_qp_delta(_Dec(bytes.fromhex(buf), 0),
+                         make_p_ctx(51, synthetic_p_init(3)), st)

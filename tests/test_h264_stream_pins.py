@@ -316,6 +316,21 @@ def _cabac_p_gop_intra():
     return stream, recons
 
 
+def _cabac_p_skip_last():
+    """A P_Skip in the picture's last macroblock."""
+    frames = [_planes(32, 32, 40), _planes(32, 32, 41)]
+    specs = [[("16x16", [(1, 0)]), ("16x16", [(0, 2)]),
+              ("16x16", [(0, 0)]), ("skip",)]]
+    table = synthetic_p_init(3)
+    stream, recons = encode_h264_cabac_p_gop(
+        frames, specs, qp=26, init_table=table
+    )
+    for got, want in zip(decode_h264_cabac_p(stream, init_table=table),
+                         recons):
+        _same(got, want)
+    return stream, recons
+
+
 def _cabac(qp, mode):
     def run():
         stream, *recon = encode_h264_cabac_intra(*_smooth(24, 40, 5), qp=qp,
@@ -351,6 +366,7 @@ CASES["cabac_qp0"] = _cabac(0, 2)
 CASES["cabac_qp30"] = _cabac(30, 5)
 CASES["cabac_p_gop_ref1_qp51"] = _cabac_p_gop_ref1
 CASES["cabac_p_gop_intra"] = _cabac_p_gop_intra
+CASES["cabac_p_skip_last"] = _cabac_p_skip_last
 for _m in (0, 1, 3, 4, 6, 7, 8):
     CASES[f"cabac_i4_mode{_m}"] = _cabac(16, _m)
 
@@ -369,6 +385,7 @@ PINS = {
     "cabac_p_gop": "d1f85cd310b5bdb60a1b",
     "cabac_p_gop_intra": "39c36161318986202f36",
     "cabac_p_gop_ref1_qp51": "1d9c56e82332ea48061d",
+    "cabac_p_skip_last": "5d495cf47f423b394e3e",
     "cabac_qp0": "74da4e91d749ec1c6676",
     "cabac_qp30": "a661121bd4fc5c793226",
     "i16_qp0_pm0_cm0": "fc3c09375ced6865b75e",
